@@ -68,6 +68,23 @@ object Dedup {
     }, 10, java.util.concurrent.TimeUnit.SECONDS)
   }
 
+  /** Is `p` a shuffle-inducing (wide) logical operator — join, aggregate,
+    * window, sort, distinct, repartition, set operation or limit? Shared by
+    * [[spread]] (a plan containing one already inherits shuffle
+    * parallelism) and the spec compiler's multi-read barrier (a plan
+    * containing one is worth materializing once instead of re-planning per
+    * read). Tested on the ANALYZED plan: cheap, and runs no jobs.
+    */
+  private[graft] def isWide(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    p match {
+      case _: Join | _: Aggregate | _: Window | _: Sort | _: Distinct |
+           _: Deduplicate | _: RepartitionOperation | _: SetOperation |
+           _: GlobalLimit | _: LocalLimit => true
+      case _ => false
+    }
+  }
+
   /** Spread a small-file input across the cluster before CPU-heavy narrow
     * compute (signatures). A single parquet file arrives as one partition;
     * the shuffle is pennies next to the per-row kernel work. No-op when the
@@ -89,7 +106,6 @@ object Dedup {
     * pushdown behaves normally.
     */
   private[graft] def spread(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical._
     val par = df.sparkSession.sparkContext.defaultParallelism
     // Only a pure-narrow plan over file/local sources can be stuck at a
     // single partition; anything containing a shuffle-inducing operator
@@ -106,11 +122,8 @@ object Dedup {
     // 8-10 s/batch -> 16-18 s). A LogicalRDD plan has no exchanges, so
     // the .rdd partition probe below is free on it.
     val inheritsParallelism = df.queryExecution.analyzed.exists {
-      case _: Join | _: Aggregate | _: Window | _: Sort | _: Distinct |
-           _: Deduplicate | _: RepartitionOperation | _: SetOperation |
-           _: GlobalLimit | _: LocalLimit => true
       case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => true
-      case _ => false
+      case p => isWide(p)
     }
     if (inheritsParallelism) df
     else if (df.rdd.getNumPartitions < par)
@@ -1134,11 +1147,11 @@ object Dedup {
     * left side, so an unpersisted upstream (e.g. a dedup aggregation) can
     * be computed twice in the one plan — AQE's runtime exchange reuse
     * absorbs a duplicated subtree only when both occurrences are identical
-    * after column pruning (LlmPlanProbe measures one ReusedExchange in the
-    * flagship pipeline; the pruned-differently parts still run twice). At
-    * corpus scale persist/checkpoint the input first —
-    * `PipelineCompiler.runToSinks` does this automatically when the
-    * upstream node is also written as its own sink.
+    * after column pruning (the pruned-differently parts still run twice).
+    * Direct callers at corpus scale persist/checkpoint the input first; the
+    * spec compiler does it itself — a `decontaminate` node's input whose
+    * plan holds a wide operator is materialized once (the multi-read
+    * barrier in `PipelineCompiler`).
     */
   def decontaminate(train: DataFrame, bench: DataFrame, idCol: String,
                     textCol: String, n: Int = 3, minHits: Int = 1,

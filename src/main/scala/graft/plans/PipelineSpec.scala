@@ -100,8 +100,9 @@ case class DedupNodeSpec(input: OpSpec, idCol: String, textCol: String,
   * window contents keep only their globally-first occurrence), preserving
   * every other column. Documents whose text dedups away entirely stay in
   * the corpus with empty text — chain a `FilterSpec` to drop them. Like
-  * [[DecontamNodeSpec]], the input subtree feeds two plan branches; persist
-  * the upstream node (its own sink under `runToSinks`) at corpus scale.
+  * [[DecontamNodeSpec]], the node reads its input several times, so the
+  * compiler materializes a wide input once (`PipelineCompiler`'s
+  * multi-read barrier).
   */
 case class SpanDedupNodeSpec(input: OpSpec, idCol: String, textCol: String,
                              k: Int = 16) extends OpSpec
@@ -288,9 +289,11 @@ case class SpyNodeSpec(input: OpSpec, name: String,
                        metrics: Seq[(String, String)] = Nil,
                        sampleRate: Double = 0.0) extends OpSpec
 /** Lazy persistence barrier (`MEMORY_AND_DISK`): mark a node whose result
-  * several downstream branches (or an eager model build PLUS the final
-  * plan — the [[DsirNodeSpec]] shape) will scan, so the upstream chain
-  * executes once instead of once per consumer. The mid-scale counterpart
+  * several downstream nodes will scan, so the upstream chain executes once
+  * instead of once per consumer. A node that itself reads its input more
+  * than once (dedup near, span dedup, decontamination, semantic dedup,
+  * DSIR) needs no cache node in front: the compiler materializes that
+  * input itself when its plan is wide. The mid-scale counterpart
   * of [[LayoutNodeSpec]]: a cache is per-job and memory-bounded, a layout
   * is a run-once on-disk asset — at 100 TB prefer a layout/sink for
   * cross-job reuse and cache only relations that fit the cluster's
@@ -359,6 +362,60 @@ object PipelineCompiler {
     }
   }
 
+  /** The compiler's one materialization barrier, used by [[CacheSpec]]
+    * nodes and by the multi-read rule ([[multiReadInput]]): persist `df`
+    * (`MEMORY_AND_DISK`), register it for [[unpersistCompiledCaches]] /
+    * [[withCompiledCacheScope]], and return a frame rooted at the cache's
+    * `InMemoryRelation` leaf.
+    *
+    * Lineage-stub the segment BEFORE persisting (r16): persist truncates
+    * execution and the InMemoryRelation leaf truncates downstream
+    * analysis, but plan RENDERING — listener-event explainString +
+    * SparkPlanInfo per SQL execution AND per AQE stage update, on the
+    * driver main thread even with the UI off — expands
+    * InMemoryRelation.innerChildren NESTED through referenced caches. With
+    * composite stages each referencing their input ≥ 2× (dedup anti-joins,
+    * decontam, DSIR), the rendered string grows EXPONENTIALLY in stage
+    * count: the flagship-v3 final action alone rendered 13.5M chars × 7
+    * events, ~112M chars and 2.5–3.5 s of main-thread time per run
+    * (tools.RenderProbe). Backing the cache with a LogicalRDD leaf
+    * (Dataset.checkpoint's plan-truncation technique — stats/partitioning/
+    * constraints preserved, RDD lineage retained so lost cached partitions
+    * still recompute from source) makes rendering and re-analysis LINEAR
+    * in spec size. The stubbed segment's physical plan stays auditable
+    * through Bridge.stubbedPlan (PlanQualitySpec fixpoint, PlanDump
+    * appendix). `spark.graft.cacheLineageStub=false` restores the pre-r16
+    * direct persist (escape hatch; also the A/B lever for the measurements
+    * in OPTIMIZATION_r16.md).
+    *
+    * NOTE (ADVICE r16): stub caches are keyed by the compiled RDD's
+    * identity, so in-compiler cache reuse is BY REFERENCE only —
+    * recompiling the same spec in one session without
+    * unpersistCompiledCaches/withCompiledCacheScope between compiles
+    * creates a fresh cache entry per compile (pre-r16 plan-matching would
+    * have structurally deduplicated them). Callers that compile in a loop
+    * must scope their compiles (Bench does).
+    *
+    * Rooting downstream nodes at the InMemoryRelation leaf matters too:
+    * persist alone truncates execution but NOT analysis — each downstream
+    * op re-analyzes the full upstream tree (and a DAG's shared nodes are
+    * walked once per referencing path, so a composed pipeline's driver
+    * cost compounds).
+    */
+  private def materialize(df: DataFrame): DataFrame = {
+    val stubOn = df.sparkSession.conf.getOption("spark.graft.cacheLineageStub")
+      .forall {
+        case "true" | "TRUE" | "True" => true
+        case "false" | "FALSE" | "False" => false
+        case other => throw new IllegalArgumentException(
+          s"spark.graft.cacheLineageStub must be true or false, got '$other'")
+      }
+    val cached = (if (stubOn) org.apache.spark.sql.graft.Bridge.lineageStub(df) else df)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    compiledCaches.synchronized { compiledCaches += cached }
+    org.apache.spark.sql.graft.Bridge.cachedRelation(cached).getOrElse(cached)
+  }
+
   /** [[compile]] the whole DAG and return EVERY node's frame by name
     * ([[compile]] is `compileNodes(...)(spec.out)`). The stage-inspection
     * surface: a stress harness or a debugging session counts/explains any
@@ -381,6 +438,29 @@ object PipelineCompiler {
                               params: Map[String, String]): Map[String, DataFrame] = {
     val resolved = scala.collection.mutable.Map.empty[String, DataFrame]
     def sub(s: String) = substitute(s, params)
+
+    // Multi-read barriers, memoized per input frame: two consumers of one
+    // node get the same frame from `resolved`, so they share one barrier.
+    val barriers = new java.util.IdentityHashMap[DataFrame, DataFrame]()
+    /** `in` built as `op`'s input. When `op` reads its input more than
+      * once ([[multiReadInput]]) and the input's plan holds a wide
+      * operator, the input is materialized once instead: without the
+      * barrier every read copies — and the planner re-plans, and at scale
+      * the cluster recomputes — the whole upstream subtree (the flagship's
+      * decontaminate-over-span-dedup segment held 8 copies of its input).
+      * Inputs already rooted at a materialized relation are left alone.
+      */
+    def inputOf(op: OpSpec, in: OpSpec): DataFrame = {
+      val df = build(in)
+      if (!multiReadInput(op).contains(in)) df
+      else df.queryExecution.analyzed match {
+        case _: org.apache.spark.sql.execution.columnar.InMemoryRelation |
+             _: org.apache.spark.sql.execution.LogicalRDD |
+             _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
+        case plan if !plan.exists(graft.operators.Dedup.isWide) => df
+        case _ => barriers.computeIfAbsent(df, _ => materialize(df))
+      }
+    }
 
     def build(op: OpSpec): DataFrame = op match {
       case SourceSpec(format, path, options, rootNode) =>
@@ -459,23 +539,23 @@ object PipelineCompiler {
       case UnionSpec(ins) =>
         require(ins.nonEmpty, "union node needs at least one input")
         ins.map(build).reduce(_.unionByName(_, allowMissingColumns = true))
-      case DedupNodeSpec(in, id, text, mode, threshold) => mode match {
+      case op @ DedupNodeSpec(in, id, text, mode, threshold) => mode match {
         case "exact" =>
-          graft.operators.Dedup.exact(build(in), sub(text), sub(id)).drop("dup_count")
+          graft.operators.Dedup.exact(inputOf(op, in), sub(text), sub(id)).drop("dup_count")
         case "near" =>
-          graft.operators.Dedup.dropNearDups(build(in), sub(id), sub(text), threshold)
+          graft.operators.Dedup.dropNearDups(inputOf(op, in), sub(id), sub(text), threshold)
         case other => throw new IllegalArgumentException(s"dedup mode '$other' (exact|near)")
       }
-      case SpanDedupNodeSpec(in, id, text, k) =>
-        val df = build(in)
+      case op @ SpanDedupNodeSpec(in, id, text, k) =>
+        val df = inputOf(op, in)
         val idc = sub(id); val tc = sub(text)
         val rebuilt = graft.operators.Dedup.dropRepeatedSpans(df, idc, tc, k)
           .select(col("id").as("__span_id"), col("text_out"))
         df.join(rebuilt, df(idc) === rebuilt("__span_id"))
           .withColumn(tc, col("text_out"))
           .drop("__span_id", "text_out")
-      case SemanticDedupNodeSpec(in, id, vec, k, thr, maxCs, centMode, modelDir) =>
-        val df = build(in)
+      case op @ SemanticDedupNodeSpec(in, id, vec, k, thr, maxCs, centMode, modelDir) =>
+        val df = inputOf(op, in)
         val mdir = sub(modelDir)
         val centsPath = if (mdir.isEmpty) "" else s"${mdir.stripSuffix("/")}/centroids"
         // persisted model asset: load the pinned centroids when present,
@@ -524,8 +604,8 @@ object PipelineCompiler {
         graft.operators.Sampling.hashSplit(build(in), sub(id), splits)
       case MixNodeSpec(in, id, stratum, weights, dw) =>
         graft.operators.Sampling.weightedMix(build(in), sub(id), sub(stratum), weights, dw)
-      case DsirNodeSpec(in, target, id, text, k, hexLen, alpha, salt, modelDir) =>
-        val df = build(in)
+      case op @ DsirNodeSpec(in, target, id, text, k, hexLen, alpha, salt, modelDir) =>
+        val df = inputOf(op, in)
         val mdir = sub(modelDir)
         val weightsPath = if (mdir.isEmpty) "" else s"${mdir.stripSuffix("/")}/dsir_weights"
         // persisted model asset: the (bucket, logw) relation is the
@@ -599,8 +679,8 @@ object PipelineCompiler {
         }
       case QualityScoreNodeSpec(in, text, weights) =>
         graft.operators.QualityModel.score(build(in), sub(text), weights)
-      case DecontamNodeSpec(in, bench, id, text, ngram, minHits, hashKeys, warnBelow) =>
-        val df = build(in)
+      case op @ DecontamNodeSpec(in, bench, id, text, ngram, minHits, hashKeys, warnBelow) =>
+        val df = inputOf(op, in)
         if (warnBelow <= 0.0)
           graft.operators.Dedup.decontaminate(df, build(bench), sub(id), sub(text),
             ngram, minHits, hashKeys)
@@ -682,50 +762,9 @@ object PipelineCompiler {
         graft.operators.CoreOps.spy(tapped, nm,
           metrics.map { case (mName, e) => expr(sub(e)).as(mName) })
       case CacheSpec(in) =>
-        // Lineage-stub the segment BEFORE persisting (r16): persist truncates
-        // execution and the InMemoryRelation leaf (below) truncates
-        // downstream analysis, but plan RENDERING — listener-event
-        // explainString + SparkPlanInfo per SQL execution AND per AQE stage
-        // update, on the driver main thread even with the UI off — expands
-        // InMemoryRelation.innerChildren NESTED through referenced caches.
-        // With composite stages each referencing their input ≥ 2× (dedup
-        // anti-joins, decontam, DSIR), the rendered string grows
-        // EXPONENTIALLY in stage count: the flagship-v3 final action alone
-        // rendered 13.5M chars × 7 events, ~112M chars and 2.5–3.5 s of
-        // main-thread time per run (tools.RenderProbe). Backing the cache
-        // with a LogicalRDD leaf (Dataset.checkpoint's plan-truncation
-        // technique — stats/partitioning/constraints preserved, RDD lineage
-        // retained so lost cached partitions still recompute from source)
-        // makes rendering and re-analysis LINEAR in spec size. The stubbed
-        // segment's physical plan stays auditable through
-        // Bridge.stubbedPlan (PlanQualitySpec fixpoint, PlanDump appendix).
-        // `spark.graft.cacheLineageStub=false` restores the pre-r16 direct
-        // persist (escape hatch; also the A/B lever for the measurements in
-        // OPTIMIZATION_r16.md).
-        // NOTE (ADVICE r16): stub caches are keyed by the compiled RDD's
-        // identity, so in-compiler cache reuse is BY REFERENCE only —
-        // recompiling the same spec in one session without
-        // unpersistCompiledCaches/withCompiledCacheScope between compiles
-        // creates a fresh cache entry per compile (pre-r16 plan-matching
-        // would have structurally deduplicated them). Callers that compile
-        // in a loop must scope their compiles (Bench does).
-        val stubOn = spark.conf.getOption("spark.graft.cacheLineageStub")
-          .forall {
-            case "true" | "TRUE" | "True" => true
-            case "false" | "FALSE" | "False" => false
-            case other => throw new IllegalArgumentException(
-              s"spark.graft.cacheLineageStub must be true or false, got '$other'")
-          }
-        val pre = build(in)
-        val df = (if (stubOn) org.apache.spark.sql.graft.Bridge.lineageStub(pre) else pre)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        compiledCaches.synchronized { compiledCaches += df }
-        // Root downstream nodes at the InMemoryRelation leaf: persist alone
-        // truncates execution but NOT analysis — each downstream op
-        // re-analyzes the full upstream tree (and a DAG's shared nodes are
-        // walked once per referencing path, so a composed pipeline's driver
-        // cost compounds).
-        org.apache.spark.sql.graft.Bridge.cachedRelation(df).getOrElse(df)
+        // the same barrier the compiler puts under multi-read inputs
+        // (inputOf), here at a node the spec author chose
+        materialize(build(in))
     }
 
     // Label every job a node's compile launches (eager model builds, cache
@@ -743,6 +782,34 @@ object PipelineCompiler {
     if (!resolved.contains(spec.out))
       throw new IllegalArgumentException(s"broken chain: output node '${spec.out}' undefined")
     resolved.toMap
+  }
+
+  /** The input a node reads MORE THAN ONCE — in its remaining plan or
+    * through eager compile-time actions — and so gets a materialization
+    * barrier ([[materialize]]) when that input's plan is wide. Checked
+    * against the operators:
+    *  - `dedup` near: [[graft.operators.Dedup.dropNearDups]] caches
+    *    signatures of it, re-reads it for the candidate shingle pass, and
+    *    anti-joins it (exact mode is one aggregation: a single read);
+    *  - `spanDedup`: [[graft.operators.Dedup.dropRepeatedSpans]] reads it
+    *    three times (window occurrences, first-occurrence join, rebuild)
+    *    and the compiler joins the rebuilt text back onto it;
+    *  - `decontaminate`: [[graft.operators.Dedup.decontaminate]] explodes
+    *    its grams and anti-joins it (calibration mode adds a count);
+    *  - `semanticDedup`: the eager centroid build reads it, then
+    *    [[graft.operators.Dedup.semanticDrop]] assigns it and anti-joins it;
+    *  - `dsir`: the eager gram-count model reads it, then
+    *    [[graft.operators.Sampling.importanceResample]] scores it and
+    *    joins the selection back onto it.
+    * Side inputs (decontamination bench, DSIR target) are read once.
+    */
+  private def multiReadInput(op: OpSpec): Option[OpSpec] = op match {
+    case DedupNodeSpec(in, _, _, "near", _)             => Some(in)
+    case SpanDedupNodeSpec(in, _, _, _)                 => Some(in)
+    case DecontamNodeSpec(in, _, _, _, _, _, _, _)      => Some(in)
+    case SemanticDedupNodeSpec(in, _, _, _, _, _, _, _) => Some(in)
+    case DsirNodeSpec(in, _, _, _, _, _, _, _, _)       => Some(in)
+    case _                                              => None
   }
 
   /** Direct RefSpec dependencies of an op (nested through its inputs). */
@@ -816,9 +883,12 @@ object PipelineCompiler {
     val shared = reachCount.collect {
       case (n, c) if c > 1 && !isSource(n) => n
     }.toSeq
-    val dfs = scala.collection.mutable.Map.empty[String, DataFrame]
-    def nodeDf(name: String): DataFrame =
-      dfs.getOrElseUpdate(name, compile(spec.copy(out = name), spark, params))
+    // ONE compile serves every sink: eager model builds run once, and the
+    // shared nodes persisted below are the very frames each sink plan
+    // embeds, so the cache manager matches them inside every sink write
+    val dfs = compileNodes(spec.copy(out = sinks.head._1), spark, params)
+    def nodeDf(name: String): DataFrame = dfs.getOrElse(name,
+      throw new IllegalArgumentException(s"broken chain: sink node '$name' undefined"))
     shared.foreach(n => nodeDf(n).persist())
     try sinks.foreach { case (node, format, path) =>
       format match {

@@ -3,9 +3,10 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 /** Separates the flagship-v3 `passed`-cache-fill wall (the 30 s compile
-  * span at 1M, `V3CompileProbe`) into its two candidate causes: the
-  * quality-feature expression pipeline (interpreted higher-order functions
-  * per row) vs the InMemoryRelation column-batch build over the full text.
+  * span at 1M: the jobs labeled `spec:passed`) into its two candidate
+  * causes: the quality-feature expression pipeline (interpreted
+  * higher-order functions per row) vs the InMemoryRelation column-batch
+  * build over the full text.
   * Each leg is timed twice (cold JIT, then warm).
   */
 object QualityCostProbe {

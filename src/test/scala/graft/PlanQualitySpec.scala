@@ -717,4 +717,72 @@ class PlanQualitySpec extends SparkSpec {
       case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
     }.isEmpty), "composite must stay equi-join end to end")
   }
+
+  test("multi-read barrier: a join-bearing input is planned once, its upstream cache read <= 2x per segment") {
+    import graft.plans._
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    // every operator of one plan, through AQE wrappers; cache scans and
+    // reused exchanges are leaves (neither re-plans its subtree here)
+    def opsOf(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => opsOf(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => opsOf(q.plan)
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Seq(r)
+      case other => other +: other.children.flatMap(opsOf)
+    }
+    def builderOf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.asInstanceOf[InMemoryRelation].cacheBuilder
+    def readsOf(cache: AnyRef, p: SparkPlan): Int = opsOf(p).count {
+      case s: InMemoryTableScanExec => s.relation.cacheBuilder.eq(cache)
+      case _ => false
+    }
+    PipelineCompiler.withCompiledCacheScope {
+      // spanDedup -> dedup(exact) -> decontaminate over a semi-join of a
+      // cached upstream: without barriers the segment holds 8 copies of
+      // the join (span dedup reads its input 4x, decontamination 2x)
+      val spec = PipelineSpec(nodes = Seq(
+        "docs"     -> SourceSpec("parquet", s"$sf/documents.parquet"),
+        "up"       -> CacheSpec(MapSpec(RefSpec("docs"),
+                        Seq("doc_id" -> "doc_id", "text" -> "text", "lang" -> "lang"))),
+        "vocab"    -> MapSpec(FilterSpec(RefSpec("docs"), "doc_id % 3 != 0"),
+                        Seq("vk" -> "doc_id")),
+        "joined"   -> JoinSpec(RefSpec("up"), RefSpec("vocab"), "doc_id", "vk",
+                        "left_semi", broadcastVocab = false),
+        "bench"    -> FilterSpec(RefSpec("docs"), "doc_id % 50 = 0"),
+        "spans"    -> SpanDedupNodeSpec(RefSpec("joined"), "doc_id", "text", 16),
+        "nonempty" -> FilterSpec(RefSpec("spans"), "text != ''"),
+        "deduped"  -> DedupNodeSpec(RefSpec("nonempty"), "doc_id", "text", mode = "exact"),
+        "cleaned"  -> DecontamNodeSpec(RefSpec("deduped"), RefSpec("bench"),
+                        "doc_id", "text", n = 3, minHits = 1)),
+        out = "cleaned")
+      val nodes = PipelineCompiler.compileNodes(spec, spark)
+      val plans = org.apache.spark.sql.graft.Bridge.auditPlans(nodes("cleaned"))
+      val vkJoins = plans.flatMap(opsOf).count {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+          (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "vk"))
+        case _ => false
+      }
+      assert(vkJoins == 1, s"the join subtree is planned $vkJoins times, expected once")
+      val up = builderOf(nodes("up"))
+      plans.foreach { p =>
+        assert(readsOf(up, p) <= 2, s"a segment reads the upstream cache ${readsOf(up, p)}x:\n$p")
+      }
+    }
+    // the flagship: `cleaned`'s stubbed segment reads `passed` at most twice
+    // (32 copies before the compiler materialized `kept` and `deduped`)
+    PipelineCompiler.withCompiledCacheScope {
+      val nodes = PipelineCompiler.compileNodes(
+        SpecJson.fromJson(SparkEntry.llmPipelineV3Json), spark, Map("dir" -> sf))
+      val passed = builderOf(nodes("passed"))
+      val cleanedSegment = builderOf(nodes("cleaned")).cachedPlan.collect {
+        case r: RDDScanExec => org.apache.spark.sql.graft.Bridge.stubbedPlan(r.rdd)
+      }.flatten
+      assert(cleanedSegment.size == 1, "cleaned must be backed by one stubbed segment")
+      assert(readsOf(passed, cleanedSegment.head) <= 2,
+        s"cleaned segment reads passed ${readsOf(passed, cleanedSegment.head)}x")
+      org.apache.spark.sql.graft.Bridge.auditPlans(nodes("train")).foreach { p =>
+        assert(readsOf(passed, p) <= 2, s"a v3 segment reads passed ${readsOf(passed, p)}x")
+      }
+    }
+  }
 }

@@ -412,6 +412,111 @@ class SpecJsonSpec extends SparkSpec {
       "unpersistCompiledCaches must release CacheSpec persists")
   }
 
+  /** The persisted relations (cache builders, identity-distinct) `df`'s
+    * analyzed plan reads. */
+  private def cacheBuilders(df: org.apache.spark.sql.DataFrame) = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder
+    }.filter(seen.add)
+  }
+
+  test("multi-read inputs get one registered barrier; fan-in consumers share it") {
+    PipelineCompiler.unpersistCompiledCaches()
+    spark.sharedState.cacheManager.clearCache()
+    // `wide` is an aggregation, and BOTH of its consumers read their input
+    // several times: the compiler must materialize it once, for both
+    val spec = PipelineSpec(nodes = Seq(
+      "docs"  -> SourceSpec("parquet", s"$sf/documents.parquet"),
+      "bench" -> FilterSpec(RefSpec("docs"), "doc_id % 50 = 0"),
+      "wide"  -> DedupNodeSpec(FilterSpec(RefSpec("docs"), "doc_id % 50 != 0"),
+                   "doc_id", "text", "exact"),
+      "spans" -> SpanDedupNodeSpec(RefSpec("wide"), "doc_id", "text", 16),
+      "clean" -> DecontamNodeSpec(RefSpec("wide"), RefSpec("bench"), "doc_id", "text", 3, 1)),
+      out = "clean")
+    val nodes = PipelineCompiler.compileNodes(spec, spark)
+    assert(cacheBuilders(nodes("wide")).isEmpty, "the node's own frame stays unmaterialized")
+    val spansReads = cacheBuilders(nodes("spans"))
+    val cleanReads = cacheBuilders(nodes("clean"))
+    assert(spansReads.size == 1 && cleanReads.size == 1 && spansReads.head.eq(cleanReads.head),
+      "two multi-read consumers of one node must share exactly one barrier")
+    assert(!spark.sharedState.cacheManager.isEmpty,
+      "the barrier must register its persist with the cache manager")
+    // the barrier changes no rows: same as the operators on the raw input
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val raw = graft.operators.Dedup.exact(docs.filter("doc_id % 50 != 0"), "text", "doc_id")
+      .drop("dup_count")
+    val expectClean = graft.operators.Dedup.decontaminate(raw, docs.filter("doc_id % 50 = 0"),
+      "doc_id", "text", 3, 1)
+    assert(nodes("clean").orderBy("doc_id").collect().toSeq ==
+      expectClean.orderBy("doc_id").collect().toSeq)
+    val expectSpans = graft.operators.Dedup.dropRepeatedSpans(raw, "doc_id", "text", 16)
+    assert(nodes("spans").select("doc_id", "text").orderBy("doc_id").collect().toSeq ==
+      expectSpans.select(col("id"), col("text_out")).orderBy("id").collect().toSeq)
+    // registered like a CacheSpec persist, so the session hammer frees it
+    PipelineCompiler.unpersistCompiledCaches()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "unpersistCompiledCaches must release the compiler's barriers")
+  }
+
+  test("withCompiledCacheScope around a v3 compile releases every cache, barriers included") {
+    PipelineCompiler.unpersistCompiledCaches()
+    spark.sharedState.cacheManager.clearCache()
+    PipelineCompiler.withCompiledCacheScope {
+      val nodes = PipelineCompiler.compileNodes(
+        SpecJson.fromJson(SparkEntry.llmPipelineV3Json), spark, Map("dir" -> sf))
+      // span dedup reads `kept` (a join over `passed`) through a barrier,
+      // so its plan no longer reaches `passed` directly
+      val passed = cacheBuilders(nodes("passed")).head
+      val spansReads = cacheBuilders(nodes("spans"))
+      assert(spansReads.nonEmpty && !spansReads.exists(_.eq(passed)),
+        "no barrier under the spans node")
+      assert(!spark.sharedState.cacheManager.isEmpty)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a scoped compile must release every cache it created")
+  }
+
+  test("runToSinks compiles once for all sinks: an eager node's jobs run for one compile") {
+    val base = java.nio.file.Files.createTempDirectory("sinks3").toString
+    // the DSIR node builds its gram-count model eagerly at compile time;
+    // the two sinks sit on DIFFERENT nodes downstream of it
+    val spec = PipelineSpec(nodes = Seq(
+      "docs" -> SourceSpec("parquet", s"$sf/documents.parquet"),
+      "sel"  -> DsirNodeSpec(RefSpec("docs"), FilterSpec(RefSpec("docs"), "lang = 'en'"),
+                  "doc_id", "text", k = 20),
+      "en"   -> FilterSpec(RefSpec("sel"), "lang = 'en'"),
+      "ids"  -> MapSpec(RefSpec("sel"), Seq("doc_id" -> "doc_id"))),
+      out = "ids")
+    val selJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == "spec:sel"))
+          selJobs.incrementAndGet()
+    }
+    def selJobsDuring(body: => Unit): Int = {
+      org.apache.spark.sql.graft.Bridge.flushListenerBus(spark)
+      selJobs.set(0)
+      body
+      org.apache.spark.sql.graft.Bridge.flushListenerBus(spark)
+      selJobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (oneCompile, sinkRun) = try {
+      (selJobsDuring(PipelineCompiler.withCompiledCacheScope {
+         PipelineCompiler.compileNodes(spec, spark) }),
+       selJobsDuring(PipelineCompiler.runToSinks(spec, spark, Seq(
+         ("en", "parquet", s"$base/en"), ("ids", "parquet", s"$base/ids")))))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(oneCompile > 0, "the DSIR model build should launch compile-time jobs")
+    assert(sinkRun == oneCompile,
+      s"runToSinks ran $sinkRun spec:sel jobs for 2 sinks, one compile runs $oneCompile")
+    val sel = PipelineCompiler.compile(spec.copy(out = "sel"), spark)
+    assert(spark.read.parquet(s"$base/ids").count() == sel.count())
+    assert(spark.read.parquet(s"$base/en").count() == sel.filter("lang = 'en'").count())
+  }
+
   test("a SORTED cached segment self-joined (diamond) plans and runs — stub ordering hygiene") {
     // Regression pin for the r16 lineage stub: LogicalRDD.fromDataset
     // copies the EXECUTED plan's outputOrdering (a sorted segment always
