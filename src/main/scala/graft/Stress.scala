@@ -29,7 +29,7 @@ object Stress {
 
   private val DupGroup = 10
 
-  private final class ShuffleMeter extends SparkListener {
+  private[graft] final class ShuffleMeter extends SparkListener {
     val bytes = new java.util.concurrent.atomic.AtomicLong
     // spill accounting for the memory-pressure rows: memoryBytesSpilled is
     // the in-memory size of data that overflowed execution memory,
@@ -199,12 +199,13 @@ object Stress {
         ct.unpersist(false); cr.unpersist(false)
       }
       // Embedding analogue of the text corpus — construction and the
-      // planted-pair accounting live in tools.SemanticStressCorpus (shared
-      // with the SemDedupProbe recall probe): per base, exact twins + ≈7°
-      // near dups, with midpoint-mixture filler that plants NO pairs of
-      // its own. Centroid count targets ~1500-vector cells — the SemDeDup
-      // operating point where the within-cell quadratic stays tractable;
-      // training runs on a capped deterministic sample.
+      // planted-pair accounting live in tools.SemanticStressCorpus (its
+      // recall split is this ladder's semantic-dedup row in SCALING.md):
+      // per base, exact twins + ≈7° near dups, with midpoint-mixture
+      // filler that plants NO pairs of its own. Centroid count targets
+      // ~1500-vector cells — the SemDeDup operating point where the
+      // within-cell quadratic stays tractable; training runs on a capped
+      // deterministic sample.
       if (only.forall(_.contains("semantic_dedup"))) {
         val (embRaw, _) = graft.tools.SemanticStressCorpus.build(spark, n)
         val emb = embRaw.persist()

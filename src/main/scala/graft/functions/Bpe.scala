@@ -51,8 +51,8 @@ object Bpe {
     * (the fold copies its accumulator array per symbol), which is the
     * POINT of the vocab formulation for natural words (≤ tens of chars)
     * but a straggler factory for pathological ones: a single 2M-char
-    * unbroken token stalled its task indefinitely in
-    * `tools.PathologyProbe`. A word longer than `maxWordChars` is almost
+    * unbroken token stalled its task indefinitely (SCALING.md
+    * "Pathological shapes"). A word longer than `maxWordChars` is almost
     * surely binary garbage / minified junk, not language — it segments as
     * ONE opaque `word</w>` symbol (merge-exempt, O(1)) instead of a
     * character sequence, bounding both the fold cost and the subword

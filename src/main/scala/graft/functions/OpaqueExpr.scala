@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.DataType
   * feature pipeline re-derives tokens/bigrams per feature once unstaged —
   * the substituted predicate re-evaluates the ENTIRE pipeline for every
   * input row, and then the projection evaluates it again for the survivors.
-  * Measured on the 1M-doc stress corpus (tools.QualityPushdownProbe): the
+  * Measured on the 1M-doc stress corpus (SCALING.md "Retired probes"): the
   * optimizer-inlined `quality_accept = 1` predicate carried 32 lambdas /
   * 24 `split` calls and tripled the pass (6.6 s → 23.3 s noop-sunk).
   * Both rules skip non-deterministic expressions, so wrapping the score

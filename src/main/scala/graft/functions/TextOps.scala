@@ -29,12 +29,11 @@ object TextOps {
     * is O(lines²); BPE encode is O(chars × merges) on an un-splittable
     * token), so at corpus scale one unclamped hostile doc becomes a
     * straggler task that stalls its stage. Clamp ONCE at ingest, before any
-    * text kernel — `tools.PathologyProbe` measures the before/after and
-    * SCALING.md's pathological-shape section carries the numbers. A hard
-    * character cut (possibly mid-token) is deliberate: it bounds EVERY
-    * downstream dimension (tokens, lines, shingles) with one knob, matching
-    * common pretraining-corpus practice of capping document length at
-    * extraction.
+    * text kernel — SCALING.md's pathological-shape section carries the
+    * before/after numbers. A hard character cut (possibly mid-token) is
+    * deliberate: it bounds EVERY downstream dimension (tokens, lines,
+    * shingles) with one knob, matching common pretraining-corpus practice
+    * of capping document length at extraction.
     */
   def clampChars(text: Column, maxChars: Int): Column = {
     require(maxChars > 0, "maxChars must be positive")
@@ -295,8 +294,8 @@ object TextOps {
     * O(lines) per row, codegen'd, no shuffle, no UDF. (The earlier
     * first-index-equality HOF — `filter(l, (x, i) ⇒ array_position(l, x) =
     * i+1)` — computes the same set but is O(lines²): a single 120k-line
-    * boilerplate dump stalled its task for ~10 minutes in
-    * `tools.PathologyProbe`; same output, hash-set cost now.)
+    * boilerplate dump stalled its task for ~10 minutes (SCALING.md
+    * "Pathological shapes"); same output, hash-set cost now.)
     * Engine-portable: DuckDB replays it as the quadratic
     * `list_filter(l, (x, i) -> list_position(l, x) = i)` form, which is
     * fine at ORACLE scale (both index conventions resolve to 1-based

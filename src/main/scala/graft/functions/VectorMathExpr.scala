@@ -241,9 +241,9 @@ case class DotProductInt8(left: Expression, right: Expression) extends BinaryExp
   * interpreted HOF passes per row (dot's zip_with+aggregate inside the
   * norm, the cast transform, the divide transform), which made
   * `buildIvfIndex(normalize = true)` at 1M vectors cost 301 s where the
-  * same build over a pre-normalized corpus cost 21 s (VectorIndexLadder,
-  * r14). Semantics are BIT-identical to the HOF form, element for
-  * element:
+  * same build over a pre-normalized corpus cost 21 s (r14; SCALING.md
+  * "Streaming maintenance at a 1M-vector store"). Semantics are
+  * BIT-identical to the HOF form, element for element:
   *
   *  - norm = sqrt of the index-order sum of squared double-cast elements
   *    (the [[VectorMath.cosine]] accumulation), each output element =

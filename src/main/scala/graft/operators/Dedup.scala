@@ -1345,9 +1345,9 @@ object Dedup {
     // Hoisted-norm pair kernel (r17): each side's projection carries its
     // row's Σx², so the per-PAIR kernel does ONE array pass (the dot)
     // instead of three — bit-identical values (CosineSimNormed scaladoc).
-    // Measured 1.6× on the 400k/266-cell stress corpus (PairWindowProbe,
-    // 7.6 → 4.8 s). An angle-window prefilter on |acos(sim_a)−acos(sim_b)|
-    // (lossless by the angular triangle inequality) was A/B-measured on
+    // Measured 1.6× on the 400k/266-cell stress corpus (SCALING.md
+    // "Retired probes", 7.6 → 4.8 s). An angle-window prefilter on
+    // |acos(sim_a)−acos(sim_b)| (lossless by the angular triangle inequality) was A/B-measured on
     // top of this kernel and REJECTED: with the dot this cheap, the window
     // cost more than the 15–33% of pairs it pruned at the declared 0.9 /
     // 0.95 operating points (6.0 vs 4.8 s at 0.9; 5.7 vs 6.0 s at 0.95).

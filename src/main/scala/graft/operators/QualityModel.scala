@@ -49,8 +49,8 @@ object QualityModel {
     * kernel straight off the tokens (r17) — the former staged gram-array
     * form chained four interpreted higher-order functions per row
     * (`transform`/`arrays_zip` gram build, `array_sort`, `aggregate` fold;
-    * the single heaviest feature at 1M docs, tools.QualityCostProbe) for
-    * bit-identical output.
+    * the single heaviest feature at 1M docs, SCALING.md "Retired probes")
+    * for bit-identical output.
     */
   def featureSeq(text: Column, toks: Column): Seq[Column] = {
     val n = size(toks)
@@ -202,7 +202,7 @@ object QualityModel {
     // SUBSTITUTION, re-evaluating the whole UNSTAGED feature pipeline
     // (tokenizer per feature) inside the predicate and then again in the
     // projection for survivors: 6.6 → 23.3 s on the 1M stress corpus
-    // (tools.QualityPushdownProbe). The barrier pins score evaluation to
+    // (SCALING.md "Retired probes"). The barrier pins score evaluation to
     // once per row; the accept column derives from the score ATTRIBUTE, so
     // an accept predicate still pushes down TO this projection and stays
     // cheap. Values are bit-identical (the wrapper is an identity).

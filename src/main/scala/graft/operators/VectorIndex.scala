@@ -160,10 +160,10 @@ object VectorIndex {
     *
     * Training-cost boundary of the auto default: k-means is
     * O(sample × k × dim × iters) and measured SUPERLINEAR in k on the
-    * capped 1M sample (`tools.KMeansCostProbe`, dim 64, maxIter 10:
-    * k=1000 → 33 s, k=3163 → 157 s, k=10000 → 767 s; exponent ≈ 1.36
-    * from init rounds growing with k), so an UNCAPPED ⌈√N⌉ would spend
-    * ~an hour fitting k ≈ 32k at the 1B rung before touching the corpus.
+    * capped 1M sample (SCALING.md "auto-nlist training-cost curve"; dim
+    * 64, maxIter 10: k=1000 → 33 s, k=3163 → 157 s, k=10000 → 767 s;
+    * exponent ≈ 1.36 from init rounds growing with k), so an UNCAPPED
+    * ⌈√N⌉ would spend ~an hour fitting k ≈ 32k at the 1B rung before touching the corpus.
     * `autoNlistCap` (default 10⁴ ≈ √100M) therefore bounds the AUTO
     * path's k — beyond 100M rows the capped index trades cell
     * granularity for a bounded fit, and recall buys back via `nprobe`
@@ -244,8 +244,8 @@ object VectorIndex {
 
   // ---- Hierarchical (two-level) trainer --------------------------------
   //
-  // The flat trainer's wall is SUPERLINEAR in k (tools.KMeansCostProbe:
-  // 33 s at k=1000, 767 s at k=10⁴, ~63 min extrapolated at k≈32k on the
+  // The flat trainer's wall is SUPERLINEAR in k (SCALING.md "auto-nlist
+  // training-cost curve": 33 s at k=1000, 767 s at k=10⁴, ~63 min extrapolated at k≈32k on the
   // capped 1M sample), which is why buildIvfIndex's AUTO path caps k at
   // 10⁴. The two-level trainer breaks that wall: level 1 fits ⌈√k⌉ coarse
   // centers (an O(sample × √k) spark.ml fit), level 2 routes the sample
@@ -429,7 +429,8 @@ object VectorIndex {
   // Appends do NOT write into the partitioned cells layout: an append
   // into `partitionBy("cell")` necessarily creates one file per touched
   // cell — at nlist=1000 a 50k-vector batch wrote ~1000 files and spent
-  // ~12.7 s of its 17.4 s wall committing them (tools.AppendProbe), and
+  // ~12.7 s of its 17.4 s wall committing them (SCALING.md "Streaming
+  // maintenance at a 1M-vector store"), and
   // frequent small batches made compaction (a FULL store rewrite) the
   // file-count bound. Instead, appends land in `$dir/delta/` — plain
   // unpartitioned parquet with `cell` as a data column, a handful of

@@ -384,9 +384,8 @@ object PipelineCompiler {
     * still recompute from source) makes rendering and re-analysis LINEAR
     * in spec size. The stubbed segment's physical plan stays auditable
     * through Bridge.stubbedPlan (PlanQualitySpec fixpoint, PlanDump
-    * appendix). `spark.graft.cacheLineageStub=false` restores the pre-r16
-    * direct persist (escape hatch; also the A/B lever for the measurements
-    * in OPTIMIZATION_r16.md).
+    * appendix). The stub is unconditional; its A/B against the pre-r16
+    * direct persist is recorded in OPTIMIZATION_r16.md.
     *
     * NOTE (ADVICE r16): stub caches are keyed by the compiled RDD's
     * identity, so in-compiler cache reuse is BY REFERENCE only —
@@ -403,14 +402,7 @@ object PipelineCompiler {
     * cost compounds).
     */
   private def materialize(df: DataFrame): DataFrame = {
-    val stubOn = df.sparkSession.conf.getOption("spark.graft.cacheLineageStub")
-      .forall {
-        case "true" | "TRUE" | "True" => true
-        case "false" | "FALSE" | "False" => false
-        case other => throw new IllegalArgumentException(
-          s"spark.graft.cacheLineageStub must be true or false, got '$other'")
-      }
-    val cached = (if (stubOn) org.apache.spark.sql.graft.Bridge.lineageStub(df) else df)
+    val cached = org.apache.spark.sql.graft.Bridge.lineageStub(df)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     compiledCaches.synchronized { compiledCaches += cached }
     org.apache.spark.sql.graft.Bridge.cachedRelation(cached).getOrElse(cached)

@@ -5,8 +5,9 @@ package graft.tools
   * execution the session starts, the callsite description in stream order.
   * The log4j `StringUtils` truncation WARNs interleave in the same stderr
   * stream, so lining the two up names the mini-jobs whose plan strings are
-  * rendered at multi-MB sizes (the r16 follow-up to V3Profile's finding
-  * that listener-event `explainString`/`SparkPlanInfo` rendering rides the
+  * rendered at multi-MB sizes (the r16 follow-up to the v3 driver
+  * profile's finding, SCALING.md "10-stage flagship v3 ladder", that
+  * listener-event `explainString`/`SparkPlanInfo` rendering rides the
   * main thread between jobs).
   */
 object RenderProbe {

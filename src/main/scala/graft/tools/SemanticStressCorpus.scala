@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared builder of the planted-structure semantic-dedup stress corpus —
-  * the ONE definition `graft.Stress` (stage `semantic_dedup`) and
-  * [[SemDedupProbe]] both run, so the probe's recall numbers are measured
-  * on exactly the corpus the stress stage times.
+  * the ONE definition `graft.Stress` (stage `semantic_dedup`), [[V3Stress]]
+  * and VectorIndexSpec run, so the planted-pair recall split in SCALING.md
+  * (the measured ladder's semantic-dedup row) is measured on exactly the
+  * corpus the stress stage times.
   *
   * Construction, per base vector v (paired with a stride partner
   * w = base[(vec_id + 131·i) mod baseN]): copies i < [[DupGroup]]/2 are

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,18 +36,6 @@ import org.apache.spark.sql.functions._
   * Prints `V3STRESS` rows (gen / run / stages / asserts) for SCALING.md.
   */
 object V3Stress {
-
-  private final class Meter extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val memSpill = new java.util.concurrent.atomic.AtomicLong
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      memSpill.addAndGet(sc.stageInfo.taskMetrics.memoryBytesSpilled)
-      diskSpill.addAndGet(sc.stageInfo.taskMetrics.diskBytesSpilled)
-      ()
-    }
-  }
 
   /** Stress documents: the `graft.Stress` corpus with `lang` carried
     * through (exact copies and near dups inherit the base doc's lang;
@@ -90,7 +77,7 @@ object V3Stress {
     val spark = graft.GraftSession.builder(master = "local[32]", shufflePartitions = 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val meter = new Meter
+    val meter = new graft.Stress.ShuffleMeter
     spark.sparkContext.addSparkListener(meter)
     val heapG = Runtime.getRuntime.maxMemory() / (1 << 30)
 

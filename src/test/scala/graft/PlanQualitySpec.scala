@@ -102,7 +102,7 @@ class PlanQualitySpec extends SparkSpec {
     // the at-scale shape: a shuffle-bearing input, so Dedup.spread inserts
     // no barrier — exactly the case where PushDownPredicates used to inline
     // the whole UNSTAGED feature pipeline into the accept predicate
-    // (tools.QualityPushdownProbe: 32 lambdas / 24 splits in the Filter
+    // (SCALING.md "Retired probes": 32 lambdas / 24 splits in the Filter
     // condition, 6.6 → 23.3 s at 1M docs). OpaqueBarrier on the score alias
     // pins evaluation to once per row.
     val docs = spark.range(0, 200).toDF("doc_id").repartition(4)

@@ -8,7 +8,9 @@ import graft.plans._
   * the batch example compiles and returns rows against a generated
   * fixture, the ingest example drains a round and appends its corpus.
   * A schema change that invalidates the doc fails here, not in a user's
-  * terminal.
+  * terminal. The probe and main names cited in the sources, the README and
+  * the skills are held to the same standard: each must name a class that
+  * exists, so deleting a tool cannot leave a recipe pointing at nothing.
   */
 class SpecDocSpec extends SparkSpec {
 
@@ -106,5 +108,29 @@ class SpecDocSpec extends SparkSpec {
     val spec = SpecJson.ingestFromJson(docBlocks.filter(SpecJson.isIngestJson).head)
     IngestCompiler.runAvailable(spark, spec, Map("root" -> root))
     assert(spark.read.parquet(s"$root/corpus").count() == 5)
+  }
+
+  test("every tool or main named in the sources, README and skills resolves to a class") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def under(root: String, keep: Path => Boolean): Seq[Path] =
+      Files.walk(Paths.get(root)).iterator().asScala
+        .filter(p => Files.isRegularFile(p) && keep(p)).toSeq
+    val files = under("src", _.toString.endsWith(".scala")) ++
+      under(".claude/skills", _ => true) ++ Seq(Paths.get("README.md"))
+    val toolRef = "tools[./]([A-Z]\\w*)".r
+    val mainRef = "runMain (graft(?:\\.\\w+)+)".r
+    val refs = files.flatMap { f =>
+      val text = new String(Files.readAllBytes(f), "UTF-8")
+      (toolRef.findAllMatchIn(text).map(m => s"graft.tools.${m.group(1)}") ++
+        mainRef.findAllMatchIn(text).map(_.group(1))).map(_ -> f.toString)
+    }
+    assert(refs.exists(_._1 == "graft.tools.SpecExport"), s"walk found too little: $refs")
+    val dangling = refs.filterNot { case (name, _) =>
+      scala.util.Try(Class.forName(name, false, getClass.getClassLoader)).isSuccess
+    }.distinct
+    assert(dangling.isEmpty,
+      "references to classes that do not exist: " +
+        dangling.map { case (n, f) => s"$n ($f)" }.mkString(", "))
   }
 }

@@ -48,9 +48,10 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("recall floor at the documented operating point (normalized routing, sqrt-N cells)") {
-    // the r14 1M-vector characterization (tools.IvfIndexProbe --big,
-    // SCALING.md): cosine retrieval over UNNORMALIZED vectors routes L2
-    // cells misaligned with the metric (recall@20 plateaued at 0.58);
+    // the r14 1M-vector characterization (SCALING.md "1M-vector
+    // characterization"): cosine retrieval over UNNORMALIZED vectors
+    // routes L2 cells misaligned with the metric (recall@20 plateaued at
+    // 0.58);
     // normalize-then-L2 (the FAISS recipe — cosine is scale-invariant, so
     // only ROUTING geometry changes) reached 0.85 at nprobe=8/nlist=1000.
     // This pins the same operating point at CI scale: 10k stress vectors
@@ -112,7 +113,8 @@ class VectorIndexSpec extends SparkSpec {
   test("hierarchical trainer: dense leaf ids, k-bounded; build serves with flat-parity recall") {
     // the two-level trainer (level 1: sqrt-k spark.ml fit; level 2:
     // per-region local Lloyd inside flatMapGroups) exists to break the
-    // flat fit's superlinear-in-k wall (KMeansCostProbe: 767 s at k=10^4)
+    // flat fit's superlinear-in-k wall (767 s at k=10^4, SCALING.md
+    // "auto-nlist training-cost curve")
     // — this pins its CONTRACT at CI scale: leaf ids dense 0..K-1, K <= k,
     // and an index built from it serves the same operating point as the
     // flat-trained one within a small recall delta
@@ -419,10 +421,11 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("auto-nlist sizing: sqrt-N, training-cost-capped, corpus-bounded") {
-    // the measured curve (tools.KMeansCostProbe, 1M sample, dim 64):
-    // k=1000 → 33 s, 3163 → 157 s, 10000 → 767 s; superlinear (exp≈1.36),
-    // so an uncapped sqrt-N spends ~an hour fitting k≈32k at the 1B rung —
-    // the cap bounds the AUTO path there, recall buys back via nprobe
+    // the measured curve (SCALING.md "auto-nlist training-cost curve",
+    // 1M sample, dim 64): k=1000 → 33 s, 3163 → 157 s, 10000 → 767 s;
+    // superlinear (exp≈1.36), so an uncapped sqrt-N spends ~an hour
+    // fitting k≈32k at the 1B rung — the cap bounds the AUTO path there,
+    // recall buys back via nprobe
     assert(VectorIndex.autoNlist(500) == 23)
     assert(VectorIndex.autoNlist(1000000L) == 1000)
     assert(VectorIndex.autoNlist(10000000L) == 3163)   // the measured 10M rung
