@@ -640,8 +640,12 @@ object SparkEntry {
   private def qNSpanIncr(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val store = Dedup.spanFingerprints(docs.filter(col("doc_id") < 250), "doc_id", "text")
-    val (rebuilt, _) = Dedup.incrementalSpanDedup(
-      docs.filter(col("doc_id") >= 250), store, "doc_id", "text")
+    // only `rebuilt` is needed: materialize it inside a cache scope so the
+    // operator's shared window relation is released, not left registered
+    val rebuilt = Dedup.withCacheScope {
+      Dedup.incrementalSpanDedup(docs.filter(col("doc_id") >= 250), store, "doc_id", "text")
+        ._1.localCheckpoint(true)
+    }
     rebuilt
       .select(col("id").as("doc_id"), col("n_toks"), col("n_kept"),
         md5(col("text_out")).as("out_md5"))

@@ -173,11 +173,11 @@ object Stress {
           big.filter(col("doc_id") % 10 =!= 0), "doc_id", "text").persist()
         fpStore.count()
         // same count() caveat as span_dedup: force via sum(n_kept)
-        time("incremental_spans") {
+        time("incremental_spans")(Dedup.withCacheScope {
           val (rebuilt, _) = Dedup.incrementalSpanDedup(
             big.filter(col("doc_id") % 10 === 0), fpStore, "doc_id", "text")
-          rebuilt.select(sum(col("n_kept"))).head.getLong(0)
-        }
+          rebuilt.select(sum(col("n_kept"))).head().getLong(0)
+        })
         fpStore.unpersist(false)
       }
       // DSIR selection over the same corpus: target model from a ~1%

@@ -141,10 +141,27 @@ object Dedup {
   // relation of a bare [[minhashCandidates]] call, which stays lazy) land in
   // this registry; [[unpersistCaches]] is the catch-all between corpora.
   private val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
+  /** One open scope on one thread: the relations it releases on exit. A
+    * unit-of-work frame ([[withCacheScope]]) also owns the loser-set
+    * checkpoints the operators take inside it; an operator's own internal
+    * frame does not, because the operator may return a lazy frame that
+    * still reads them.
+    */
+  private final class Frame(val unitOfWork: Boolean) {
+    val owned = scala.collection.mutable.ListBuffer.empty[DataFrame]
+  }
+  // the calling thread's open frames, innermost first: a relation belongs
+  // to a frame of the thread that registered it, so micro-batches of
+  // concurrent streams in one session never release each other's relations
+  private val scopes = ThreadLocal.withInitial[List[Frame]](() => Nil)
   private def cached(df: DataFrame): DataFrame = caches.synchronized {
     caches += df
+    scopes.get.headOption.foreach(_.owned += df)
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
+
+  /** How many relations the registry holds right now. */
+  private[graft] def registeredCaches: Int = caches.synchronized(caches.length)
 
   /** Release every relation cached by dedup operators in this session. */
   def unpersistCaches(): Unit = caches.synchronized {
@@ -153,19 +170,48 @@ object Dedup {
   }
 
   /** Run `body` and release exactly the relations the dedup operators
-    * registered DURING it — the per-unit-of-work hygiene for long-running
-    * callers (one streaming micro-batch, one corpus in a loop) that must
-    * not clear unrelated caches the way [[unpersistCaches]] does. Results
-    * needed beyond the scope must be materialized (written/collected)
-    * inside `body`.
+    * registered DURING it on this thread, and the checkpoints they took for
+    * it — the per-unit-of-work hygiene for long-running callers (one
+    * streaming micro-batch, one corpus in a loop) that must not clear
+    * unrelated caches the way [[unpersistCaches]] does. Results needed
+    * beyond the scope must be materialized (written/collected) inside
+    * `body`.
     */
-  def withCacheScope[T](body: => T): T = {
-    val before = caches.synchronized(caches.length)
+  def withCacheScope[T](body: => T): T = inFrame(new Frame(unitOfWork = true))(body)
+
+  /** An operator's internal scope: releases what it registered, nothing
+    * more (see [[Frame]]).
+    */
+  private def operatorScope[T](body: => T): T = inFrame(new Frame(unitOfWork = false))(body)
+
+  private def inFrame[T](frame: Frame)(body: => T): T = {
+    scopes.set(frame :: scopes.get)
     try body
-    finally caches.synchronized {
-      caches.drop(before).foreach(_.unpersist(blocking = false))
-      caches.remove(before, caches.length - before)
+    finally {
+      scopes.set(scopes.get.tail)
+      caches.synchronized {
+        frame.owned.foreach(release)
+        caches --= frame.owned
+      }
     }
+  }
+
+  /** Eager `localCheckpoint` owned by the calling thread's innermost
+    * [[withCacheScope]], which releases its blocks on exit; with none open,
+    * Spark's ContextCleaner reclaims them once the result is unreferenced.
+    */
+  private[graft] def scopedCheckpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(true)
+    scopes.get.find(_.unitOfWork).foreach(_.owned += cp)
+    cp
+  }
+
+  /** Drop a relation's blocks now. A checkpoint's blocks live on its
+    * `LogicalRDD`'s RDD, which `Dataset.unpersist` does not reach.
+    */
+  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => df.unpersist(blocking = false)
   }
 
   /** Run `body` with a call-local cache registrar, materialize its result,
@@ -300,21 +346,39 @@ object Dedup {
     * the store to complete the ingest. The delta never re-windows the
     * corpus — the store is fp-only (16 B/window), the span analogue of the
     * minhash signature store.
+    *
+    * Both outputs derive from ONE window relation `(id, start, fp,
+    * is_first, in_store)`, persisted and registered in the session cache
+    * registry, so an ingest that writes `rebuilt` and then `newFps` runs
+    * the occurrence/first-occurrence/store pass once. Callers release it
+    * with [[withCacheScope]] (materialize both outputs inside the scope).
+    * Delta ids must be unique, as for every incremental tier.
     */
   def incrementalSpanDedup(delta: DataFrame, storeFps: DataFrame, idCol: String,
                            textCol: String, k: Int = 16): (DataFrame, DataFrame) = {
     val base = spanBase(delta, idCol, textCol)
     val occ = spanOcc(base, k)
-    val store = storeFps.select(col("fp")).distinct()
-    val first = occ.groupBy("fp")
-      .agg(min(struct(col("id"), col("start"))).as("keep"))
-    val storeHits = occ.join(store, Seq("fp"), "left_semi").select("id", "start")
-    val freshLosers = occ.join(first, "fp")
-      .filter(struct(col("id"), col("start")) =!= col("keep"))
-      .select("id", "start")
-    val drops = storeHits.union(freshLosers).distinct()
+    // one fp-keyed aggregation over the delta's windows AND the store's
+    // fps yields both the first occurrence and store membership (partial
+    // aggregation absorbs boilerplate skew, as in dropRepeatedSpans); only
+    // the delta's fps join back
+    val idType = occ.schema("id").dataType
+    val byFp = occ.select(col("fp"), col("id"), col("start"), lit(false).as("__st"))
+      .unionByName(storeFps.select(col("fp"), lit(null).cast(idType).as("id"),
+        lit(null).cast("int").as("start"), lit(true).as("__st")))
+      .groupBy("fp")
+      .agg(min(when(!col("__st"), struct(col("id"), col("start")))).as("keep"),
+        max(col("__st")).as("in_store"))
+      .filter(col("keep").isNotNull)
+    val flags = cached(occ.join(byFp, "fp")
+      .select(col("id"), col("start"), col("fp"),
+        (struct(col("id"), col("start")) === col("keep")).as("is_first"),
+        col("in_store")))
+    // a window drops if the store knows it or it loses the within-delta
+    // first-occurrence rule; the store gains each fresh fp's first window
+    val drops = flags.filter(!col("is_first") || col("in_store"))
       .groupBy("id").agg(collect_set(col("start")).as("drop_starts"))
-    val newFps = first.select("fp").join(store, Seq("fp"), "left_anti")
+    val newFps = flags.filter(col("is_first") && !col("in_store")).select("fp")
     (spanRebuild(base, drops, k), newFps)
   }
 
@@ -740,9 +804,10 @@ object Dedup {
     // scope every relation this call persists (the pair result and the
     // clusters() membership) so batch ingest loops accumulate nothing in the
     // session registry; the small loser id set is eagerly checkpointed so
-    // the returned frame survives the scope exit (ContextCleaner reclaims
-    // the checkpoint once the result is unreferenced)
-    val losers = withCacheScope {
+    // the returned frame survives the scope exit (an enclosing
+    // withCacheScope releases the checkpoint, else the ContextCleaner does
+    // once the result is unreferenced)
+    val losers = operatorScope {
       val pairs = cached(incrementalDedupPairsSigs(deltaSigs, storeSigs, threshold,
         numHashes, bands, maxBucketSize))
       val vsStore = pairs.filter(col("a_new") && !col("b_new")).select(col("id_a").as("id"))
@@ -759,7 +824,7 @@ object Dedup {
         .join(vsStore.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
       val withinDelta = clusters(survivorPairs)
         .filter(col("id") =!= col("cluster")).select("id")
-      vsStore.union(withinDelta).distinct().localCheckpoint(true)
+      scopedCheckpoint(vsStore.union(withinDelta).distinct())
     }
     delta.join(losers, delta(idCol) === losers("id"), "left_anti")
   }
@@ -912,7 +977,7 @@ object Dedup {
     while (!converged && it < maxIter) {
       val next = smallStar(largeStar(e)).localCheckpoint(true)
       val nextSig = signature(next)
-      e.unpersist(blocking = false)
+      release(e)
       e = next
       converged = nextSig == sig
       sig = nextSig
@@ -928,7 +993,7 @@ object Dedup {
         .union(e.select(col("dst").as("id"), col("dst").as("cluster")))
         .distinct())
     membership.count()
-    e.unpersist(blocking = false)
+    release(e)
     membership
   }
 
@@ -941,13 +1006,13 @@ object Dedup {
     * call — the loser id set (one id per dropped row, ids only) is eagerly
     * `localCheckpoint`ed inside the scope, so batch callers looping this
     * per corpus accumulate nothing in the session cache registry. The
-    * checkpoint blocks themselves are reclaimed by Spark's ContextCleaner
+    * checkpoint blocks themselves are released when an enclosing
+    * [[withCacheScope]] exits, or else reclaimed by Spark's ContextCleaner
     * once the returned frame is unreferenced.
     */
   def dropNearDupsByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val losers = withCacheScope {
-      clusters(pairs).filter(col("id") =!= col("cluster")).select("id")
-        .localCheckpoint(true)
+    val losers = operatorScope {
+      scopedCheckpoint(clusters(pairs).filter(col("id") =!= col("cluster")).select("id"))
     }
     df.join(losers, df(idCol) === losers("id"), "left_anti")
   }
@@ -960,7 +1025,7 @@ object Dedup {
   def dropNearDups(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, shingleLen: Int = 5, numHashes: Int = 128,
                    bands: Int = 16, maxBucketSize: Int = 1000): DataFrame =
-    withCacheScope {
+    operatorScope {
       dropNearDupsByPairs(df, idCol,
         minhashDedupPairs(df, idCol, textCol, threshold, shingleLen, numHashes,
           bands, maxBucketSize))
@@ -1369,7 +1434,8 @@ object Dedup {
     * [[assignSemanticClusters]] produces — persist it once per corpus, with
     * the centroid model pinned) without re-pairing the store against
     * itself. The store is pruned to the delta's clusters first (the
-    * delta's distinct cluster ids are at most k rows — broadcast semi), so
+    * delta's distinct cluster ids, at most k, come back to the driver with
+    * the cluster sizes and filter the store as a literal set), so
     * a batch that lands in 3 of 10⁵ cells scans 3 cells' worth of store
     * vectors, not the corpus. Pairs are delta×(delta ∪ prunedStore) within
     * a cluster; store×store pairs never form because the left join side is
@@ -1391,6 +1457,19 @@ object Dedup {
     */
   def incrementalSemanticDedupAssigned(assignedDelta: DataFrame, store: DataFrame,
       threshold: Double, maxClusterSize: Int = 10000): DataFrame =
+    incrementalSemanticPairsFlagged(assignedDelta, store, threshold, maxClusterSize)
+      .select("id_a", "id_b", "cluster", "cos_sim")
+
+  /** The incremental pair kernel, `(id_a, id_b, cluster, cos_sim, a_new,
+    * b_new)` with `id_a < id_b`: the kernel knows which side of each pair
+    * comes from the delta (the left side is delta-only, the right side is
+    * delta plus the pruned store), so it emits the new-side flags itself
+    * instead of re-deriving them by joining the delta's ids back in. The
+    * result is materialized and registered, like every withScopedCaches
+    * result.
+    */
+  private def incrementalSemanticPairsFlagged(assignedDelta: DataFrame, store: DataFrame,
+      threshold: Double, maxClusterSize: Int): DataFrame =
     withScopedCaches { localCached =>
       import graft.functions.VectorMath
       // same no-double-persist rule as incrementalDedupPairsSigs: the
@@ -1399,43 +1478,48 @@ object Dedup {
       val d =
         if (assignedDelta.storageLevel != org.apache.spark.storage.StorageLevel.NONE) projected
         else localCached(projected)
-      val deltaClusters = d.select("cluster").distinct()
-      val pruned = store.select("id", "vec", "cluster")
-        .join(broadcast(deltaClusters), Seq("cluster"), "left_semi")
-      // cap on the COMBINED per-cluster population, counted once (delta ids
-      // are disjoint from store ids by contract)
-      val sizes = localCached(
-        d.select("cluster").unionByName(pruned.select("cluster"))
-          .groupBy("cluster").agg(count(lit(1)).as("__n")))
-      val stats = sizes.agg(
-        sum(when(col("__n") > maxClusterSize, 1).otherwise(0)).as("over"),
-        sum(when(col("__n") > maxClusterSize, col("__n")).otherwise(0L)).as("over_rows")
-      ).head()
-      def statAt(i: Int) = if (stats.isNullAt(i)) 0L else stats.getLong(i)
-      if (statAt(0) > 0)
-        log.warn(s"incrementalSemanticDedup: ${statAt(0)} cluster(s) covering " +
-          s"${statAt(1)} vectors exceed maxClusterSize=$maxClusterSize — excluded " +
+      // the COMBINED per-cluster population of the delta's clusters, in one
+      // small action: at most one row per delta cluster reaches the driver,
+      // and both the cap warning and the pair kernel's cluster filters read
+      // it (delta ids are disjoint from store ids by contract, so each
+      // vector is counted once)
+      val sizes = d.select(col("cluster"), lit(1L).as("__d"))
+        .unionByName(store.select(col("cluster"), lit(0L).as("__d")))
+        .groupBy("cluster").agg(sum("__d").as("__nd"), count(lit(1)).as("__n"))
+        .filter(col("__nd") > 0).select("cluster", "__n")
+        .collect().map(r => r.get(0) -> r.getLong(1))
+      val over = sizes.filter(_._2 > maxClusterSize)
+      if (over.nonEmpty)
+        log.warn(s"incrementalSemanticDedup: ${over.length} cluster(s) covering " +
+          s"${over.map(_._2).sum} vectors exceed maxClusterSize=$maxClusterSize — excluded " +
           "from pair expansion; train more centroids or raise maxClusterSize")
-      val ok = sizes.filter(col("__n") <= maxClusterSize).select("cluster")
+      // the store is pruned to the delta's in-cap clusters by a literal
+      // set filter: no cluster-key broadcast, and parquet can skip row
+      // groups on it
+      val ok = col("cluster").isin(
+        sizes.collect { case (c, n) if n <= maxClusterSize => c }.toIndexedSeq: _*)
       // hoisted-norm pair kernel, as in semanticPairsOfAssigned (r17):
       // Σx² rides each side's projection so the pair pass is dot-only
-      val l = d.join(broadcast(ok), Seq("cluster"), "left_semi")
+      val l = d.filter(ok)
         .select(col("cluster"), col("id").as("lid"), col("vec").as("__vl"),
           VectorMath.normSqCol(col("vec")).as("__nl"))
-      val r = d.select("cluster", "id", "vec")
-        .unionByName(pruned)
-        .join(broadcast(ok), Seq("cluster"), "left_semi")
+      val r = d.select(col("cluster"), col("id"), col("vec"), lit(true).as("__rnew"))
+        .unionByName(store.select(col("cluster"), col("id"), col("vec"), lit(false).as("__rnew")))
+        .filter(ok)
         .select(col("cluster"), col("id").as("rid"), col("vec").as("__vr"),
-          VectorMath.normSqCol(col("vec")).as("__nr"))
+          VectorMath.normSqCol(col("vec")).as("__nr"), col("__rnew"))
       // delta-delta pairs arise in both orders; least/greatest + distinct
-      // canonicalizes (the relation at this point is output-sized)
+      // canonicalizes (the relation at this point is output-sized). The
+      // left id is always new; the right id is new iff it came from d.
       l.join(r, Seq("cluster"))
         .filter(col("lid") =!= col("rid"))
         .withColumn("cos_sim", VectorMath.cosineSimNormed(
           col("__vl"), col("__vr"), col("__nl"), col("__nr")))
         .filter(col("cos_sim") >= threshold)
         .select(least(col("lid"), col("rid")).as("id_a"),
-          greatest(col("lid"), col("rid")).as("id_b"), col("cluster"), col("cos_sim"))
+          greatest(col("lid"), col("rid")).as("id_b"), col("cluster"), col("cos_sim"),
+          (col("lid") < col("rid") || col("__rnew")).as("a_new"),
+          (col("lid") > col("rid") || col("__rnew")).as("b_new"))
         .distinct()
     }
 
@@ -1455,23 +1539,17 @@ object Dedup {
 
   /** [[incrementalSemanticDrop]] over a PRE-ASSIGNED delta — see
     * [[incrementalSemanticDedupAssigned]] for when to prefer it.
-    * `assignedDelta` must be the assignment of exactly `delta`'s rows.
+    * `assignedDelta` must be the assignment of exactly `delta`'s rows. The
+    * pair relation is computed ONCE, with its new-side flags, and every
+    * loser rule reads that one cache; `delta` itself is read only by the
+    * final anti join.
     */
   def incrementalSemanticDropAssigned(delta: DataFrame, assignedDelta: DataFrame,
       store: DataFrame, idCol: String,
       threshold: Double, maxClusterSize: Int = 10000): DataFrame = {
-    val losers = withCacheScope {
-      // already persisted + registered by withScopedCaches inside — no
-      // extra cached() wrapper (it would double-persist/double-register)
-      val pairs = incrementalSemanticDedupAssigned(assignedDelta, store,
+    val losers = operatorScope {
+      val flagged = incrementalSemanticPairsFlagged(assignedDelta, store,
         threshold, maxClusterSize)
-      // the pair relation canonicalizes (least, greatest), so re-derive
-      // which side is new by membership in the delta's id set
-      val dIds = delta.select(col(idCol).as("__did"))
-      val flagged = cached(pairs
-        .join(dIds.select(col("__did").as("id_a"), lit(true).as("a_new")), Seq("id_a"), "left")
-        .join(dIds.select(col("__did").as("id_b"), lit(true).as("b_new")), Seq("id_b"), "left")
-        .na.fill(false, Seq("a_new", "b_new")))
       val vsStore = flagged.filter(col("a_new") && !col("b_new")).select(col("id_a").as("id"))
         .union(flagged.filter(col("b_new") && !col("a_new")).select(col("id_b").as("id")))
         .distinct()
@@ -1483,7 +1561,7 @@ object Dedup {
         .join(vsStore.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
       val withinDelta = clusters(survivorPairs)
         .filter(col("id") =!= col("cluster")).select("id")
-      vsStore.union(withinDelta).distinct().localCheckpoint(true)
+      scopedCheckpoint(vsStore.union(withinDelta).distinct())
     }
     delta.join(losers, delta(idCol) === losers("id"), "left_anti")
   }
@@ -1504,7 +1582,7 @@ object Dedup {
     // semantic-dedup specs — ADVICE r15)
     val (assignedRaw, bc) =
       assignSemanticClustersHandle(spread(df), idCol, vecCol, centroids)
-    val losers = try withCacheScope {
+    val losers = try operatorScope {
       val assigned = cached(assignedRaw)
       val prs = semanticPairsOfAssigned(assigned, cached, threshold, maxClusterSize,
         "semanticDrop")
@@ -1512,8 +1590,8 @@ object Dedup {
       val ranked = memb.join(assigned.select("id", "centroid_sim"), Seq("id"))
       val keep = ranked.groupBy("grp")
         .agg(min_by(col("id"), struct(col("centroid_sim"), col("id"))).as("keep_id"))
-      ranked.join(keep, Seq("grp")).filter(col("id") =!= col("keep_id"))
-        .select("id").localCheckpoint(true)
+      scopedCheckpoint(ranked.join(keep, Seq("grp")).filter(col("id") =!= col("keep_id"))
+        .select("id"))
     } finally bc.unpersist(blocking = false)
     df.join(losers, df(idCol) === losers("id"), "left_anti")
   }

@@ -155,10 +155,10 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // scope the dedup operators' internal caches to THIS micro-batch:
-        // incrementalDedup registers its pair/membership relations in the
-        // session registry, which would otherwise grow by ~2 persisted
-        // relations per batch for the life of the stream
+        // scope the dedup operators' internal caches and checkpoints to
+        // THIS micro-batch: incrementalDedup registers its pair/membership
+        // relations in the session registry, which would otherwise grow by
+        // ~2 persisted relations per batch for the life of the stream
         if (!batch.isEmpty) Dedup.withCacheScope {
           val store = Dedup.readStore(spark, storeDir)(
             Dedup.minhashSignatures(batch.limit(0), idCol, textCol))
@@ -167,14 +167,12 @@ object Streams {
           // signatures are a semi-join slice — no re-shingle of kept rows)
           val sigs = Dedup.minhashSignatures(batch, idCol, textCol).persist()
           try {
-            val kept = Dedup.incrementalDedupSigs(batch, sigs, store, idCol,
-              threshold).localCheckpoint(true)
-            try {
-              kept.write.mode("append").parquet(corpusDir)
-              sigs.join(kept.select(col(idCol).as("__kid")),
-                  sigs("id") === col("__kid"), "left_semi")
-                .write.mode("append").parquet(storeDir)
-            } finally kept.unpersist(blocking = false)
+            val kept = Dedup.scopedCheckpoint(Dedup.incrementalDedupSigs(batch, sigs,
+              store, idCol, threshold))
+            kept.write.mode("append").parquet(corpusDir)
+            sigs.join(kept.select(col(idCol).as("__kid")),
+                sigs("id") === col("__kid"), "left_semi")
+              .write.mode("append").parquet(storeDir)
           } finally sigs.unpersist(blocking = false)
         }
         maybeCompact(spark, batchId, compactEvery,
@@ -236,16 +234,15 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
-        if (!batch.isEmpty) {
+        // scoped: incrementalSpanDedup registers its shared window relation
+        // (both appends read it), released when the micro-batch ends
+        if (!batch.isEmpty) Dedup.withCacheScope {
           val store = Dedup.readStore(spark, storeDir)(Seq.empty[String].toDF("fp"))
           val (rebuilt, newFps) = Dedup.incrementalSpanDedup(batch, store, idCol, textCol, k)
-          val kept = rebuilt.persist()
-          try {
-            kept.write.mode("append").parquet(corpusDir)
-            afterCorpusAppend()
-            newFps.write.mode("append").parquet(storeDir)
-            beforeCommit()
-          } finally kept.unpersist(blocking = false)
+          rebuilt.write.mode("append").parquet(corpusDir)
+          afterCorpusAppend()
+          newFps.write.mode("append").parquet(storeDir)
+          beforeCommit()
         }
         // fp store only: this ingest's corpus recovery rule is
         // max-n_kept-per-id (window-2 twins are NOT byte-identical — the
@@ -317,26 +314,26 @@ object Streams {
           val store = Dedup.readStore(spark, storeDir)(
             Dedup.assignSemanticClusters(batch.limit(0), idCol, vecCol, centroids))
           // replay idempotency: ids already in the store were fully
-          // ingested by a committed (or sink-complete) earlier attempt
-          val fresh = batch.join(store.select(col("id").as(idCol)),
-            Seq(idCol), "left_anti")
+          // ingested by a committed (or sink-complete) earlier attempt.
+          // Checkpointed ONCE (the ingestPretrainCorpus pattern): the
+          // assignment and the final anti join both read it; the scope
+          // releases every checkpoint when the micro-batch ends
+          val fresh = Dedup.scopedCheckpoint(batch.join(store.select(col("id").as(idCol)),
+            Seq(idCol), "left_anti"))
           // assignment computed ONCE for the pair kernel AND the store
-          // append (the ingestPretrainCorpus pattern); kept is eagerly
-          // checkpointed so no append's refreshByPath can evict a
-          // store-reading plan mid-batch
+          // append; kept is eagerly checkpointed so no append's
+          // refreshByPath can evict a store-reading plan mid-batch
           val assigned = Dedup.assignSemanticClusters(fresh, idCol, vecCol,
             centroids).persist()
           try {
-            val kept = Dedup.incrementalSemanticDropAssigned(fresh, assigned,
-              store, idCol, threshold).localCheckpoint(true)
-            try {
-              kept.write.mode("append").parquet(corpusDir)
-              afterCorpusAppend()
-              assigned.join(kept.select(col(idCol).as("__kid")),
-                  assigned("id") === col("__kid"), "left_semi")
-                .write.mode("append").parquet(storeDir)
-              beforeCommit()
-            } finally kept.unpersist(blocking = false)
+            val kept = Dedup.scopedCheckpoint(Dedup.incrementalSemanticDropAssigned(
+              fresh, assigned, store, idCol, threshold))
+            kept.write.mode("append").parquet(corpusDir)
+            afterCorpusAppend()
+            assigned.join(kept.select(col(idCol).as("__kid")),
+                assigned("id") === col("__kid"), "left_semi")
+              .write.mode("append").parquet(storeDir)
+            beforeCommit()
           } finally assigned.unpersist(blocking = false)
         }
         maybeCompact(spark, batchId, compactEvery,
@@ -500,6 +497,17 @@ object Streams {
     * so no append's `refreshByPath` can evict a plan that still reads a
     * store mid-batch (the r12 coupling where the semantic append HAD to
     * run last or the recompute saw the batch's own vectors).
+    *
+    * Every intermediate of a micro-batch is computed ONCE: the scored,
+    * gated, store-filtered batch (`fresh`, checkpointed), its centroid
+    * assignment (persisted), the flagged pair relation (the kernel emits
+    * which side is new, so no id joins re-read the batch), the cluster
+    * sizes (one small collect that both the cap warning and the store
+    * pruning read) and the span tier's window relation (shared by the
+    * corpus and span-store appends). All of it is released when the
+    * micro-batch's [[graft.operators.Dedup.withCacheScope]] exits.
+    * SCALING.md "Pretrain micro-batch: one pass per intermediate" has the
+    * per-action job counts.
     */
   def ingestPretrainCorpus(stream: DataFrame, idCol: String, textCol: String,
                            vecCol: String, qualityWeights: Seq[Double],
@@ -569,55 +577,58 @@ object Streams {
           }
           val semStore = Dedup.readStore(spark, semStoreDir)(
             Dedup.assignSemanticClusters(accepted.limit(0), idCol, vecCol, centroids))
-          val fresh = accepted.join(semStore.select(col("id").as(idCol)),
-            Seq(idCol), "left_anti")
+          // the quality-scored, gated, store-filtered batch is checkpointed
+          // ONCE: the assignment, the pair kernel's delta side and the
+          // `novel` anti join all read it instead of re-scoring the batch.
+          // Every checkpoint here is released with the micro-batch's scope
+          val fresh = Dedup.scopedCheckpoint(accepted.join(
+            semStore.select(col("id").as(idCol)), Seq(idCol), "left_anti"))
           // centroid assignment computed ONCE per batch: the pair kernel
           // and the semantic-store append both consume this relation (the
           // former via the Assigned entry points, the latter pruned to the
           // survivors) instead of re-running the k×dim cosine pass. No
-          // spread here: `fresh` is already post-score (spread upstream),
-          // and probing partition counts on a plan WITH exchanges executes
-          // its map stages during planning — a whole wasted pass
+          // spread here: `fresh` is already post-score (spread upstream)
           val assigned = Dedup.assignSemanticClusters(fresh,
             idCol, vecCol, centroids).persist()
           try {
-            // localCheckpoint (not persist): materializing `novel` HERE
+            // checkpoint (not persist): materializing `novel` HERE
             // truncates its lineage, so no later parquet append's
             // refreshByPath can evict a plan that still reads the semantic
             // store — the sink appends below are ORDER-INDEPENDENT for
             // correctness (the semantic append still goes last because its
             // post-commit-crash replay is then a free no-op: the id
             // anti-join empties the batch)
-            val novel = Dedup.incrementalSemanticDropAssigned(fresh, assigned,
-              semStore, idCol, semThreshold).localCheckpoint(true)
-            try {
-              val fpStore = Dedup.readStore(spark, spanStoreDir)(Seq.empty[String].toDF("fp"))
-              val (rebuilt, newFps) = Dedup.incrementalSpanDedup(novel, fpStore, idCol,
-                textCol, spanK)
-              // graft the rebuilt text back onto the full survivor rows
-              // (quality columns + embedding ride through), SpanDedupNodeSpec's
-              // join-back shape; the embedding column itself is not persisted
-              // to the corpus — it lives in the semantic store's assigned form
-              // n_kept = 0 means every window span-deduped away: drop the row
-              // (the batch flagship v3's 'nonempty' stage semantics — without
-              // this the corpus accumulated empty-text rows its batch
-              // counterpart never emits, and the window-2 crash replay
-              // re-appended them)
-              val kept = novel
-                .join(rebuilt.select(col("id").as("__sid"), col("text_out"), col("n_kept")),
-                  novel(idCol) === col("__sid"))
-                .filter(col("n_kept") > 0)
-                .withColumn(textCol, col("text_out"))
-                .drop("__sid", "text_out", vecCol)
-              kept.write.mode("append").parquet(corpusDir)
-              afterCorpusAppend()
-              newFps.write.mode("append").parquet(spanStoreDir)
-              afterSpanAppend()
-              assigned.join(novel.select(col(idCol).as("__nid")),
-                  assigned("id") === col("__nid"), "left_semi")
-                .write.mode("append").parquet(semStoreDir)
-              beforeCommit()
-            } finally novel.unpersist(blocking = false)
+            val novel = Dedup.scopedCheckpoint(Dedup.incrementalSemanticDropAssigned(
+              fresh, assigned, semStore, idCol, semThreshold))
+            val fpStore = Dedup.readStore(spark, spanStoreDir)(Seq.empty[String].toDF("fp"))
+            // rebuilt and newFps share one registered window relation
+            // (released with the scope), so the corpus and span-store
+            // appends run the window pass once
+            val (rebuilt, newFps) = Dedup.incrementalSpanDedup(novel, fpStore, idCol,
+              textCol, spanK)
+            // graft the rebuilt text back onto the full survivor rows
+            // (quality columns + embedding ride through), SpanDedupNodeSpec's
+            // join-back shape; the embedding column itself is not persisted
+            // to the corpus — it lives in the semantic store's assigned form
+            // n_kept = 0 means every window span-deduped away: drop the row
+            // (the batch flagship v3's 'nonempty' stage semantics — without
+            // this the corpus accumulated empty-text rows its batch
+            // counterpart never emits, and the window-2 crash replay
+            // re-appended them)
+            val kept = novel
+              .join(rebuilt.select(col("id").as("__sid"), col("text_out"), col("n_kept")),
+                novel(idCol) === col("__sid"))
+              .filter(col("n_kept") > 0)
+              .withColumn(textCol, col("text_out"))
+              .drop("__sid", "text_out", vecCol)
+            kept.write.mode("append").parquet(corpusDir)
+            afterCorpusAppend()
+            newFps.write.mode("append").parquet(spanStoreDir)
+            afterSpanAppend()
+            assigned.join(novel.select(col(idCol).as("__nid")),
+                assigned("id") === col("__nid"), "left_semi")
+              .write.mode("append").parquet(semStoreDir)
+            beforeCommit()
           } finally assigned.unpersist(blocking = false)
         }
         // scheduled maintenance at the fully-applied point: all three

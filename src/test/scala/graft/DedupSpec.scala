@@ -541,6 +541,31 @@ class DedupSpec extends SparkSpec {
     assert(fresh.size == 2 && !fresh.exists(store1.as[String].collect().toSet))
   }
 
+  test("incrementalSpanDedup: self-repeating, fully-known and empty docs; one shared window pass") {
+    val store = Dedup.spanFingerprints(Seq((1L, "a b c d e f g h")).toDF("doc_id", "text"),
+      "doc_id", "text", k = 4)
+    val delta = Seq(
+      (20L, "x y z w x y z w q"), // repeats its own first window
+      (21L, "e f g h a b c d"),   // every window already in the store
+      (22L, "")).toDF("doc_id", "text")
+    val registered = Dedup.registeredCaches
+    val (rebuilt, fresh) = Dedup.withCacheScope {
+      val (r, f) = Dedup.incrementalSpanDedup(delta, store, "doc_id", "text", k = 4)
+      (r.orderBy("id").select("id", "n_toks", "n_kept", "text_out")
+         .as[(Long, Long, Long, String)].collect().toSeq,
+       f.as[String].collect().sorted.toSeq)
+    }
+    assert(Dedup.registeredCaches == registered, "the shared window relation must be scoped")
+    assert(rebuilt == Seq(
+      (20L, 9L, 5L, "x y z w q"),
+      (21L, 8L, 0L, ""),
+      (22L, 0L, 0L, "")), s"got $rebuilt")
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // each fresh window content exactly once: the self-repeat is not re-added
+    assert(fresh == Seq(md5("q"), md5("x y z w")).sorted, s"got $fresh")
+  }
+
   test("int8 IVF routes and ranks the planted neighbor like float IVF") {
     val rnd = new scala.util.Random(31)
     val base = Array.fill(32)(rnd.nextGaussian().toFloat)

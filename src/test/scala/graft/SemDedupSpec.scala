@@ -333,4 +333,73 @@ class SemDedupSpec extends SparkSpec {
     assert(Set(Set(1L, 2L, 3L), Set(4L, 5L)) ==
       got.groupBy(_._2).values.map(_.keySet).toSet)
   }
+
+  /** Messages the dedup operators log at WARN while `body` runs (the shared
+    * session logs at ERROR, so the level is lowered for the call only).
+    */
+  private def dedupWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    import scala.jdk.CollectionConverters._
+    val name = "graft.operators.Dedup"
+    val logger = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext].getLogger(name)
+    val seen = java.util.Collections.synchronizedList(new java.util.ArrayList[String])
+    val app = new AbstractAppender("dedup-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val level = logger.getLevel
+    Configurator.setLevel(name, org.apache.logging.log4j.Level.WARN)
+    logger.addAppender(app)
+    val out = try body finally {
+      logger.removeAppender(app)
+      Configurator.setLevel(name, level)
+      app.stop()
+    }
+    (out, seen.asScala.toSeq)
+  }
+
+  // three direction cells; the store holds both a lower and a higher id
+  // than the delta vector that duplicates it, and cell 2 (4 store + 2 delta
+  // vectors) is over a maxClusterSize of 5
+  private val cents3: Seq[(Int, Seq[Float])] =
+    Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f)), (2, Seq(-1f, 0f)))
+  private def capStore = Dedup.assignSemanticClusters(Seq(
+      (1L, Seq(10f, 0f)), (4L, Seq(0f, 5f)), (100L, Seq(0f, 9f)),
+      (7L, Seq(-5f, 0f)), (8L, Seq(-6f, 0.1f)), (9L, Seq(-7f, -0.1f)), (15L, Seq(-8f, 0.2f)))
+    .toDF("vec_id", "embedding"), "vec_id", "embedding", cents3)
+  private def capDelta = Seq(
+    (10L, Seq(40f, 0f)),    // twin of store 1 (store id lower)
+    (5L, Seq(0.1f, 9f)),    // dup of store 4 (lower id) AND store 100 (higher id)
+    (30L, Seq(5f, 5.1f)),   // novel direction ...
+    (31L, Seq(10f, 10.2f)), // ... and its in-delta twin
+    (40L, Seq(-7f, 0f)),    // cell 2: over the cap, never paired
+    (41L, Seq(-7f, 0.05f))).toDF("vec_id", "embedding")
+
+  test("incremental pairs: delta-delta, delta-store both id orders, over-cap cell warned once") {
+    val (rows, warned) = dedupWarnings(Dedup.withCacheScope {
+      Dedup.incrementalSemanticDedupAssigned(
+          Dedup.assignSemanticClusters(capDelta, "vec_id", "embedding", cents3),
+          capStore, threshold = 0.95, maxClusterSize = 5)
+        .select(col("id_a"), col("id_b"), col("cluster"), round(col("cos_sim"), 4))
+        .as[(Long, Long, Int, Double)].collect().sorted.toSeq
+    })
+    assert(rows == Seq((1L, 10L, 0, 1.0), (4L, 5L, 1, 0.9999), (5L, 100L, 1, 0.9999),
+      (30L, 31L, 1, 1.0)), s"got $rows")
+    assert(warned.count(_.contains("exceed maxClusterSize=5")) == 1, s"got $warned")
+    assert(warned.exists(_.contains("1 cluster(s) covering 6 vectors")), s"got $warned")
+  }
+
+  test("incremental drop: store wins in both id orders, delta twin keeps min, over-cap cell kept") {
+    val (kept, warned) = dedupWarnings(Dedup.withCacheScope {
+      Dedup.incrementalSemanticDrop(capDelta, capStore, "vec_id", "embedding",
+          cents3, threshold = 0.95, maxClusterSize = 5)
+        .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
+    })
+    assert(kept == Seq((30L, Seq(5f, 5.1f)), (40L, Seq(-7f, 0f)), (41L, Seq(-7f, 0.05f))),
+      s"got $kept")
+    assert(warned.count(_.contains("exceed maxClusterSize=5")) == 1, s"got $warned")
+  }
 }

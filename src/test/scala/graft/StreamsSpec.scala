@@ -609,4 +609,96 @@ class StreamsSpec extends SparkSpec {
     assert(rows.keySet.contains(2L), s"clamped doc must flow through: ${rows.keySet}")
     assert(rows.values.forall(_.length <= cap), "every stored text is capped")
   }
+
+  test("ingestPretrainCorpus: one micro-batch computes each intermediate once (job budget)") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sc = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("ingest_jobs").toString
+    val cents: Seq[(Int, Seq[Float])] = Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f)))
+    val passText = "the cat sat on the mat and the dog slept in the warm sun for hours today"
+    val in = MemoryStream[(Long, String, Seq[Float])]
+    val q = graft.streaming.Streams.ingestPretrainCorpus(
+      in.toDF().toDF("doc_id", "text", "embedding"), "doc_id", "text", "embedding",
+      SparkEntry.qualityGateWeights, cents, semThreshold = 0.95, spanK = 4,
+      s"$dir/corpus", s"$dir/sem", s"$dir/span", s"$dir/ckpt")
+    // every job the second micro-batch launches
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    try {
+      in.addData((1L, passText, Seq(10f, 0f)),
+        (2L, "zzz zzz zzz zzz zzz zzz zzz zzz zzz zzz zzz zzz", Seq(0f, 5f)))
+      q.processAllAvailable()
+      org.apache.spark.sql.graft.Bridge.flushListenerBus(spark)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        // a store dup, a span-repeating novel doc and its in-batch twin:
+        // the pair kernel, the connected-components probe and both span
+        // outputs all run
+        in.addData(
+          (10L, "a reasonable sentence about the weather and the plans for the weekend trip", Seq(20f, 0f)),
+          (11L, "the cat sat on a spotted rug by the fire late last night", Seq(0f, 7f)),
+          (12L, "the cat sat on a spotted rug by the fire late last night", Seq(0f, 7.1f)))
+        q.processAllAvailable()
+        org.apache.spark.sql.graft.Bridge.flushListenerBus(spark)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    } finally q.stop()
+    // the measured count: re-scoring `fresh` per reader, re-deriving the
+    // pair flags by id joins or windowing the spans once per append each
+    // push it over (61 jobs with all three)
+    assert(jobs.get <= 38, s"${jobs.get} jobs")
+    val rows = spark.read.parquet(s"$dir/corpus")
+      .select("doc_id", "text").as[(Long, String)].collect().toMap
+    assert(rows == Map(1L -> passText, 11L -> "a spotted rug by the fire late last night"),
+      s"got $rows")
+  }
+
+  test("a long-lived session does not grow caches across pretrain, semantic and span micro-batches") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sc = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("ingest_caches").toString
+    val cents: Seq[(Int, Seq[Float])] = Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f)))
+    val texts = Seq(
+      "the cat sat on the mat and the dog slept in the warm sun for hours today",
+      "a reasonable sentence about the weather and the plans for the weekend trip",
+      "the cat sat on a spotted rug by the fire late last night")
+    val pre = MemoryStream[(Long, String, Seq[Float])]
+    val sem = MemoryStream[(Long, Seq[Float])]
+    val span = MemoryStream[(Long, String)]
+    // compared as id sets: the ContextCleaner may reclaim earlier tests'
+    // relations meanwhile, which must not read as this test's growth
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val (rdds0, registered0) = (persisted, graft.operators.Dedup.registeredCaches)
+    val qs = Seq(
+      graft.streaming.Streams.ingestPretrainCorpus(
+        pre.toDF().toDF("doc_id", "text", "embedding"), "doc_id", "text", "embedding",
+        SparkEntry.qualityGateWeights, cents, semThreshold = 0.95, spanK = 4,
+        s"$dir/p/corpus", s"$dir/p/sem", s"$dir/p/span", s"$dir/p/ckpt"),
+      graft.streaming.Streams.ingestSemanticDedup(
+        sem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
+        cents, threshold = 0.95, s"$dir/s/corpus", s"$dir/s/store", s"$dir/s/ckpt"),
+      Streams.ingestSpanDedup(span.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", k = 4, s"$dir/w/corpus", s"$dir/w/store", s"$dir/w/ckpt"))
+    try {
+      for (b <- 0 until 3) {
+        // each batch repeats earlier windows and directions (store hits)
+        // and carries an in-batch twin pair (delta-delta pairs)
+        val ids = (0 until 3).map(i => 100L * b + i)
+        val vec = (i: Int) => if (i == 0) Seq(10f + b, 0f) else Seq(0f, 5f + i + b)
+        pre.addData(ids.indices.map(i => (ids(i), texts(i), vec(i))): _*)
+        sem.addData(ids.indices.map(i => (ids(i), vec(i))): _*)
+        span.addData(ids.indices.map(i => (ids(i), texts(i) + s" batch $b")): _*)
+        qs.foreach(_.processAllAvailable())
+      }
+    } finally qs.foreach(_.stop())
+    assert(spark.read.parquet(s"$dir/p/corpus").count() > 0 &&
+      spark.read.parquet(s"$dir/s/corpus").count() > 0 &&
+      spark.read.parquet(s"$dir/w/corpus").count() == 9, "every ingest must have run")
+    assert(graft.operators.Dedup.registeredCaches == registered0,
+      "a micro-batch left a relation in the dedup cache registry")
+    val grown = persisted.diff(rdds0)
+    assert(grown.isEmpty, s"persistent RDDs left behind: $grown")
+  }
 }
