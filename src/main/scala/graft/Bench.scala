@@ -152,8 +152,7 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
     graft.operators.Dedup.unpersistCaches() // warm-up caches must not linger
-    graft.plans.PipelineCompiler.unpersistCompiledCaches()
-      spark.sharedState.cacheManager.clearCache() // v3's CacheSpec persists too
+    spark.sharedState.cacheManager.clearCache()
     // Host-load noise control (VERDICT r6 §next #5): every query runs
     // `reps` times and the MEDIAN is the reported number; min/max ride
     // along so round-over-round regressions are attributable to the code,
@@ -212,11 +211,10 @@ object Bench {
         System.err.println(
           f"[bench] $name rep $rep: $t%.3f s (gc $gcSec%.3f s, jit $jitSec%.3f s, " +
             f"other $other%.2f cores, steal $steal%.2f cores)")
+        // every registered relation (the v3 flagship's CacheSpec persists
+        // included) and anything else cached — or reps 2..n measure cache
+        // hits instead of the pipeline
         graft.operators.Dedup.unpersistCaches()
-        // the v3 flagship's CacheSpec persists register with the session
-        // cache manager, not the operator registry — drop them too, or
-        // reps 2..n measure cache hits instead of the pipeline
-        graft.plans.PipelineCompiler.unpersistCompiledCaches()
         spark.sharedState.cacheManager.clearCache()
         // settle the heap between reps: dropping DataFrame references lets
         // the ContextCleaner reclaim their broadcast variables, but only

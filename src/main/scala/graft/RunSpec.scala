@@ -205,7 +205,7 @@ object RunSpec {
             catch { case e: Exception =>
               System.err.println(s"--report failed (ingest succeeded): ${e.getMessage}")
             }
-        case Left(spec) => plans.PipelineCompiler.withCompiledCacheScope {
+        case Left(spec) => graft.operators.Dedup.withCacheScope {
           // spy-node delivery: collect every named observed metric the
           // run's actions produce and print them after — the reference's
           // spy output riding a persisted job (`jobs/job.js:99-116`). The

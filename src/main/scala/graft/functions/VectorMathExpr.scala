@@ -155,27 +155,6 @@ case class CosineSimNormed(first: Expression, second: Expression,
     copy(first = f, second = s, third = t, fourth = q)
 }
 
-/** `dot(a, b)` with the same cast/order/null semantics as [[CosineSim]]. */
-case class DotProduct(left: Expression, right: Expression) extends PairwiseVectorExpr {
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorMath.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      leftIsFloat, rightIsFloat)
-
-  override def nullable: Boolean = true
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val resultTerm = ctx.freshName("dotResult")
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Double $resultTerm = graft.functions.VectorMath.dot($a, $b, $leftIsFloat, $rightIsFloat);
-      if ($resultTerm == null) { ${ev.isNull} = true; } else { ${ev.value} = $resultTerm.doubleValue(); }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
-    copy(left = l, right = r)
-}
-
 /** `dotInt8(a, b)` — exact integer dot product of two int8 code arrays
   * (`array<int>`, values in [-127, 127] from
   * [[graft.functions.VectorOps.quantizeInt8]]). The HOF formulation
@@ -514,9 +493,6 @@ object VectorMath {
     Bridge.column(CosineSimNormed(Bridge.expression(a), Bridge.expression(b),
       Bridge.expression(naSq), Bridge.expression(nbSq)))
 
-  def dotProduct(a: Column, b: Column): Column =
-    Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
-
   def dotProductInt8(a: Column, b: Column): Column =
     Bridge.column(DotProductInt8(Bridge.expression(a), Bridge.expression(b)))
 
@@ -608,17 +584,6 @@ object VectorMath {
     var i = 0
     while (i < n) { acc += (a.getInt(i) * b.getInt(i)).toLong; i += 1 }
     java.lang.Long.valueOf(acc)
-  }
-
-  /** Boxed so codegen/interpreted share one null convention. */
-  def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): java.lang.Double = {
-    val n = a.numElements()
-    if (b.numElements() != n) return null // zip_with pads with null → null sum
-    if (hasNullElement(a, n) || hasNullElement(b, n)) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += elem(a, i, aFloat) * elem(b, i, bFloat); i += 1 }
-    java.lang.Double.valueOf(acc)
   }
 
   /** [[NormSq]]'s kernel: Σx² with [[cosine]]'s exact element casts and

@@ -132,50 +132,63 @@ object Dedup {
     else df
   }
 
-  // Relations persisted by the LSH operators (they feed multiple plan
-  // branches). End-to-end entry points ([[minhashDedupPairs]],
-  // [[simhashPairs]]) scope their intermediates per call: the (small) pair
-  // result is materialized eagerly and the signature/candidate relations are
-  // unpersisted before returning, so storage memory does NOT accumulate for
-  // the life of a long-running session. Only results (and the signature
-  // relation of a bare [[minhashCandidates]] call, which stays lazy) land in
-  // this registry; [[unpersistCaches]] is the catch-all between corpora.
+  // The session's one cache registry: every relation an operator, a spec
+  // compile (PipelineCompiler's CacheSpec nodes and multi-read barriers), a
+  // streaming micro-batch or a multi-sink run persists is registered here
+  // through [[cached]], and belongs to the innermost open frame of the
+  // registering thread, which releases it on exit. [[unpersistCaches]] is
+  // the session-wide release for relations registered outside any frame.
+  // Left to Spark's ContextCleaner by design: VectorIndex's and Bpe's raw
+  // localCheckpoints and SparkEntry.qNSpanIncr's escape checkpoint
+  // (SCALING.md "Cache lifetime: one owner").
   private val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
   /** One open scope on one thread: the relations it releases on exit. A
-    * unit-of-work frame ([[withCacheScope]]) also owns the loser-set
-    * checkpoints the operators take inside it; an operator's own internal
-    * frame does not, because the operator may return a lazy frame that
-    * still reads them.
+    * unit-of-work frame ([[withCacheScope]]) also owns the checkpoints
+    * taken inside it ([[scopedCheckpoint]]); an operator's own internal
+    * frame ([[operatorScope]]) does not, because the operator may return a
+    * lazy frame that still reads them.
     */
   private final class Frame(val unitOfWork: Boolean) {
-    val owned = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val persisted = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val checkpoints = scala.collection.mutable.ListBuffer.empty[DataFrame]
   }
   // the calling thread's open frames, innermost first: a relation belongs
   // to a frame of the thread that registered it, so micro-batches of
-  // concurrent streams in one session never release each other's relations
+  // concurrent streams, or concurrent compiles, in one session never
+  // release each other's relations
   private val scopes = ThreadLocal.withInitial[List[Frame]](() => Nil)
-  private def cached(df: DataFrame): DataFrame = caches.synchronized {
+
+  /** Persist `df` (`MEMORY_AND_DISK`) and register it with the calling
+    * thread's innermost open frame, which releases it on exit; with no
+    * frame open it stays until [[unpersistCaches]].
+    */
+  private[graft] def cached(df: DataFrame): DataFrame = cachedIn(scopes.get.headOption)(df)
+
+  private def cachedIn(frame: Option[Frame])(df: DataFrame): DataFrame = caches.synchronized {
     caches += df
-    scopes.get.headOption.foreach(_.owned += df)
+    frame.foreach(_.persisted += df)
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** How many relations the registry holds right now. */
   private[graft] def registeredCaches: Int = caches.synchronized(caches.length)
 
-  /** Release every relation cached by dedup operators in this session. */
+  /** Release every registered relation in this session — the session-wide
+    * release; a caller cleaning up after its own work uses
+    * [[withCacheScope]] instead.
+    */
   def unpersistCaches(): Unit = caches.synchronized {
     caches.foreach(_.unpersist(blocking = false))
     caches.clear()
   }
 
-  /** Run `body` and release exactly the relations the dedup operators
-    * registered DURING it on this thread, and the checkpoints they took for
-    * it — the per-unit-of-work hygiene for long-running callers (one
-    * streaming micro-batch, one corpus in a loop) that must not clear
-    * unrelated caches the way [[unpersistCaches]] does. Results needed
-    * beyond the scope must be materialized (written/collected) inside
-    * `body`.
+  /** Run `body` and release exactly the relations registered DURING it on
+    * this thread, and the checkpoints taken for it — the per-unit-of-work
+    * hygiene for long-running callers (one streaming micro-batch, one spec
+    * compile, one corpus in a loop) that must not clear unrelated caches
+    * the way [[unpersistCaches]] does. Results needed beyond the scope must
+    * be materialized (written/collected) inside `body`. Frames nest and are
+    * per thread: concurrent scopes in one session release only their own.
     */
   def withCacheScope[T](body: => T): T = inFrame(new Frame(unitOfWork = true))(body)
 
@@ -184,15 +197,30 @@ object Dedup {
     */
   private def operatorScope[T](body: => T): T = inFrame(new Frame(unitOfWork = false))(body)
 
+  /** An operator scope around a small (pair-sized) result: `body`'s
+    * [[cached]] intermediates are released when it returns, after the
+    * result is materialized into a cache registered with the ENCLOSING
+    * frame — callers typically both write and inspect it.
+    */
+  private def operatorResult(body: => DataFrame): DataFrame = {
+    val enclosing = scopes.get.headOption
+    operatorScope {
+      val result = cachedIn(enclosing)(body)
+      result.count() // materialize so the intermediates are releasable NOW
+      result
+    }
+  }
+
   private def inFrame[T](frame: Frame)(body: => T): T = {
     scopes.set(frame :: scopes.get)
     try body
     finally {
       scopes.set(scopes.get.tail)
       caches.synchronized {
-        frame.owned.foreach(release)
-        caches --= frame.owned
+        frame.persisted.foreach(_.unpersist(blocking = false))
+        caches --= frame.persisted
       }
+      frame.checkpoints.foreach(releaseCheckpoint)
     }
   }
 
@@ -202,35 +230,16 @@ object Dedup {
     */
   private[graft] def scopedCheckpoint(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(true)
-    scopes.get.find(_.unitOfWork).foreach(_.owned += cp)
+    scopes.get.find(_.unitOfWork).foreach(_.checkpoints += cp)
     cp
   }
 
-  /** Drop a relation's blocks now. A checkpoint's blocks live on its
-    * `LogicalRDD`'s RDD, which `Dataset.unpersist` does not reach.
+  /** Drop an eager checkpoint's blocks now: they live on its `LogicalRDD`'s
+    * RDD, which `Dataset.unpersist` does not reach.
     */
-  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+  private def releaseCheckpoint(cp: DataFrame): Unit = cp.queryExecution.logical match {
     case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ => df.unpersist(blocking = false)
-  }
-
-  /** Run `body` with a call-local cache registrar, materialize its result,
-    * then release the call's intermediate caches eagerly. The result itself
-    * is persisted (it was just computed — callers typically both write and
-    * inspect it) and registered in the session registry for
-    * [[unpersistCaches]].
-    */
-  private def withScopedCaches(body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
-    val local = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def localCached(df: DataFrame): DataFrame = {
-      local += df
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    try {
-      val result = cached(body(localCached))
-      result.count() // materialize so the intermediates are releasable NOW
-      result
-    } finally local.foreach(_.unpersist(blocking = false))
+    case _ =>
   }
 
   /** Tier 1: exact dedup on a canonical text fingerprint; keeps the row with
@@ -384,16 +393,6 @@ object Dedup {
 
   // --- Tier 2: MinHash + LSH ------------------------------------------------
 
-  /** MinHash signature over murmur3 shingle hashes. The string hashes are a
-    * single `transform` pass; the `numHashes` permutations + minima run in
-    * the native [[graft.functions.MinHashSig]] kernel (a
-    * `array(k × array_min(transform(...)))` formulation re-evaluates the
-    * lambda pipeline k times interpreted — measured minutes vs. seconds).
-    */
-  def minhashSignature(shingles: Column, numHashes: Int, seed: Long = 42L): Column =
-    graft.functions.MinHashSig.minhashSig(
-      transform(shingles, s => hash(s).cast("long")), numHashes, seed)
-
   /** MinHash signature relation `(id, sig)` — a narrow per-row projection.
     * Shingling + hashing is the rolling-hash kernel: O(len) per row, no
     * per-window string allocation.
@@ -516,7 +515,7 @@ object Dedup {
                         numHashes: Int = 128, bands: Int = 16,
                         maxBucketSize: Int = 1000): DataFrame = {
     val obs = org.apache.spark.sql.Observation()
-    val result = withScopedCaches { localCached =>
+    val result = operatorResult {
       def shOf(c: Column) = graft.functions.ShingleHashes.shingleHashes(c, shingleLen)
       // ONE shingle pass computes, per doc, the canonical fingerprint (a
       // 96-bit (xxhash64, murmur3) pair over the sorted distinct shingle
@@ -530,7 +529,7 @@ object Dedup {
       // pass: the rep's self-Jaccard is exactly 1.0 iff the set is non-empty
       // (array_intersect == array_union == the distinct set), 0.0 otherwise
       // — so the within-group verdict needs this one bit, not a re-shingle
-      val keyed = localCached(spread(df).select(col(idCol).as("id"), {
+      val keyed = cached(spread(df).select(col(idCol).as("id"), {
           val sh = shOf(col(textCol))
           struct(xxhash64(sort_array(sh)).as("h1"), hash(sort_array(sh)).as("h2")).as("__fp")
         }, graft.functions.MinHashSig.minhashSig(shOf(col(textCol)), numHashes).as("sig"),
@@ -538,10 +537,10 @@ object Dedup {
       // rep id + rep sig + self-jaccard bit + group size in ONE fp-keyed
       // aggregation (sig/has_sh are identical across members, so `first` is
       // deterministic and the partial agg collapses duplicates map-side)
-      val repAgg = localCached(keyed.groupBy("__fp").agg(
+      val repAgg = cached(keyed.groupBy("__fp").agg(
         min(col("id")).as("id"), first(col("sig")).as("sig"),
         first(col("__has_sh")).as("__has_sh"), count(lit(1)).as("grp_n")))
-      val cands = localCached(
+      val cands = cached(
         bandedPairs(repAgg.select("id", "sig"), numHashes, bands, maxBucketSize, Some(obs)))
       // exact verify on the hashed shingle sets (identical to string-shingle
       // Jaccard up to 31-bit hash collisions), shingled ONLY for reps that
@@ -550,7 +549,7 @@ object Dedup {
       // fp and group size ride along so the expansion below needs no further
       // rep-metadata joins.
       val candIds = cands.select(explode(array(col("id_a"), col("id_b"))).as("id"))
-      val shMeta = localCached(df.select(col(idCol).as("id"), col(textCol).as("__text"))
+      val shMeta = cached(df.select(col(idCol).as("id"), col(textCol).as("__text"))
         .join(candIds, Seq("id"), "left_semi") // semi: no distinct shuffle needed
         .select(col("id"), shOf(col("__text")).as("sh"))
         .join(repAgg.select("id", "__fp", "grp_n"), "id"))
@@ -744,7 +743,7 @@ object Dedup {
                                 bands: Int = 16,
                                 maxBucketSize: Int = 1000): DataFrame = {
     val obs = org.apache.spark.sql.Observation()
-    val result = withScopedCaches { localCached =>
+    val result = operatorResult {
       // don't re-persist a relation the caller already persists (the
       // streaming ingests hand in their cached per-batch signatures) —
       // the projection's scan goes through the caller's cache; a second
@@ -752,8 +751,8 @@ object Dedup {
       val projected = deltaSigs.select(col("id"), col("sig"))
       val newSigs =
         if (deltaSigs.storageLevel != org.apache.spark.storage.StorageLevel.NONE) projected
-        else localCached(projected)
-      val all = localCached(newSigs.unionByName(storeSigs.select(col("id"), col("sig"))))
+        else cached(projected)
+      val all = cached(newSigs.unionByName(storeSigs.select(col("id"), col("sig"))))
       val pairs = bandedPairs(all, numHashes, bands, maxBucketSize, Some(obs))
       val flags = newSigs.select(col("id"), lit(true).as("is_new"))
       val sigA = all.select(col("id").as("id_a"), col("sig").as("sig_a"))
@@ -808,8 +807,8 @@ object Dedup {
     // withCacheScope releases the checkpoint, else the ContextCleaner does
     // once the result is unreferenced)
     val losers = operatorScope {
-      val pairs = cached(incrementalDedupPairsSigs(deltaSigs, storeSigs, threshold,
-        numHashes, bands, maxBucketSize))
+      val pairs = incrementalDedupPairsSigs(deltaSigs, storeSigs, threshold,
+        numHashes, bands, maxBucketSize)
       val vsStore = pairs.filter(col("a_new") && !col("b_new")).select(col("id_a").as("id"))
         .union(pairs.filter(col("b_new") && !col("a_new")).select(col("id_b").as("id")))
         .distinct()
@@ -977,7 +976,7 @@ object Dedup {
     while (!converged && it < maxIter) {
       val next = smallStar(largeStar(e)).localCheckpoint(true)
       val nextSig = signature(next)
-      release(e)
+      releaseCheckpoint(e)
       e = next
       converged = nextSig == sig
       sig = nextSig
@@ -993,7 +992,7 @@ object Dedup {
         .union(e.select(col("dst").as("id"), col("dst").as("cluster")))
         .distinct())
     membership.count()
-    release(e)
+    releaseCheckpoint(e)
     membership
   }
 
@@ -1073,7 +1072,7 @@ object Dedup {
                                  maxBucketSize: Int, totalBits: Int,
                                  op: String): DataFrame = {
     val obs = org.apache.spark.sql.Observation()
-    val result = withScopedCaches { _ =>
+    val result = operatorResult {
       val blocks = maxHamming + 1
       val width = totalBits / blocks
       // Unlike the minhash tier, the whole signature is ONE long — carry it
@@ -1363,11 +1362,9 @@ object Dedup {
   def semanticDedupPairs(df: DataFrame, idCol: String, vecCol: String,
                          centroids: Seq[(Int, Seq[Float])], threshold: Double,
                          maxClusterSize: Int = 10000): DataFrame =
-    withScopedCaches { localCached =>
-      val assigned = localCached(
-        assignSemanticClusters(spread(df), idCol, vecCol, centroids))
-      semanticPairsOfAssigned(assigned, localCached, threshold, maxClusterSize,
-        "semanticDedupPairs")
+    operatorResult {
+      val assigned = cached(assignSemanticClusters(spread(df), idCol, vecCol, centroids))
+      semanticPairsOfAssigned(assigned, threshold, maxClusterSize, "semanticDedupPairs")
     }
 
   /** Pair kernel over a PRE-ASSIGNED `(id, vec, cluster, …)` relation — the
@@ -1378,19 +1375,19 @@ object Dedup {
     */
   def semanticDedupPairsAssigned(assigned: DataFrame, threshold: Double,
                                  maxClusterSize: Int = 10000): DataFrame =
-    withScopedCaches { localCached =>
-      semanticPairsOfAssigned(localCached(assigned.select("id", "vec", "cluster")),
-        localCached, threshold, maxClusterSize, "semanticDedupPairsAssigned")
+    operatorResult {
+      semanticPairsOfAssigned(cached(assigned.select("id", "vec", "cluster")),
+        threshold, maxClusterSize, "semanticDedupPairsAssigned")
     }
 
   /** Shared pair kernel over an assigned (id, vec, cluster, centroid_sim)
-    * relation; `localCached` scopes the k-row size relation to the caller.
+    * relation; the k-row size relation is [[cached]] in the caller's
+    * operator scope.
     */
-  private def semanticPairsOfAssigned(assigned: DataFrame,
-      localCached: DataFrame => DataFrame, threshold: Double,
+  private def semanticPairsOfAssigned(assigned: DataFrame, threshold: Double,
       maxClusterSize: Int, op: String): DataFrame = {
     import graft.functions.VectorMath
-    val sizes = localCached(assigned.groupBy("cluster").agg(count(lit(1)).as("__n")))
+    val sizes = cached(assigned.groupBy("cluster").agg(count(lit(1)).as("__n")))
     // cap accounting on the k-row relation — one tiny action (this is also
     // the materialization barrier that fills the assignment cache before the
     // self-join below scans it twice), mirroring the minhash over-group stats
@@ -1465,19 +1462,18 @@ object Dedup {
     * comes from the delta (the left side is delta-only, the right side is
     * delta plus the pruned store), so it emits the new-side flags itself
     * instead of re-deriving them by joining the delta's ids back in. The
-    * result is materialized and registered, like every withScopedCaches
-    * result.
+    * result is materialized and registered, like every [[operatorResult]].
     */
   private def incrementalSemanticPairsFlagged(assignedDelta: DataFrame, store: DataFrame,
       threshold: Double, maxClusterSize: Int): DataFrame =
-    withScopedCaches { localCached =>
+    operatorResult {
       import graft.functions.VectorMath
       // same no-double-persist rule as incrementalDedupPairsSigs: the
       // ingests hand in an already-persisted assignment (vectors included)
       val projected = assignedDelta.select("id", "vec", "cluster")
       val d =
         if (assignedDelta.storageLevel != org.apache.spark.storage.StorageLevel.NONE) projected
-        else localCached(projected)
+        else cached(projected)
       // the COMBINED per-cluster population of the delta's clusters, in one
       // small action: at most one row per delta cluster reaches the driver,
       // and both the cap warning and the pair kernel's cluster filters read
@@ -1584,8 +1580,7 @@ object Dedup {
       assignSemanticClustersHandle(spread(df), idCol, vecCol, centroids)
     val losers = try operatorScope {
       val assigned = cached(assignedRaw)
-      val prs = semanticPairsOfAssigned(assigned, cached, threshold, maxClusterSize,
-        "semanticDrop")
+      val prs = semanticPairsOfAssigned(assigned, threshold, maxClusterSize, "semanticDrop")
       val memb = clusters(prs).withColumnRenamed("cluster", "grp")
       val ranked = memb.join(assigned.select("id", "centroid_sim"), Seq("id"))
       val keep = ranked.groupBy("grp")

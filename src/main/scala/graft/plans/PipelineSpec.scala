@@ -328,45 +328,28 @@ object PipelineCompiler {
     }
   }
 
-  // Relations persisted by CacheSpec nodes during compile(). Without a
-  // registry every compile leaks its (possibly disk-spilled) persists for
-  // the session lifetime and each harness had to clearCache() manually;
-  // callers that compile many specs release them deterministically with
-  // [[unpersistCompiledCaches]] (the Dedup.cached/unpersistCaches pattern).
-  private val compiledCaches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-
-  /** Release every relation persisted by CacheSpec nodes in this session.
-    * This is the WHOLE-SESSION hammer — a caller that merely wants to clean
-    * up after its own compile must use [[withCompiledCacheScope]] instead,
-    * or it unpersists CacheSpec relations belonging to any other pipeline
-    * compiled concurrently in the same JVM.
+  /** [[graft.operators.Dedup.unpersistCaches]], the session-wide release
+    * of every registered relation (CacheSpec persists and multi-read
+    * barriers among them). Kept only as the name the benchmark driver
+    * (`perfbench/scala/graft/bench/Main.scala`) calls; new code calls
+    * Dedup's.
     */
-  def unpersistCompiledCaches(): Unit = compiledCaches.synchronized {
-    compiledCaches.foreach(_.unpersist(blocking = false))
-    compiledCaches.clear()
-  }
+  def unpersistCompiledCaches(): Unit = graft.operators.Dedup.unpersistCaches()
 
-  /** Run `body` and release exactly the CacheSpec relations that
-    * [[compile]] registered DURING it — the per-unit-of-work hygiene for
-    * callers that compile in a loop (a bench rep, one RunSpec execution)
-    * without touching other compiles' persists (the
-    * [[graft.operators.Dedup.withCacheScope]] pattern). Results needed
-    * beyond the scope must be materialized inside `body`.
+  /** [[graft.operators.Dedup.withCacheScope]]: a compile run inside it is a
+    * unit of work whose CacheSpec persists, barriers, operator caches and
+    * operator checkpoints are released on exit. Kept only as the name the
+    * benchmark driver (`perfbench/scala/graft/bench/Workloads.scala`)
+    * calls; new code calls Dedup's.
     */
-  def withCompiledCacheScope[T](body: => T): T = {
-    val before = compiledCaches.synchronized(compiledCaches.length)
-    try body
-    finally compiledCaches.synchronized {
-      compiledCaches.drop(before).foreach(_.unpersist(blocking = false))
-      compiledCaches.remove(before, compiledCaches.length - before)
-    }
-  }
+  def withCompiledCacheScope[T](body: => T): T = graft.operators.Dedup.withCacheScope(body)
 
   /** The compiler's one materialization barrier, used by [[CacheSpec]]
     * nodes and by the multi-read rule ([[multiReadInput]]): persist `df`
-    * (`MEMORY_AND_DISK`), register it for [[unpersistCompiledCaches]] /
-    * [[withCompiledCacheScope]], and return a frame rooted at the cache's
-    * `InMemoryRelation` leaf.
+    * (`MEMORY_AND_DISK`) through [[graft.operators.Dedup.cached]], so the
+    * caller's [[graft.operators.Dedup.withCacheScope]] releases it (with no
+    * scope open it stays until [[graft.operators.Dedup.unpersistCaches]]),
+    * and return a frame rooted at the cache's `InMemoryRelation` leaf.
     *
     * Lineage-stub the segment BEFORE persisting (r16): persist truncates
     * execution and the InMemoryRelation leaf truncates downstream
@@ -389,11 +372,11 @@ object PipelineCompiler {
     *
     * NOTE (ADVICE r16): stub caches are keyed by the compiled RDD's
     * identity, so in-compiler cache reuse is BY REFERENCE only —
-    * recompiling the same spec in one session without
-    * unpersistCompiledCaches/withCompiledCacheScope between compiles
-    * creates a fresh cache entry per compile (pre-r16 plan-matching would
-    * have structurally deduplicated them). Callers that compile in a loop
-    * must scope their compiles (Bench does).
+    * recompiling the same spec in one session outside a
+    * [[graft.operators.Dedup.withCacheScope]] creates a fresh cache entry
+    * per compile (pre-r16 plan-matching would have structurally
+    * deduplicated them). Callers that compile in a loop must scope their
+    * compiles, or release between them as Bench does.
     *
     * Rooting downstream nodes at the InMemoryRelation leaf matters too:
     * persist alone truncates execution but NOT analysis — each downstream
@@ -402,9 +385,7 @@ object PipelineCompiler {
     * cost compounds).
     */
   private def materialize(df: DataFrame): DataFrame = {
-    val cached = org.apache.spark.sql.graft.Bridge.lineageStub(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    compiledCaches.synchronized { compiledCaches += cached }
+    val cached = graft.operators.Dedup.cached(org.apache.spark.sql.graft.Bridge.lineageStub(df))
     org.apache.spark.sql.graft.Bridge.cachedRelation(cached).getOrElse(cached)
   }
 
@@ -677,12 +658,12 @@ object PipelineCompiler {
           graft.operators.Dedup.decontaminate(df, build(bench), sub(id), sub(text),
             ngram, minHits, hashKeys)
         else {
-          // calibration mode: the hit set computes ONCE (checkpointed) and
-          // feeds both the survivor-rate report and the selection anti-join
-          val hitIds = graft.operators.Dedup
+          // calibration mode: the hit set computes ONCE (checkpointed, and
+          // released with the caller's cache scope) and feeds both the
+          // survivor-rate report and the selection anti-join
+          val hitIds = graft.operators.Dedup.scopedCheckpoint(graft.operators.Dedup
             .contaminationHits(df, build(bench), sub(id), sub(text), ngram, hashKeys)
-            .filter(col("n_hits") >= minHits).select("id")
-            .localCheckpoint(true)
+            .filter(col("n_hits") >= minHits).select("id"))
           val nIn = df.count()
           val nHit = hitIds.count()
           val rate = if (nIn == 0) 1.0 else (nIn - nHit).toDouble / nIn
@@ -877,37 +858,41 @@ object PipelineCompiler {
     }.toSeq
     // ONE compile serves every sink: eager model builds run once, and the
     // shared nodes persisted below are the very frames each sink plan
-    // embeds, so the cache manager matches them inside every sink write
-    val dfs = compileNodes(spec.copy(out = sinks.head._1), spark, params)
-    def nodeDf(name: String): DataFrame = dfs.getOrElse(name,
-      throw new IllegalArgumentException(s"broken chain: sink node '$name' undefined"))
-    shared.foreach(n => nodeDf(n).persist())
-    try sinks.foreach { case (node, format, path) =>
-      format match {
-        // push sink: POST NDJSON batches to the URL (reference's http write
-        // stream, utils.js:38-50); $VAR roots resolve against params
-        case "http" =>
-          graft.sinks.Writers.push(nodeDf(node), batchSize = 500,
-            graft.sources.Transports.httpPoster(substitute(path, params), config = params))
-        // store-addressed sink: mongodb://host/db/collection through the
-        // injected client factory (reference's protocol dispatch,
-        // utils.js:52-57) — declared as format "store", or inferred when
-        // the resolved URL carries the mongodb: scheme
-        case "store" | "mongodb" =>
-          graft.sinks.Writers.store(nodeDf(node), substitute(path, params),
-            clients = stores, config = params)
-        case _ if substitute(path, params).startsWith("mongodb:") =>
-          graft.sinks.Writers.store(nodeDf(node), substitute(path, params),
-            clients = stores, config = params)
-        case _ =>
-          val w = nodeDf(node).write.mode("overwrite")
-          format match {
-            case "parquet" => w.parquet(substitute(path, params))
-            case "ndjson"  => w.json(substitute(path, params))
-            case "csv"     => w.option("header", "true").csv(substitute(path, params))
-            case other     => w.format(other).save(substitute(path, params))
-          }
+    // embeds, so the cache manager matches them inside every sink write.
+    // The scope releases the compile's caches and those persists once
+    // every sink is written
+    graft.operators.Dedup.withCacheScope {
+      val dfs = compileNodes(spec.copy(out = sinks.head._1), spark, params)
+      def nodeDf(name: String): DataFrame = dfs.getOrElse(name,
+        throw new IllegalArgumentException(s"broken chain: sink node '$name' undefined"))
+      shared.foreach(n => graft.operators.Dedup.cached(nodeDf(n)))
+      sinks.foreach { case (node, format, path) =>
+        format match {
+          // push sink: POST NDJSON batches to the URL (reference's http write
+          // stream, utils.js:38-50); $VAR roots resolve against params
+          case "http" =>
+            graft.sinks.Writers.push(nodeDf(node), batchSize = 500,
+              graft.sources.Transports.httpPoster(substitute(path, params), config = params))
+          // store-addressed sink: mongodb://host/db/collection through the
+          // injected client factory (reference's protocol dispatch,
+          // utils.js:52-57) — declared as format "store", or inferred when
+          // the resolved URL carries the mongodb: scheme
+          case "store" | "mongodb" =>
+            graft.sinks.Writers.store(nodeDf(node), substitute(path, params),
+              clients = stores, config = params)
+          case _ if substitute(path, params).startsWith("mongodb:") =>
+            graft.sinks.Writers.store(nodeDf(node), substitute(path, params),
+              clients = stores, config = params)
+          case _ =>
+            val w = nodeDf(node).write.mode("overwrite")
+            format match {
+              case "parquet" => w.parquet(substitute(path, params))
+              case "ndjson"  => w.json(substitute(path, params))
+              case "csv"     => w.option("header", "true").csv(substitute(path, params))
+              case other     => w.format(other).save(substitute(path, params))
+            }
+        }
       }
-    } finally shared.foreach(n => dfs(n).unpersist(blocking = false))
+    }
   }
 }

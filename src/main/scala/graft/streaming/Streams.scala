@@ -114,20 +114,30 @@ object Streams {
                              trigger: Option[org.apache.spark.sql.streaming.Trigger]) =
     trigger.fold(w)(w.trigger)
 
-  /** Every-N-batches keyed-distinct rewrite of the given sink dirs at the
-    * fully-applied point (see [[ingestPretrainCorpus]]'s `compactEvery`);
-    * the shared maintenance hook of every store-backed ingest.
+  /** Every-N-batches store maintenance at the fully-applied point (see
+    * [[ingestPretrainCorpus]]'s `compactEvery`): each `(dir, maintain)` runs
+    * `maintain(dir)` when the dir exists or a prior interrupted swap heals
+    * ([[graft.operators.Dedup.recoverStore]]). An absent store (never
+    * built, or every batch so far empty) has nothing to maintain, and
+    * reading it would throw and kill the streaming query. The shared
+    * maintenance hook of every store-backed ingest.
     */
   private def maybeCompact(spark: org.apache.spark.sql.SparkSession,
                            batchId: Long, compactEvery: Int,
-                           sinks: Seq[(String, Seq[String])]): Unit =
+                           stores: Seq[(String, String => Unit)]): Unit =
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-      sinks.foreach { case (dir, keys) =>
+      stores.foreach { case (dir, maintain) =>
         val p = new org.apache.hadoop.fs.Path(dir)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p) || graft.operators.Dedup.recoverStore(spark, dir))
-          graft.operators.Dedup.compactStore(spark, dir, keys)
+        if (fs.exists(p) || graft.operators.Dedup.recoverStore(spark, dir)) maintain(dir)
       }
+
+  /** The keyed-distinct rewrite ([[graft.operators.Dedup.compactStore]])
+    * as a [[maybeCompact]] maintenance op.
+    */
+  private def distinctOn(spark: org.apache.spark.sql.SparkSession,
+                         keys: String*): String => Unit =
+    dir => { graft.operators.Dedup.compactStore(spark, dir, keys); () }
 
   /** Streaming corpus ingest with cross-batch near-dedup: every micro-batch
     * is deduped against the PERSISTED minhash signature store
@@ -165,18 +175,16 @@ object Streams {
           // the batch's signatures computed ONCE: the pair kernel and the
           // store append both consume this relation (the survivors'
           // signatures are a semi-join slice — no re-shingle of kept rows)
-          val sigs = Dedup.minhashSignatures(batch, idCol, textCol).persist()
-          try {
-            val kept = Dedup.scopedCheckpoint(Dedup.incrementalDedupSigs(batch, sigs,
-              store, idCol, threshold))
-            kept.write.mode("append").parquet(corpusDir)
-            sigs.join(kept.select(col(idCol).as("__kid")),
-                sigs("id") === col("__kid"), "left_semi")
-              .write.mode("append").parquet(storeDir)
-          } finally sigs.unpersist(blocking = false)
+          val sigs = Dedup.cached(Dedup.minhashSignatures(batch, idCol, textCol))
+          val kept = Dedup.scopedCheckpoint(Dedup.incrementalDedupSigs(batch, sigs,
+            store, idCol, threshold))
+          kept.write.mode("append").parquet(corpusDir)
+          sigs.join(kept.select(col(idCol).as("__kid")),
+              sigs("id") === col("__kid"), "left_semi")
+            .write.mode("append").parquet(storeDir)
         }
         maybeCompact(spark, batchId, compactEvery,
-          Seq(corpusDir -> Seq(idCol), storeDir -> Seq("id")))
+          Seq(corpusDir -> distinctOn(spark, idCol), storeDir -> distinctOn(spark, "id")))
         ()
       }
       .start()
@@ -249,7 +257,7 @@ object Streams {
         // replay row is an emptied rebuild), so a keep-ANY keyed distinct
         // on the corpus could keep the wrong twin; compactStore is exact
         // only where duplicate keys carry identical payloads
-        maybeCompact(spark, batchId, compactEvery, Seq(storeDir -> Seq("fp")))
+        maybeCompact(spark, batchId, compactEvery, Seq(storeDir -> distinctOn(spark, "fp")))
         ()
       }
       .start()
@@ -323,21 +331,19 @@ object Streams {
           // assignment computed ONCE for the pair kernel AND the store
           // append; kept is eagerly checkpointed so no append's
           // refreshByPath can evict a store-reading plan mid-batch
-          val assigned = Dedup.assignSemanticClusters(fresh, idCol, vecCol,
-            centroids).persist()
-          try {
-            val kept = Dedup.scopedCheckpoint(Dedup.incrementalSemanticDropAssigned(
-              fresh, assigned, store, idCol, threshold))
-            kept.write.mode("append").parquet(corpusDir)
-            afterCorpusAppend()
-            assigned.join(kept.select(col(idCol).as("__kid")),
-                assigned("id") === col("__kid"), "left_semi")
-              .write.mode("append").parquet(storeDir)
-            beforeCommit()
-          } finally assigned.unpersist(blocking = false)
+          val assigned = Dedup.cached(Dedup.assignSemanticClusters(fresh, idCol, vecCol,
+            centroids))
+          val kept = Dedup.scopedCheckpoint(Dedup.incrementalSemanticDropAssigned(
+            fresh, assigned, store, idCol, threshold))
+          kept.write.mode("append").parquet(corpusDir)
+          afterCorpusAppend()
+          assigned.join(kept.select(col(idCol).as("__kid")),
+              assigned("id") === col("__kid"), "left_semi")
+            .write.mode("append").parquet(storeDir)
+          beforeCommit()
         }
         maybeCompact(spark, batchId, compactEvery,
-          Seq(corpusDir -> Seq(idCol), storeDir -> Seq("id")))
+          Seq(corpusDir -> distinctOn(spark, idCol), storeDir -> distinctOn(spark, "id")))
         ()
       }
       .start()
@@ -385,22 +391,6 @@ object Streams {
       }
       .start()
 
-  /** Streaming corpus ingest behind the TRAINED quality classifier
-    * ([[graft.operators.QualityModel.score]]): every micro-batch is scored
-    * under pinned weights — a model asset like the DSIR weights and the
-    * semantic centroids; train offline with
-    * [[graft.operators.QualityModel.trainVsCorrupted]] and pin the vector —
-    * and only accepted documents append to `corpusDir`, carrying their
-    * `quality_score_1e6` / `quality_accept` columns for downstream
-    * re-thresholding. Scoring is a pure per-row Column expression — zero
-    * shuffle, zero cross-batch state — so a document's verdict is
-    * batch-boundary-invariant by construction and equals the batch
-    * operator's verdict exactly (the invariance StreamsSpec pins, the same
-    * shape as [[ingestImportanceFiltered]]'s). Restart semantics: one
-    * sink, at-least-once replay appends byte-identical rows — recover with
-    * `dropDuplicates(idCol)` readers or
-    * [[graft.operators.Dedup.compactStore]].
-    */
   /** Streaming maintenance of a persisted IVF index
     * ([[graft.operators.VectorIndex]]): every micro-batch routes its
     * vectors through the index's PINNED centroids (trained once at
@@ -425,23 +415,31 @@ object Streams {
           graft.operators.VectorIndex.appendToIvfIndex(batch, indexDir, idCol, vecCol)
           beforeCommit()
         }
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          // same exists/recover guard as maybeCompact: if the cells store
-          // is absent (index never built, or every batch so far empty)
-          // there is nothing to fold and the read would throw, killing
-          // the streaming query. The scheduled maintenance is the
-          // O(delta) FOLD, not the O(store) full rewrite — run
-          // compactIvfIndex offline when per-cell file counts warrant it
-          val cells = new org.apache.hadoop.fs.Path(s"$indexDir/cells")
-          val fs = cells.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(cells) ||
-              graft.operators.Dedup.recoverStore(spark, s"$indexDir/cells"))
-            graft.operators.VectorIndex.foldIvfDelta(spark, indexDir)
-        }
+        // the scheduled maintenance is the O(delta) FOLD, not the O(store)
+        // full rewrite — run compactIvfIndex offline when per-cell file
+        // counts warrant it
+        maybeCompact(spark, batchId, compactEvery, Seq(s"$indexDir/cells" ->
+          (_ => { graft.operators.VectorIndex.foldIvfDelta(spark, indexDir); () })))
         ()
       }
       .start()
 
+  /** Streaming corpus ingest behind the TRAINED quality classifier
+    * ([[graft.operators.QualityModel.score]]): every micro-batch is scored
+    * under pinned weights — a model asset like the DSIR weights and the
+    * semantic centroids; train offline with
+    * [[graft.operators.QualityModel.trainVsCorrupted]] and pin the vector —
+    * and only accepted documents append to `corpusDir`, carrying their
+    * `quality_score_1e6` / `quality_accept` columns for downstream
+    * re-thresholding. Scoring is a pure per-row Column expression — zero
+    * shuffle, zero cross-batch state — so a document's verdict is
+    * batch-boundary-invariant by construction and equals the batch
+    * operator's verdict exactly (the invariance StreamsSpec pins, the same
+    * shape as [[ingestImportanceFiltered]]'s). Restart semantics: one
+    * sink, at-least-once replay appends byte-identical rows — recover with
+    * `dropDuplicates(idCol)` readers or
+    * [[graft.operators.Dedup.compactStore]].
+    */
   def ingestQualityFiltered(stream: DataFrame, textCol: String,
                             weights: Seq[Double], corpusDir: String,
                             checkpointDir: String,
@@ -588,48 +586,46 @@ object Streams {
           // former via the Assigned entry points, the latter pruned to the
           // survivors) instead of re-running the k×dim cosine pass. No
           // spread here: `fresh` is already post-score (spread upstream)
-          val assigned = Dedup.assignSemanticClusters(fresh,
-            idCol, vecCol, centroids).persist()
-          try {
-            // checkpoint (not persist): materializing `novel` HERE
-            // truncates its lineage, so no later parquet append's
-            // refreshByPath can evict a plan that still reads the semantic
-            // store — the sink appends below are ORDER-INDEPENDENT for
-            // correctness (the semantic append still goes last because its
-            // post-commit-crash replay is then a free no-op: the id
-            // anti-join empties the batch)
-            val novel = Dedup.scopedCheckpoint(Dedup.incrementalSemanticDropAssigned(
-              fresh, assigned, semStore, idCol, semThreshold))
-            val fpStore = Dedup.readStore(spark, spanStoreDir)(Seq.empty[String].toDF("fp"))
-            // rebuilt and newFps share one registered window relation
-            // (released with the scope), so the corpus and span-store
-            // appends run the window pass once
-            val (rebuilt, newFps) = Dedup.incrementalSpanDedup(novel, fpStore, idCol,
-              textCol, spanK)
-            // graft the rebuilt text back onto the full survivor rows
-            // (quality columns + embedding ride through), SpanDedupNodeSpec's
-            // join-back shape; the embedding column itself is not persisted
-            // to the corpus — it lives in the semantic store's assigned form
-            // n_kept = 0 means every window span-deduped away: drop the row
-            // (the batch flagship v3's 'nonempty' stage semantics — without
-            // this the corpus accumulated empty-text rows its batch
-            // counterpart never emits, and the window-2 crash replay
-            // re-appended them)
-            val kept = novel
-              .join(rebuilt.select(col("id").as("__sid"), col("text_out"), col("n_kept")),
-                novel(idCol) === col("__sid"))
-              .filter(col("n_kept") > 0)
-              .withColumn(textCol, col("text_out"))
-              .drop("__sid", "text_out", vecCol)
-            kept.write.mode("append").parquet(corpusDir)
-            afterCorpusAppend()
-            newFps.write.mode("append").parquet(spanStoreDir)
-            afterSpanAppend()
-            assigned.join(novel.select(col(idCol).as("__nid")),
-                assigned("id") === col("__nid"), "left_semi")
-              .write.mode("append").parquet(semStoreDir)
-            beforeCommit()
-          } finally assigned.unpersist(blocking = false)
+          val assigned = Dedup.cached(Dedup.assignSemanticClusters(fresh,
+            idCol, vecCol, centroids))
+          // checkpoint (not persist): materializing `novel` HERE
+          // truncates its lineage, so no later parquet append's
+          // refreshByPath can evict a plan that still reads the semantic
+          // store — the sink appends below are ORDER-INDEPENDENT for
+          // correctness (the semantic append still goes last because its
+          // post-commit-crash replay is then a free no-op: the id
+          // anti-join empties the batch)
+          val novel = Dedup.scopedCheckpoint(Dedup.incrementalSemanticDropAssigned(
+            fresh, assigned, semStore, idCol, semThreshold))
+          val fpStore = Dedup.readStore(spark, spanStoreDir)(Seq.empty[String].toDF("fp"))
+          // rebuilt and newFps share one registered window relation
+          // (released with the scope), so the corpus and span-store
+          // appends run the window pass once
+          val (rebuilt, newFps) = Dedup.incrementalSpanDedup(novel, fpStore, idCol,
+            textCol, spanK)
+          // graft the rebuilt text back onto the full survivor rows
+          // (quality columns + embedding ride through), SpanDedupNodeSpec's
+          // join-back shape; the embedding column itself is not persisted
+          // to the corpus — it lives in the semantic store's assigned form
+          // n_kept = 0 means every window span-deduped away: drop the row
+          // (the batch flagship v3's 'nonempty' stage semantics — without
+          // this the corpus accumulated empty-text rows its batch
+          // counterpart never emits, and the window-2 crash replay
+          // re-appended them)
+          val kept = novel
+            .join(rebuilt.select(col("id").as("__sid"), col("text_out"), col("n_kept")),
+              novel(idCol) === col("__sid"))
+            .filter(col("n_kept") > 0)
+            .withColumn(textCol, col("text_out"))
+            .drop("__sid", "text_out", vecCol)
+          kept.write.mode("append").parquet(corpusDir)
+          afterCorpusAppend()
+          newFps.write.mode("append").parquet(spanStoreDir)
+          afterSpanAppend()
+          assigned.join(novel.select(col(idCol).as("__nid")),
+              assigned("id") === col("__nid"), "left_semi")
+            .write.mode("append").parquet(semStoreDir)
+          beforeCommit()
         }
         // scheduled maintenance at the fully-applied point: all three
         // sinks hold this batch's rows, so compaction only ever removes
@@ -639,8 +635,8 @@ object Streams {
         // Corpus keep-any is exact HERE (unlike ingestSpanDedup's): the
         // n_kept > 0 filter makes every replay twin byte-identical.
         maybeCompact(spark, batchId, compactEvery,
-          Seq(corpusDir -> Seq(idCol), spanStoreDir -> Seq("fp"),
-              semStoreDir -> Seq("id")))
+          Seq(corpusDir -> distinctOn(spark, idCol), spanStoreDir -> distinctOn(spark, "fp"),
+              semStoreDir -> distinctOn(spark, "id")))
         ()
       }
       .start()

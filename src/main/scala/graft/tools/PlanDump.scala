@@ -57,7 +57,6 @@ object PlanDump {
         println(s"[plandump] $name FAILED: ${e.getMessage}")
       } finally {
         graft.operators.Dedup.unpersistCaches()
-        graft.plans.PipelineCompiler.unpersistCompiledCaches()
         spark.sharedState.cacheManager.clearCache()
       }
     }

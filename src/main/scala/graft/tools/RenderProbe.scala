@@ -45,7 +45,6 @@ object RenderProbe {
       System.err.println(f"RENDER-REP $q $tag ${(System.nanoTime() - s0) / 1e9}%.2f s " +
         f"renderedChars=${renderedChars.get}%d")
       graft.operators.Dedup.unpersistCaches()
-      graft.plans.PipelineCompiler.unpersistCompiledCaches()
       spark.sharedState.cacheManager.clearCache()
     }
     for (q <- queries) { once(q, "rep0"); once(q, "rep1") }

@@ -478,6 +478,63 @@ class SpecJsonSpec extends SparkSpec {
       "a scoped compile must release every cache it created")
   }
 
+  test("concurrent compile scopes release only their own caches") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val spec = PipelineSpec(nodes = Seq(
+      "docs" -> SourceSpec("parquet", s"$sf/documents.parquet"),
+      "big"  -> CacheSpec(FilterSpec(RefSpec("docs"), "doc_id % 2 = 0"))),
+      out = "big")
+    def builder(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation].cacheBuilder
+    // forced order: T1 compiles, T2 compiles, T1 exits, then T2 reads
+    val (t1Compiled, t2Compiled, t1Exited) =
+      (new CountDownLatch(1), new CountDownLatch(1), new CountDownLatch(1))
+    def await(l: CountDownLatch) = assert(l.await(120, TimeUnit.SECONDS), "latch timed out")
+    val t1 = scala.concurrent.Future {
+      try PipelineCompiler.withCompiledCacheScope {
+        PipelineCompiler.compile(spec, spark).count()
+        t1Compiled.countDown()
+        await(t2Compiled)
+      } finally t1Exited.countDown()
+    }(scala.concurrent.ExecutionContext.global)
+    val t2 = scala.concurrent.Future {
+      await(t1Compiled)
+      PipelineCompiler.withCompiledCacheScope {
+        val df = PipelineCompiler.compile(spec, spark)
+        val n0 = df.count()
+        t2Compiled.countDown()
+        await(t1Exited)
+        val stillCached = builder(df).isCachedColumnBuffersLoaded
+        (stillCached, n0, df.count())
+      }
+    }(scala.concurrent.ExecutionContext.global)
+    def result[T](f: scala.concurrent.Future[T]) =
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(300, "s"))
+    result(t1)
+    // T2's scope exit must not throw (an index-based registry threw
+    // "removing negative number of elements" here)
+    val (stillCached, n0, n1) = result(t2)
+    assert(stillCached, "T1's scope exit released T2's live cache")
+    assert(n1 == n0 && n0 == spark.read.parquet(s"$sf/documents.parquet")
+      .filter("doc_id % 2 = 0").count())
+  }
+
+  test("scoped v3 compiles do not grow the session's caches") {
+    // compared as id sets: the ContextCleaner may reclaim earlier tests'
+    // relations meanwhile, which must not read as this test's growth
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val (rdds0, registered0) = (persisted, graft.operators.Dedup.registeredCaches)
+    val v3 = SpecJson.fromJson(SparkEntry.llmPipelineV3Json)
+    for (_ <- 0 until 3) PipelineCompiler.withCompiledCacheScope {
+      val nodes = PipelineCompiler.compileNodes(v3, spark, Map("dir" -> sf))
+      assert(nodes("train").count() > 0)
+    }
+    assert(graft.operators.Dedup.registeredCaches == registered0,
+      "a scoped compile left a relation in the cache registry")
+    val grown = persisted.diff(rdds0)
+    assert(grown.isEmpty, s"persistent RDDs left behind: $grown")
+  }
+
   test("runToSinks compiles once for all sinks: an eager node's jobs run for one compile") {
     val base = java.nio.file.Files.createTempDirectory("sinks3").toString
     // the DSIR node builds its gram-count model eagerly at compile time;
