@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -21,11 +21,15 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(name.contains) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val attempted = SparkEntry.queries.filter { case (name, _) => only.forall(name.contains) }
+    attempted.foreach { case (name, fn) =>
+      // a result left by an earlier run must not stand in for this one: a
+      // query that throws leaves NO committed result, which the compare
+      // counts as a failure
+      val out = Paths.get(s"$outDir/$name")
+      if (Files.exists(out))
+        Files.walk(out).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(out.toString)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -42,7 +46,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // oracles only for the queries this run attempted (all of them with the
+    // driver's two arguments), so every oracle key expects a result here
+    val json = SparkEntry.oracleSql.filter { case (k, _) => attempted.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -27,6 +27,14 @@ object Bridge {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** Drain the async listener bus — `QueryExecutionListener` events
+    * (observed-metric delivery among them) ride it, so a caller that wants
+    * metrics RIGHT AFTER an action must flush first;
+    * `LiveListenerBus.waitUntilEmpty` is private[spark], hence the shim.
+    */
+  def flushListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** A DataFrame rooted AT a persisted relation's `InMemoryRelation` leaf
     * (`Dataset.ofRows` is private[sql]). Plain `persist()` truncates
     * EXECUTION at the cache but not ANALYSIS: every downstream Dataset op
@@ -38,14 +46,6 @@ object Bridge {
     * plan-auditable) through `InMemoryTableScanExec.relation.cachedPlan`.
     * Returns None when `df` is not in the cache manager.
     */
-  /** Drain the async listener bus — `QueryExecutionListener` events
-    * (observed-metric delivery among them) ride it, so a caller that wants
-    * metrics RIGHT AFTER an action must flush first;
-    * `LiveListenerBus.waitUntilEmpty` is private[spark], hence the shim.
-    */
-  def flushListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
-
   def cachedRelation(df: org.apache.spark.sql.DataFrame)
       : Option[org.apache.spark.sql.DataFrame] = {
     val cs = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -272,7 +272,7 @@ case class NormalizeVector(child: Expression)
   * whose pinned centroids sit at the smallest squared-L2 distance from the
   * row's vector, ascending by `(distance, cell)`. ONE expression
   * evaluation per row over the whole k×dim centroid matrix (a tight
-  * primitive loop), replacing the
+  * primitive loop, [[VectorMath.nearestCells]]), replacing the
   * `array_min(array(struct(aggregate(zip_with(...)), cell), ...))` literal
   * formulation whose k×dim interpreted lambda evaluations dominated index
   * builds (measured r14: 1M rows × nlist=1000 = 709 s HOF vs seconds
@@ -283,120 +283,15 @@ case class NormalizeVector(child: Expression)
   * vector, a null element, or a dimension mismatch — the cases the HOF
   * form yielded a null/indeterminate distance for.
   *
-  * The centroid matrix rides the expression (k×dim×8 B in the task
-  * binary, shipped once per stage — ~0.5 MB at nlist=1000/dim=64, fine
-  * through k ≈ 10⁴; beyond that assign with the ML k-means model's
-  * `transform`). Centroid arrays compare by REFERENCE in the case-class
-  * equality (plan canonicalization may miss subexpression reuse across
-  * separately-built instances; never a correctness issue).
-  */
-case class NearestCells(child: Expression, cells: Array[Int],
-                        centroids: Array[Array[Double]], n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(cells.length == centroids.length && cells.nonEmpty,
-    "NearestCells: cells/centroids must be aligned and non-empty")
-  require(n >= 1, "NearestCells: n must be >= 1")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expects array<float|double>, got ${other.simpleString}")
-  }
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-
-  @transient private lazy val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    VectorMath.nearestCells(v.asInstanceOf[ArrayData], isFloat, cells, centroids, n)
-
-  override protected def withNewChildInternal(c: Expression): NearestCells =
-    copy(child = c)
-
-  // the default case-class toString would print the whole centroid matrix
-  // into every plan string (the pathology this kernel replaces)
-  override def toString: String =
-    s"nearest_cells($child, nlist=${cells.length}, n=$n)"
-  override def prettyName: String = "nearest_cells"
-}
-
-/** `nearestCosineCell(vec)` — the SemDeDup assignment kernel: argmax-cosine
-  * centroid over a pinned (cell, float-centroid) model, ONE evaluation per
-  * row, returning `struct(cluster int, centroid_sim double)`. Replaces the
-  * `array_max(transform(literalArray, c => struct(cosineSim(...), -cid)))`
-  * formulation ([[graft.operators.Dedup.assignSemanticClusters]]) whose
-  * per-centroid struct allocations + boxed HOF evaluations dominate
-  * assignment at k in the hundreds. Semantics are BIT-IDENTICAL to the
-  * struct-max form, which replay oracles re-derive:
-  *
-  *  - per-centroid cosine = [[VectorMath.cosine]] (double casts,
-  *    index-order accumulation, null on length mismatch / null element /
-  *    zero denom);
-  *  - argmax by (cosine, lowest cell) under Spark's struct ordering:
-  *    null cosine sorts below every real one
-  *    (`SQLOrderingUtil.compareDoubles` — ±0.0 equal, NaN greatest);
-  *  - a vector with NULL cosine to every centroid (null/empty/degenerate
-  *    vector, zero norm) lands in the LOWEST cell with null sim — never
-  *    a null row, matching the struct-max's all-null-cs behavior.
-  */
-case class NearestCosineCell(child: Expression, cells: Array[Int],
-                             centroids: Array[Array[Float]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(cells.length == centroids.length && cells.nonEmpty,
-    "NearestCosineCell: cells/centroids must be aligned and non-empty")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expects array<float|double>, got ${other.simpleString}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("cluster",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("centroid_sim", DoubleType, nullable = true)))
-  // a row ALWAYS assigns (degenerate vectors take the lowest cell)
-  override def nullable: Boolean = false
-
-  @transient private lazy val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  @transient private lazy val minCell = cells.min
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    val res = if (v == null) null
-      else VectorMath.nearestCosineCell(v.asInstanceOf[ArrayData], isFloat, cells, centroids)
-    if (res == null)
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](minCell, null))
-    else res
-  }
-
-  override protected def withNewChildInternal(c: Expression): NearestCosineCell =
-    copy(child = c)
-
-  override def toString: String = s"nearest_cosine_cell($child, k=${cells.length})"
-  override def prettyName: String = "nearest_cosine_cell"
-}
-
-/** Broadcast-backed [[NearestCells]] — identical routing (same
-  * [[VectorMath.nearestCells]] kernel, bit-for-bit), but the centroid
-  * matrix rides a `Broadcast` handle instead of the expression object. The
-  * embedded-matrix form serializes k×dim×8 B into EVERY task binary — fine
-  * through nlist ≈ 10³ (~0.5 MB at dim 64), but at the 10M–1B-vector rungs
-  * (nlist 3k–30k) the matrix is tens of MB per task where the broadcast
-  * ships once per executor (VERDICT r14 wrong #3). The handle itself
-  * serializes as a few bytes; `bc.value` reads the executor-local block.
-  * Broadcast identity is reference equality, same as the embedded arrays —
-  * plan canonicalization may miss reuse across instances, never
-  * correctness.
+  * The centroid matrix rides a `Broadcast` handle, not the expression
+  * object: embedded in the expression it would serialize k×dim×8 B into
+  * EVERY task binary — fine through nlist ≈ 10³ (~0.5 MB at dim 64), but
+  * at the 10M–1B-vector rungs (nlist 3k–30k) tens of MB per task where
+  * the broadcast ships once per executor (VERDICT r14 wrong #3). The
+  * handle itself serializes as a few bytes; `bc.value` reads the
+  * executor-local block. Broadcast identity is reference equality — plan
+  * canonicalization may miss subexpression reuse across separately-built
+  * instances, never a correctness issue.
   */
 case class NearestCellsBcast(child: Expression,
     bc: org.apache.spark.broadcast.Broadcast[(Array[Int], Array[Array[Double]])],
@@ -430,9 +325,28 @@ case class NearestCellsBcast(child: Expression,
   override def prettyName: String = "nearest_cells_bcast"
 }
 
-/** Broadcast-backed [[NearestCosineCell]] — same argmax-cosine assignment
-  * kernel over a Broadcast-resident centroid model (see
-  * [[NearestCellsBcast]] for the task-closure-size rationale).
+/** `nearestCosineCell(vec)` — the SemDeDup assignment kernel: argmax-cosine
+  * centroid over a pinned (cell, float-centroid) model, ONE evaluation per
+  * row ([[VectorMath.nearestCosineCell]]), returning `struct(cluster int,
+  * centroid_sim double)`. Replaces the
+  * `array_max(transform(literalArray, c => struct(cosineSim(...), -cid)))`
+  * formulation ([[graft.operators.Dedup.assignSemanticClusters]]) whose
+  * per-centroid struct allocations + boxed HOF evaluations dominate
+  * assignment at k in the hundreds. Semantics are BIT-IDENTICAL to the
+  * struct-max form, which replay oracles re-derive:
+  *
+  *  - per-centroid cosine = [[VectorMath.cosine]] (double casts,
+  *    index-order accumulation, null on length mismatch / null element /
+  *    zero denom);
+  *  - argmax by (cosine, lowest cell) under Spark's struct ordering:
+  *    null cosine sorts below every real one
+  *    (`SQLOrderingUtil.compareDoubles` — ±0.0 equal, NaN greatest);
+  *  - a vector with NULL cosine to every centroid (null/empty/degenerate
+  *    vector, zero norm) lands in the LOWEST cell with null sim — never
+  *    a null row, matching the struct-max's all-null-cs behavior.
+  *
+  * The model rides a `Broadcast` handle (see [[NearestCellsBcast]] for the
+  * task-binary-size rationale).
   */
 case class NearestCosineCellBcast(child: Expression,
     bc: org.apache.spark.broadcast.Broadcast[(Array[Int], Array[Array[Float]])])
@@ -499,16 +413,6 @@ object VectorMath {
   def normalizeVector(a: Column): Column =
     Bridge.column(NormalizeVector(Bridge.expression(a)))
 
-  /** [[NearestCells]] over a pinned `(cell, centroid)` model. */
-  def nearestCellsCol(vec: Column, centroids: Seq[(Int, Seq[Double])], n: Int): Column =
-    Bridge.column(NearestCells(Bridge.expression(vec),
-      centroids.map(_._1).toArray, centroids.map(_._2.toArray).toArray, n))
-
-  /** [[NearestCosineCell]] over a pinned `(cell, float-centroid)` model. */
-  def nearestCosineCellCol(vec: Column, centroids: Seq[(Int, Seq[Float])]): Column =
-    Bridge.column(NearestCosineCell(Bridge.expression(vec),
-      centroids.map(_._1).toArray, centroids.map(_._2.toArray).toArray))
-
   /** Ship a `(cell, centroid)` model to the executors once; pair with
     * [[nearestCellsBcastCol]]. The Broadcast stays live while any plan
     * referencing it is reachable (the expression holds the handle);
@@ -518,8 +422,8 @@ object VectorMath {
   def broadcastCells(spark: org.apache.spark.sql.SparkSession,
                      centroids: Seq[(Int, Seq[Double])])
       : org.apache.spark.broadcast.Broadcast[(Array[Int], Array[Array[Double]])] = {
-    // validate at construction (like the embedded kernels' requires) —
-    // an empty model would otherwise fail per-row inside the kernel
+    // validate at construction — an empty model would otherwise fail
+    // per-row inside the kernel
     require(centroids.nonEmpty, "broadcastCells: empty centroid set")
     spark.sparkContext.broadcast(
       (centroids.map(_._1).toArray, centroids.map(_._2.toArray).toArray))
@@ -637,7 +541,7 @@ object VectorMath {
     if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom) // Divide-by-zero → null, like Spark SQL
   }
 
-  /** [[NearestCells]]' kernel: top-`n` cells by ascending `(sqdist, cell)`
+  /** [[NearestCellsBcast]]'s kernel: top-`n` cells by ascending `(sqdist, cell)`
     * via one k×dim primitive loop + insertion into a ≤n sorted prefix
     * (O(k·(dim + n)); n ≤ 64 in practice). Returns null on dimension
     * mismatch or a null element — the "can't route" answer.
@@ -676,7 +580,7 @@ object VectorMath {
       .fromPrimitiveArray(java.util.Arrays.copyOf(topC, filled))
   }
 
-  /** [[NearestCosineCell]]'s kernel: argmax cosine over the pinned float
+  /** [[NearestCosineCellBcast]]'s kernel: argmax cosine over the pinned float
     * centroids under Spark's struct-max ordering — per-centroid cosine
     * exactly as [[cosine]] computes it (the norm of `a` is the same value
     * whichever centroid it pairs with, so hoisting it out of the loop is

@@ -29,13 +29,10 @@ object VectorOps {
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** The HOF formulation — the readable reference semantics; kept as the
-    * cross-check target for the native kernel (`VectorOpsSpec`).
-    */
-  def cosineHof(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
-
   /** Pairwise cosine via the native one-pass kernel ([[CosineSim]]): same
-    * double arithmetic and null convention as [[cosineHof]], but codegen'd —
+    * double arithmetic and null convention as `dot(a, b) / (l2Norm(a) *
+    * l2Norm(b))` (the HOF reference form SqlFunctionsSpec cross-checks
+    * it against), but codegen'd —
     * the ANN/near-dup operators evaluate this per candidate pair, where the
     * interpreted `aggregate(zip_with(...))` pipeline (3 array passes + a
     * zipped allocation per pair) dominated the whole query.
@@ -51,19 +48,14 @@ object VectorOps {
     * native [[cosine]] kernel's convention for the same input, so
     * `dot(normalized(a), normalized(b))` and `cosine(a, b)` stay
     * null-equivalent row-for-row.
-    */
-  def normalizedHof(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n === lit(0.0), lit(null).cast("array<double>"))
-      .otherwise(transform(d(a), x => x / n))
-  }
-
-  /** [[normalizedHof]] via the native one-pass kernel
-    * ([[NormalizeVector]]): same IEEE ops, same accumulation order, same
-    * null conventions (zero norm → null; null element → all-null array) —
-    * but codegen'd. The HOF form's four interpreted passes per row made
-    * `buildIvfIndex(normalize = true)` scan-bound on normalization itself
-    * (301 s vs 21 s at 1M vectors, SCALING.md r14).
+    *
+    * Runs the native one-pass kernel ([[NormalizeVector]]): the same IEEE
+    * ops, accumulation order and null conventions (zero norm → null; null
+    * element → all-null array) as the `x / l2Norm` HOF form SqlFunctionsSpec
+    * cross-checks it against, but codegen'd. The HOF form's four
+    * interpreted passes per row made `buildIvfIndex(normalize = true)`
+    * scan-bound on normalization itself (301 s vs 21 s at 1M vectors,
+    * SCALING.md r14).
     */
   def normalized(a: Column): Column = VectorMath.normalizeVector(a)
 
@@ -206,13 +198,16 @@ object VectorOps {
     val assigned = model.transform(toVec).withColumnRenamed("prediction", "cell")
       .select("neighbor_id", "c_vec", "cell")
     // query side: nprobe nearest cells in ONE kernel evaluation per query
-    // (functions/VectorMathExpr NearestCells — same (sqdist, cell)-ascending
+    // (functions/VectorMathExpr NearestCellsBcast — same (sqdist, cell)-ascending
     // arithmetic as the crossJoin+window form it replaces, without the
-    // centroid crossJoin or the window exchange)
-    val cents = cells.map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
+    // centroid crossJoin or the window exchange). The plan holds the
+    // broadcast handle, so it lives exactly as long as any derived
+    // DataFrame (ContextCleaner reclaims it after).
+    val bc = VectorMath.broadcastCells(queries.sparkSession,
+      cells.map { case (c, i) => (i, c.toArray.toSeq) }.toSeq)
     val probed = q0
-      .withColumn("cell", explode(graft.functions.VectorMath.nearestCellsCol(
-        col("q_vec"), cents, math.min(nprobe, k))))
+      .withColumn("cell", explode(VectorMath.nearestCellsBcastCol(
+        col("q_vec"), bc, math.min(nprobe, k))))
       .select("query_id", "q_vec", "cell")
     (assigned, probed)
   }
@@ -246,16 +241,10 @@ object VectorOps {
         struct(s.as("scale"), q.as("q"), dotInt8(q, q).as("norm2"))), 1)), 1)
   }
 
-  /** Exact integer dot product of two int8 code arrays — the HOF
-    * formulation, kept as the readable reference semantics and the
-    * cross-check target for the native kernel (VectorOpsSpec).
-    */
-  def dotInt8Hof(qa: Column, qb: Column): Column =
-    aggregate(zip_with(qa, qb, (x, y) => (x * y).cast("long")), lit(0L), (acc, x) => acc + x)
-
   /** Exact integer dot product of two int8 code arrays, via the native
     * one-pass kernel ([[DotProductInt8]]): same integer arithmetic and
-    * null convention as [[dotInt8Hof]], but codegen'd — the int8 ANN
+    * null convention as the `aggregate(zip_with(...))` HOF form
+    * SqlFunctionsSpec cross-checks it against, but codegen'd — the int8 ANN
     * tiers evaluate this per candidate PAIR, where the interpreted
     * zip_with pipeline (a zipped allocation + two lambdas per element)
     * cost more than the float path it was supposed to undercut.

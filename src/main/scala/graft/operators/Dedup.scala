@@ -139,7 +139,7 @@ object Dedup {
   // registering thread, which releases it on exit. [[unpersistCaches]] is
   // the session-wide release for relations registered outside any frame.
   // Left to Spark's ContextCleaner by design: VectorIndex's and Bpe's raw
-  // localCheckpoints and SparkEntry.qNSpanIncr's escape checkpoint
+  // localCheckpoints and the `q_n_span_incr` gate's escape checkpoint
   // (SCALING.md "Cache lifetime: one owner").
   private val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
   /** One open scope on one thread: the relations it releases on exit. A
@@ -1333,7 +1333,7 @@ object Dedup {
     require(centroids.nonEmpty, "assignSemanticClusters: empty centroid set")
     import graft.functions.VectorMath
     // ONE kernel evaluation per row (functions/VectorMathExpr
-    // NearestCosineCell) — bit-identical to the r13 struct-max HOF form
+    // NearestCosineCellBcast) — bit-identical to the r13 struct-max HOF form
     // (`array_max(transform(literal, c => struct(cosineSim, -cid)))`,
     // cross-checked in SemDedupSpec) without its per-centroid struct
     // allocations; at k in the hundreds the HOF assignment dominated the

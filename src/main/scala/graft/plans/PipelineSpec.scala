@@ -23,7 +23,18 @@ import org.apache.spark.sql.functions._
   * whole pipeline globally — filters written late in a spec still push down
   * to the scan, which the reference could never do (SURVEY §4).
   */
-sealed trait OpSpec
+sealed trait OpSpec extends Product {
+  /** The op's input specs — every `OpSpec` field and every element of a
+    * `Seq[OpSpec]` field, in field order. Derived from the case-class
+    * fields, so a new node kind cannot forget to declare its inputs; the
+    * compiler's dependency walk and [[SpecJson.dag]]'s links both read it.
+    */
+  def inputs: Seq[OpSpec] = productIterator.flatMap {
+    case op: OpSpec => Seq(op)
+    case ops: Seq[_] => ops.collect { case op: OpSpec => op }
+    case _ => Nil
+  }.toSeq
+}
 
 /** Sources. `format`: parquet|json|ndjson|csv|xml. */
 case class SourceSpec(format: String, path: String,
@@ -83,7 +94,7 @@ case class JoinDetailSpec(master: OpSpec, detail: OpSpec,
                           as: String = "details",
                           detailCols: Seq[String] = Nil) extends OpSpec
 /** Union of branches (reference: folder concat / injected rows). */
-case class UnionSpec(inputs: Seq[OpSpec]) extends OpSpec
+case class UnionSpec(override val inputs: Seq[OpSpec]) extends OpSpec
 
 // --- LLM-pipeline nodes (beyond-reference surface, SURVEY §2.8): the
 // pretraining prep operators as declarable DAG nodes, so a whole
@@ -787,37 +798,8 @@ object PipelineCompiler {
 
   /** Direct RefSpec dependencies of an op (nested through its inputs). */
   private def refsOf(op: OpSpec): Set[String] = op match {
-    case RefSpec(n)                     => Set(n)
-    case _: SourceSpec                  => Set.empty
-    case FilterSpec(in, _)              => refsOf(in)
-    case MapSpec(in, _)                 => refsOf(in)
-    case WithColumnsSpec(in, _)         => refsOf(in)
-    case ExplodeSpec(in, _, _)          => refsOf(in)
-    case AggSpec(in, _, _)              => refsOf(in)
-    case SortSpec(in, _)                => refsOf(in)
-    case WindowNodeSpec(in, _, _, _, _, _) => refsOf(in)
-    case DistinctSpec(in, _, _)         => refsOf(in)
-    case LimitSpec(in, _)               => refsOf(in)
-    case JoinSpec(in, v, _, _, _, _)       => refsOf(in) ++ refsOf(v)
-    case JoinDetailSpec(m, d, _, _, _, _)  => refsOf(m) ++ refsOf(d)
-    case UnionSpec(ins)                 => ins.flatMap(refsOf).toSet
-    case DedupNodeSpec(in, _, _, _, _)  => refsOf(in)
-    case SpanDedupNodeSpec(in, _, _, _) => refsOf(in)
-    case SemanticDedupNodeSpec(in, _, _, _, _, _, _, _) => refsOf(in)
-    case SplitNodeSpec(in, _, _)        => refsOf(in)
-    case MixNodeSpec(in, _, _, _, _)    => refsOf(in)
-    case DsirNodeSpec(in, tgt, _, _, _, _, _, _, _) => refsOf(in) ++ refsOf(tgt)
-    case QualityScoreNodeSpec(in, _, _) => refsOf(in)
-    case DecontamNodeSpec(in, b, _, _, _, _, _, _) => refsOf(in) ++ refsOf(b)
-    case PackNodeSpec(in, _, _, _, _)   => refsOf(in)
-    case ReportNodeSpec(in, _, _, _)    => refsOf(in)
-    case AnnQuerySpec(in, _, _, _, _, _) => refsOf(in)
-    case LayoutNodeSpec(in, _, _, _, _, _) => refsOf(in)
-    case CompactStoreSpec(_, _)            => Set.empty
-    case DeleteIndexSpec(_, ids, _)        => refsOf(ids)
-    case BuildIndexSpec(in, _, _, _, _, _, _, _) => refsOf(in)
-    case SpyNodeSpec(in, _, _, _)       => refsOf(in)
-    case CacheSpec(in)                  => refsOf(in)
+    case RefSpec(n) => Set(n)
+    case _          => op.inputs.flatMap(refsOf).toSet
   }
 
   /** All spec nodes (transitively) feeding `name`, including itself. */

@@ -337,6 +337,15 @@ object SpecJson {
     M.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
+  /** A checked-in spec asset from the classpath (resolves regardless of
+    * working directory), e.g. `resource("/specs/window_topn.json")`.
+    */
+  def resource(path: String): String = {
+    val in = getClass.getResourceAsStream(path)
+    require(in != null, s"missing resource $path")
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
   def fromJson(json: String): PipelineSpec = {
     val root = M.readTree(json)
     val nodes = req(root, "pipeline", "nodes").elements().asScala.map { n =>
@@ -568,38 +577,7 @@ object SpecJson {
       }
       val n = nodes.addObject(); n.put("id", selfId)
       n.put("type", op.getClass.getSimpleName.stripSuffix("Spec").toLowerCase)
-      op match {
-        case _: SourceSpec | _: RefSpec =>
-        case FilterSpec(in, _) => link(in)
-        case MapSpec(in, _) => link(in)
-        case WithColumnsSpec(in, _) => link(in)
-        case ExplodeSpec(in, _, _) => link(in)
-        case AggSpec(in, _, _) => link(in)
-        case SortSpec(in, _) => link(in)
-        case WindowNodeSpec(in, _, _, _, _, _) => link(in)
-        case DistinctSpec(in, _, _) => link(in)
-        case LimitSpec(in, _) => link(in)
-        case JoinSpec(in, vocab, _, _, _, _) => link(in); link(vocab)
-        case JoinDetailSpec(m, d, _, _, _, _) => link(m); link(d)
-        case UnionSpec(ins) => ins.foreach(link)
-        case DedupNodeSpec(in, _, _, _, _) => link(in)
-        case SpanDedupNodeSpec(in, _, _, _) => link(in)
-        case SemanticDedupNodeSpec(in, _, _, _, _, _, _, _) => link(in)
-        case SplitNodeSpec(in, _, _) => link(in)
-        case MixNodeSpec(in, _, _, _, _) => link(in)
-        case DsirNodeSpec(in, tgt, _, _, _, _, _, _, _) => link(in); link(tgt)
-        case QualityScoreNodeSpec(in, _, _) => link(in)
-        case DecontamNodeSpec(in, b, _, _, _, _, _, _) => link(in); link(b)
-        case PackNodeSpec(in, _, _, _, _) => link(in)
-        case ReportNodeSpec(in, _, _, _) => link(in)
-        case AnnQuerySpec(in, _, _, _, _, _) => link(in)
-        case LayoutNodeSpec(in, _, _, _, _, _) => link(in)
-        case DeleteIndexSpec(_, ids, _) => link(ids)
-        case BuildIndexSpec(in, _, _, _, _, _, _, _) => link(in)
-        case CompactStoreSpec(_, _) =>
-        case SpyNodeSpec(in, _, _, _) => link(in)
-        case CacheSpec(in) => link(in)
-      }
+      op.inputs.foreach(link)
     }
     spec.nodes.foreach { case (name, op) => visit(op, name) }
     root.put("out", spec.out)

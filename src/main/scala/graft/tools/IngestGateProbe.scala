@@ -22,7 +22,7 @@ object IngestGateProbe {
     // the EXACT model the gates pin (one shared definition — a recipe
     // drift here would silence the margins this probe exists to justify)
     val wdir = java.nio.file.Files.createTempDirectory("probe_w").toString
-    graft.SparkEntry.pinnedDsirWeights(spark, docs, wdir)
+    graft.gate.StreamingGates.pinnedDsirWeights(spark, docs, wdir)
     val weights = spark.read.parquet(wdir)
     val scores = graft.operators.Sampling.importanceScores(
       docs, "doc_id", "text", weights, 4).cache()

@@ -439,7 +439,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("BPE encode -> packSequencesBy: subword arrays ride ONLY the shard repartition") {
-    // the 8-stage flagship's tail (SparkEntry.qNLlmPipelineV2). The designed
+    // the 8-stage flagship's tail (`q_n_llm_pipeline_v2`). The designed
     // shape is exactly THREE exchanges: (1) wordCounts' vocab agg — scalar
     // words only; (2) encode's per-doc assembly agg — word-level subwords
     // meet their document as COMPACT SERIALIZED collect_list buffers

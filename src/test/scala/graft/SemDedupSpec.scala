@@ -32,7 +32,7 @@ class SemDedupSpec extends SparkSpec {
   test("assignment kernel == the r13 struct-max HOF form (bit-identical, all edges)") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorMath
-    // the formulation NearestCosineCell replaced: literal struct array,
+    // the formulation NearestCosineCellBcast replaced: literal struct array,
     // cosineSim per centroid, array_max by (cs, -cid)
     def hofAssign(vec: org.apache.spark.sql.Column) = {
       val cArr = array(cents.map { case (cid, v) =>
@@ -51,7 +51,8 @@ class SemDedupSpec extends SparkSpec {
         .select(col("vec_id"), col("embedding").cast("array<float>")))
     val both = edgy.select(col("vec_id"),
       hofAssign(col("embedding")).as("hof"),
-      VectorMath.nearestCosineCellCol(col("embedding"), cents).as("kernel"))
+      VectorMath.nearestCosineCellBcastCol(col("embedding"),
+        VectorMath.broadcastCosineCells(spark, cents)).as("kernel"))
       .select(col("vec_id"),
         (lit(0) - col("hof.ncid")).as("h_cluster"), col("hof.cs").as("h_cs"),
         col("kernel.cluster").as("k_cluster"), col("kernel.centroid_sim").as("k_cs"))

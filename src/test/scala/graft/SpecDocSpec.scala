@@ -125,7 +125,7 @@ class SpecDocSpec extends SparkSpec {
       (toolRef.findAllMatchIn(text).map(m => s"graft.tools.${m.group(1)}") ++
         mainRef.findAllMatchIn(text).map(_.group(1))).map(_ -> f.toString)
     }
-    assert(refs.exists(_._1 == "graft.tools.SpecExport"), s"walk found too little: $refs")
+    assert(refs.exists(_._1 == "graft.tools.SemTrainProbe"), s"walk found too little: $refs")
     val dangling = refs.filterNot { case (name, _) =>
       scala.util.Try(Class.forName(name, false, getClass.getClassLoader)).isSuccess
     }.distinct

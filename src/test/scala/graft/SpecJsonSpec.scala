@@ -312,25 +312,21 @@ class SpecJsonSpec extends SparkSpec {
     assert(out.select(expr("f2['b']")).head().getInt(0) == 2)
   }
 
-  test("checked-in flagship-v3 spec asset equals the inline definition (no drift)") {
-    // the gate compiles FROM the resource file; this pin makes editing the
-    // inline spec without re-running tools.SpecExport (or hand-editing the
-    // asset) a CI failure in either direction
-    assert(graft.SparkEntry.llmPipelineV3Json ==
-      SpecJson.toJson(graft.SparkEntry.llmPipelineV3Spec),
-      "re-run `runMain graft.tools.SpecExport` after editing llmPipelineV3Spec")
-    assert(graft.SparkEntry.windowTopNJson ==
-      SpecJson.toJson(graft.SparkEntry.windowTopNSpec),
-      "re-run `runMain graft.tools.SpecExport` after editing windowTopNSpec")
-    assert(graft.SparkEntry.annLifecycleJson ==
-      SpecJson.toJson(graft.SparkEntry.annLifecycleSpec),
-      "re-run `runMain graft.tools.SpecExport` after editing annLifecycleSpec")
+  test("checked-in batch spec assets are in canonical form (no drift)") {
+    // the assets are the only copy of these specs and the gates compile
+    // FROM them; a hand edit must still be what the serializer writes, so
+    // every field survives the round trip and the bytes stay stable
+    for (asset <- Seq("llm_pipeline_v3", "window_topn", "ann_lifecycle")) {
+      val file = SpecJson.resource(s"/specs/$asset.json")
+      assert(file == SpecJson.toJson(SpecJson.fromJson(file)),
+        s"specs/$asset.json is not in canonical form")
+    }
   }
 
   test("window node: top-N per key, running sum frame, and default frame compile") {
     // the gate-shaped spec (row_number + filter) against the direct API
     val topn = PipelineCompiler.compile(
-      SpecJson.fromJson(SpecJson.toJson(graft.SparkEntry.windowTopNSpec)),
+      SpecJson.fromJson(SpecJson.resource("/specs/window_topn.json")),
       spark, Map("dir" -> sf))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))

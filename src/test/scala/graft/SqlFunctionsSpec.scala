@@ -46,7 +46,7 @@ class SqlFunctionsSpec extends SparkSpec {
                               Array.fill(64)(rnd.nextFloat() * 2 - 1)))
     val df = rows.toDF("a", "b")
       .select(VectorOps.cosine(col("a"), col("b")).as("native"),
-              VectorOps.cosineHof(col("a"), col("b")).as("hof"))
+              SqlFunctionsSpec.cosineHof(col("a"), col("b")).as("hof"))
     // bit-identical, not approximately equal: the kernel must be swappable
     // under the gate's round(...,4)-then-hash comparison
     assert(df.filter(col("native") =!= col("hof") || col("native").isNull).count() == 0)
@@ -65,7 +65,7 @@ class SqlFunctionsSpec extends SparkSpec {
     val rows = Seq.fill(200)(Array.fill(64)(rnd.nextFloat() * 2 - 1))
     val df = rows.toDF("a")
       .select(VectorOps.normalized(col("a")).as("native"),
-              VectorOps.normalizedHof(col("a")).as("hof"))
+              SqlFunctionsSpec.normalizedHof(col("a")).as("hof"))
     // element-for-element bit equality (null-safe: both null or both equal)
     assert(df.filter(not(col("native") <=> col("hof"))).count() == 0)
     // zero norm -> null; empty -> null; null element -> ALL-null array of
@@ -79,7 +79,7 @@ class SqlFunctionsSpec extends SparkSpec {
     val withNull = spark.sql(
       "SELECT array(CAST(1.0 AS FLOAT), CAST(NULL AS FLOAT)) AS a")
       .select(VectorOps.normalized(col("a")).as("native"),
-              VectorOps.normalizedHof(col("a")).as("hof"))
+              SqlFunctionsSpec.normalizedHof(col("a")).as("hof"))
     val r = withNull.head()
     assert(r.getSeq[Any](0) == Seq(null, null) && r.getSeq[Any](0) == r.getSeq[Any](1))
   }
@@ -92,7 +92,7 @@ class SqlFunctionsSpec extends SparkSpec {
                               Array.fill(64)(rnd.nextInt(255) - 127)))
     val df = rows.toDF("a", "b")
       .select(VectorOps.dotInt8(col("a"), col("b")).as("native"),
-              VectorOps.dotInt8Hof(col("a"), col("b")).as("hof"))
+              SqlFunctionsSpec.dotInt8Hof(col("a"), col("b")).as("hof"))
     assert(df.filter(col("native") =!= col("hof") || col("native").isNull).count() == 0)
     // length mismatch and a null element both yield null, like zip_with
     val edges = Seq((Array(1, 2), Array(1, 2, 3)))
@@ -112,7 +112,7 @@ class SqlFunctionsSpec extends SparkSpec {
     val df = rows.toDF("a", "b")
       .select(VectorOps.quantizeInt8(col("a")).as("qa"),
               VectorOps.quantizeInt8(col("b")).as("qb"),
-              VectorOps.cosineHof(col("a"), col("b")).as("exact"))
+              SqlFunctionsSpec.cosineHof(col("a"), col("b")).as("exact"))
       .select(col("qa"), col("qb"), col("exact"),
               VectorOps.cosineInt8(col("qa.q"), col("qb.q")).as("approx"))
     val bad = df.filter(
@@ -140,4 +140,25 @@ class SqlFunctionsSpec extends SparkSpec {
     val names = df.select("name").as[String].collect().sorted
     assert(names.toSeq == Seq("Garçon", "Müller"))
   }
+}
+
+/** The HOF formulations of the native vector kernels — the readable
+  * reference semantics the kernel tests above cross-check bit for bit.
+  */
+object SqlFunctionsSpec {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions._
+  import graft.functions.VectorOps
+
+  def cosineHof(a: Column, b: Column): Column =
+    VectorOps.dot(a, b) / (VectorOps.l2Norm(a) * VectorOps.l2Norm(b))
+
+  def normalizedHof(a: Column): Column = {
+    val n = VectorOps.l2Norm(a)
+    when(n === lit(0.0), lit(null).cast("array<double>"))
+      .otherwise(transform(transform(a, x => x.cast("double")), x => x / n))
+  }
+
+  def dotInt8Hof(qa: Column, qb: Column): Column =
+    aggregate(zip_with(qa, qb, (x, y) => (x * y).cast("long")), lit(0L), (acc, x) => acc + x)
 }

@@ -146,10 +146,10 @@ class StreamSpecSpec extends SparkSpec {
     assert(IngestCompiler.primarySink(r) == "/data/run7/c")
   }
 
-  test("checked-in pretrain-ingest asset equals the inline definition (no drift)") {
-    assert(SparkEntry.pretrainIngestJson ==
-      SpecJson.ingestToJson(SparkEntry.pretrainIngestSpec),
-      "re-run `runMain graft.tools.SpecExport` after editing pretrainIngestSpec")
+  test("checked-in pretrain-ingest asset is in canonical form (no drift)") {
+    val file = SpecJson.resource("/specs/pretrain_ingest.json")
+    assert(file == SpecJson.ingestToJson(SpecJson.ingestFromJson(file)),
+      "specs/pretrain_ingest.json is not in canonical form")
   }
 
   test("the ASSET runs: one AvailableNow round drains a drop; an empty round is a no-op") {
@@ -159,7 +159,7 @@ class StreamSpecSpec extends SparkSpec {
     docs.join(emb, docs("doc_id") === emb("vec_id"))
       .select("doc_id", "text", "embedding")
       .write.mode("overwrite").parquet(s"$root/drop")
-    val spec = SpecJson.ingestFromJson(SparkEntry.pretrainIngestJson)
+    val spec = SpecJson.ingestFromJson(SpecJson.resource("/specs/pretrain_ingest.json"))
     IngestCompiler.runAvailable(spark, spec, Map("root" -> root))
     val n1 = spark.read.parquet(s"$root/corpus").count()
     assert(n1 > 0, "asset round must ingest accepted documents")
@@ -208,7 +208,8 @@ class StreamSpecSpec extends SparkSpec {
   }
 
   test("ingestDag exports {nodes, links}: source -> ingest -> every sink, models as inputs") {
-    val dag = SpecJson.ingestDag(SparkEntry.pretrainIngestSpec
+    val asset = SpecJson.ingestFromJson(SpecJson.resource("/specs/pretrain_ingest.json"))
+    val dag = SpecJson.ingestDag(asset
       .asInstanceOf[PretrainIngestSpec].copy(dsirWeightsDir = Some("{%root%}/w")))
     val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(dag)
     import scala.jdk.CollectionConverters._

@@ -34,7 +34,8 @@ class VectorIndexSpec extends SparkSpec {
         * (col("vec_id") % 7 - 3)).as("v"))
     val both = vecs.select(
       hofCells(col("v"), 3).as("hof"),
-      VectorMath.nearestCellsCol(col("v"), cents, 3).as("kernel"))
+      VectorMath.nearestCellsBcastCol(col("v"), VectorMath.broadcastCells(spark, cents), 3)
+        .as("kernel"))
     assert(both.filter(col("hof") =!= col("kernel")).count() == 0,
       both.filter(col("hof") =!= col("kernel")).head(1).mkString)
     // edge semantics: null vector, null element, dim mismatch → null
@@ -42,7 +43,8 @@ class VectorIndexSpec extends SparkSpec {
       (1L, null.asInstanceOf[Seq[java.lang.Double]]),
       (2L, Seq[java.lang.Double](0.1, null, 0.3)),
       (3L, Seq[java.lang.Double](0.1, 0.2))).toDF("id", "v")
-    val out = edges.select(VectorMath.nearestCellsCol(col("v"), cents, 2).as("c"))
+    val out = edges.select(
+      VectorMath.nearestCellsBcastCol(col("v"), VectorMath.broadcastCells(spark, cents), 2).as("c"))
       .collect().map(_.isNullAt(0)).toSeq
     assert(out == Seq(true, true, true))
   }

@@ -7,6 +7,8 @@ Usage: python3 tools/compare_oracle.py <sfDir> <verifyOutDir>
 Loads each <verifyOutDir>/<query>/ parquet result, runs the corresponding
 oracle SQL from oracle_sql.json against the sfDir parquet tables in DuckDB,
 sorts columns by name, and compares cell-by-cell (exact; floats via repr).
+An oracle key without a committed result (no directory, or no _SUCCESS
+marker) counts as a FAIL; the exit status is non-zero on any FAIL.
 """
 import json, sys, math
 import duckdb
@@ -28,9 +30,17 @@ def main(sf_dir, out_dir):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     import os
-    queries = sorted(d for d in os.listdir(out_dir)
-                     if os.path.isdir(os.path.join(out_dir, d)))
-    for q in queries:
+    dirs = {d for d in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, d))}
+    for q in sorted(dirs | set(oracle)):
+        # a query whose write never committed (it threw, or its directory is
+        # gone) is a failure, not a silent omission from the count
+        if not os.path.isfile(os.path.join(out_dir, q, "_SUCCESS")):
+            if q in oracle:
+                n_fail += 1
+                print(f"  [FAIL] {q}: no committed result (missing directory or _SUCCESS)")
+            else:
+                print(f"  [rows-only] {q}: no committed result")
+            continue
         got = duckdb.connect().execute(
             f"SELECT * FROM '{out_dir}/{q}/*.parquet'").df()
         if q not in oracle:
