@@ -698,19 +698,41 @@ object Dedup {
     }
   }
 
+  /** Is `st` committed data of a parquet directory — a `.parquet` file or
+    * a partition directory? Committer metadata (`_SUCCESS`, `_temporary`,
+    * `.crc` siblings) is not: a first write that crashed mid-way leaves a
+    * directory holding only `_temporary`, and reading it would throw.
+    */
+  private[graft] def isDataEntry(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val name = st.getPath.getName
+    !name.startsWith("_") && !name.startsWith(".") &&
+      (st.isDirectory || name.endsWith(".parquet"))
+  }
+
+  /** Does the parquet directory `dir` exist and hold committed data
+    * ([[isDataEntry]])?
+    */
+  private[graft] def hasCommittedData(spark: org.apache.spark.sql.SparkSession,
+                                      dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists(isDataEntry)
+  }
+
   /** Read a persisted dedup store, healing an interrupted [[compactStore]]
     * swap if one is detected; `orElse` (typically an empty, correctly-typed
-    * relation) only when the store genuinely does not exist yet. Every
+    * relation) only when the store holds no committed data yet. Every
     * store reader must use this instead of a bare `spark.read.parquet` —
     * a bare read treats the mid-swap state as an EMPTY store and silently
-    * forgets the entire dedup history.
+    * forgets the entire dedup history. The store is listed, not probed by
+    * a failing read: Spark reports a failed read to every query-execution
+    * listener, so a probe logged a failed query on each first round.
     */
   def readStore(spark: org.apache.spark.sql.SparkSession, storeDir: String)
-               (orElse: => DataFrame): DataFrame =
-    try spark.read.parquet(storeDir)
-    catch { case _: org.apache.spark.sql.AnalysisException =>
-      if (recoverStore(spark, storeDir)) spark.read.parquet(storeDir) else orElse
-    }
+               (orElse: => DataFrame): DataFrame = {
+    recoverStore(spark, storeDir)
+    if (hasCommittedData(spark, storeDir)) spark.read.parquet(storeDir) else orElse
+  }
 
   /** Near-dup pairs touching at least one NEW document, for a delta batch
     * banded together with the persisted signature store: `(id_a, id_b,
@@ -799,16 +821,26 @@ object Dedup {
   def incrementalDedupSigs(delta: DataFrame, deltaSigs: DataFrame,
                            storeSigs: DataFrame, idCol: String,
                            threshold: Double, numHashes: Int = 128,
-                           bands: Int = 16, maxBucketSize: Int = 1000): DataFrame = {
-    // scope every relation this call persists (the pair result and the
+                           bands: Int = 16, maxBucketSize: Int = 1000): DataFrame =
+    firstSeenWins(delta, idCol)(incrementalDedupPairsSigs(deltaSigs, storeSigs,
+      threshold, numHashes, bands, maxBucketSize))
+
+  /** The first-seen-wins loser rule of the incremental dedups, over a
+    * pair relation `(id_a, id_b, a_new, b_new, …)` flagging which side of
+    * each pair is new: `delta` without every new doc paired with a STORE
+    * doc, and without every non-minimum member of a duplicate component
+    * among the remaining new docs. `flagged` is built inside the rule's
+    * operator scope, so every relation it persists is released with it.
+    */
+  private def firstSeenWins(delta: DataFrame, idCol: String)(flagged: => DataFrame): DataFrame = {
+    // scope every relation this persists (the pair result and the
     // clusters() membership) so batch ingest loops accumulate nothing in the
     // session registry; the small loser id set is eagerly checkpointed so
     // the returned frame survives the scope exit (an enclosing
     // withCacheScope releases the checkpoint, else the ContextCleaner does
     // once the result is unreferenced)
     val losers = operatorScope {
-      val pairs = incrementalDedupPairsSigs(deltaSigs, storeSigs, threshold,
-        numHashes, bands, maxBucketSize)
+      val pairs = flagged
       val vsStore = pairs.filter(col("a_new") && !col("b_new")).select(col("id_a").as("id"))
         .union(pairs.filter(col("b_new") && !col("a_new")).select(col("id_b").as("id")))
         .distinct()
@@ -1542,25 +1574,9 @@ object Dedup {
     */
   def incrementalSemanticDropAssigned(delta: DataFrame, assignedDelta: DataFrame,
       store: DataFrame, idCol: String,
-      threshold: Double, maxClusterSize: Int = 10000): DataFrame = {
-    val losers = operatorScope {
-      val flagged = incrementalSemanticPairsFlagged(assignedDelta, store,
-        threshold, maxClusterSize)
-      val vsStore = flagged.filter(col("a_new") && !col("b_new")).select(col("id_a").as("id"))
-        .union(flagged.filter(col("b_new") && !col("a_new")).select(col("id_b").as("id")))
-        .distinct()
-      // store-survivors only — same first-seen-wins rationale as
-      // [[incrementalDedup]]: a store-dropped min must not take its whole
-      // within-delta component down with it
-      val survivorPairs = flagged.filter(col("a_new") && col("b_new"))
-        .join(vsStore.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
-        .join(vsStore.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
-      val withinDelta = clusters(survivorPairs)
-        .filter(col("id") =!= col("cluster")).select("id")
-      scopedCheckpoint(vsStore.union(withinDelta).distinct())
-    }
-    delta.join(losers, delta(idCol) === losers("id"), "left_anti")
-  }
+      threshold: Double, maxClusterSize: Int = 10000): DataFrame =
+    firstSeenWins(delta, idCol)(incrementalSemanticPairsFlagged(assignedDelta, store,
+      threshold, maxClusterSize))
 
   /** SemDeDup end-to-end drop: pairs → connected components → per component
     * keep the member FARTHEST from its centroid (lowest `centroid_sim`,

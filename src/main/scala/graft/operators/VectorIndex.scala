@@ -460,11 +460,7 @@ object VectorIndex {
     val p = new org.apache.hadoop.fs.Path(tierPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.filter { st =>
-      val name = st.getPath.getName
-      st.isFile && !name.startsWith("_") && !name.startsWith(".") &&
-        name.endsWith(".parquet")
-    }.map(_.getPath)
+    else fs.listStatus(p).toSeq.filter(st => st.isFile && Dedup.isDataEntry(st)).map(_.getPath)
   }
 
   private def listDeltaDataFiles(spark: SparkSession, dir: String)
@@ -508,16 +504,8 @@ object VectorIndex {
   private def readTierOpt(spark: SparkSession, tierPath: String)
       : Option[DataFrame] = {
     Dedup.recoverStore(spark, tierPath) // heal a crashed tier rewrite
-    val p = new org.apache.hadoop.fs.Path(tierPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a crashed FIRST append can leave only _temporary under the tier —
-    // committer metadata is not data, and reading it would throw
-    val hasData = fs.exists(p) && fs.listStatus(p).exists { st =>
-      val name = st.getPath.getName
-      !name.startsWith("_") && !name.startsWith(".") &&
-        (st.isDirectory || name.endsWith(".parquet"))
-    }
-    if (hasData) Some(spark.read.parquet(tierPath)) else None
+    // a crashed FIRST append can leave only _temporary under the tier
+    if (Dedup.hasCommittedData(spark, tierPath)) Some(spark.read.parquet(tierPath)) else None
   }
 
   private def readDeltaOpt(spark: SparkSession, dir: String): Option[DataFrame] =

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * `/root/reference/jobs/job.js:124-150`; we deliberately replace that with
   * expressions so the optimizer can see through every op).
   *
-  * Parameters: `{%name%}` placeholders inside expression/path strings are
-  * substituted at compile time from the run's arg map — the reference's
-  * template mechanism (`/root/reference/utils.js:145-172`).
+  * Parameters: `{%name%}` placeholders inside any string field are
+  * substituted once, before a compile, from the run's arg map
+  * ([[SpecJson.substitute]]) — the reference's template mechanism
+  * (reference `utils.js:145-172`).
   *
   * Compilation builds ONE DataFrame chain per sink, so Catalyst optimizes the
   * whole pipeline globally — filters written late in a spec still push down
@@ -321,24 +322,6 @@ object PipelineCompiler {
   def substitute(s: String, params: Map[String, String]): String =
     params.foldLeft(s) { case (acc, (k, v)) => acc.replace(s"{%$k%}", v) }
 
-  /** Does a persisted model asset hold COMMITTED data? Bare directory
-    * existence is not enough: a first persist that crashed mid-write
-    * leaves a dir holding only `_temporary`, and gating the load branch
-    * on it would wedge every later compile on an unreadable asset (the
-    * [[graft.operators.Dedup]] stores guard the same way). Such a
-    * partial asset reads as absent, so the next compile retrains and
-    * overwrites it.
-    */
-  private def assetExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val name = st.getPath.getName
-      st.isFile && !name.startsWith("_") && !name.startsWith(".") &&
-        name.endsWith(".parquet")
-    }
-  }
-
   /** [[graft.operators.Dedup.unpersistCaches]], the session-wide release
     * of every registered relation (CacheSpec persists and multi-read
     * barriers among them). Kept only as the name the benchmark driver
@@ -421,7 +404,6 @@ object PipelineCompiler {
   private def compileResolved(spec: PipelineSpec, spark: SparkSession,
                               params: Map[String, String]): Map[String, DataFrame] = {
     val resolved = scala.collection.mutable.Map.empty[String, DataFrame]
-    def sub(s: String) = substitute(s, params)
 
     // Multi-read barriers, memoized per input frame: two consumers of one
     // node get the same frame from `resolved`, so they share one barrier.
@@ -447,8 +429,7 @@ object PipelineCompiler {
     }
 
     def build(op: OpSpec): DataFrame = op match {
-      case SourceSpec(format, path, options, rootNode) =>
-        val p = sub(path)
+      case SourceSpec(format, p, options, rootNode) =>
         format match {
           case "parquet" => spark.read.options(options).parquet(p)
           case "ndjson"  => graft.sources.Readers.jsons(spark, p)
@@ -479,21 +460,21 @@ object PipelineCompiler {
         resolved.getOrElse(name,
           throw new IllegalArgumentException(
             s"broken chain: node '$name' not defined before use")) // cf. job-pipeline.js:159
-      case FilterSpec(in, pred) => build(in).filter(expr(sub(pred)))
+      case FilterSpec(in, pred) => build(in).filter(expr(pred))
       case MapSpec(in, projs) =>
-        build(in).select(projs.map { case (n, e) => expr(sub(e)).as(n) }: _*)
+        build(in).select(projs.map { case (n, e) => expr(e).as(n) }: _*)
       case WithColumnsSpec(in, cols) =>
-        cols.foldLeft(build(in)) { case (df, (n, e)) => df.withColumn(n, expr(sub(e))) }
-      case ExplodeSpec(in, arr, as) => build(in).withColumn(as, explode(expr(sub(arr))))
+        cols.foldLeft(build(in)) { case (df, (n, e)) => df.withColumn(n, expr(e)) }
+      case ExplodeSpec(in, arr, as) => build(in).withColumn(as, explode(expr(arr)))
       case AggSpec(in, keys, aggs) =>
         require(aggs.nonEmpty, "agg node needs at least one aggregate expression")
-        val aggCols = aggs.map { case (n, e) => expr(sub(e)).as(n) }
-        build(in).groupBy(keys.map(k => expr(sub(k))): _*).agg(aggCols.head, aggCols.tail: _*)
+        val aggCols = aggs.map { case (n, e) => expr(e).as(n) }
+        build(in).groupBy(keys.map(expr): _*).agg(aggCols.head, aggCols.tail: _*)
       case SortSpec(in, keys) =>
         // "expr desc"/"expr asc" suffixes build a SortOrder — expr("n desc")
         // alone would parse as column `n` ALIASED to `desc` and sort ascending
         def sortKey(k: String): Column = {
-          val s = sub(k).trim
+          val s = k.trim
           val lower = s.toLowerCase
           if (lower.endsWith(" desc")) expr(s.dropRight(5)).desc
           else if (lower.endsWith(" asc")) expr(s.dropRight(4)).asc
@@ -504,10 +485,10 @@ object PipelineCompiler {
         // one SQL window expression — Catalyst parses the OVER clause, so
         // partition exprs, "desc" order suffixes and frame syntax are all
         // plain SQL (same parser as every other expression in the spec)
-        val pb = if (parts.isEmpty) "" else parts.map(sub).mkString("PARTITION BY ", ", ", "")
-        val ob = if (order.isEmpty) "" else order.map(sub).mkString("ORDER BY ", ", ", "")
-        val over = Seq(pb, ob, sub(frame).trim).filter(_.nonEmpty).mkString(" ")
-        build(in).withColumn(as, expr(s"${sub(fn)} OVER ($over)"))
+        val pb = if (parts.isEmpty) "" else parts.mkString("PARTITION BY ", ", ", "")
+        val ob = if (order.isEmpty) "" else order.mkString("ORDER BY ", ", ", "")
+        val over = Seq(pb, ob, frame.trim).filter(_.nonEmpty).mkString(" ")
+        build(in).withColumn(as, expr(s"$fn OVER ($over)"))
       case DistinctSpec(in, keys, order) =>
         val df = build(in)
         if (order.isEmpty) df.dropDuplicates(keys)
@@ -516,31 +497,28 @@ object PipelineCompiler {
       case JoinSpec(in, vocab, lk, rk, jt, bcast) =>
         val l = build(in); val r0 = build(vocab)
         val r = if (bcast) graft.operators.Joins.maybeBroadcast(r0) else r0
-        l.join(r, l(sub(lk)) === r(sub(rk)), jt)
+        l.join(r, l(lk) === r(rk), jt)
       case JoinDetailSpec(m, d, mk, dk, as, detailCols) =>
-        graft.operators.Joins.joinDetail(build(m), build(d), sub(mk), sub(dk), as,
-          detailCols.map(sub))
+        graft.operators.Joins.joinDetail(build(m), build(d), mk, dk, as, detailCols)
       case UnionSpec(ins) =>
         require(ins.nonEmpty, "union node needs at least one input")
         ins.map(build).reduce(_.unionByName(_, allowMissingColumns = true))
       case op @ DedupNodeSpec(in, id, text, mode, threshold) => mode match {
         case "exact" =>
-          graft.operators.Dedup.exact(inputOf(op, in), sub(text), sub(id)).drop("dup_count")
+          graft.operators.Dedup.exact(inputOf(op, in), text, id).drop("dup_count")
         case "near" =>
-          graft.operators.Dedup.dropNearDups(inputOf(op, in), sub(id), sub(text), threshold)
+          graft.operators.Dedup.dropNearDups(inputOf(op, in), id, text, threshold)
         case other => throw new IllegalArgumentException(s"dedup mode '$other' (exact|near)")
       }
-      case op @ SpanDedupNodeSpec(in, id, text, k) =>
+      case op @ SpanDedupNodeSpec(in, idc, tc, k) =>
         val df = inputOf(op, in)
-        val idc = sub(id); val tc = sub(text)
         val rebuilt = graft.operators.Dedup.dropRepeatedSpans(df, idc, tc, k)
           .select(col("id").as("__span_id"), col("text_out"))
         df.join(rebuilt, df(idc) === rebuilt("__span_id"))
           .withColumn(tc, col("text_out"))
           .drop("__span_id", "text_out")
-      case op @ SemanticDedupNodeSpec(in, id, vec, k, thr, maxCs, centMode, modelDir) =>
+      case op @ SemanticDedupNodeSpec(in, id, vec, k, thr, maxCs, centMode, mdir) =>
         val df = inputOf(op, in)
-        val mdir = sub(modelDir)
         val centsPath = if (mdir.isEmpty) "" else s"${mdir.stripSuffix("/")}/centroids"
         // persisted model asset: load the pinned centroids when present,
         // else train and (when modelDir set) persist — the first run pays
@@ -548,10 +526,12 @@ object PipelineCompiler {
         // carries the spec knobs it was trained under (`k`, `mode`) so a
         // spec whose k or centroids mode changed after the persist FAILS
         // LOUDLY instead of silently loading a stale model whose results
-        // diverge from a fresh-trained run (the DSIR hexLen-guard policy);
-        // a zero-row asset reads as absent, like assetExists partial writes.
+        // diverge from a fresh-trained run (the DSIR hexLen-guard policy).
+        // An asset without committed data (a persist that crashed mid-write
+        // leaves only `_temporary`) or with zero rows reads as absent, so
+        // the compile retrains and overwrites it instead of wedging on it.
         val loadedCents: Option[Seq[(Int, Seq[Float])]] =
-          if (centsPath.isEmpty || !assetExists(spark, centsPath)) None
+          if (centsPath.isEmpty || !graft.operators.Dedup.hasCommittedData(spark, centsPath)) None
           else {
             val asset = spark.read.parquet(centsPath)
             val hasMeta = asset.columns.contains("k") && asset.columns.contains("mode")
@@ -568,9 +548,9 @@ object PipelineCompiler {
         val cents: Seq[(Int, Seq[Float])] = loadedCents.getOrElse {
             val trained = centMode match {
               case "kmeans" =>
-                graft.operators.Dedup.trainSemanticCentroids(df, sub(id), sub(vec), k)
+                graft.operators.Dedup.trainSemanticCentroids(df, id, vec, k)
               case "firstK" =>
-                graft.operators.Dedup.firstKCentroids(df, sub(id), sub(vec), k)
+                graft.operators.Dedup.firstKCentroids(df, id, vec, k)
               case other =>
                 throw new IllegalArgumentException(s"centroids '$other' (kmeans|firstK)")
             }
@@ -583,23 +563,22 @@ object PipelineCompiler {
             }
             trained
           }
-        graft.operators.Dedup.semanticDrop(df, sub(id), sub(vec), cents, thr, maxCs)
+        graft.operators.Dedup.semanticDrop(df, id, vec, cents, thr, maxCs)
       case SplitNodeSpec(in, id, splits) =>
-        graft.operators.Sampling.hashSplit(build(in), sub(id), splits)
+        graft.operators.Sampling.hashSplit(build(in), id, splits)
       case MixNodeSpec(in, id, stratum, weights, dw) =>
-        graft.operators.Sampling.weightedMix(build(in), sub(id), sub(stratum), weights, dw)
-      case op @ DsirNodeSpec(in, target, id, text, k, hexLen, alpha, salt, modelDir) =>
+        graft.operators.Sampling.weightedMix(build(in), id, stratum, weights, dw)
+      case op @ DsirNodeSpec(in, target, id, text, k, hexLen, alpha, salt, mdir) =>
         val df = inputOf(op, in)
-        val mdir = sub(modelDir)
         val weightsPath = if (mdir.isEmpty) "" else s"${mdir.stripSuffix("/")}/dsir_weights"
         // persisted model asset: the (bucket, logw) relation is the
         // FINISHED model — loading it skips both gram-count corpus scans.
         // An asset holding ZERO rows (a degenerate/empty corpus persisted
-        // no buckets) reads as ABSENT, mirroring the assetExists
-        // partial-write policy: fall through to retrain/overwrite rather
-        // than head()-crash or silently select nothing.
+        // no buckets) reads as ABSENT, like a partial write: fall through
+        // to retrain/overwrite rather than head()-crash or silently select
+        // nothing.
         val loadedWeights: Option[DataFrame] =
-          if (weightsPath.isEmpty || !assetExists(spark, weightsPath)) None
+          if (weightsPath.isEmpty || !graft.operators.Dedup.hasCommittedData(spark, weightsPath)) None
           else {
             val loaded = spark.read.parquet(weightsPath)
             loaded.select("bucket").take(1).headOption.map { r =>
@@ -616,7 +595,7 @@ object PipelineCompiler {
           }
         loadedWeights match {
           case Some(loaded) =>
-          graft.operators.Sampling.importanceResample(df, sub(id), sub(text),
+          graft.operators.Sampling.importanceResample(df, id, text,
             loaded, k, hexLen, salt)
           case None =>
           {
@@ -634,11 +613,11 @@ object PipelineCompiler {
         val counts: Map[String, (Long, Long)] = target match {
           case FilterSpec(tin, pred) if tin == in =>
             graft.operators.CorpusStats
-              .hashedGramCountsSplit(df, sub(text), expr(sub(pred)), hexLen)
+              .hashedGramCountsSplit(df, text, expr(pred), hexLen)
               .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
           case _ =>
             def model(c: org.apache.spark.sql.DataFrame): Map[String, Long] =
-              graft.operators.CorpusStats.hashedGramCounts(c, sub(text), hexLen)
+              graft.operators.CorpusStats.hashedGramCounts(c, text, hexLen)
                 .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
             val (t, b) = (model(build(target)), model(df))
             (t.keySet ++ b.keySet).map(k0 =>
@@ -657,23 +636,23 @@ object PipelineCompiler {
         val weights = spark.createDataFrame(weightRows).toDF("bucket", "logw")
         if (weightsPath.nonEmpty)
           weights.coalesce(1).write.mode("overwrite").parquet(weightsPath)
-        graft.operators.Sampling.importanceResample(df, sub(id), sub(text),
+        graft.operators.Sampling.importanceResample(df, id, text,
           weights, k, hexLen, salt)
           }
         }
       case QualityScoreNodeSpec(in, text, weights) =>
-        graft.operators.QualityModel.score(build(in), sub(text), weights)
+        graft.operators.QualityModel.score(build(in), text, weights)
       case op @ DecontamNodeSpec(in, bench, id, text, ngram, minHits, hashKeys, warnBelow) =>
         val df = inputOf(op, in)
         if (warnBelow <= 0.0)
-          graft.operators.Dedup.decontaminate(df, build(bench), sub(id), sub(text),
+          graft.operators.Dedup.decontaminate(df, build(bench), id, text,
             ngram, minHits, hashKeys)
         else {
           // calibration mode: the hit set computes ONCE (checkpointed, and
           // released with the caller's cache scope) and feeds both the
           // survivor-rate report and the selection anti-join
           val hitIds = graft.operators.Dedup.scopedCheckpoint(graft.operators.Dedup
-            .contaminationHits(df, build(bench), sub(id), sub(text), ngram, hashKeys)
+            .contaminationHits(df, build(bench), id, text, ngram, hashKeys)
             .filter(col("n_hits") >= minHits).select("id"))
           val nIn = df.count()
           val nHit = hitIds.count()
@@ -686,19 +665,16 @@ object PipelineCompiler {
               f"configured floor $warnBelow%.4f — the n-gram/minHits setting " +
               "is likely too aggressive for this corpus density; consider a " +
               "larger n, a higher minHits, or hashKeys with a curated bench")
-          df.join(hitIds, df(sub(id)) === hitIds("id"), "left_anti")
+          df.join(hitIds, df(id) === hitIds("id"), "left_anti")
         }
       case PackNodeSpec(in, id, text, budget, shards) =>
-        graft.operators.Packing.packSequences(build(in), sub(id), sub(text), budget, shards)
+        graft.operators.Packing.packSequences(build(in), id, text, budget, shards)
       case ReportNodeSpec(in, text, group, exact) =>
-        graft.operators.CorpusStats.corpusReport(build(in), sub(text), sub(group), exact)
+        graft.operators.CorpusStats.corpusReport(build(in), text, group, exact)
       case AnnQuerySpec(in, indexDir, k, nprobe, id, vec) =>
-        graft.operators.VectorIndex.ivfTopKIndexed(build(in), sub(indexDir), k,
-          nprobe, sub(id), sub(vec))
-      case LayoutNodeSpec(in, layout, path, cols, files, bits) =>
+        graft.operators.VectorIndex.ivfTopKIndexed(build(in), indexDir, k, nprobe, id, vec)
+      case LayoutNodeSpec(in, layout, p, cs, files, bits) =>
         val df = build(in)
-        val p = sub(path)
-        val cs = cols.map(sub)
         layout match {
           case "sorted" =>
             graft.sinks.Writers.sortedLayout(df, p, cs, files); spark.read.parquet(p)
@@ -709,42 +685,37 @@ object PipelineCompiler {
           case other =>
             throw new IllegalArgumentException(s"layout '$other' (sorted|zorder|bucketed)")
         }
-      case CompactStoreSpec(path, keys) =>
-        val p = sub(path)
-        graft.operators.Dedup.compactStore(spark, p, keys.map(sub))
+      case CompactStoreSpec(p, keys) =>
+        graft.operators.Dedup.compactStore(spark, p, keys)
         spark.read.parquet(p)
-      case DeleteIndexSpec(dir0, ids, idCol) =>
-        val p = sub(dir0)
-        graft.operators.VectorIndex.deleteFromIvfIndex(spark, p, build(ids), sub(idCol))
+      case DeleteIndexSpec(p, ids, idCol) =>
+        graft.operators.VectorIndex.deleteFromIvfIndex(spark, p, build(ids), idCol)
         // the takedown-aware view: deletion tombstones the cells tier, so
         // a bare cells read would still show the victims until the next
         // fold/compaction purges them physically
         graft.operators.VectorIndex.readIvfCells(spark, p)
-      case BuildIndexSpec(in, dir0, nlist, codec, normalize, idCol, vecCol, trainer) =>
-        val p = sub(dir0)
-        sub(trainer) match {
+      case BuildIndexSpec(in, p, nlist, codec, normalize, idCol, vecCol, trainer) =>
+        trainer match {
           case "flat" =>
             graft.operators.VectorIndex.buildIvfIndex(build(in), p, nlist,
-              sub(idCol), sub(vecCol), codec = sub(codec), normalize = normalize)
+              idCol, vecCol, codec = codec, normalize = normalize)
           case "hier" =>
             // the two-level trainer: same layout/serving, √k-bounded fit —
             // the 100M+ path where flat k-means would hit autoNlistCap
             graft.operators.VectorIndex.buildIvfIndexHierarchical(build(in), p,
-              nlist, sub(idCol), sub(vecCol), codec = sub(codec),
-              normalize = normalize)
+              nlist, idCol, vecCol, codec = codec, normalize = normalize)
           case other => throw new IllegalArgumentException(
             s"buildIndex trainer must be flat or hier, got '$other'")
         }
         spark.read.parquet(s"$p/cells")
-      case SpyNodeSpec(in, name0, metrics, rate) =>
+      case SpyNodeSpec(in, nm, metrics, rate) =>
         val df = build(in)
-        val nm = sub(name0)
         val tapped =
           if (rate <= 0.0) df
           else graft.operators.CoreOps.spyTap(df,
             row => System.err.println(s"[spy:$nm] $row"), rate, salt = nm)
         graft.operators.CoreOps.spy(tapped, nm,
-          metrics.map { case (mName, e) => expr(sub(e)).as(mName) })
+          metrics.map { case (mName, e) => expr(e).as(mName) })
       case CacheSpec(in) =>
         // the same barrier the compiler puts under multi-read inputs
         // (inputOf), here at a node the spec author chose
@@ -756,7 +727,7 @@ object PipelineCompiler {
     // properties, so the per-stage jobs carry the label too): the UI and
     // the job-timeline probes attribute compile-wall time to SPEC NODES
     // instead of anonymous scheduler callsites (guide §1.5).
-    spec.nodes.foreach { case (name, op) =>
+    SpecJson.substitute(spec, params).nodes.foreach { case (name, op) =>
       val sc = spark.sparkContext
       val prev = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(s"spec:$name")

@@ -1,14 +1,33 @@
 package graft.plans
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.{universe => ru}
 
 /** JSON (de)serialization of pipeline specs — the analogue of the
   * reference's persisted Job documents (`/root/reference/jobs/job.js:49-64`
   * serialize/deserialize; mongoose storage). Specs are stored as plain JSON
   * files/strings instead of MongoDB documents; the `op` field plays the
   * reference's `type` discriminator role (`jobs/job.js:24`).
+  *
+  * Like the reference's mongoose schema (`jobs/job.js:21-39`), each spec
+  * case class is the only declaration of its fields: the writer emits every
+  * constructor field under its own name, and the reader rebuilds the class
+  * from its primary constructor's parameters — names, full types and
+  * default values, read once per class through Scala reflection. What stays
+  * per kind is the discriminator table ([[discriminators]]) and how a
+  * pair-typed value encodes ([[pairKeys]]). One rule set validates batch
+  * and ingest specs alike:
+  *  - a parameter without a default is required; JSON `null` counts as
+  *    missing, and a missing optional parameter takes its default;
+  *  - a string must be a JSON string, non-empty when required;
+  *  - `Int`, `Long`, `Double` and `Float` values must be JSON numbers, a
+  *    `Boolean` a JSON boolean;
+  *  - every error is an `IllegalArgumentException` naming the node and the
+  *    field.
+  * The writer omits only a `None` and a non-finite double (`minLogw =
+  * -Infinity`), which the reader defaults back.
   *
   * Also exports the spec DAG as `{nodes, links}` for visualization — the
   * reference's `getLinkedJobs` Sankey export
@@ -17,274 +36,229 @@ import scala.jdk.CollectionConverters._
 object SpecJson {
 
   private val M = new ObjectMapper()
+  private val F = M.getNodeFactory
+
+  /** The `op` of each batch node and the `kind` of each ingest shape. */
+  private val discriminators: Map[Class[_], String] = Map(
+    classOf[SourceSpec] -> "source", classOf[RefSpec] -> "ref",
+    classOf[FilterSpec] -> "filter", classOf[MapSpec] -> "map",
+    classOf[WithColumnsSpec] -> "withColumns", classOf[ExplodeSpec] -> "explode",
+    classOf[AggSpec] -> "agg", classOf[SortSpec] -> "sort",
+    classOf[WindowNodeSpec] -> "window", classOf[DistinctSpec] -> "distinct",
+    classOf[LimitSpec] -> "limit", classOf[JoinSpec] -> "join",
+    classOf[JoinDetailSpec] -> "joinDetail", classOf[UnionSpec] -> "union",
+    classOf[DedupNodeSpec] -> "dedup", classOf[SpanDedupNodeSpec] -> "spanDedup",
+    classOf[SemanticDedupNodeSpec] -> "semanticDedup", classOf[SplitNodeSpec] -> "split",
+    classOf[MixNodeSpec] -> "mix", classOf[DsirNodeSpec] -> "dsir",
+    classOf[QualityScoreNodeSpec] -> "qualityScore",
+    classOf[DecontamNodeSpec] -> "decontaminate", classOf[PackNodeSpec] -> "pack",
+    classOf[ReportNodeSpec] -> "report", classOf[AnnQuerySpec] -> "annQuery",
+    classOf[LayoutNodeSpec] -> "layout", classOf[CompactStoreSpec] -> "compactStore",
+    classOf[DeleteIndexSpec] -> "deleteIndex", classOf[BuildIndexSpec] -> "buildIndex",
+    classOf[SpyNodeSpec] -> "spy", classOf[CacheSpec] -> "cache",
+    classOf[QualityIngestSpec] -> "quality", classOf[ImportanceIngestSpec] -> "importance",
+    classOf[MinhashIngestSpec] -> "minhashDedup", classOf[SpanIngestSpec] -> "spanDedup",
+    classOf[SemanticIngestSpec] -> "semanticDedup",
+    classOf[VectorIndexIngestSpec] -> "vectorIndex", classOf[PretrainIngestSpec] -> "pretrain")
+
+  /** The two keys a pair-typed value encodes under, by its element types. */
+  private lazy val pairKeys: Seq[(ru.Type, (String, String))] = Seq(
+    ru.typeOf[(String, String)] -> ("name" -> "expr"),
+    ru.typeOf[(String, Double)] -> ("name" -> "weight"),
+    ru.typeOf[(String, OpSpec)] -> ("name" -> "spec"),
+    ru.typeOf[(Int, Seq[Float])] -> ("cell" -> "vec"))
+
+  // --- codecs, derived from the case classes ---------------------------------
+
+  private sealed trait Codec
+  private final case class Scalar(what: String, ok: JsonNode => Boolean,
+                                  read: JsonNode => Any, write: Any => JsonNode) extends Codec
+  private final case class OptOf(of: Codec) extends Codec
+  private final case class SeqOf(of: Codec) extends Codec
+  private final case class MapOf(of: Codec) extends Codec
+  private final case class Pair(k1: String, c1: Codec, k2: String, c2: Codec) extends Codec
+  /** A case class written as a plain object. */
+  private final case class Record(cls: Class[_]) extends Codec
+  /** One of a sealed trait's case classes, named by its `key` field. */
+  private final case class Tagged(key: String, byName: Map[String, Class[_]]) extends Codec
+
+  private final case class Field(name: String, codec: Codec, default: Option[Any])
+  private final class Shape(val fields: IndexedSeq[Field], ctor: java.lang.reflect.Constructor[_]) {
+    def make(args: Seq[Any]): Any = ctor.newInstance(args.map(_.asInstanceOf[AnyRef]): _*)
+  }
+
+  private def scalar[T](what: String, ok: JsonNode => Boolean, read: JsonNode => T,
+                        write: T => JsonNode): Scalar =
+    Scalar(what, ok, read, v => write(v.asInstanceOf[T]))
+  private lazy val scalars: Seq[(ru.Type, Scalar)] = Seq(
+    ru.typeOf[String] -> scalar[String]("a string", _.isTextual, _.asText, F.textNode),
+    ru.typeOf[Int] -> scalar[Int]("a number", _.isNumber, _.asInt, F.numberNode(_: Int)),
+    ru.typeOf[Long] -> scalar[Long]("a number", _.isNumber, _.asLong, F.numberNode(_: Long)),
+    ru.typeOf[Double] -> scalar[Double]("a number", _.isNumber, _.asDouble, F.numberNode(_: Double)),
+    // Float.toString is the shortest decimal that parses back to the same
+    // float32, so pinned centroids round-trip bit-exactly
+    ru.typeOf[Float] -> scalar[Float]("a number", _.isNumber, _.floatValue, F.numberNode(_: Float)),
+    ru.typeOf[Boolean] -> scalar[Boolean]("a boolean", _.isBoolean, _.asBoolean, F.booleanNode))
+
+  private def tagged(key: String, base: Class[_]): Tagged =
+    Tagged(key, discriminators.collect { case (c, n) if base.isAssignableFrom(c) => n -> c })
+  private val opTag = tagged("op", classOf[OpSpec])
+  private val kindTag = tagged("kind", classOf[IngestSpec])
+  private val pipeline = Record(classOf[PipelineSpec])
+
+  /** Every spec case class's constructor fields, read once. */
+  private lazy val shapes: Map[Class[_], Shape] = {
+    val mirror = ru.runtimeMirror(getClass.getClassLoader)
+    def codecOf(declared: ru.Type): Codec = {
+      val t = declared.dealias
+      def arg(i: Int) = codecOf(t.typeArgs(i))
+      scalars.collectFirst { case (s, c) if t =:= s => c }
+        .orElse(pairKeys.collectFirst { case (p, (k1, k2)) if t =:= p => Pair(k1, arg(0), k2, arg(1)) })
+        .getOrElse {
+          if (t <:< ru.typeOf[Option[Any]]) OptOf(arg(0))
+          else if (t <:< ru.typeOf[Map[String, Any]]) MapOf(arg(1))
+          else if (t <:< ru.typeOf[Seq[Any]]) SeqOf(arg(0))
+          else if (t =:= ru.typeOf[OpSpec]) opTag
+          else Record(mirror.runtimeClass(t))
+        }
+    }
+    (discriminators.keys ++ Seq(classOf[StreamSourceSpec], classOf[PipelineSpec])).map { cls =>
+      val sym = mirror.classSymbol(cls)
+      val companion = mirror.reflectModule(sym.companion.asModule).instance
+      val params = sym.primaryConstructor.asMethod.paramLists.head
+      cls -> new Shape(params.zipWithIndex.map { case (p, i) =>
+        val default = if (!p.asTerm.isParamWithDefault) None
+          else Some(companion.getClass.getMethod("$lessinit$greater$default$" + (i + 1))
+            .invoke(companion))
+        Field(p.name.decodedName.toString, codecOf(p.typeSignature), default)
+      }.toIndexedSeq, cls.getConstructors.head)
+    }.toMap
+  }
 
   // --- serialization --------------------------------------------------------
 
-  private def pairs(n: ObjectNode, kvs: (String, String)*): Unit =
-    kvs.foreach { case (k, v) => n.put(k, v) }
-
-  private def opNode(op: OpSpec): ObjectNode = {
-    val n = M.createObjectNode()
-    op match {
-      case SourceSpec(format, path, options, root) =>
-        pairs(n, "op" -> "source", "format" -> format, "path" -> path, "rootNode" -> root)
-        val o = n.putObject("options"); options.foreach { case (k, v) => o.put(k, v) }
-      case RefSpec(name) => pairs(n, "op" -> "ref", "name" -> name)
-      case FilterSpec(in, p) => pairs(n, "op" -> "filter", "predicate" -> p); n.set[JsonNode]("input", opNode(in))
-      case MapSpec(in, projs) =>
-        n.put("op", "map"); n.set[JsonNode]("input", opNode(in))
-        val a = n.putArray("projections")
-        projs.foreach { case (k, e) => val o = a.addObject(); o.put("name", k); o.put("expr", e) }
-      case WithColumnsSpec(in, cols) =>
-        n.put("op", "withColumns"); n.set[JsonNode]("input", opNode(in))
-        val a = n.putArray("columns")
-        cols.foreach { case (k, e) => val o = a.addObject(); o.put("name", k); o.put("expr", e) }
-      case ExplodeSpec(in, arr, as) =>
-        pairs(n, "op" -> "explode", "arrayExpr" -> arr, "as" -> as); n.set[JsonNode]("input", opNode(in))
-      case AggSpec(in, keys, aggs) =>
-        n.put("op", "agg"); n.set[JsonNode]("input", opNode(in))
-        val k = n.putArray("keys"); keys.foreach(k.add)
-        val a = n.putArray("aggs")
-        aggs.foreach { case (nm, e) => val o = a.addObject(); o.put("name", nm); o.put("expr", e) }
-      case SortSpec(in, keys) =>
-        n.put("op", "sort"); n.set[JsonNode]("input", opNode(in))
-        val k = n.putArray("keys"); keys.foreach(k.add)
-      case WindowNodeSpec(in, fn, as, parts, order, frame) =>
-        pairs(n, "op" -> "window", "function" -> fn, "as" -> as, "frame" -> frame)
-        val p = n.putArray("partitionBy"); parts.foreach(p.add)
-        val o = n.putArray("orderBy"); order.foreach(o.add)
-        n.set[JsonNode]("input", opNode(in))
-      case DistinctSpec(in, keys, order) =>
-        n.put("op", "distinct"); n.set[JsonNode]("input", opNode(in))
-        val k = n.putArray("keys"); keys.foreach(k.add)
-        val o = n.putArray("order"); order.foreach(o.add)
-      case LimitSpec(in, m) => n.put("op", "limit"); n.put("n", m); n.set[JsonNode]("input", opNode(in))
-      case JoinSpec(in, vocab, lk, rk, jt, b) =>
-        pairs(n, "op" -> "join", "leftKey" -> lk, "rightKey" -> rk, "joinType" -> jt)
-        n.put("broadcastVocab", b); n.set[JsonNode]("input", opNode(in)); n.set[JsonNode]("vocab", opNode(vocab))
-      case JoinDetailSpec(m0, d, mk, dk, as, detailCols) =>
-        pairs(n, "op" -> "joinDetail", "masterKey" -> mk, "detailKey" -> dk, "as" -> as)
-        val dc = n.putArray("detailCols"); detailCols.foreach(dc.add)
-        n.set[JsonNode]("master", opNode(m0)); n.set[JsonNode]("detail", opNode(d))
-      case UnionSpec(ins) =>
-        n.put("op", "union"); val a = n.putArray("inputs"); ins.foreach(i => a.add(opNode(i)))
-      case DedupNodeSpec(in, id, text, mode, threshold) =>
-        pairs(n, "op" -> "dedup", "idCol" -> id, "textCol" -> text, "mode" -> mode)
-        n.put("threshold", threshold); n.set[JsonNode]("input", opNode(in))
-      case SpanDedupNodeSpec(in, id, text, k) =>
-        pairs(n, "op" -> "spanDedup", "idCol" -> id, "textCol" -> text)
-        n.put("k", k); n.set[JsonNode]("input", opNode(in))
-      case SemanticDedupNodeSpec(in, id, vec, k, thr, maxCs, cents, modelDir) =>
-        pairs(n, "op" -> "semanticDedup", "idCol" -> id, "vecCol" -> vec,
-          "centroids" -> cents)
-        n.put("k", k); n.put("threshold", thr); n.put("maxClusterSize", maxCs)
-        if (modelDir.nonEmpty) n.put("modelDir", modelDir)
-        n.set[JsonNode]("input", opNode(in))
-      case SplitNodeSpec(in, id, splits) =>
-        pairs(n, "op" -> "split", "idCol" -> id); n.set[JsonNode]("input", opNode(in))
-        val a = n.putArray("splits")
-        splits.foreach { case (nm, w) => val o = a.addObject(); o.put("name", nm); o.put("weight", w) }
-      case MixNodeSpec(in, id, stratum, weights, dw) =>
-        pairs(n, "op" -> "mix", "idCol" -> id, "stratumCol" -> stratum)
-        n.put("defaultWeight", dw); n.set[JsonNode]("input", opNode(in))
-        val o = n.putObject("weights"); weights.toSeq.sortBy(_._1).foreach { case (k, v) => o.put(k, v) }
-      case DsirNodeSpec(in, target, id, text, k, hexLen, alpha, salt, modelDir) =>
-        pairs(n, "op" -> "dsir", "idCol" -> id, "textCol" -> text, "salt" -> salt)
-        n.put("k", k); n.put("hexLen", hexLen); n.put("alpha", alpha)
-        if (modelDir.nonEmpty) n.put("modelDir", modelDir)
-        n.set[JsonNode]("input", opNode(in)); n.set[JsonNode]("target", opNode(target))
-      case QualityScoreNodeSpec(in, text, weights) =>
-        pairs(n, "op" -> "qualityScore", "textCol" -> text)
-        val arr = n.putArray("weights"); weights.foreach(arr.add)
-        n.set[JsonNode]("input", opNode(in))
-      case DecontamNodeSpec(in, bench, id, text, ngram, minHits, hashKeys, warnBelow) =>
-        pairs(n, "op" -> "decontaminate", "idCol" -> id, "textCol" -> text)
-        n.put("n", ngram); n.put("minHits", minHits); n.put("hashKeys", hashKeys)
-        // the calibration floor is opt-in — encode by omission at the
-        // default so checked-in spec assets stay byte-identical
-        if (warnBelow > 0.0) n.put("warnBelow", warnBelow)
-        n.set[JsonNode]("input", opNode(in)); n.set[JsonNode]("bench", opNode(bench))
-      case PackNodeSpec(in, id, text, budget, shards) =>
-        pairs(n, "op" -> "pack", "idCol" -> id, "textCol" -> text)
-        n.put("budgetTokens", budget); n.put("shards", shards)
-        n.set[JsonNode]("input", opNode(in))
-      case ReportNodeSpec(in, text, group, exact) =>
-        pairs(n, "op" -> "report", "textCol" -> text, "groupCol" -> group)
-        n.put("exactDistinct", exact)
-        n.set[JsonNode]("input", opNode(in))
-      case AnnQuerySpec(in, indexDir, k, nprobe, id, vec) =>
-        pairs(n, "op" -> "annQuery", "indexDir" -> indexDir,
-          "idCol" -> id, "vecCol" -> vec)
-        n.put("k", k); n.put("nprobe", nprobe)
-        n.set[JsonNode]("input", opNode(in))
-      case LayoutNodeSpec(in, layout, path, cols, files, bits) =>
-        pairs(n, "op" -> "layout", "layout" -> layout, "path" -> path)
-        val c = n.putArray("cols"); cols.foreach(c.add)
-        n.put("files", files); n.put("bits", bits)
-        n.set[JsonNode]("input", opNode(in))
-      case CompactStoreSpec(path, keys) =>
-        pairs(n, "op" -> "compactStore", "path" -> path)
-        val k = n.putArray("keys"); keys.foreach(k.add)
-      case DeleteIndexSpec(dir, ids, idCol) =>
-        pairs(n, "op" -> "deleteIndex", "indexDir" -> dir, "idCol" -> idCol)
-        n.set[JsonNode]("ids", opNode(ids))
-      case BuildIndexSpec(in, dir, nlist, codec, normalize, idCol, vecCol, trainer) =>
-        pairs(n, "op" -> "buildIndex", "indexDir" -> dir, "codec" -> codec,
-          "idCol" -> idCol, "vecCol" -> vecCol)
-        n.put("nlist", nlist); n.put("normalize", normalize)
-        // encode by omission at the default so checked-in specs stay
-        // byte-identical (the warnBelow/sampleRate policy)
-        if (trainer != "flat") n.put("trainer", trainer)
-        n.set[JsonNode]("input", opNode(in))
-      case SpyNodeSpec(in, name, metrics, rate) =>
-        pairs(n, "op" -> "spy", "name" -> name)
-        if (rate > 0.0) n.put("sampleRate", rate)
-        val a = n.putArray("metrics")
-        metrics.foreach { case (nm, e) =>
-          val o = a.addObject(); o.put("name", nm); o.put("expr", e) }
-        n.set[JsonNode]("input", opNode(in))
-      case CacheSpec(in) =>
-        n.put("op", "cache"); n.set[JsonNode]("input", opNode(in))
-    }
-    n
+  private def write(c: Codec, v: Any): JsonNode = c match {
+    case s: Scalar => s.write(v)
+    case OptOf(of) => write(of, v.asInstanceOf[Option[Any]].get)
+    case SeqOf(of) =>
+      val a = F.arrayNode(); v.asInstanceOf[Seq[Any]].foreach(e => a.add(write(of, e))); a
+    case MapOf(of) =>
+      val o = F.objectNode()
+      v.asInstanceOf[Map[String, Any]].toSeq.sortBy(_._1)
+        .foreach { case (k, e) => o.set[JsonNode](k, write(of, e)) }
+      o
+    case Pair(k1, c1, k2, c2) =>
+      val (a, b) = v.asInstanceOf[(Any, Any)]
+      val o = F.objectNode()
+      o.set[JsonNode](k1, write(c1, a)); o.set[JsonNode](k2, write(c2, b))
+      o
+    case Tagged(key, _) => writeFields(F.objectNode().put(key, discriminators(v.getClass)), v)
+    case Record(_) => writeFields(F.objectNode(), v)
   }
 
-  def toJson(spec: PipelineSpec): String = {
-    val root = M.createObjectNode()
-    val nodes = root.putArray("nodes")
-    spec.nodes.foreach { case (name, op) =>
-      val n = nodes.addObject(); n.put("name", name); n.set[JsonNode]("spec", opNode(op))
+  private def writeFields(o: ObjectNode, v: Any): ObjectNode = {
+    val p = v.asInstanceOf[Product]
+    shapes(p.getClass).fields.zip(p.productIterator).foreach {
+      case (_, None) =>
+      case (_, d: Double) if d.isInfinite || d.isNaN => // not JSON: the default restores it
+      case (f, x) => o.set[JsonNode](f.name, write(f.codec, x))
     }
-    root.put("out", spec.out)
-    M.writerWithDefaultPrettyPrinter().writeValueAsString(root)
+    o
   }
+
+  private def pretty(n: JsonNode): String = M.writerWithDefaultPrettyPrinter().writeValueAsString(n)
+
+  def toJson(spec: PipelineSpec): String = pretty(write(pipeline, spec))
 
   // --- deserialization ------------------------------------------------------
 
-  private def str(n: JsonNode, f: String, default: String = ""): String =
-    Option(n.get(f)).map(_.asText).getOrElse(default)
-  private def strs(n: JsonNode, f: String): Seq[String] =
-    Option(n.get(f)).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
+  private def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
 
-  /** Required field of a batch node — fail the PARSE naming op and field
-    * (the ingest-side strict-parse discipline; JSON null = missing). The
-    * raw `n.get(f).asInt` form NPE'd with no context on a hand-authored
-    * spec missing `n`/`k`/`input`, which is the RunSpec persona's most
-    * likely typo.
-    */
-  private def req(n: JsonNode, op: String, f: String): JsonNode = {
+  private def required(n: JsonNode, at: String, f: String): JsonNode = {
     val v = n.get(f)
-    if (v == null || v.isNull) throw new IllegalArgumentException(
-      s"$op node: missing required field '$f'")
+    if (v == null || v.isNull) fail(s"$at: missing required field '$f'")
     v
   }
-  private def namedExprs(n: JsonNode, f: String): Seq[(String, String)] =
-    Option(n.get(f)).map(_.elements().asScala.map(e =>
-      str(e, "name") -> str(e, "expr")).toSeq).getOrElse(Nil)
 
-  /** Required CHILD node of a batch node, parse-failing with the op and
-    * field name when absent (a bare `parseOp(n.get("input"))` NPE'd).
+  /** Where the object `n` (field `f` of `at`) sits; fails unless it is one. */
+  private def within(n: JsonNode, at: String, f: String): String = {
+    if (!n.isObject) fail(s"$at: field '$f' must be an object, got $n")
+    if (f.isEmpty) at else s"$at.$f"
+  }
+
+  /** `n` read as `c`: field `f` of the node `at`. */
+  private def read(c: Codec, n: JsonNode, at: String, f: String, req: Boolean): Any = c match {
+    case s: Scalar =>
+      if (!s.ok(n)) fail(s"$at: field '$f' must be ${s.what}, got $n")
+      val v = s.read(n)
+      if (req && v == "") fail(s"$at: field '$f' must be a non-empty string")
+      v
+    case OptOf(of) => Some(read(of, n, at, f, req))
+    case SeqOf(of) =>
+      if (!n.isArray) fail(s"$at: field '$f' must be an array, got $n")
+      n.elements.asScala.zipWithIndex.map { case (e, i) => read(of, e, at, s"$f[$i]", false) }.toList
+    case MapOf(of) =>
+      if (!n.isObject) fail(s"$at: field '$f' must be an object, got $n")
+      n.properties.asScala.map(e => e.getKey -> read(of, e.getValue, at, s"$f.${e.getKey}", false)).toMap
+    case Pair(k1, c1, k2, c2) =>
+      val here = within(n, at, f)
+      val a = read(c1, required(n, here, k1), here, k1, true)
+      // a named node: its errors name it
+      val (at2, f2) = (a, c2) match {
+        case (name: String, _: Tagged) => (s"node '$name'", "")
+        case _ => (here, k2)
+      }
+      (a, read(c2, required(n, here, k2), at2, f2, true))
+    case Tagged(key, byName) =>
+      val here = within(n, at, f)
+      val d = required(n, here, key).asText
+      byName.get(d) match {
+        case Some(cls) => readFields(cls, n, s"$here ($d)")
+        case None => fail(s"$here: unknown $key discriminator: '$d'")
+      }
+    case Record(cls) => readFields(cls, n, within(n, at, f))
+  }
+
+  private def readFields(cls: Class[_], n: JsonNode, at: String): Any = {
+    val shape = shapes(cls)
+    def absent(v: JsonNode) = v == null || v.isNull
+    // name every missing field at once: a hand author fixes them in one pass
+    val missing = shape.fields.filter(f => f.default.isEmpty && absent(n.get(f.name)))
+    if (missing.nonEmpty) fail(s"$at: missing required field " +
+      missing.map(f => s"'${f.name}'").mkString(", "))
+    shape.make(shape.fields.map { f =>
+      val v = n.get(f.name)
+      if (absent(v)) f.default.get else read(f.codec, v, at, f.name, f.default.isEmpty)
+    })
+  }
+
+  def fromJson(json: String): PipelineSpec =
+    read(pipeline, M.readTree(json), "pipeline", "", true).asInstanceOf[PipelineSpec]
+
+  // --- {%var%} substitution -------------------------------------------------
+
+  /** `spec` with [[PipelineCompiler.substitute]] applied to every string
+    * value — through nested nodes and `Seq`, `Option` and `Map` values
+    * (map keys stay as written). Node names, `out` and [[RefSpec]] names
+    * name nodes rather than data, and the discriminators are not fields,
+    * so all four stay as written. Rebuilt through the constructors, not
+    * re-validated: a Scala-built spec compiles exactly as before.
     */
-  private def child(n: JsonNode, op: String, f: String): OpSpec =
-    parseOp(req(n, op, f))
-
-  private def parseOp(n: JsonNode): OpSpec = str(n, "op") match {
-    case "source" =>
-      val opts = Option(n.get("options")).map(o =>
-        o.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap).getOrElse(Map.empty)
-      SourceSpec(str(n, "format"), str(n, "path"), opts, str(n, "rootNode"))
-    case "ref"     => RefSpec(str(n, "name"))
-    case "filter"  => FilterSpec(child(n, "filter", "input"), str(n, "predicate"))
-    case "map"     => MapSpec(child(n, "map", "input"), namedExprs(n, "projections"))
-    case "withColumns" => WithColumnsSpec(child(n, "withColumns", "input"), namedExprs(n, "columns"))
-    case "explode" => ExplodeSpec(child(n, "explode", "input"), str(n, "arrayExpr"), str(n, "as"))
-    case "agg"     => AggSpec(child(n, "agg", "input"), strs(n, "keys"), namedExprs(n, "aggs"))
-    case "sort"    => SortSpec(child(n, "sort", "input"), strs(n, "keys"))
-    case "window"  => WindowNodeSpec(child(n, "window", "input"), str(n, "function"),
-                        str(n, "as"), strs(n, "partitionBy"), strs(n, "orderBy"),
-                        str(n, "frame"))
-    case "distinct" => DistinctSpec(child(n, "distinct", "input"), strs(n, "keys"), strs(n, "order"))
-    case "limit"   => LimitSpec(child(n, "limit", "input"), req(n, "limit", "n").asInt)
-    case "join"    => JoinSpec(child(n, "join", "input"), child(n, "join", "vocab"),
-                        str(n, "leftKey"), str(n, "rightKey"), str(n, "joinType", "left"),
-                        Option(n.get("broadcastVocab")).forall(_.asBoolean))
-    case "joinDetail" => JoinDetailSpec(child(n, "joinDetail", "master"),
-                        child(n, "joinDetail", "detail"),
-                        str(n, "masterKey"), str(n, "detailKey"), str(n, "as", "details"),
-                        strs(n, "detailCols"))
-    case "union"   => UnionSpec(req(n, "union", "inputs").elements().asScala.map(parseOp).toSeq)
-    case "dedup"   => DedupNodeSpec(child(n, "dedup", "input"), str(n, "idCol"), str(n, "textCol"),
-                        str(n, "mode", "near"),
-                        Option(n.get("threshold")).map(_.asDouble).getOrElse(0.8))
-    case "spanDedup" => SpanDedupNodeSpec(child(n, "spanDedup", "input"), str(n, "idCol"),
-                        str(n, "textCol"),
-                        Option(n.get("k")).map(_.asInt).getOrElse(16))
-    case "semanticDedup" => SemanticDedupNodeSpec(child(n, "semanticDedup", "input"),
-                        str(n, "idCol"), str(n, "vecCol"),
-                        Option(n.get("k")).map(_.asInt).getOrElse(256),
-                        Option(n.get("threshold")).map(_.asDouble).getOrElse(0.95),
-                        Option(n.get("maxClusterSize")).map(_.asInt).getOrElse(10000),
-                        str(n, "centroids", "kmeans"),
-                        str(n, "modelDir", ""))
-    case "split"   => SplitNodeSpec(child(n, "split", "input"), str(n, "idCol"),
-                        Option(n.get("splits")).map(_.elements().asScala.map(e =>
-                          str(e, "name") -> req(e, "split.splits", "weight").asDouble)
-                          .toSeq).getOrElse(Nil))
-    case "mix"     => MixNodeSpec(child(n, "mix", "input"), str(n, "idCol"), str(n, "stratumCol"),
-                        Option(n.get("weights")).map(o =>
-                          o.properties().asScala.map(e => e.getKey -> e.getValue.asDouble).toMap)
-                          .getOrElse(Map.empty),
-                        Option(n.get("defaultWeight")).map(_.asDouble).getOrElse(1.0))
-    case "dsir"    => DsirNodeSpec(child(n, "dsir", "input"), child(n, "dsir", "target"),
-                        str(n, "idCol"), str(n, "textCol"), req(n, "dsir", "k").asInt,
-                        Option(n.get("hexLen")).map(_.asInt).getOrElse(4),
-                        Option(n.get("alpha")).map(_.asDouble).getOrElse(0.5),
-                        str(n, "salt", "dsir"),
-                        str(n, "modelDir", ""))
-    case "qualityScore" => QualityScoreNodeSpec(child(n, "qualityScore", "input"),
-                        str(n, "textCol"),
-                        Option(n.get("weights")).map(_.elements().asScala.map(_.asDouble).toSeq)
-                          .getOrElse(Nil))
-    case "decontaminate" => DecontamNodeSpec(child(n, "decontaminate", "input"),
-                        child(n, "decontaminate", "bench"),
-                        str(n, "idCol"), str(n, "textCol"),
-                        Option(n.get("n")).map(_.asInt).getOrElse(8),
-                        Option(n.get("minHits")).map(_.asInt).getOrElse(1),
-                        Option(n.get("hashKeys")).exists(_.asBoolean),
-                        Option(n.get("warnBelow")).map(_.asDouble).getOrElse(0.0))
-    case "pack"    => PackNodeSpec(child(n, "pack", "input"), str(n, "idCol"), str(n, "textCol"),
-                        req(n, "pack", "budgetTokens").asLong,
-                        Option(n.get("shards")).map(_.asInt).getOrElse(256))
-    case "report"  => ReportNodeSpec(child(n, "report", "input"), str(n, "textCol"),
-                        str(n, "groupCol"),
-                        Option(n.get("exactDistinct")).forall(_.asBoolean))
-    case "annQuery" => AnnQuerySpec(child(n, "annQuery", "input"), str(n, "indexDir"),
-                        req(n, "annQuery", "k").asInt,
-                        Option(n.get("nprobe")).map(_.asInt).getOrElse(3),
-                        Option(n.get("idCol")).map(_.asText).getOrElse("vec_id"),
-                        Option(n.get("vecCol")).map(_.asText).getOrElse("embedding"))
-    case "layout"  => LayoutNodeSpec(child(n, "layout", "input"), str(n, "layout"), str(n, "path"),
-                        strs(n, "cols"),
-                        Option(n.get("files")).map(_.asInt).getOrElse(64),
-                        Option(n.get("bits")).map(_.asInt).getOrElse(10))
-    case "compactStore" => CompactStoreSpec(str(n, "path"), strs(n, "keys"))
-    case "deleteIndex" => DeleteIndexSpec(str(n, "indexDir"), child(n, "deleteIndex", "ids"),
-                        Option(n.get("idCol")).map(_.asText).getOrElse("vec_id"))
-    case "buildIndex" => BuildIndexSpec(child(n, "buildIndex", "input"),
-                        str(n, "indexDir"),
-                        // defaults mirror BuildIndexSpec: nlist 0 = auto
-                        // ⌈√N⌉, normalize true (the cosine operating point)
-                        Option(n.get("nlist")).map(_.asInt).getOrElse(0),
-                        str(n, "codec", "float"),
-                        Option(n.get("normalize")).forall(_.asBoolean),
-                        Option(n.get("idCol")).map(_.asText).getOrElse("vec_id"),
-                        Option(n.get("vecCol")).map(_.asText).getOrElse("embedding"),
-                        str(n, "trainer", "flat"))
-    case "spy"     => SpyNodeSpec(child(n, "spy", "input"), str(n, "name"),
-                        namedExprs(n, "metrics"),
-                        Option(n.get("sampleRate")).map(_.asDouble).getOrElse(0.0))
-    case "cache"   => CacheSpec(child(n, "cache", "input"))
-    case other     => throw new IllegalArgumentException(s"unknown op discriminator: '$other'")
+  private[plans] def substitute[T](spec: T, params: Map[String, String]): T = {
+    def go(v: Any): Any = v match {
+      case s: String => PipelineCompiler.substitute(s, params)
+      case _: RefSpec => v
+      case PipelineSpec(nodes, out) =>
+        PipelineSpec(nodes.map { case (name, op) => name -> go(op).asInstanceOf[OpSpec] }, out)
+      case o: Option[_] => o.map(go)
+      case m: Map[_, _] => m.map { case (k, x) => k -> go(x) }
+      case xs: Seq[_] => xs.map(go)
+      case (a, b) => (go(a), go(b))
+      case p: Product if shapes.contains(p.getClass) =>
+        shapes(p.getClass).make(p.productIterator.map(go).toSeq)
+      case _ => v
+    }
+    if (params.isEmpty) spec else go(spec).asInstanceOf[T]
   }
 
   /** `{nodes, links}` export for a streaming-ingest spec — the same
@@ -304,7 +278,7 @@ object SpecJson {
     def link(from: String, to: String): Unit = {
       val l = links.addObject(); l.put("source", from); l.put("target", to)
     }
-    val kind = kindOf(spec)
+    val kind = discriminators(spec.getClass)
     node(spec.source.path, s"source:${spec.source.format}")
     node(kind, s"ingest:$kind")
     link(spec.source.path, kind)
@@ -346,215 +320,21 @@ object SpecJson {
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 
-  def fromJson(json: String): PipelineSpec = {
-    val root = M.readTree(json)
-    val nodes = req(root, "pipeline", "nodes").elements().asScala.map { n =>
-      str(n, "name") -> parseOp(req(n, s"node '${str(n, "name")}'", "spec"))
-    }.toSeq
-    PipelineSpec(nodes, str(root, "out"))
-  }
-
   // --- streaming-ingest specs ----------------------------------------------
-
-  private def srcNode(s: StreamSourceSpec): ObjectNode = {
-    val n = M.createObjectNode()
-    n.put("format", s.format); n.put("path", s.path)
-    val o = n.putObject("options"); s.options.toSeq.sortBy(_._1).foreach { case (k, v) => o.put(k, v) }
-    n
-  }
-
-  private def parseSrc(n: JsonNode): StreamSourceSpec = {
-    val opts = Option(n.get("options")).map(o =>
-      o.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap).getOrElse(Map.empty)
-    // the source's own fields are REQUIRED too — a typo'd "path" key must
-    // fail here, not as a cryptic empty-Path error after Spark startup.
-    // JSON null counts as missing (NullNode.asText is the STRING "null" —
-    // without the isNull check a null path would read a directory
-    // literally named ./null)
-    def req(f: String): String = {
-      val v = Option(n.get(f)).filterNot(_.isNull).map(_.asText).getOrElse("")
-      if (v.isEmpty) throw new IllegalArgumentException(
-        s"ingest spec source missing required field '$f'")
-      v
-    }
-    StreamSourceSpec(req("format"), req("path"), opts)
-  }
-
-  private def putDoubles(n: ObjectNode, f: String, vs: Seq[Double]): Unit = {
-    val a = n.putArray(f); vs.foreach(a.add)
-  }
-  // strict numeric parse: Jackson's asDouble coerces strings/nulls to 0.0,
-  // which would let a typo'd weight pass the required-field check as a
-  // silently-zeroed model — exactly what the strict parse exists to stop
-  private def numOf(e: JsonNode, f: String): JsonNode = {
-    if (!e.isNumber) throw new IllegalArgumentException(
-      s"ingest spec field '$f' must be numeric, got: $e")
-    e
-  }
-  private def doubles(n: JsonNode, f: String): Seq[Double] =
-    Option(n.get(f)).map(_.elements().asScala.map(numOf(_, f).asDouble).toSeq).getOrElse(Nil)
-
-  // centroid floats serialize via Float.toString (shortest round-trip
-  // form), so text → float parse recovers the exact pinned bits
-  private def putCentroids(n: ObjectNode, cents: Seq[(Int, Seq[Float])]): Unit = {
-    val a = n.putArray("centroids")
-    cents.foreach { case (cell, vec) =>
-      val o = a.addObject(); o.put("cell", cell)
-      val v = o.putArray("vec"); vec.foreach(v.add)
-    }
-  }
-  private def parseCentroids(n: JsonNode): Seq[(Int, Seq[Float])] =
-    Option(n.get("centroids")).map(_.elements().asScala.map { c =>
-      numOf(Option(c.get("cell")).getOrElse(M.nullNode()), "centroids.cell").asInt ->
-        Option(c.get("vec")).map(_.elements().asScala
-            .map(numOf(_, "centroids.vec").floatValue).toSeq)
-          .getOrElse(throw new IllegalArgumentException(
-            "ingest spec field 'centroids' entry missing 'vec'"))
-    }.toSeq).getOrElse(Nil)
-
-  /** The JSON `kind` discriminator for each ingest shape — the streaming
-    * counterpart of the reference's Job `type` field.
-    */
-  private def kindOf(spec: IngestSpec): String = spec match {
-    case _: QualityIngestSpec     => "quality"
-    case _: ImportanceIngestSpec  => "importance"
-    case _: MinhashIngestSpec     => "minhashDedup"
-    case _: SpanIngestSpec        => "spanDedup"
-    case _: SemanticIngestSpec    => "semanticDedup"
-    case _: VectorIndexIngestSpec => "vectorIndex"
-    case _: PretrainIngestSpec    => "pretrain"
-  }
-
-  private def ingestNode(spec: IngestSpec): ObjectNode = {
-    val n = M.createObjectNode()
-    def common(kind: String): Unit = {
-      n.put("kind", kind)
-      n.set[JsonNode]("source", srcNode(spec.source))
-      n.put("checkpointDir", spec.checkpointDir)
-    }
-    common(kindOf(spec))
-    spec match {
-      case s: QualityIngestSpec =>
-        pairs(n, "textCol" -> s.textCol, "corpusDir" -> s.corpusDir)
-        putDoubles(n, "weights", s.weights)
-      case s: ImportanceIngestSpec =>
-        pairs(n, "idCol" -> s.idCol, "textCol" -> s.textCol,
-          "weightsDir" -> s.weightsDir, "corpusDir" -> s.corpusDir)
-        // -Infinity (keep everything) encodes by omission, the pretrain
-        // convention — Jackson would otherwise emit a non-JSON string
-        if (!s.minLogw.isNegInfinity) n.put("minLogw", s.minLogw)
-        n.put("hexLen", s.hexLen)
-      case s: MinhashIngestSpec =>
-        pairs(n, "idCol" -> s.idCol, "textCol" -> s.textCol,
-          "corpusDir" -> s.corpusDir, "storeDir" -> s.storeDir)
-        n.put("threshold", s.threshold); n.put("compactEvery", s.compactEvery)
-      case s: SpanIngestSpec =>
-        pairs(n, "idCol" -> s.idCol, "textCol" -> s.textCol,
-          "corpusDir" -> s.corpusDir, "storeDir" -> s.storeDir)
-        n.put("k", s.k); n.put("compactEvery", s.compactEvery)
-      case s: SemanticIngestSpec =>
-        pairs(n, "idCol" -> s.idCol, "vecCol" -> s.vecCol,
-          "corpusDir" -> s.corpusDir, "storeDir" -> s.storeDir)
-        n.put("threshold", s.threshold); n.put("compactEvery", s.compactEvery)
-        putCentroids(n, s.centroids)
-      case s: VectorIndexIngestSpec =>
-        pairs(n, "idCol" -> s.idCol, "vecCol" -> s.vecCol, "indexDir" -> s.indexDir)
-        n.put("compactEvery", s.compactEvery)
-      case s: PretrainIngestSpec =>
-        pairs(n, "idCol" -> s.idCol, "textCol" -> s.textCol, "vecCol" -> s.vecCol,
-          "corpusDir" -> s.corpusDir, "semStoreDir" -> s.semStoreDir,
-          "spanStoreDir" -> s.spanStoreDir)
-        putDoubles(n, "qualityWeights", s.qualityWeights)
-        putCentroids(n, s.centroids)
-        n.put("semThreshold", s.semThreshold); n.put("spanK", s.spanK)
-        s.dsirWeightsDir.foreach(n.put("dsirWeightsDir", _))
-        // -Infinity (no DSIR gate) is not valid JSON: encode by omission
-        if (!s.minLogw.isNegInfinity) n.put("minLogw", s.minLogw)
-        n.put("compactEvery", s.compactEvery); n.put("maxDocChars", s.maxDocChars)
-    }
-    n
-  }
 
   /** Serialize a streaming-ingest spec; the root `ingest` field is the
     * batch-vs-stream discriminator [[isIngestJson]]/`graft.RunSpec` key on.
     */
-  def ingestToJson(spec: IngestSpec): String = {
-    val root = M.createObjectNode()
-    root.set[JsonNode]("ingest", ingestNode(spec))
-    M.writerWithDefaultPrettyPrinter().writeValueAsString(root)
-  }
+  def ingestToJson(spec: IngestSpec): String =
+    pretty(F.objectNode().set[JsonNode]("ingest", write(kindTag, spec)))
 
   def isIngestJson(json: String): Boolean =
     Option(M.readTree(json).get("ingest")).isDefined
 
   def ingestFromJson(json: String): IngestSpec = {
     val n = Option(M.readTree(json).get("ingest"))
-      .getOrElse(throw new IllegalArgumentException("not an ingest spec: no 'ingest' field"))
-    val kind = str(n, "kind")
-    // REQUIRED fields fail the PARSE with the field name — this surface
-    // exists for hand-authored JSON, where a typo'd key silently becoming
-    // "" would send a corpus to the working directory or dedup against an
-    // empty model; only genuinely optional knobs carry defaults
-    def req(f: String): String = {
-      // JSON null counts as missing, like the source fields above
-      val v = Option(n.get(f)).filterNot(_.isNull).map(_.asText).getOrElse("")
-      if (v.isEmpty) throw new IllegalArgumentException(
-        s"ingest spec ($kind) missing required field '$f'")
-      v
-    }
-    val source = parseSrc(Option(n.get("source")).getOrElse(
-      throw new IllegalArgumentException(s"ingest spec ($kind) missing required field 'source'")))
-    def reqDoubles(f: String): Seq[Double] = {
-      val v = doubles(n, f)
-      if (v.isEmpty) throw new IllegalArgumentException(
-        s"ingest spec ($kind) missing required field '$f' (non-empty array)")
-      v
-    }
-    def reqCentroids(): Seq[(Int, Seq[Float])] = {
-      val v = parseCentroids(n)
-      if (v.isEmpty) throw new IllegalArgumentException(
-        s"ingest spec ($kind) missing required field 'centroids' (non-empty array)")
-      v
-    }
-    lazy val ckpt = req("checkpointDir")
-    // for the OPTIONAL knobs an explicit JSON null means "use the default"
-    def int(f: String, default: Int): Int =
-      Option(n.get(f)).filterNot(_.isNull).map(numOf(_, f).asInt).getOrElse(default)
-    def dbl(f: String, default: Double): Double =
-      Option(n.get(f)).filterNot(_.isNull).map(numOf(_, f).asDouble).getOrElse(default)
-    kind match {
-      case "quality" =>
-        QualityIngestSpec(source, req("textCol"), reqDoubles("weights"),
-          req("corpusDir"), ckpt)
-      case "importance" =>
-        ImportanceIngestSpec(source, req("idCol"), req("textCol"),
-          req("weightsDir"), dbl("minLogw", Double.NegativeInfinity),
-          req("corpusDir"), ckpt, int("hexLen", 4))
-      case "minhashDedup" =>
-        MinhashIngestSpec(source, req("idCol"), req("textCol"),
-          dbl("threshold", 0.8), req("corpusDir"), req("storeDir"), ckpt,
-          int("compactEvery", 0))
-      case "spanDedup" =>
-        SpanIngestSpec(source, req("idCol"), req("textCol"),
-          int("k", 16), req("corpusDir"), req("storeDir"), ckpt,
-          int("compactEvery", 0))
-      case "semanticDedup" =>
-        SemanticIngestSpec(source, req("idCol"), req("vecCol"),
-          reqCentroids(), dbl("threshold", 0.95),
-          req("corpusDir"), req("storeDir"), ckpt, int("compactEvery", 0))
-      case "vectorIndex" =>
-        VectorIndexIngestSpec(source, req("idCol"), req("vecCol"),
-          req("indexDir"), ckpt, int("compactEvery", 0))
-      case "pretrain" =>
-        PretrainIngestSpec(source, req("idCol"), req("textCol"),
-          req("vecCol"), reqDoubles("qualityWeights"), reqCentroids(),
-          dbl("semThreshold", 0.95), int("spanK", 16),
-          req("corpusDir"), req("semStoreDir"), req("spanStoreDir"), ckpt,
-          Option(n.get("dsirWeightsDir")).filterNot(_.isNull).map(_.asText),
-          dbl("minLogw", Double.NegativeInfinity),
-          int("compactEvery", 0), int("maxDocChars", 0))
-      case other => throw new IllegalArgumentException(s"unknown ingest kind: '$other'")
-    }
+      .getOrElse(fail("not an ingest spec: no 'ingest' field"))
+    read(kindTag, n, "ingest spec", "", true).asInstanceOf[IngestSpec]
   }
 
   // --- DAG export -----------------------------------------------------------

@@ -44,20 +44,21 @@ case class QualityIngestSpec(source: StreamSourceSpec, textCol: String,
 /** [[graft.streaming.Streams.ingestImportanceFiltered]] as a spec. */
 case class ImportanceIngestSpec(source: StreamSourceSpec, idCol: String,
                                 textCol: String, weightsDir: String,
-                                minLogw: Double, corpusDir: String,
+                                minLogw: Double = Double.NegativeInfinity,
+                                corpusDir: String,
                                 checkpointDir: String,
                                 hexLen: Int = 4) extends IngestSpec
 
 /** [[graft.streaming.Streams.ingestDedup]] (cross-batch MinHash/LSH) as a spec. */
 case class MinhashIngestSpec(source: StreamSourceSpec, idCol: String,
-                             textCol: String, threshold: Double,
+                             textCol: String, threshold: Double = 0.8,
                              corpusDir: String, storeDir: String,
                              checkpointDir: String,
                              compactEvery: Int = 0) extends IngestSpec
 
 /** [[graft.streaming.Streams.ingestSpanDedup]] as a spec. */
 case class SpanIngestSpec(source: StreamSourceSpec, idCol: String,
-                          textCol: String, k: Int,
+                          textCol: String, k: Int = 16,
                           corpusDir: String, storeDir: String,
                           checkpointDir: String,
                           compactEvery: Int = 0) extends IngestSpec
@@ -68,7 +69,7 @@ case class SpanIngestSpec(source: StreamSourceSpec, idCol: String,
 case class SemanticIngestSpec(source: StreamSourceSpec, idCol: String,
                               vecCol: String,
                               centroids: Seq[(Int, Seq[Float])],
-                              threshold: Double,
+                              threshold: Double = 0.95,
                               corpusDir: String, storeDir: String,
                               checkpointDir: String,
                               compactEvery: Int = 0) extends IngestSpec
@@ -89,7 +90,7 @@ case class PretrainIngestSpec(source: StreamSourceSpec, idCol: String,
                               textCol: String, vecCol: String,
                               qualityWeights: Seq[Double],
                               centroids: Seq[(Int, Seq[Float])],
-                              semThreshold: Double, spanK: Int,
+                              semThreshold: Double = 0.95, spanK: Int = 16,
                               corpusDir: String, semStoreDir: String,
                               spanStoreDir: String, checkpointDir: String,
                               dsirWeightsDir: Option[String] = None,
@@ -100,53 +101,16 @@ case class PretrainIngestSpec(source: StreamSourceSpec, idCol: String,
 /** Compiles an [[IngestSpec]] to a running [[StreamingQuery]] over the
   * matching [[graft.streaming.Streams]] entry point, and runs the
   * drain-and-exit form the CLI uses. `{%var%}` placeholders resolve with
-  * the SAME substitution as the batch compiler
-  * ([[PipelineCompiler.substitute]]), so one parameterized spec serves
-  * every environment.
+  * the SAME walk as the batch compiler ([[SpecJson.substitute]]), so one
+  * parameterized spec serves every environment.
   */
 object IngestCompiler {
 
-  private def sub(s: String, params: Map[String, String]): String =
-    PipelineCompiler.substitute(s, params)
-
-  /** The spec with `{%var%}`/`$VAR` placeholders resolved in every string
-    * field (paths, column names, source options).
+  /** The spec with `{%var%}` placeholders resolved in every string field
+    * (paths, column names, source options) — [[SpecJson.substitute]].
     */
-  def substituted(spec: IngestSpec, params: Map[String, String]): IngestSpec = {
-    def src(s: StreamSourceSpec) = StreamSourceSpec(sub(s.format, params),
-      sub(s.path, params), s.options.map { case (k, v) => k -> sub(v, params) })
-    spec match {
-      case s: QualityIngestSpec => s.copy(source = src(s.source),
-        textCol = sub(s.textCol, params), corpusDir = sub(s.corpusDir, params),
-        checkpointDir = sub(s.checkpointDir, params))
-      case s: ImportanceIngestSpec => s.copy(source = src(s.source),
-        idCol = sub(s.idCol, params), textCol = sub(s.textCol, params),
-        weightsDir = sub(s.weightsDir, params), corpusDir = sub(s.corpusDir, params),
-        checkpointDir = sub(s.checkpointDir, params))
-      case s: MinhashIngestSpec => s.copy(source = src(s.source),
-        idCol = sub(s.idCol, params), textCol = sub(s.textCol, params),
-        corpusDir = sub(s.corpusDir, params), storeDir = sub(s.storeDir, params),
-        checkpointDir = sub(s.checkpointDir, params))
-      case s: SpanIngestSpec => s.copy(source = src(s.source),
-        idCol = sub(s.idCol, params), textCol = sub(s.textCol, params),
-        corpusDir = sub(s.corpusDir, params), storeDir = sub(s.storeDir, params),
-        checkpointDir = sub(s.checkpointDir, params))
-      case s: SemanticIngestSpec => s.copy(source = src(s.source),
-        idCol = sub(s.idCol, params), vecCol = sub(s.vecCol, params),
-        corpusDir = sub(s.corpusDir, params), storeDir = sub(s.storeDir, params),
-        checkpointDir = sub(s.checkpointDir, params))
-      case s: VectorIndexIngestSpec => s.copy(source = src(s.source),
-        idCol = sub(s.idCol, params), vecCol = sub(s.vecCol, params),
-        indexDir = sub(s.indexDir, params), checkpointDir = sub(s.checkpointDir, params))
-      case s: PretrainIngestSpec => s.copy(source = src(s.source),
-        idCol = sub(s.idCol, params), textCol = sub(s.textCol, params),
-        vecCol = sub(s.vecCol, params), corpusDir = sub(s.corpusDir, params),
-        semStoreDir = sub(s.semStoreDir, params),
-        spanStoreDir = sub(s.spanStoreDir, params),
-        checkpointDir = sub(s.checkpointDir, params),
-        dsirWeightsDir = s.dsirWeightsDir.map(sub(_, params)))
-    }
-  }
+  def substituted(spec: IngestSpec, params: Map[String, String]): IngestSpec =
+    SpecJson.substitute(spec, params)
 
   /** The spec's primary output location — what a caller reads after the
     * ingest drains (stores are secondary state).

@@ -182,6 +182,12 @@ class SpecJsonSpec extends SparkSpec {
       spec("""{"op": "deleteIndex", "indexDir": "/i"}""") -> "'ids'",
       // JSON null counts as missing, like the ingest parser
       spec("""{"op": "limit", "n": null, "input": {"op": "ref", "name": "p"}}""") -> "'n'",
+      // numbers and booleans are typed, never coerced to 0 / false
+      spec("""{"op": "limit", "n": "ten", "input": {"op": "ref", "name": "p"}}""") -> "'n'",
+      spec("""{"op": "spanDedup", "idCol": "id", "textCol": "t", "k": "sixteen",
+               "input": {"op": "ref", "name": "p"}}""") -> "'k'",
+      spec("""{"op": "dedup", "idCol": "id", "textCol": "t", "threshold": true,
+               "input": {"op": "ref", "name": "p"}}""") -> "'threshold'",
       """{"out": "x"}""" -> "'nodes'",
       """{"nodes": [{"name": "x"}], "out": "x"}""" -> "'spec'")
     broken.foreach { case (json, field) =>

@@ -87,8 +87,14 @@ class StreamSpecSpec extends SparkSpec {
 
   test("hand-authored JSON: missing/typo'd REQUIRED fields fail the parse by name") {
     val good = SpecJson.ingestToJson(QualityIngestSpec(src, "text", Seq(1.0), "/c", "/k"))
-    def withoutField(f: String): String =
-      good.linesIterator.filterNot(_.contains("\"" + f + "\"")).mkString("\n")
+    // drop the key from the tree, not its line: a dropped LAST line would
+    // leave a trailing comma, and the parse would fail on syntax instead
+    def withoutField(f: String): String = {
+      val m = new com.fasterxml.jackson.databind.ObjectMapper()
+      val root = m.readTree(good)
+      root.get("ingest").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove(f)
+      m.writeValueAsString(root)
+    }
     for (f <- Seq("corpusDir", "textCol", "checkpointDir")) {
       val e = intercept[IllegalArgumentException] {
         SpecJson.ingestFromJson(withoutField(f)) }
@@ -144,6 +150,54 @@ class StreamSpecSpec extends SparkSpec {
     assert(r.spanStoreDir == "/data/run7/span" && r.checkpointDir == "/data/run7/k")
     assert(r.dsirWeightsDir.contains("/data/run7/w"))
     assert(IngestCompiler.primarySink(r) == "/data/run7/c")
+  }
+
+  test("batch {%var%} substitution reaches every string field: source options, joinType") {
+    // the batch compiler substitutes with the same walk as substituted():
+    // source options and join types are strings like any other
+    val root = java.nio.file.Files.createTempDirectory("batch_sub").toString
+    def csv(name: String, lines: String*): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/$name.csv"),
+        lines.mkString("\n").getBytes("UTF-8"))
+    csv("left", "k;v", "1;x", "2;y", "3;z")
+    csv("vocab", "k;label", "1;one", "2;two")
+    def source(name: String) = SourceSpec("csv", s"{%root%}/$name.csv",
+      Map("sep" -> "{%sep%}", "header" -> "true"))
+    val spec = PipelineSpec(Seq(
+      "left"   -> source("left"),
+      "vocab"  -> source("vocab"),
+      "joined" -> JoinSpec(RefSpec("left"), RefSpec("vocab"), "k", "k", joinType = "{%jt%}")),
+      out = "joined")
+    val params = Map("root" -> root, "sep" -> ";", "jt" -> "inner")
+    val left = PipelineCompiler.compile(spec.copy(out = "left"), spark, params)
+    assert(left.columns.toSeq == Seq("k", "v"), "the csv separator placeholder must resolve")
+    val joined = PipelineCompiler.compile(spec, spark, params)
+    assert(joined.count() == 2, "an inner join keeps only the two matched keys")
+  }
+
+  test("a first ingest round into empty stores runs no failed query") {
+    // the store read lists the store for committed data instead of probing
+    // it with a read that fails: Spark reports a failed read to every
+    // query-execution listener, which logged an error on each first round
+    val root = java.nio.file.Files.createTempDirectory("first_round").toString
+    spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text").limit(50)
+      .write.parquet(s"$root/drop")
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = ()
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = failed.add(s"$f: ${e.getMessage}")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      IngestCompiler.runAvailable(spark, SpanIngestSpec(
+        StreamSourceSpec("parquet", s"$root/drop"), "doc_id", "text", 16,
+        s"$root/corpus", s"$root/store", s"$root/ckpt"))
+      org.apache.spark.sql.graft.Bridge.flushListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    assert(spark.read.parquet(s"$root/corpus").count() > 0)
+    assert(failed.isEmpty, s"failed queries in a first round: $failed")
   }
 
   test("checked-in pretrain-ingest asset is in canonical form (no drift)") {
