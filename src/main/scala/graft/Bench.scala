@@ -151,7 +151,7 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
-    graft.operators.Dedup.unpersistCaches() // warm-up caches must not linger
+    graft.exec.Scope.unpersistCaches() // warm-up caches must not linger
     spark.sharedState.cacheManager.clearCache()
     // Host-load noise control (VERDICT r6 §next #5): every query runs
     // `reps` times and the MEDIAN is the reported number; min/max ride
@@ -214,7 +214,7 @@ object Bench {
         // every registered relation (the v3 flagship's CacheSpec persists
         // included) and anything else cached — or reps 2..n measure cache
         // hits instead of the pipeline
-        graft.operators.Dedup.unpersistCaches()
+        graft.exec.Scope.unpersistCaches()
         spark.sharedState.cacheManager.clearCache()
         // settle the heap between reps: dropping DataFrame references lets
         // the ContextCleaner reclaim their broadcast variables, but only

@@ -187,9 +187,7 @@ object RunSpec {
           // re-list and re-read footers of the whole cumulative corpus
           // every round. A round whose every batch was filtered to
           // nothing never creates the sink — a healthy zero, not an error
-          val p = new org.apache.hadoop.fs.Path(sink)
-          val n = if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-            spark.read.parquet(sink).count() else 0L
+          val n = graft.store.Stores.read(spark, sink).fold(0L)(_.count())
           println(s"$sink now holds $n rows")
           // one more corpus scan, only when asked: the post-round data
           // card. A report failure (typo'd groupCol) must NOT fail the
@@ -205,7 +203,7 @@ object RunSpec {
             catch { case e: Exception =>
               System.err.println(s"--report failed (ingest succeeded): ${e.getMessage}")
             }
-        case Left(spec) => graft.operators.Dedup.withCacheScope {
+        case Left(spec) => graft.exec.Scope.withCacheScope {
           // spy-node delivery: collect every named observed metric the
           // run's actions produce and print them after — the reference's
           // spy output riding a persisted job (`jobs/job.js:99-116`). The

@@ -3,6 +3,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.exec.Scope
 
 /** Scaling stress harness: times each dedup tier over synthetic corpora of
   * increasing size, recording wall seconds, output rows, pairs/minute and
@@ -173,7 +174,7 @@ object Stress {
           big.filter(col("doc_id") % 10 =!= 0), "doc_id", "text").persist()
         fpStore.count()
         // same count() caveat as span_dedup: force via sum(n_kept)
-        time("incremental_spans")(Dedup.withCacheScope {
+        time("incremental_spans")(Scope.withCacheScope {
           val (rebuilt, _) = Dedup.incrementalSpanDedup(
             big.filter(col("doc_id") % 10 === 0), fpStore, "doc_id", "text")
           rebuilt.select(sum(col("n_kept"))).head().getLong(0)
@@ -220,7 +221,7 @@ object Stress {
         emb.unpersist(false)
       }
       big.unpersist(false)
-      Dedup.unpersistCaches()
+      Scope.unpersistCaches()
     }
     spark.stop()
   }

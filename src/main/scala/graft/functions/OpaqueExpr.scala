@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.DataType
   * optimizer-inlined `quality_accept = 1` predicate carried 32 lambdas /
   * 24 `split` calls and tripled the pass (6.6 s → 23.3 s noop-sunk).
   * Both rules skip non-deterministic expressions, so wrapping the score
-  * alias pins evaluation to exactly once per row. `Dedup.spread`'s barrier
+  * alias pins evaluation to exactly once per row. `Scope.spread`'s barrier
   * does NOT cover this: it blocks reordering across the exchange on
   * small-file inputs, but the substitution happens above it — and at scale
   * (input already split) spread inserts nothing at all.

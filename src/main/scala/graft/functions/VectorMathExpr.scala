@@ -215,8 +215,9 @@ case class DotProductInt8(left: Expression, right: Expression) extends BinaryExp
 }
 
 /** `normalizeVector(a)` — `a / ||a||` as `array<double>`, one codegen'd
-  * pass. The Column formulation ([[graft.functions.VectorOps.normalizedHof]])
-  * is `when(l2 === 0, null).otherwise(transform(cast, _ / l2))` — FOUR
+  * pass. The Column formulation (`SqlFunctionsSpec.normalizedHof`, kept
+  * in the tests as the reference form) is
+  * `when(l2 === 0, null).otherwise(transform(cast, _ / l2))` — FOUR
   * interpreted HOF passes per row (dot's zip_with+aggregate inside the
   * norm, the cast transform, the divide transform), which made
   * `buildIvfIndex(normalize = true)` at 1M vectors cost 301 s where the

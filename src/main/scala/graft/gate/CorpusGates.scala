@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.functions._
 import graft.gate.Gate._
+import graft.exec.Scope
 
 /** Gated LLM-data queries (N): corpus statistics, text cleaning,
   * sampling, packing and multimodal decode.
@@ -266,7 +267,7 @@ private[graft] object CorpusGates {
         // points here would re-run the split(lower(text)) regex ~5×/row —
         // VERDICT r1 §wrong #4). CollapseProject keeps the stages separate
         // because the shared expressions are non-cheap and multiply referenced.
-        Dedup.spread(t(s, dir, "documents"))
+        Scope.spread(t(s, dir, "documents"))
           .withColumn("__lt", lower(col("text")))
           .withColumn("__toks", TextOps.tokensOfLower(col("__lt")))
           .withColumn("__dtoks", array_distinct(col("__toks")))

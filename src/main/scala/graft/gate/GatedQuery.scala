@@ -93,7 +93,7 @@ private[gate] object Gate {
 
   /** Exact double-precision cosine between two DuckDB float lists —
     * left-to-right `list_sum` accumulation, matching the engine's
-    * [[graft.functions.VectorMathExpr]] kernel bit-for-bit.
+    * [[graft.functions.CosineSim]] kernel bit-for-bit.
     */
   def cosSql(a: String, b: String): String =
     s"""list_sum(list_transform(range(1, len($a)+1),

@@ -8,6 +8,7 @@ import graft.operators._
 import graft.functions._
 import graft.plans._
 import graft.gate.Gate._
+import graft.exec.Scope
 
 /** Gated LLM-data queries (N): the composed flagship pipelines and their
   * model-backed tiers (quality model, DSIR, BPE).
@@ -268,7 +269,7 @@ private[graft] object PipelineGates {
           docs, "text", col("lang") === "en")
           .select(col("bucket"), col("cnt_target").as("__ct"),
             col("cnt_background").as("__cr"))
-        Dedup.spread(docs).select(col("doc_id"),
+        Scope.spread(docs).select(col("doc_id"),
             explode(graft.functions.TextOps.hashedGrams(col("text"), 4)).as("bucket"))
           .join(broadcast(counts), Seq("bucket"))
           .groupBy("doc_id")
@@ -308,7 +309,7 @@ private[graft] object PipelineGates {
           // spread at the CALL SITE (raw single-file input), not inside the
           // operator: importanceScores' one-scalar-shuffle plan shape is
           // PlanQualitySpec-locked and at scale needs no input exchange
-          Sampling.importanceResample(Dedup.spread(docs), "doc_id", "text", w, k = 1000)
+          Sampling.importanceResample(Scope.spread(docs), "doc_id", "text", w, k = 1000)
         })),
 
     /** DSIR through the SPEC surface with a PERSISTED model asset

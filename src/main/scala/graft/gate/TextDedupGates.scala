@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.functions._
 import graft.gate.Gate._
+import graft.exec.Scope
 
 /** Gated LLM-data queries (N): text dedup and decontamination. */
 private[graft] object TextDedupGates {
@@ -98,7 +99,7 @@ private[graft] object TextDedupGates {
         val store = Dedup.spanFingerprints(docs.filter(col("doc_id") < 250), "doc_id", "text")
         // only `rebuilt` is needed: materialize it inside a cache scope so the
         // operator's shared window relation is released, not left registered
-        val rebuilt = Dedup.withCacheScope {
+        val rebuilt = Scope.withCacheScope {
           Dedup.incrementalSpanDedup(docs.filter(col("doc_id") >= 250), store, "doc_id", "text")
             ._1.localCheckpoint(true)
         }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
+import graft.exec.Scope
 
 /** Corpus-level term statistics — the vocabulary-audit / tokenizer-training
   * prep a pretraining pipeline runs before committing to a token budget
@@ -157,8 +158,8 @@ object CorpusStats {
     require(hexLen >= 1 && hexLen <= 5, s"hexLen=$hexLen: bucket domain 16^hexLen must stay broadcastable")
     // gram construction (md5 per gram) is the heavy narrow phase — spread a
     // single-row-group source so the map-side combine runs on every core
-    // (no-op at scale; see Dedup.spread)
-    Dedup.spread(df)
+    // (no-op at scale; see Scope.spread)
+    Scope.spread(df)
       .select(explode(TextOps.hashedGrams(col(textCol), hexLen)).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("cnt"))
   }
@@ -178,7 +179,7 @@ object CorpusStats {
                             targetPred: org.apache.spark.sql.Column,
                             hexLen: Int = 4): DataFrame = {
     require(hexLen >= 1 && hexLen <= 5, s"hexLen=$hexLen: bucket domain 16^hexLen must stay broadcastable")
-    Dedup.spread(df)
+    Scope.spread(df)
       .select(targetPred.as("__is_t"),
         explode(TextOps.hashedGrams(col(textCol), hexLen)).as("bucket"))
       .groupBy("bucket")
@@ -265,7 +266,7 @@ object CorpusStats {
     // token-length quartiles (percentile skips nulls), silently shifting
     // the distribution the card exists to report
     val text = coalesce(col(textCol), lit(""))
-    val perDoc = Dedup.spread(df).select(
+    val perDoc = Scope.spread(df).select(
       col(groupCol).as("group"),
       TextOps.tokenCount(text).cast("long").as("__ntoks"),
       length(text).cast("long").as("__nchars"),

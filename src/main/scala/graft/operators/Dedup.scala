@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
+import graft.exec.Scope.{cached, operatorResult, operatorScope, releaseCheckpoint,
+  scopedCheckpoint, spread}
 
 /** Corpus deduplication at pretraining scale — the north-star extension of
   * the reference's `Uniquer` (SURVEY §7.5). Five tiers, cheapest first:
@@ -66,180 +68,6 @@ object Dedup {
     obsCanceller.schedule(new Runnable {
       override def run(): Unit = fut.cancel(true)
     }, 10, java.util.concurrent.TimeUnit.SECONDS)
-  }
-
-  /** Is `p` a shuffle-inducing (wide) logical operator — join, aggregate,
-    * window, sort, distinct, repartition, set operation or limit? Shared by
-    * [[spread]] (a plan containing one already inherits shuffle
-    * parallelism) and the spec compiler's multi-read barrier (a plan
-    * containing one is worth materializing once instead of re-planning per
-    * read). Tested on the ANALYZED plan: cheap, and runs no jobs.
-    */
-  private[graft] def isWide(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    p match {
-      case _: Join | _: Aggregate | _: Window | _: Sort | _: Distinct |
-           _: Deduplicate | _: RepartitionOperation | _: SetOperation |
-           _: GlobalLimit | _: LocalLimit => true
-      case _ => false
-    }
-  }
-
-  /** Spread a small-file input across the cluster before CPU-heavy narrow
-    * compute (signatures). A single parquet file arrives as one partition;
-    * the shuffle is pennies next to the per-row kernel work. No-op when the
-    * source is already split (the 100 TB case).
-    *
-    * The always-true `pmod(monotonically_increasing_id(), 1) >= 0` filter
-    * is a predicate-pushdown BARRIER, not row selection: Catalyst pushes a
-    * caller's downstream deterministic filter below the repartition (less
-    * data to shuffle — normally right), SUBSTITUTING its aliased inputs,
-    * which drags the caller's entire staged expression pipeline back into
-    * the pre-exchange stage — i.e. onto the ONE partition this repartition
-    * exists to escape, in UNSTAGED form (tokenizer re-run per feature;
-    * measured on the quality gate: 1512 ms single-task map stage vs 30 ms
-    * across 32 tasks). Predicates cannot reorder across a nondeterministic
-    * filter, so the caller's compute stays post-exchange. `rand()`-based
-    * barriers do not survive Spark 4's `OptimizeRand` range folding;
-    * nothing folds the pmod form. The barrier exists only on this
-    * small-input path — at scale `spread` returns the input untouched and
-    * pushdown behaves normally.
-    */
-  private[graft] def spread(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    // Only a pure-narrow plan over file/local sources can be stuck at a
-    // single partition; anything containing a shuffle-inducing operator
-    // (or an already-materialized relation) inherits shuffle-partition /
-    // cached parallelism. The check runs on the ALREADY-ANALYZED logical
-    // plan — probing the physical plan costs a full optimizer pass per
-    // call, and `.rdd` on a plan WITH exchanges even EXECUTES its map
-    // stages during planning (both measured as real regressions). Narrow
-    // plans are cheap to probe and the only ones that need spreading.
-    // NOT in the list: LogicalRDD — foreachBatch hands micro-batches in as
-    // LogicalRDD-rooted frames, and those are exactly the few-partition
-    // inputs the streaming quality gate needs spread (matching it here
-    // silently re-serialized every micro-batch's scoring: IngestLadder
-    // 8-10 s/batch -> 16-18 s). A LogicalRDD plan has no exchanges, so
-    // the .rdd partition probe below is free on it.
-    val inheritsParallelism = df.queryExecution.analyzed.exists {
-      case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => true
-      case p => isWide(p)
-    }
-    if (inheritsParallelism) df
-    else if (df.rdd.getNumPartitions < par)
-      df.repartition(par)
-        .where(pmod(monotonically_increasing_id(), lit(1L)) >= 0)
-    else df
-  }
-
-  // The session's one cache registry: every relation an operator, a spec
-  // compile (PipelineCompiler's CacheSpec nodes and multi-read barriers), a
-  // streaming micro-batch or a multi-sink run persists is registered here
-  // through [[cached]], and belongs to the innermost open frame of the
-  // registering thread, which releases it on exit. [[unpersistCaches]] is
-  // the session-wide release for relations registered outside any frame.
-  // Left to Spark's ContextCleaner by design: VectorIndex's and Bpe's raw
-  // localCheckpoints and the `q_n_span_incr` gate's escape checkpoint
-  // (SCALING.md "Cache lifetime: one owner").
-  private val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-  /** One open scope on one thread: the relations it releases on exit. A
-    * unit-of-work frame ([[withCacheScope]]) also owns the checkpoints
-    * taken inside it ([[scopedCheckpoint]]); an operator's own internal
-    * frame ([[operatorScope]]) does not, because the operator may return a
-    * lazy frame that still reads them.
-    */
-  private final class Frame(val unitOfWork: Boolean) {
-    val persisted = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val checkpoints = scala.collection.mutable.ListBuffer.empty[DataFrame]
-  }
-  // the calling thread's open frames, innermost first: a relation belongs
-  // to a frame of the thread that registered it, so micro-batches of
-  // concurrent streams, or concurrent compiles, in one session never
-  // release each other's relations
-  private val scopes = ThreadLocal.withInitial[List[Frame]](() => Nil)
-
-  /** Persist `df` (`MEMORY_AND_DISK`) and register it with the calling
-    * thread's innermost open frame, which releases it on exit; with no
-    * frame open it stays until [[unpersistCaches]].
-    */
-  private[graft] def cached(df: DataFrame): DataFrame = cachedIn(scopes.get.headOption)(df)
-
-  private def cachedIn(frame: Option[Frame])(df: DataFrame): DataFrame = caches.synchronized {
-    caches += df
-    frame.foreach(_.persisted += df)
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** How many relations the registry holds right now. */
-  private[graft] def registeredCaches: Int = caches.synchronized(caches.length)
-
-  /** Release every registered relation in this session — the session-wide
-    * release; a caller cleaning up after its own work uses
-    * [[withCacheScope]] instead.
-    */
-  def unpersistCaches(): Unit = caches.synchronized {
-    caches.foreach(_.unpersist(blocking = false))
-    caches.clear()
-  }
-
-  /** Run `body` and release exactly the relations registered DURING it on
-    * this thread, and the checkpoints taken for it — the per-unit-of-work
-    * hygiene for long-running callers (one streaming micro-batch, one spec
-    * compile, one corpus in a loop) that must not clear unrelated caches
-    * the way [[unpersistCaches]] does. Results needed beyond the scope must
-    * be materialized (written/collected) inside `body`. Frames nest and are
-    * per thread: concurrent scopes in one session release only their own.
-    */
-  def withCacheScope[T](body: => T): T = inFrame(new Frame(unitOfWork = true))(body)
-
-  /** An operator's internal scope: releases what it registered, nothing
-    * more (see [[Frame]]).
-    */
-  private def operatorScope[T](body: => T): T = inFrame(new Frame(unitOfWork = false))(body)
-
-  /** An operator scope around a small (pair-sized) result: `body`'s
-    * [[cached]] intermediates are released when it returns, after the
-    * result is materialized into a cache registered with the ENCLOSING
-    * frame — callers typically both write and inspect it.
-    */
-  private def operatorResult(body: => DataFrame): DataFrame = {
-    val enclosing = scopes.get.headOption
-    operatorScope {
-      val result = cachedIn(enclosing)(body)
-      result.count() // materialize so the intermediates are releasable NOW
-      result
-    }
-  }
-
-  private def inFrame[T](frame: Frame)(body: => T): T = {
-    scopes.set(frame :: scopes.get)
-    try body
-    finally {
-      scopes.set(scopes.get.tail)
-      caches.synchronized {
-        frame.persisted.foreach(_.unpersist(blocking = false))
-        caches --= frame.persisted
-      }
-      frame.checkpoints.foreach(releaseCheckpoint)
-    }
-  }
-
-  /** Eager `localCheckpoint` owned by the calling thread's innermost
-    * [[withCacheScope]], which releases its blocks on exit; with none open,
-    * Spark's ContextCleaner reclaims them once the result is unreferenced.
-    */
-  private[graft] def scopedCheckpoint(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(true)
-    scopes.get.find(_.unitOfWork).foreach(_.checkpoints += cp)
-    cp
-  }
-
-  /** Drop an eager checkpoint's blocks now: they live on its `LogicalRDD`'s
-    * RDD, which `Dataset.unpersist` does not reach.
-    */
-  private def releaseCheckpoint(cp: DataFrame): Unit = cp.queryExecution.logical match {
-    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ =>
   }
 
   /** Tier 1: exact dedup on a canonical text fingerprint; keeps the row with
@@ -360,7 +188,8 @@ object Dedup {
     * is_first, in_store)`, persisted and registered in the session cache
     * registry, so an ingest that writes `rebuilt` and then `newFps` runs
     * the occurrence/first-occurrence/store pass once. Callers release it
-    * with [[withCacheScope]] (materialize both outputs inside the scope).
+    * with [[graft.exec.Scope.withCacheScope]] (materialize both outputs
+    * inside the scope).
     * Delta ids must be unique, as for every incremental tier.
     */
   def incrementalSpanDedup(delta: DataFrame, storeFps: DataFrame, idCol: String,
@@ -618,121 +447,19 @@ object Dedup {
                         shingleLen: Int = 5, numHashes: Int = 128): DataFrame =
     signatures(df, idCol, textCol, shingleLen, numHashes)
 
-  /** Maintenance/compaction of a persisted dedup store directory (the
-    * [[minhashSignatures]] signature store or the [[spanFingerprints]] fp
-    * store). The streaming ingest nodes append the corpus FIRST and the
-    * store second (Streams.ingestSpanDedup restart semantics): a crash in
-    * between makes the checkpoint replay append the same rows AGAIN, so
-    * after an unclean restart the store carries duplicate keys — harmless
-    * to correctness (readers `dropDuplicates`), but the store grows and
-    * every later batch pays the duplicate scan. Compaction rewrites the
-    * store keyed-distinct via a temp-dir + rename swap (`keys`: `"fp"` for
-    * span stores, `"id"` for signature stores — duplicate keys carry
-    * identical payloads by construction, so keep-any is exact).
-    * Returns (rowsBefore, rowsAfter).
+  /** [[graft.store.Stores.compactStore]], kept under this name because the
+    * benchmark (`perfbench/scala/graft/bench/Workloads.scala`) calls it;
+    * new code calls the store module's.
     */
   def compactStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
                    keys: Seq[String]): (Long, Long) =
-    rewriteStore(spark, storeDir)((df, out) => df.dropDuplicates(keys).write.parquet(out))
+    graft.store.Stores.compactStore(spark, storeDir, keys)
 
-  /** The crash-safe store-rewrite skeleton [[compactStore]] runs on: heal a
-    * prior interrupted swap, write the rewritten generation to
-    * `.compact.tmp` via `rewrite`, then atomically swap it in (two renames)
-    * and drop the old generation. Generic so stores with a non-flat layout
-    * (e.g. the cell-PARTITIONED vector index, [[VectorIndex]]) can reuse
-    * the exact same swap/recovery protocol with their own writer. Returns
-    * (rowsBefore, rowsAfter).
+  /** [[graft.exec.Scope.unpersistCaches]], kept under this name because the
+    * benchmark (`perfbench/scala/graft/bench/Main.scala`) calls it; new
+    * code calls the scope module's.
     */
-  def rewriteStore(spark: org.apache.spark.sql.SparkSession, storeDir: String)(
-      rewrite: (DataFrame, String) => Unit): (Long, Long) = {
-    import org.apache.hadoop.fs.Path
-    recoverStore(spark, storeDir) // heal a previously interrupted swap first
-    val dir = new Path(storeDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = spark.read.parquet(storeDir)
-    val rows0 = before.count()
-    val tmp = new Path(storeDir.stripSuffix("/") + ".compact.tmp")
-    val old = new Path(storeDir.stripSuffix("/") + ".compact.old")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) fs.delete(old, true)
-    rewrite(before, tmp.toString)
-    val rows1 = spark.read.parquet(tmp.toString).count()
-    // swap: two renames, then drop the old generation. A crash BETWEEN the
-    // renames leaves the canonical path empty (data at .compact.old /
-    // .compact.tmp) — readers must go through [[readStore]], which calls
-    // [[recoverStore]] to complete or roll back the swap before concluding
-    // the store is absent.
-    if (!fs.rename(dir, old) || !fs.rename(tmp, dir))
-      throw new java.io.IOException(s"rewriteStore: rename swap failed for $storeDir")
-    fs.delete(old, true)
-    (rows0, rows1)
-  }
-
-  /** Heal a store directory left mid-swap by an interrupted
-    * [[compactStore]]: if the canonical path is missing but a swap
-    * generation survives, restore it — prefer `.compact.tmp` (the fully
-    * written compacted generation; the swap only starts after its rows are
-    * re-counted), falling back to `.compact.old` (the original). Returns
-    * true iff a recovery rename was performed. No-op when the canonical
-    * path exists (leftover generations are cleaned by the next
-    * [[compactStore]]).
-    */
-  def recoverStore(spark: org.apache.spark.sql.SparkSession, storeDir: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(storeDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) false
-    else {
-      val tmp = new Path(storeDir.stripSuffix("/") + ".compact.tmp")
-      val old = new Path(storeDir.stripSuffix("/") + ".compact.old")
-      if (fs.exists(tmp)) {
-        if (!fs.rename(tmp, dir))
-          throw new java.io.IOException(s"recoverStore: rename failed for $storeDir")
-        if (fs.exists(old)) fs.delete(old, true)
-        true
-      } else if (fs.exists(old)) {
-        if (!fs.rename(old, dir))
-          throw new java.io.IOException(s"recoverStore: rename failed for $storeDir")
-        true
-      } else false
-    }
-  }
-
-  /** Is `st` committed data of a parquet directory — a `.parquet` file or
-    * a partition directory? Committer metadata (`_SUCCESS`, `_temporary`,
-    * `.crc` siblings) is not: a first write that crashed mid-way leaves a
-    * directory holding only `_temporary`, and reading it would throw.
-    */
-  private[graft] def isDataEntry(st: org.apache.hadoop.fs.FileStatus): Boolean = {
-    val name = st.getPath.getName
-    !name.startsWith("_") && !name.startsWith(".") &&
-      (st.isDirectory || name.endsWith(".parquet"))
-  }
-
-  /** Does the parquet directory `dir` exist and hold committed data
-    * ([[isDataEntry]])?
-    */
-  private[graft] def hasCommittedData(spark: org.apache.spark.sql.SparkSession,
-                                      dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(isDataEntry)
-  }
-
-  /** Read a persisted dedup store, healing an interrupted [[compactStore]]
-    * swap if one is detected; `orElse` (typically an empty, correctly-typed
-    * relation) only when the store holds no committed data yet. Every
-    * store reader must use this instead of a bare `spark.read.parquet` —
-    * a bare read treats the mid-swap state as an EMPTY store and silently
-    * forgets the entire dedup history. The store is listed, not probed by
-    * a failing read: Spark reports a failed read to every query-execution
-    * listener, so a probe logged a failed query on each first round.
-    */
-  def readStore(spark: org.apache.spark.sql.SparkSession, storeDir: String)
-               (orElse: => DataFrame): DataFrame = {
-    recoverStore(spark, storeDir)
-    if (hasCommittedData(spark, storeDir)) spark.read.parquet(storeDir) else orElse
-  }
+  def unpersistCaches(): Unit = graft.exec.Scope.unpersistCaches()
 
   /** Near-dup pairs touching at least one NEW document, for a delta batch
     * banded together with the persisted signature store: `(id_a, id_b,
@@ -881,8 +608,9 @@ object Dedup {
     *
     * Cache hygiene: on the STAR path the returned membership relation is
     * persisted and registered in the session cache registry. DIRECT callers
-    * that loop this per corpus must release it ([[withCacheScope]] around
-    * use + materialization, or [[unpersistCaches]] between corpora); the
+    * that loop this per corpus must release it
+    * ([[graft.exec.Scope.withCacheScope]] around use + materialization, or
+    * [[graft.exec.Scope.unpersistCaches]] between corpora); the
     * packaged entry points ([[dropNearDupsByPairs]], [[dropNearDups]],
     * [[incrementalDedup]], the streaming ingest) already scope it. The
     * driver union-find path below the size gate returns a plain local
@@ -1038,8 +766,8 @@ object Dedup {
     * `localCheckpoint`ed inside the scope, so batch callers looping this
     * per corpus accumulate nothing in the session cache registry. The
     * checkpoint blocks themselves are released when an enclosing
-    * [[withCacheScope]] exits, or else reclaimed by Spark's ContextCleaner
-    * once the returned frame is unreferenced.
+    * [[graft.exec.Scope.withCacheScope]] exits, or else reclaimed by
+    * Spark's ContextCleaner once the returned frame is unreferenced.
     */
   def dropNearDupsByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
     val losers = operatorScope {
@@ -1051,7 +779,8 @@ object Dedup {
   /** Tier-2 end-to-end corpus dedup: MinHash/LSH pairs → connected
     * components → keep the minimum-id document per cluster. Scopes every
     * relation it persists (the pair result and the clusters membership) to
-    * this call — safe to loop over corpora without [[unpersistCaches]].
+    * this call — safe to loop over corpora without
+    * [[graft.exec.Scope.unpersistCaches]].
     */
   def dropNearDups(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, shingleLen: Int = 5, numHashes: Int = 128,
@@ -1413,7 +1142,7 @@ object Dedup {
     }
 
   /** Shared pair kernel over an assigned (id, vec, cluster, centroid_sim)
-    * relation; the k-row size relation is [[cached]] in the caller's
+    * relation; the k-row size relation is [[graft.exec.Scope.cached]] in the caller's
     * operator scope.
     */
   private def semanticPairsOfAssigned(assigned: DataFrame, threshold: Double,
@@ -1494,7 +1223,7 @@ object Dedup {
     * comes from the delta (the left side is delta-only, the right side is
     * delta plus the pruned store), so it emits the new-side flags itself
     * instead of re-deriving them by joining the delta's ids back in. The
-    * result is materialized and registered, like every [[operatorResult]].
+    * result is materialized and registered, like every [[graft.exec.Scope.operatorResult]].
     */
   private def incrementalSemanticPairsFlagged(assignedDelta: DataFrame, store: DataFrame,
       threshold: Double, maxClusterSize: Int): DataFrame =

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
+import graft.exec.Scope
 
 /** Trained document-quality classifier — the model-based filtering pass of
   * a pretraining pipeline (the GPT-3/CCNet-style "does this look like the
@@ -193,7 +194,7 @@ object QualityModel {
     // the feature pipeline is real per-row kernel work (regex passes, the
     // native top-bigram map) — a single-row-group parquet source arrives as
     // ONE partition and would score serially; spread (with its pushdown
-    // barrier, see [[Dedup.spread]]) keeps the scoring stage post-exchange,
+    // barrier, see [[Scope.spread]]) keeps the scoring stage post-exchange,
     // and is a no-op once the input is already split (the 100 TB case)
     //
     // The score alias is wrapped in [[graft.functions.OpaqueBarrier]] (r17):
@@ -206,7 +207,7 @@ object QualityModel {
     // once per row; the accept column derives from the score ATTRIBUTE, so
     // an accept predicate still pushes down TO this projection and stays
     // cheap. Values are bit-identical (the wrapper is an identity).
-    Dedup.spread(df).withColumn("__qtoks", TextOps.tokens(col(textCol)))
+    Scope.spread(df).withColumn("__qtoks", TextOps.tokens(col(textCol)))
       .withColumn(scoreCol,
         graft.functions.OpaqueBarrier.opaque(floor(linear * 1000000.0 + 0.5).cast("long")))
       .withColumn(acceptCol, (col(scoreCol) > 0).cast("long"))

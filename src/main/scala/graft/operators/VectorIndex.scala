@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.Stores
 
 /** Persisted IVF index — the "cells are precomputed at ingest" path that
   * [[graft.functions.VectorOps.ivfTopK]]'s scaladoc promises. The ad-hoc
@@ -38,15 +39,17 @@ import org.apache.spark.sql.functions._
   * pathology). A crash between the append and the checkpoint commit
   * replays the batch; the ids anti-join drops it. [[compactIvfIndex]]
   * (the every-N-batches policy of the other stores) folds the delta into
-  * the partitioned layout under [[Dedup.rewriteStore]]'s tmp/old
-  * rename-swap protocol.
+  * the partitioned layout under the store module's whole-directory swap
+  * ([[graft.store.Stores.rewriteStore]]).
   *
   * Takedown: [[deleteFromIvfIndex]] is O(delete-set) — victims in the
   * delta tier rewrite out physically, victims in the cells tier append
   * to the `tombstones/` tier that every reader anti-joins; the bytes
   * leave at the next fold/compaction ([[purgeTombstones]], a
-  * touched-cells-only rewrite under per-cell rename swaps). See the
-  * tombstone-tier section below.
+  * touched-cells-only rewrite under per-cell rename swaps,
+  * [[graft.store.Stores.swapPartitions]]). See the tombstone-tier section
+  * below. Every read and maintenance entry heals a swap a crash cut short
+  * first ([[graft.store.Stores.heal]]).
   *
   * Degenerate vectors follow the ANN-tier policy (EdgeCaseSpec): null and
   * empty embeddings are excluded from the index and from query routing;
@@ -232,7 +235,7 @@ object VectorIndex {
     val bc = graft.functions.VectorMath.broadcastCells(spark, centroids)
     try payloadOf(base.withColumn("cell", nearestCell(col("vec"), bc)), codec)
       .repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/cells")
+      .write.partitionBy("cell").mode("overwrite").parquet(cellsPath(dir))
     finally bc.unpersist(blocking = false) // the write was the only consumer
   }
 
@@ -441,75 +444,22 @@ object VectorIndex {
   // bounded by compactEvery × batch size — size the cadence to the batch
   // rate, exactly like the other stores' compaction policy.
 
+  private def cellsPath(dir: String) = s"$dir/cells"
   private def deltaPath(dir: String) = s"$dir/delta"
   private def tombstonesPath(dir: String) = s"$dir/tombstones"
 
-  /** Committed data files of an append-only tier (`delta/`, `tombstones/`)
-    * at this instant — the snapshot unit of
-    * [[foldIvfDelta]]/[[compactIvfIndex]]/[[purgeTombstones]] isolation:
-    * maintenance folds/purges and then deletes EXACTLY these files, so an
-    * [[appendToIvfIndex]] batch (or a [[deleteFromIvfIndex]] tombstone
-    * batch) committed while the maintenance runs stays in the tier
-    * untouched (the r14 whole-directory delete silently lost such a batch
-    * — ADVICE r14). Append filenames are committer-UUID'd, so a concurrent
-    * batch can never collide with a snapshot name.
+  /** Committed files of the delta tier at this instant — the snapshot
+    * [[foldIvfDelta]]/[[compactIvfIndex]] fold and then delete EXACTLY
+    * ([[graft.store.Stores.listTierDataFiles]]), so an [[appendToIvfIndex]]
+    * batch committed while the maintenance runs stays in the tier (the r14
+    * whole-directory delete silently lost such a batch — ADVICE r14).
     */
-  private def listTierDataFiles(spark: SparkSession, tierPath: String)
-      : Seq[org.apache.hadoop.fs.Path] = {
-    Dedup.recoverStore(spark, tierPath) // heal a crashed tier rewrite
-    val p = new org.apache.hadoop.fs.Path(tierPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.filter(st => st.isFile && Dedup.isDataEntry(st)).map(_.getPath)
-  }
-
   private def listDeltaDataFiles(spark: SparkSession, dir: String)
-      : Seq[org.apache.hadoop.fs.Path] = listTierDataFiles(spark, deltaPath(dir))
+      : Seq[org.apache.hadoop.fs.Path] = Stores.listTierDataFiles(spark, deltaPath(dir))
 
-  /** Remove exactly the snapshot's files; then retire the directory ONLY
-    * when nothing but committer metadata (`_SUCCESS`, checksum siblings)
-    * remains — a concurrent append's `_temporary` directory or committed
-    * batch keeps the tier alive. This is what makes fold/compact safe to
-    * run beside a live appender: the r14 recursive dir delete silently
-    * destroyed any batch committed after the snapshot listing.
-    */
-  private def removeTierSnapshot(spark: SparkSession, tierPath: String,
-                                 snapshot: Seq[org.apache.hadoop.fs.Path]): Unit = {
-    if (snapshot.isEmpty) return
-    val fs = snapshot.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    snapshot.foreach(f => fs.delete(f, false))
-    val p = new org.apache.hadoop.fs.Path(tierPath)
-    val leftovers = fs.listStatus(p)
-    val metadataOnly = leftovers.forall { st =>
-      val name = st.getPath.getName
-      st.isFile && (name.startsWith("_") || name.startsWith("."))
-    }
-    if (metadataOnly) {
-      // retire the quiescent tier WITHOUT a recursive delete: remove the
-      // metadata files we just listed, then a NON-recursive dir delete —
-      // anything a concurrent appender created after the listing
-      // (_temporary, a committed batch) makes the dir non-empty, the
-      // delete fails harmlessly, and the tier stays alive. A recursive
-      // delete here would re-open the r14 data-loss race in a narrower
-      // window (list → delete TOCTOU).
-      leftovers.foreach(st => fs.delete(st.getPath, false))
-      try fs.delete(p, false)
-      catch { case _: java.io.IOException => () } // concurrent arrival keeps the tier
-    }
-  }
-
-  /** An append-only tier's relation, or None when absent/empty (never
-    * written, or retired by the last maintenance pass).
-    */
-  private def readTierOpt(spark: SparkSession, tierPath: String)
-      : Option[DataFrame] = {
-    Dedup.recoverStore(spark, tierPath) // heal a crashed tier rewrite
-    // a crashed FIRST append can leave only _temporary under the tier
-    if (Dedup.hasCommittedData(spark, tierPath)) Some(spark.read.parquet(tierPath)) else None
-  }
-
+  /** The un-folded delta tier, or None when absent or empty. */
   private def readDeltaOpt(spark: SparkSession, dir: String): Option[DataFrame] =
-    readTierOpt(spark, deltaPath(dir))
+    Stores.read(spark, deltaPath(dir))
 
   // ---- Tombstone tier --------------------------------------------------
   //
@@ -539,7 +489,7 @@ object VectorIndex {
     * (anti-join semantics); [[purgeTombstones]] retires them together.
     */
   private def readTombstonesOpt(spark: SparkSession, dir: String): Option[DataFrame] =
-    readTierOpt(spark, tombstonesPath(dir)).map(_.select("id"))
+    Stores.read(spark, tombstonesPath(dir)).map(_.select("id"))
 
   /** `cells` minus the tombstoned ids — the takedown-aware view of the
     * cells tier every reader goes through. The tombstone set is a
@@ -553,54 +503,16 @@ object VectorIndex {
         cells.join(Joins.maybeBroadcast(t.distinct()), Seq("id"), "left_anti")
     }
 
-  private def purgeTmpRoot(dir: String) = s"$dir/cells/.purge.tmp"
-  private def purgeOldRoot(dir: String) = s"$dir/cells/.purge.old"
-
-  /** Heal a [[purgeTombstones]] interrupted mid-swap. The purge stages
-    * survivor files under `cells/.purge.tmp/cell=N` (dot-prefixed —
-    * invisible to readers), then per touched cell renames the canonical
-    * dir into `cells/.purge.old/` and the staged dir into place. For each
-    * cell left in `.purge.old`: a present canonical dir means that cell's
-    * swap finished (drop the old copy); an absent canonical with a staged
-    * twin means the crash hit between the two renames (finish the swap);
-    * an absent canonical with NO staged twin is either a legitimately
-    * emptied cell or the same crash window — ROLL BACK (restore the old
-    * copy): the tombstone snapshot is only retired after a completed
-    * purge, so the restored victims are re-purged by the retry. Idempotent
-    * and called by every reader/maintenance entry, like
-    * [[Dedup.recoverStore]].
-    */
-  private def recoverPurge(spark: SparkSession, dir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val oldRoot = new org.apache.hadoop.fs.Path(purgeOldRoot(dir))
-    val fs = oldRoot.getFileSystem(conf)
-    if (fs.exists(oldRoot)) {
-      fs.listStatus(oldRoot).filter(_.isDirectory).foreach { st =>
-        val name = st.getPath.getName // "cell=N"
-        val canonical = new org.apache.hadoop.fs.Path(s"$dir/cells/$name")
-        val tmp = new org.apache.hadoop.fs.Path(s"${purgeTmpRoot(dir)}/$name")
-        if (fs.exists(canonical)) () // this cell's swap completed
-        else if (fs.exists(tmp)) {
-          if (!fs.rename(tmp, canonical)) throw new java.io.IOException(
-            s"recoverPurge: rename $tmp -> $canonical failed")
-        } else {
-          if (!fs.rename(st.getPath, canonical)) throw new java.io.IOException(
-            s"recoverPurge: rollback of $canonical failed")
-        }
-      }
-      fs.delete(oldRoot, true)
-    }
-    val tmpRoot = new org.apache.hadoop.fs.Path(purgeTmpRoot(dir))
-    if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
-  }
-
   /** Physically remove tombstoned rows from the cells tier and retire the
     * tombstone snapshot — the maintenance half of the takedown path, run
     * by [[foldIvfDelta]] and [[compactIvfIndex]]. O(touched cells), not
     * O(store): one ids+cell column-pruned scan locates the victims' cells,
-    * only those cell directories rewrite (staged under hidden roots, then
-    * per-cell rename swaps — [[recoverPurge]] heals a crash at any point),
-    * and EXACTLY the tombstone files read by this purge are removed — a
+    * only those cell directories rewrite
+    * ([[graft.store.Stores.swapPartitions]]: staged under hidden roots, then
+    * per-cell rename swaps; a crash at any point heals on the next entry,
+    * and a cell it rolls back is purged again by the retry, because the
+    * tombstone snapshot retires only after every swap completed), and
+    * EXACTLY the tombstone files read by this purge are removed — a
     * [[deleteFromIvfIndex]] batch committed while the purge runs survives
     * in the tier for the next pass. Run one maintenance pass at a time
     * (the fold/compact rule); concurrent QUERIES may hit a mid-swap cell
@@ -610,49 +522,30 @@ object VectorIndex {
     */
   def purgeTombstones(spark: SparkSession, dir: String,
                       beforeRetire: () => Unit = () => ()): Long = {
-    Dedup.recoverStore(spark, s"$dir/cells")
-    recoverPurge(spark, dir)
-    val snapshot = listTierDataFiles(spark, tombstonesPath(dir))
+    Stores.heal(spark, cellsPath(dir))
+    val snapshot = Stores.listTierDataFiles(spark, tombstonesPath(dir))
     if (snapshot.isEmpty) return 0L
     val victims = spark.read.parquet(snapshot.map(_.toString): _*)
       .select("id").distinct().localCheckpoint(true)
-    val cells = spark.read.parquet(s"$dir/cells")
+    val cells = spark.read.parquet(cellsPath(dir))
     // ONE ids+cell column-pruned scan: which cells hold victims, and how
     // many rows leave (the purge count)
     val victimCells = cells.join(Joins.maybeBroadcast(victims), Seq("id"), "left_semi")
       .groupBy("cell").agg(count(lit(1)).as("__n")).collect()
     val touched = victimCells.map(_.getInt(0))
     val purged = victimCells.map(_.getLong(1)).sum
-    if (touched.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(s"$dir/cells")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmpRoot = new org.apache.hadoop.fs.Path(purgeTmpRoot(dir))
-      val oldRoot = new org.apache.hadoop.fs.Path(purgeOldRoot(dir))
-      if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
-      if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
-      // survivors of ONLY the touched cells, staged under a hidden root in
-      // the same partitioned shape (a cell whose every row is a victim
-      // stages nothing — its swap simply retires the canonical dir)
-      cells.filter(col("cell").isin(touched.toIndexedSeq: _*))
-        .join(Joins.maybeBroadcast(victims), Seq("id"), "left_anti")
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(tmpRoot.toString)
-      fs.mkdirs(oldRoot)
-      touched.foreach { c =>
-        val name = s"cell=$c"
-        val canonical = new org.apache.hadoop.fs.Path(s"$dir/cells/$name")
-        if (fs.exists(canonical) &&
-            !fs.rename(canonical, new org.apache.hadoop.fs.Path(oldRoot, name)))
-          throw new java.io.IOException(s"purgeTombstones: retire of $canonical failed")
-        val staged = new org.apache.hadoop.fs.Path(tmpRoot, name)
-        if (fs.exists(staged) && !fs.rename(staged, canonical))
-          throw new java.io.IOException(s"purgeTombstones: swap of $canonical failed")
+    if (touched.nonEmpty)
+      // survivors of ONLY the touched cells, in the same partitioned shape
+      // (a cell whose every row is a victim stages nothing — its swap
+      // simply retires the canonical dir)
+      Stores.swapPartitions(spark, cellsPath(dir), touched.map(c => s"cell=$c").toSeq) { out =>
+        cells.filter(col("cell").isin(touched.toIndexedSeq: _*))
+          .join(Joins.maybeBroadcast(victims), Seq("id"), "left_anti")
+          .repartition(col("cell"))
+          .write.partitionBy("cell").parquet(out)
       }
-      fs.delete(tmpRoot, true)
-      fs.delete(oldRoot, true)
-    }
     beforeRetire()
-    removeTierSnapshot(spark, tombstonesPath(dir), snapshot)
+    Stores.removeTierSnapshot(spark, tombstonesPath(dir), snapshot)
     purged
   }
 
@@ -666,9 +559,8 @@ object VectorIndex {
     * `(id, <codec payload>, cell)`.
     */
   def readIvfCells(spark: SparkSession, dir: String): DataFrame = {
-    Dedup.recoverStore(spark, s"$dir/cells")
-    recoverPurge(spark, dir)
-    val cells = minusTombstones(spark, dir, spark.read.parquet(s"$dir/cells"))
+    Stores.heal(spark, cellsPath(dir))
+    val cells = minusTombstones(spark, dir, spark.read.parquet(cellsPath(dir)))
     readDeltaOpt(spark, dir) match {
       case None => cells
       case Some(delta) =>
@@ -689,10 +581,9 @@ object VectorIndex {
   def appendToIvfIndex(delta: DataFrame, dir: String,
                        idCol: String = "vec_id", vecCol: String = "embedding"): Long = {
     val spark = delta.sparkSession
-    Dedup.recoverStore(spark, s"$dir/cells")
-    recoverPurge(spark, dir)
+    Stores.heal(spark, cellsPath(dir))
     val centroids = readCentroids(spark, dir)
-    val cells = spark.read.parquet(s"$dir/cells")
+    val cells = spark.read.parquet(cellsPath(dir))
     val codec = codecOf(cells) // self-describing store — append matches it
     // known ids = the VISIBLE store: a tombstoned cells copy no longer
     // counts, so a deleted id re-appends organically (lands in the delta
@@ -748,26 +639,25 @@ object VectorIndex {
     */
   def foldIvfDelta(spark: SparkSession, dir: String,
                    beforeDelete: () => Unit = () => ()): Long = {
-    Dedup.recoverStore(spark, s"$dir/cells")
-    // purge FIRST: tombstoned rows leave the cells tier and their
-    // tombstones retire BEFORE delta rows fold in, so a re-appended
-    // victim's fresh delta copy folds into cells with no stale tombstone
-    // left to hide (or re-purge) it
+    // purge FIRST, which also heals the cells tier: tombstoned rows leave
+    // the cells tier and their tombstones retire BEFORE delta rows fold
+    // in, so a re-appended victim's fresh delta copy folds into cells with
+    // no stale tombstone left to hide (or re-purge) it
     purgeTombstones(spark, dir)
     val snapshot = listDeltaDataFiles(spark, dir)
     if (snapshot.isEmpty) 0L
     else {
       val d = spark.read.parquet(snapshot.map(_.toString): _*)
-      val cells = spark.read.parquet(s"$dir/cells")
+      val cells = spark.read.parquet(cellsPath(dir))
       val fresh = d.dropDuplicates("id")
         .join(cells.select("id"), Seq("id"), "left_anti")
         .localCheckpoint(true) // sever from both stores before mutating them
       val n = fresh.count()
       if (n > 0)
         fresh.repartition(col("cell"))
-          .write.partitionBy("cell").mode("append").parquet(s"$dir/cells")
+          .write.partitionBy("cell").mode("append").parquet(cellsPath(dir))
       beforeDelete()
-      removeTierSnapshot(spark, deltaPath(dir), snapshot)
+      Stores.removeTierSnapshot(spark, deltaPath(dir), snapshot)
       n
     }
   }
@@ -795,7 +685,7 @@ object VectorIndex {
     val deltaSnapshot =
       if (snapshot.isEmpty) None
       else Some(spark.read.parquet(snapshot.map(_.toString): _*))
-    val res = Dedup.rewriteStore(spark, s"$dir/cells") { (df, out) =>
+    val res = Stores.rewriteStore(spark, cellsPath(dir)) { (df, out) =>
       val all = deltaSnapshot match {
         case None => df
         case Some(d) => df.unionByName(d.select(df.columns.map(col).toIndexedSeq: _*))
@@ -803,7 +693,7 @@ object VectorIndex {
       all.dropDuplicates("id").repartition(col("cell"))
         .write.partitionBy("cell").parquet(out)
     }
-    removeTierSnapshot(spark, deltaPath(dir), snapshot)
+    Stores.removeTierSnapshot(spark, deltaPath(dir), snapshot)
     res
   }
 
@@ -847,14 +737,13 @@ object VectorIndex {
                          idCol: String = "vec_id"): (Long, Long) = {
     val del = ids.select(col(idCol).as("id")).distinct()
       .localCheckpoint(true) // the scans below reuse it; sever from its source
-    Dedup.recoverStore(spark, s"$dir/cells")
-    recoverPurge(spark, dir)
+    Stores.heal(spark, cellsPath(dir))
     // the delta tier FIRST (small, fast, physical): a crash between the
     // delta rewrite and the tombstone append leaves victims only in cells,
     // where the retried delete still tombstones them — the reverse order
     // could resurrect a deleted id from a surviving delta copy
     val (dBefore, dAfter) = readDeltaOpt(spark, dir).map { _ =>
-      Dedup.rewriteStore(spark, deltaPath(dir)) { (df, out) =>
+      Stores.rewriteStore(spark, deltaPath(dir)) { (df, out) =>
         df.join(Joins.maybeBroadcast(del), Seq("id"), "left_anti")
           .coalesce(8).write.parquet(out)
       }
@@ -864,7 +753,7 @@ object VectorIndex {
     // later fold of that id). One ids-only column-pruned scan covers the
     // visible count and the present-victims projection.
     val cellIds = minusTombstones(spark, dir,
-        spark.read.parquet(s"$dir/cells").select("id"))
+        spark.read.parquet(cellsPath(dir)).select("id"))
       .localCheckpoint(true)
     val cBefore = cellIds.count()
     val victims = cellIds.join(Joins.maybeBroadcast(del), Seq("id"), "left_semi")
@@ -882,11 +771,10 @@ object VectorIndex {
   def ivfTopKIndexed(queries: DataFrame, dir: String, k: Int, nprobe: Int = 3,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
-    Dedup.recoverStore(spark, s"$dir/cells")
-    recoverPurge(spark, dir)
+    Stores.heal(spark, cellsPath(dir))
     val centroids = readCentroids(spark, dir)
     val probeN = math.min(nprobe, centroids.size)
-    val raw = spark.read.parquet(s"$dir/cells")
+    val raw = spark.read.parquet(cellsPath(dir))
     val codec = codecOf(raw)
     import graft.functions.VectorOps
     // a normalized index normalizes the QUERY side too (self-describing,

@@ -2,6 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.exec.Scope
+import graft.store.Stores
 
 /** Declarative pipeline specs — the engine's equivalent of the reference's
   * persisted Job documents and Pipeline chains
@@ -243,7 +245,7 @@ case class AnnQuerySpec(input: OpSpec, indexDir: String, k: Int,
 case class LayoutNodeSpec(input: OpSpec, layout: String, path: String,
                           cols: Seq[String], files: Int = 64,
                           bits: Int = 10) extends OpSpec
-/** Dedup-store maintenance ([[graft.operators.Dedup.compactStore]]):
+/** Dedup-store maintenance ([[graft.store.Stores.compactStore]]):
   * rewrite the store directory at `path` keyed-distinct on `keys` (the
   * post-unclean-restart duplicate-key state of the streaming ingest
   * stores), yield the compacted store relation. Like [[LayoutNodeSpec]],
@@ -322,27 +324,27 @@ object PipelineCompiler {
   def substitute(s: String, params: Map[String, String]): String =
     params.foldLeft(s) { case (acc, (k, v)) => acc.replace(s"{%$k%}", v) }
 
-  /** [[graft.operators.Dedup.unpersistCaches]], the session-wide release
+  /** [[graft.exec.Scope.unpersistCaches]], the session-wide release
     * of every registered relation (CacheSpec persists and multi-read
     * barriers among them). Kept only as the name the benchmark driver
     * (`perfbench/scala/graft/bench/Main.scala`) calls; new code calls
-    * Dedup's.
+    * the scope module's.
     */
-  def unpersistCompiledCaches(): Unit = graft.operators.Dedup.unpersistCaches()
+  def unpersistCompiledCaches(): Unit = Scope.unpersistCaches()
 
-  /** [[graft.operators.Dedup.withCacheScope]]: a compile run inside it is a
+  /** [[graft.exec.Scope.withCacheScope]]: a compile run inside it is a
     * unit of work whose CacheSpec persists, barriers, operator caches and
     * operator checkpoints are released on exit. Kept only as the name the
     * benchmark driver (`perfbench/scala/graft/bench/Workloads.scala`)
-    * calls; new code calls Dedup's.
+    * calls; new code calls the scope module's.
     */
-  def withCompiledCacheScope[T](body: => T): T = graft.operators.Dedup.withCacheScope(body)
+  def withCompiledCacheScope[T](body: => T): T = Scope.withCacheScope(body)
 
   /** The compiler's one materialization barrier, used by [[CacheSpec]]
     * nodes and by the multi-read rule ([[multiReadInput]]): persist `df`
-    * (`MEMORY_AND_DISK`) through [[graft.operators.Dedup.cached]], so the
-    * caller's [[graft.operators.Dedup.withCacheScope]] releases it (with no
-    * scope open it stays until [[graft.operators.Dedup.unpersistCaches]]),
+    * (`MEMORY_AND_DISK`) through [[graft.exec.Scope.cached]], so the
+    * caller's [[graft.exec.Scope.withCacheScope]] releases it (with no
+    * scope open it stays until [[graft.exec.Scope.unpersistCaches]]),
     * and return a frame rooted at the cache's `InMemoryRelation` leaf.
     *
     * Lineage-stub the segment BEFORE persisting (r16): persist truncates
@@ -367,7 +369,7 @@ object PipelineCompiler {
     * NOTE (ADVICE r16): stub caches are keyed by the compiled RDD's
     * identity, so in-compiler cache reuse is BY REFERENCE only —
     * recompiling the same spec in one session outside a
-    * [[graft.operators.Dedup.withCacheScope]] creates a fresh cache entry
+    * [[graft.exec.Scope.withCacheScope]] creates a fresh cache entry
     * per compile (pre-r16 plan-matching would have structurally
     * deduplicated them). Callers that compile in a loop must scope their
     * compiles, or release between them as Bench does.
@@ -379,7 +381,7 @@ object PipelineCompiler {
     * cost compounds).
     */
   private def materialize(df: DataFrame): DataFrame = {
-    val cached = graft.operators.Dedup.cached(org.apache.spark.sql.graft.Bridge.lineageStub(df))
+    val cached = Scope.cached(org.apache.spark.sql.graft.Bridge.lineageStub(df))
     org.apache.spark.sql.graft.Bridge.cachedRelation(cached).getOrElse(cached)
   }
 
@@ -423,7 +425,7 @@ object PipelineCompiler {
         case _: org.apache.spark.sql.execution.columnar.InMemoryRelation |
              _: org.apache.spark.sql.execution.LogicalRDD |
              _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
-        case plan if !plan.exists(graft.operators.Dedup.isWide) => df
+        case plan if !plan.exists(Scope.isWide) => df
         case _ => barriers.computeIfAbsent(df, _ => materialize(df))
       }
     }
@@ -531,9 +533,7 @@ object PipelineCompiler {
         // leaves only `_temporary`) or with zero rows reads as absent, so
         // the compile retrains and overwrites it instead of wedging on it.
         val loadedCents: Option[Seq[(Int, Seq[Float])]] =
-          if (centsPath.isEmpty || !graft.operators.Dedup.hasCommittedData(spark, centsPath)) None
-          else {
-            val asset = spark.read.parquet(centsPath)
+          if (centsPath.isEmpty) None else Stores.read(spark, centsPath).flatMap { asset =>
             val hasMeta = asset.columns.contains("k") && asset.columns.contains("mode")
             if (hasMeta) asset.select("k", "mode").take(1).foreach { r =>
               require(r.getInt(0) == k && r.getString(1) == centMode,
@@ -578,9 +578,7 @@ object PipelineCompiler {
         // to retrain/overwrite rather than head()-crash or silently select
         // nothing.
         val loadedWeights: Option[DataFrame] =
-          if (weightsPath.isEmpty || !graft.operators.Dedup.hasCommittedData(spark, weightsPath)) None
-          else {
-            val loaded = spark.read.parquet(weightsPath)
+          if (weightsPath.isEmpty) None else Stores.read(spark, weightsPath).flatMap { loaded =>
             loaded.select("bucket").take(1).headOption.map { r =>
               // the scoring join keys hex buckets of EXACTLY hexLen chars; a
               // spec whose hexLen changed after the persist would inner-join
@@ -651,7 +649,7 @@ object PipelineCompiler {
           // calibration mode: the hit set computes ONCE (checkpointed, and
           // released with the caller's cache scope) and feeds both the
           // survivor-rate report and the selection anti-join
-          val hitIds = graft.operators.Dedup.scopedCheckpoint(graft.operators.Dedup
+          val hitIds = Scope.scopedCheckpoint(graft.operators.Dedup
             .contaminationHits(df, build(bench), id, text, ngram, hashKeys)
             .filter(col("n_hits") >= minHits).select("id"))
           val nIn = df.count()
@@ -686,7 +684,7 @@ object PipelineCompiler {
             throw new IllegalArgumentException(s"layout '$other' (sorted|zorder|bucketed)")
         }
       case CompactStoreSpec(p, keys) =>
-        graft.operators.Dedup.compactStore(spark, p, keys)
+        Stores.compactStore(spark, p, keys)
         spark.read.parquet(p)
       case DeleteIndexSpec(p, ids, idCol) =>
         graft.operators.VectorIndex.deleteFromIvfIndex(spark, p, build(ids), idCol)
@@ -814,35 +812,34 @@ object PipelineCompiler {
     // embeds, so the cache manager matches them inside every sink write.
     // The scope releases the compile's caches and those persists once
     // every sink is written
-    graft.operators.Dedup.withCacheScope {
+    Scope.withCacheScope {
       val dfs = compileNodes(spec.copy(out = sinks.head._1), spark, params)
       def nodeDf(name: String): DataFrame = dfs.getOrElse(name,
         throw new IllegalArgumentException(s"broken chain: sink node '$name' undefined"))
-      shared.foreach(n => graft.operators.Dedup.cached(nodeDf(n)))
-      sinks.foreach { case (node, format, path) =>
+      shared.foreach(n => Scope.cached(nodeDf(n)))
+      sinks.foreach { case (node, format, rawPath) =>
+        val path = substitute(rawPath, params)
         format match {
           // push sink: POST NDJSON batches to the URL (reference's http write
           // stream, utils.js:38-50); $VAR roots resolve against params
           case "http" =>
             graft.sinks.Writers.push(nodeDf(node), batchSize = 500,
-              graft.sources.Transports.httpPoster(substitute(path, params), config = params))
+              graft.sources.Transports.httpPoster(path, config = params))
           // store-addressed sink: mongodb://host/db/collection through the
           // injected client factory (reference's protocol dispatch,
           // utils.js:52-57) — declared as format "store", or inferred when
           // the resolved URL carries the mongodb: scheme
           case "store" | "mongodb" =>
-            graft.sinks.Writers.store(nodeDf(node), substitute(path, params),
-              clients = stores, config = params)
-          case _ if substitute(path, params).startsWith("mongodb:") =>
-            graft.sinks.Writers.store(nodeDf(node), substitute(path, params),
-              clients = stores, config = params)
+            graft.sinks.Writers.store(nodeDf(node), path, clients = stores, config = params)
+          case _ if path.startsWith("mongodb:") =>
+            graft.sinks.Writers.store(nodeDf(node), path, clients = stores, config = params)
           case _ =>
             val w = nodeDf(node).write.mode("overwrite")
             format match {
-              case "parquet" => w.parquet(substitute(path, params))
-              case "ndjson"  => w.json(substitute(path, params))
-              case "csv"     => w.option("header", "true").csv(substitute(path, params))
-              case other     => w.format(other).save(substitute(path, params))
+              case "parquet" => w.parquet(path)
+              case "ndjson"  => w.json(path)
+              case "csv"     => w.option("header", "true").csv(path)
+              case other     => w.format(other).save(path)
             }
         }
       }

@@ -3,6 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.exec.Scope
+import graft.operators.Dedup
+import graft.store.Stores
+import graft.store.Stores.distinctOn
 
 /** Streaming capability extension (SURVEY §2.7). The reference is
   * bounded-stream only; these transforms are written once and run on either
@@ -104,40 +108,34 @@ object Streams {
       }
   }
 
-  /** Apply an optional trigger to a sink builder — every `ingest*` entry
-    * point takes `trigger = Some(Trigger.AvailableNow())` to run as ONE
-    * drain-the-source round that self-terminates (the restartable-CLI
-    * form [[graft.plans.IngestCompiler]] uses), `None` (the default) for
-    * a continuously-running stream.
+  /** The micro-batch frame of every `ingest*` entry point: one
+    * `foreachBatch` query checkpointed at `checkpointDir`, whose every
+    * micro-batch runs `body` inside one cache scope
+    * ([[graft.exec.Scope.withCacheScope]] — whatever the body caches or
+    * checkpoints is released when the micro-batch ends) unless the source
+    * delivered nothing, and then the scheduled maintenance of `maintain`'s
+    * stores ([[graft.store.Stores.maybeCompact]], every `compactEvery`
+    * batches, at the point where all of the batch's sinks hold it).
+    * `trigger = Some(Trigger.AvailableNow())` runs ONE drain-the-source
+    * round that self-terminates (the restartable-CLI form
+    * [[graft.plans.IngestCompiler]] uses); `None` (every entry point's
+    * default) runs a continuous stream.
     */
-  private def withTrigger[T](w: org.apache.spark.sql.streaming.DataStreamWriter[T],
-                             trigger: Option[org.apache.spark.sql.streaming.Trigger]) =
+  private def microBatches(stream: DataFrame, checkpointDir: String,
+                           trigger: Option[org.apache.spark.sql.streaming.Trigger],
+                           compactEvery: Int = 0,
+                           maintain: Seq[(String, (SparkSession, String) => Unit)] = Nil)(
+                           body: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    val w = stream.writeStream
     trigger.fold(w)(w.trigger)
-
-  /** Every-N-batches store maintenance at the fully-applied point (see
-    * [[ingestPretrainCorpus]]'s `compactEvery`): each `(dir, maintain)` runs
-    * `maintain(dir)` when the dir exists or a prior interrupted swap heals
-    * ([[graft.operators.Dedup.recoverStore]]). An absent store (never
-    * built, or every batch so far empty) has nothing to maintain, and
-    * reading it would throw and kill the streaming query. The shared
-    * maintenance hook of every store-backed ingest.
-    */
-  private def maybeCompact(spark: org.apache.spark.sql.SparkSession,
-                           batchId: Long, compactEvery: Int,
-                           stores: Seq[(String, String => Unit)]): Unit =
-    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-      stores.foreach { case (dir, maintain) =>
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p) || graft.operators.Dedup.recoverStore(spark, dir)) maintain(dir)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) Scope.withCacheScope(body(batch))
+        Stores.maybeCompact(batch.sparkSession, batchId, compactEvery, maintain)
+        ()
       }
-
-  /** The keyed-distinct rewrite ([[graft.operators.Dedup.compactStore]])
-    * as a [[maybeCompact]] maintenance op.
-    */
-  private def distinctOn(spark: org.apache.spark.sql.SparkSession,
-                         keys: String*): String => Unit =
-    dir => { graft.operators.Dedup.compactStore(spark, dir, keys); () }
+      .start()
+  }
 
   /** Streaming corpus ingest with cross-batch near-dedup: every micro-batch
     * is deduped against the PERSISTED minhash signature store
@@ -160,34 +158,25 @@ object Streams {
                   compactEvery: Int = 0,
                   trigger: Option[org.apache.spark.sql.streaming.Trigger] = None
                  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dedup
-    withTrigger(stream.writeStream, trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // scope the dedup operators' internal caches and checkpoints to
-        // THIS micro-batch: incrementalDedup registers its pair/membership
-        // relations in the session registry, which would otherwise grow by
-        // ~2 persisted relations per batch for the life of the stream
-        if (!batch.isEmpty) Dedup.withCacheScope {
-          val store = Dedup.readStore(spark, storeDir)(
-            Dedup.minhashSignatures(batch.limit(0), idCol, textCol))
-          // the batch's signatures computed ONCE: the pair kernel and the
-          // store append both consume this relation (the survivors'
-          // signatures are a semi-join slice — no re-shingle of kept rows)
-          val sigs = Dedup.cached(Dedup.minhashSignatures(batch, idCol, textCol))
-          val kept = Dedup.scopedCheckpoint(Dedup.incrementalDedupSigs(batch, sigs,
-            store, idCol, threshold))
-          kept.write.mode("append").parquet(corpusDir)
-          sigs.join(kept.select(col(idCol).as("__kid")),
-              sigs("id") === col("__kid"), "left_semi")
-            .write.mode("append").parquet(storeDir)
-        }
-        maybeCompact(spark, batchId, compactEvery,
-          Seq(corpusDir -> distinctOn(spark, idCol), storeDir -> distinctOn(spark, "id")))
-        ()
-      }
-      .start()
+    // the micro-batch scope holds the dedup operators' pair/membership
+    // relations, which would otherwise grow the session registry by ~2
+    // persisted relations per batch for the life of the stream
+    microBatches(stream, checkpointDir, trigger, compactEvery,
+        Seq(corpusDir -> distinctOn(idCol), storeDir -> distinctOn("id"))) { batch =>
+      val spark = batch.sparkSession
+      val store = Stores.read(spark, storeDir).getOrElse(
+        Dedup.minhashSignatures(batch.limit(0), idCol, textCol))
+      // the batch's signatures computed ONCE: the pair kernel and the
+      // store append both consume this relation (the survivors'
+      // signatures are a semi-join slice — no re-shingle of kept rows)
+      val sigs = Scope.cached(Dedup.minhashSignatures(batch, idCol, textCol))
+      val kept = Scope.scopedCheckpoint(Dedup.incrementalDedupSigs(batch, sigs,
+        store, idCol, threshold))
+      kept.write.mode("append").parquet(corpusDir)
+      sigs.join(kept.select(col(idCol).as("__kid")),
+          sigs("id") === col("__kid"), "left_semi")
+        .write.mode("append").parquet(storeDir)
+    }
   }
 
   /** Streaming corpus ingest with cross-batch SPAN dedup: every micro-batch
@@ -211,7 +200,7 @@ object Streams {
     * only drop more windows). The fp store needs NO replay recovery: fresh
     * fps are anti-joined against the store, so a replay never re-appends
     * them. Duplicate store keys DO arise operationally (re-run bootstrap
-    * appends, store unions) — [[graft.operators.Dedup.compactStore]] /
+    * appends, store unions) — [[graft.store.Stores.compactStore]] /
     * the `CompactStoreSpec` pipeline node is the maintenance op for that.
     * Documents that rebuild to empty text are still appended (with
     * `n_kept = 0`) so the corpus row count is auditable — filter
@@ -236,31 +225,24 @@ object Streams {
                       beforeCommit: () => Unit = () => (),
                       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None
                      ): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dedup
-    withTrigger(stream.writeStream, trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        // scoped: incrementalSpanDedup registers its shared window relation
-        // (both appends read it), released when the micro-batch ends
-        if (!batch.isEmpty) Dedup.withCacheScope {
-          val store = Dedup.readStore(spark, storeDir)(Seq.empty[String].toDF("fp"))
-          val (rebuilt, newFps) = Dedup.incrementalSpanDedup(batch, store, idCol, textCol, k)
-          rebuilt.write.mode("append").parquet(corpusDir)
-          afterCorpusAppend()
-          newFps.write.mode("append").parquet(storeDir)
-          beforeCommit()
-        }
-        // fp store only: this ingest's corpus recovery rule is
-        // max-n_kept-per-id (window-2 twins are NOT byte-identical — the
-        // replay row is an emptied rebuild), so a keep-ANY keyed distinct
-        // on the corpus could keep the wrong twin; compactStore is exact
-        // only where duplicate keys carry identical payloads
-        maybeCompact(spark, batchId, compactEvery, Seq(storeDir -> distinctOn(spark, "fp")))
-        ()
-      }
-      .start()
+    // fp store only: this ingest's corpus recovery rule is
+    // max-n_kept-per-id (window-2 twins are NOT byte-identical — the
+    // replay row is an emptied rebuild), so a keep-ANY keyed distinct on
+    // the corpus could keep the wrong twin; compactStore is exact only
+    // where duplicate keys carry identical payloads
+    microBatches(stream, checkpointDir, trigger, compactEvery,
+        Seq(storeDir -> distinctOn("fp"))) { batch =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      // incrementalSpanDedup registers its shared window relation (both
+      // appends read it) with the micro-batch's scope
+      val store = Stores.read(spark, storeDir).getOrElse(Seq.empty[String].toDF("fp"))
+      val (rebuilt, newFps) = Dedup.incrementalSpanDedup(batch, store, idCol, textCol, k)
+      rebuilt.write.mode("append").parquet(corpusDir)
+      afterCorpusAppend()
+      newFps.write.mode("append").parquet(storeDir)
+      beforeCommit()
+    }
   }
 
   /** Sessionization (batch form): assign a session id per key where a gap
@@ -292,7 +274,7 @@ object Streams {
     * match [[ingestDedup]]: corpus append precedes store append, so a
     * crash between them replays the batch against a store missing its
     * vectors and appends byte-identical rows again — recover with keyed
-    * distinct ([[graft.operators.Dedup.compactStore]]) on both sinks. A
+    * distinct ([[graft.store.Stores.compactStore]]) on both sinks. A
     * crash AFTER both appends but before the offset commits is fully
     * SELF-HEALING here (better than the span tier's window 2): each batch
     * is first pruned of ids ALREADY IN the store (an ids-only anti join —
@@ -313,40 +295,31 @@ object Streams {
                           beforeCommit: () => Unit = () => (),
                           trigger: Option[org.apache.spark.sql.streaming.Trigger] = None
                          ): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dedup
-    withTrigger(stream.writeStream, trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) Dedup.withCacheScope {
-          val store = Dedup.readStore(spark, storeDir)(
-            Dedup.assignSemanticClusters(batch.limit(0), idCol, vecCol, centroids))
-          // replay idempotency: ids already in the store were fully
-          // ingested by a committed (or sink-complete) earlier attempt.
-          // Checkpointed ONCE (the ingestPretrainCorpus pattern): the
-          // assignment and the final anti join both read it; the scope
-          // releases every checkpoint when the micro-batch ends
-          val fresh = Dedup.scopedCheckpoint(batch.join(store.select(col("id").as(idCol)),
-            Seq(idCol), "left_anti"))
-          // assignment computed ONCE for the pair kernel AND the store
-          // append; kept is eagerly checkpointed so no append's
-          // refreshByPath can evict a store-reading plan mid-batch
-          val assigned = Dedup.cached(Dedup.assignSemanticClusters(fresh, idCol, vecCol,
-            centroids))
-          val kept = Dedup.scopedCheckpoint(Dedup.incrementalSemanticDropAssigned(
-            fresh, assigned, store, idCol, threshold))
-          kept.write.mode("append").parquet(corpusDir)
-          afterCorpusAppend()
-          assigned.join(kept.select(col(idCol).as("__kid")),
-              assigned("id") === col("__kid"), "left_semi")
-            .write.mode("append").parquet(storeDir)
-          beforeCommit()
-        }
-        maybeCompact(spark, batchId, compactEvery,
-          Seq(corpusDir -> distinctOn(spark, idCol), storeDir -> distinctOn(spark, "id")))
-        ()
-      }
-      .start()
+    microBatches(stream, checkpointDir, trigger, compactEvery,
+        Seq(corpusDir -> distinctOn(idCol), storeDir -> distinctOn("id"))) { batch =>
+      val store = Stores.read(batch.sparkSession, storeDir).getOrElse(
+        Dedup.assignSemanticClusters(batch.limit(0), idCol, vecCol, centroids))
+      // replay idempotency: ids already in the store were fully ingested
+      // by a committed (or sink-complete) earlier attempt. Checkpointed
+      // ONCE (the ingestPretrainCorpus pattern): the assignment and the
+      // final anti join both read it; the scope releases every checkpoint
+      // when the micro-batch ends
+      val fresh = Scope.scopedCheckpoint(batch.join(store.select(col("id").as(idCol)),
+        Seq(idCol), "left_anti"))
+      // assignment computed ONCE for the pair kernel AND the store append;
+      // kept is eagerly checkpointed so no append's refreshByPath can evict
+      // a store-reading plan mid-batch
+      val assigned = Scope.cached(Dedup.assignSemanticClusters(fresh, idCol, vecCol,
+        centroids))
+      val kept = Scope.scopedCheckpoint(Dedup.incrementalSemanticDropAssigned(
+        fresh, assigned, store, idCol, threshold))
+      kept.write.mode("append").parquet(corpusDir)
+      afterCorpusAppend()
+      assigned.join(kept.select(col(idCol).as("__kid")),
+          assigned("id") === col("__kid"), "left_semi")
+        .write.mode("append").parquet(storeDir)
+      beforeCommit()
+    }
   }
 
   /** Streaming corpus ingest with DSIR importance FILTERING: every
@@ -367,7 +340,7 @@ object Streams {
     * dropped, matching the batch operator. One sink, no cross-batch
     * state: restarts simply replay the uncommitted batch, appending
     * byte-identical rows — recover with `dropDuplicates(idCol)` readers
-    * or [[graft.operators.Dedup.compactStore]], as with [[ingestDedup]].
+    * or [[graft.store.Stores.compactStore]], as with [[ingestDedup]].
     */
   def ingestImportanceFiltered(stream: DataFrame, idCol: String, textCol: String,
                                weightsDir: String, minLogw: Double,
@@ -375,21 +348,14 @@ object Streams {
                                hexLen: Int = 4,
                                trigger: Option[org.apache.spark.sql.streaming.Trigger] = None
                               ): org.apache.spark.sql.streaming.StreamingQuery =
-    withTrigger(stream.writeStream, trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val weights = spark.read.parquet(weightsDir)
-          batch.join(
-              graft.operators.Sampling.importanceScores(batch, idCol, textCol, weights, hexLen)
-                .filter(col("dsir_logw") >= minLogw),
-              Seq(idCol))
-            .write.mode("append").parquet(corpusDir)
-        }
-        ()
-      }
-      .start()
+    microBatches(stream, checkpointDir, trigger) { batch =>
+      val weights = batch.sparkSession.read.parquet(weightsDir)
+      batch.join(
+          graft.operators.Sampling.importanceScores(batch, idCol, textCol, weights, hexLen)
+            .filter(col("dsir_logw") >= minLogw),
+          Seq(idCol))
+        .write.mode("append").parquet(corpusDir)
+    }
 
   /** Streaming maintenance of a persisted IVF index
     * ([[graft.operators.VectorIndex]]): every micro-batch routes its
@@ -407,22 +373,15 @@ object Streams {
                         beforeCommit: () => Unit = () => (),
                         trigger: Option[org.apache.spark.sql.streaming.Trigger] = None
                        ): org.apache.spark.sql.streaming.StreamingQuery =
-    withTrigger(stream.writeStream, trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          graft.operators.VectorIndex.appendToIvfIndex(batch, indexDir, idCol, vecCol)
-          beforeCommit()
-        }
-        // the scheduled maintenance is the O(delta) FOLD, not the O(store)
-        // full rewrite — run compactIvfIndex offline when per-cell file
-        // counts warrant it
-        maybeCompact(spark, batchId, compactEvery, Seq(s"$indexDir/cells" ->
-          (_ => { graft.operators.VectorIndex.foldIvfDelta(spark, indexDir); () })))
-        ()
-      }
-      .start()
+    // the scheduled maintenance is the O(delta) FOLD, not the O(store) full
+    // rewrite — run compactIvfIndex offline when per-cell file counts
+    // warrant it
+    microBatches(stream, checkpointDir, trigger, compactEvery, Seq(s"$indexDir/cells" ->
+        ((spark, _) => { graft.operators.VectorIndex.foldIvfDelta(spark, indexDir); () }))) {
+      batch =>
+        graft.operators.VectorIndex.appendToIvfIndex(batch, indexDir, idCol, vecCol)
+        beforeCommit()
+    }
 
   /** Streaming corpus ingest behind the TRAINED quality classifier
     * ([[graft.operators.QualityModel.score]]): every micro-batch is scored
@@ -438,23 +397,18 @@ object Streams {
     * shape as [[ingestImportanceFiltered]]'s). Restart semantics: one
     * sink, at-least-once replay appends byte-identical rows — recover with
     * `dropDuplicates(idCol)` readers or
-    * [[graft.operators.Dedup.compactStore]].
+    * [[graft.store.Stores.compactStore]].
     */
   def ingestQualityFiltered(stream: DataFrame, textCol: String,
                             weights: Seq[Double], corpusDir: String,
                             checkpointDir: String,
                             trigger: Option[org.apache.spark.sql.streaming.Trigger] = None
                            ): org.apache.spark.sql.streaming.StreamingQuery =
-    withTrigger(stream.writeStream, trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.QualityModel.score(batch, textCol, weights)
-            .filter(col("quality_accept") === 1)
-            .write.mode("append").parquet(corpusDir)
-        ()
-      }
-      .start()
+    microBatches(stream, checkpointDir, trigger) { batch =>
+      graft.operators.QualityModel.score(batch, textCol, weights)
+        .filter(col("quality_accept") === 1)
+        .write.mode("append").parquet(corpusDir)
+    }
 
   /** The STREAMING counterpart of the flagship-v3 composite: one
     * micro-batch pass through the model-driven tiers in the batch
@@ -475,7 +429,7 @@ object Streams {
     *  - crash BETWEEN the corpus append and the span-store append: the
     *    replay reprocesses the batch against unchanged stores and appends
     *    BYTE-IDENTICAL corpus rows again — recover with keyed distinct
-    *    ([[graft.operators.Dedup.compactStore]] on `corpusDir`);
+    *    ([[graft.store.Stores.compactStore]] on `corpusDir`);
     *  - crash between the span-store and semantic-store appends: the
     *    replay's windows all hit the span store, the rebuilds empty, and
     *    the `n_kept > 0` corpus filter drops them — the replay appends
@@ -503,7 +457,7 @@ object Streams {
     * sizes (one small collect that both the cap warning and the store
     * pruning read) and the span tier's window relation (shared by the
     * corpus and span-store appends). All of it is released when the
-    * micro-batch's [[graft.operators.Dedup.withCacheScope]] exits.
+    * micro-batch's [[graft.exec.Scope.withCacheScope]] exits.
     * SCALING.md "Pretrain micro-batch: one pass per intermediate" has the
     * per-action job counts.
     */
@@ -522,13 +476,13 @@ object Streams {
                            dsirWeightsDir: Option[String] = None,
                            minLogw: Double = Double.NegativeInfinity,
                            // every N batches, rewrite the three sinks
-                           // keyed-distinct ([[graft.operators.Dedup.compactStore]])
+                           // keyed-distinct ([[graft.store.Stores.compactStore]])
                            // AFTER that batch's appends: bounds file counts
                            // and purges crash-replay twins instead of
                            // growing without maintenance; 0 = off. Runs at
                            // the fully-applied point, so a crash
-                           // mid-compaction heals via recoverStore and the
-                           // batch replay is the window-3 no-op.
+                           // mid-compaction heals on the next store read and
+                           // the batch replay is the window-3 no-op.
                            compactEvery: Int = 0,
                            // ingest-time doc-length cap
                            // ([[graft.functions.TextOps.clampChars]]): a wild
@@ -547,98 +501,91 @@ object Streams {
                            beforeCommit: () => Unit = () => (),
                            trigger: Option[org.apache.spark.sql.streaming.Trigger] = None
                           ): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Dedup, QualityModel}
-    withTrigger(stream.writeStream, trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        val batch =
-          if (maxDocChars <= 0) rawBatch
-          else rawBatch.withColumn(textCol,
-            graft.functions.TextOps.clampChars(col(textCol), maxDocChars))
-        val spark = batch.sparkSession
-        import spark.implicits._
-        // a source-empty micro-batch runs ZERO store reads and zero model
-        // passes — the one-task probe is pennies against the ~8 serialized
-        // actions it skips. (A crash REPLAY is not empty: it re-delivers
-        // the same rows and heals through the store-level anti-joins.)
-        if (!batch.isEmpty) Dedup.withCacheScope {
-          val qualified = QualityModel.score(batch, textCol, qualityWeights)
-            .filter(col("quality_accept") === 1)
-          val accepted = dsirWeightsDir match {
-            case None => qualified
-            case Some(wDir) =>
-              qualified.join(
-                graft.operators.Sampling.importanceScores(qualified, idCol, textCol,
-                    spark.read.parquet(wDir))
-                  .filter(col("dsir_logw") >= minLogw),
-                Seq(idCol))
-          }
-          val semStore = Dedup.readStore(spark, semStoreDir)(
-            Dedup.assignSemanticClusters(accepted.limit(0), idCol, vecCol, centroids))
-          // the quality-scored, gated, store-filtered batch is checkpointed
-          // ONCE: the assignment, the pair kernel's delta side and the
-          // `novel` anti join all read it instead of re-scoring the batch.
-          // Every checkpoint here is released with the micro-batch's scope
-          val fresh = Dedup.scopedCheckpoint(accepted.join(
-            semStore.select(col("id").as(idCol)), Seq(idCol), "left_anti"))
-          // centroid assignment computed ONCE per batch: the pair kernel
-          // and the semantic-store append both consume this relation (the
-          // former via the Assigned entry points, the latter pruned to the
-          // survivors) instead of re-running the k×dim cosine pass. No
-          // spread here: `fresh` is already post-score (spread upstream)
-          val assigned = Dedup.cached(Dedup.assignSemanticClusters(fresh,
-            idCol, vecCol, centroids))
-          // checkpoint (not persist): materializing `novel` HERE
-          // truncates its lineage, so no later parquet append's
-          // refreshByPath can evict a plan that still reads the semantic
-          // store — the sink appends below are ORDER-INDEPENDENT for
-          // correctness (the semantic append still goes last because its
-          // post-commit-crash replay is then a free no-op: the id
-          // anti-join empties the batch)
-          val novel = Dedup.scopedCheckpoint(Dedup.incrementalSemanticDropAssigned(
-            fresh, assigned, semStore, idCol, semThreshold))
-          val fpStore = Dedup.readStore(spark, spanStoreDir)(Seq.empty[String].toDF("fp"))
-          // rebuilt and newFps share one registered window relation
-          // (released with the scope), so the corpus and span-store
-          // appends run the window pass once
-          val (rebuilt, newFps) = Dedup.incrementalSpanDedup(novel, fpStore, idCol,
-            textCol, spanK)
-          // graft the rebuilt text back onto the full survivor rows
-          // (quality columns + embedding ride through), SpanDedupNodeSpec's
-          // join-back shape; the embedding column itself is not persisted
-          // to the corpus — it lives in the semantic store's assigned form
-          // n_kept = 0 means every window span-deduped away: drop the row
-          // (the batch flagship v3's 'nonempty' stage semantics — without
-          // this the corpus accumulated empty-text rows its batch
-          // counterpart never emits, and the window-2 crash replay
-          // re-appended them)
-          val kept = novel
-            .join(rebuilt.select(col("id").as("__sid"), col("text_out"), col("n_kept")),
-              novel(idCol) === col("__sid"))
-            .filter(col("n_kept") > 0)
-            .withColumn(textCol, col("text_out"))
-            .drop("__sid", "text_out", vecCol)
-          kept.write.mode("append").parquet(corpusDir)
-          afterCorpusAppend()
-          newFps.write.mode("append").parquet(spanStoreDir)
-          afterSpanAppend()
-          assigned.join(novel.select(col(idCol).as("__nid")),
-              assigned("id") === col("__nid"), "left_semi")
-            .write.mode("append").parquet(semStoreDir)
-          beforeCommit()
-        }
-        // scheduled maintenance at the fully-applied point: all three
-        // sinks hold this batch's rows, so compaction only ever removes
-        // crash-replay twins / rewrites small files — and a crash here
-        // replays the batch into the window-3 no-op (semantic store
-        // already holds its ids) before recoverStore-healed stores.
-        // Corpus keep-any is exact HERE (unlike ingestSpanDedup's): the
-        // n_kept > 0 filter makes every replay twin byte-identical.
-        maybeCompact(spark, batchId, compactEvery,
-          Seq(corpusDir -> distinctOn(spark, idCol), spanStoreDir -> distinctOn(spark, "fp"),
-              semStoreDir -> distinctOn(spark, "id")))
-        ()
+    import graft.operators.QualityModel
+    // scheduled maintenance at the fully-applied point: all three sinks
+    // hold the batch's rows, so compaction only ever removes crash-replay
+    // twins / rewrites small files — and a crash here replays the batch
+    // into the window-3 no-op (semantic store already holds its ids)
+    // before healed stores. Corpus keep-any is exact HERE (unlike
+    // ingestSpanDedup's): the n_kept > 0 filter makes every replay twin
+    // byte-identical.
+    // A source-empty micro-batch runs ZERO store reads and zero model
+    // passes — the one-task probe is pennies against the ~8 serialized
+    // actions it skips. (A crash REPLAY is not empty: it re-delivers the
+    // same rows and heals through the store-level anti-joins.)
+    microBatches(stream, checkpointDir, trigger, compactEvery,
+        Seq(corpusDir -> distinctOn(idCol), spanStoreDir -> distinctOn("fp"),
+          semStoreDir -> distinctOn("id"))) { rawBatch =>
+      val batch =
+        if (maxDocChars <= 0) rawBatch
+        else rawBatch.withColumn(textCol,
+          graft.functions.TextOps.clampChars(col(textCol), maxDocChars))
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val qualified = QualityModel.score(batch, textCol, qualityWeights)
+        .filter(col("quality_accept") === 1)
+      val accepted = dsirWeightsDir match {
+        case None => qualified
+        case Some(wDir) =>
+          qualified.join(
+            graft.operators.Sampling.importanceScores(qualified, idCol, textCol,
+                spark.read.parquet(wDir))
+              .filter(col("dsir_logw") >= minLogw),
+            Seq(idCol))
       }
-      .start()
+      val semStore = Stores.read(spark, semStoreDir).getOrElse(
+        Dedup.assignSemanticClusters(accepted.limit(0), idCol, vecCol, centroids))
+      // the quality-scored, gated, store-filtered batch is checkpointed
+      // ONCE: the assignment, the pair kernel's delta side and the
+      // `novel` anti join all read it instead of re-scoring the batch.
+      // Every checkpoint here is released with the micro-batch's scope
+      val fresh = Scope.scopedCheckpoint(accepted.join(
+        semStore.select(col("id").as(idCol)), Seq(idCol), "left_anti"))
+      // centroid assignment computed ONCE per batch: the pair kernel
+      // and the semantic-store append both consume this relation (the
+      // former via the Assigned entry points, the latter pruned to the
+      // survivors) instead of re-running the k×dim cosine pass. No
+      // spread here: `fresh` is already post-score (spread upstream)
+      val assigned = Scope.cached(Dedup.assignSemanticClusters(fresh,
+        idCol, vecCol, centroids))
+      // checkpoint (not persist): materializing `novel` HERE
+      // truncates its lineage, so no later parquet append's
+      // refreshByPath can evict a plan that still reads the semantic
+      // store — the sink appends below are ORDER-INDEPENDENT for
+      // correctness (the semantic append still goes last because its
+      // post-commit-crash replay is then a free no-op: the id
+      // anti-join empties the batch)
+      val novel = Scope.scopedCheckpoint(Dedup.incrementalSemanticDropAssigned(
+        fresh, assigned, semStore, idCol, semThreshold))
+      val fpStore = Stores.read(spark, spanStoreDir).getOrElse(Seq.empty[String].toDF("fp"))
+      // rebuilt and newFps share one registered window relation
+      // (released with the scope), so the corpus and span-store
+      // appends run the window pass once
+      val (rebuilt, newFps) = Dedup.incrementalSpanDedup(novel, fpStore, idCol,
+        textCol, spanK)
+      // graft the rebuilt text back onto the full survivor rows
+      // (quality columns + embedding ride through), SpanDedupNodeSpec's
+      // join-back shape; the embedding column itself is not persisted
+      // to the corpus — it lives in the semantic store's assigned form
+      // n_kept = 0 means every window span-deduped away: drop the row
+      // (the batch flagship v3's 'nonempty' stage semantics — without
+      // this the corpus accumulated empty-text rows its batch
+      // counterpart never emits, and the window-2 crash replay
+      // re-appended them)
+      val kept = novel
+        .join(rebuilt.select(col("id").as("__sid"), col("text_out"), col("n_kept")),
+          novel(idCol) === col("__sid"))
+        .filter(col("n_kept") > 0)
+        .withColumn(textCol, col("text_out"))
+        .drop("__sid", "text_out", vecCol)
+      kept.write.mode("append").parquet(corpusDir)
+      afterCorpusAppend()
+      newFps.write.mode("append").parquet(spanStoreDir)
+      afterSpanAppend()
+      assigned.join(novel.select(col(idCol).as("__nid")),
+          assigned("id") === col("__nid"), "left_semi")
+        .write.mode("append").parquet(semStoreDir)
+      beforeCommit()
+    }
   }
 }

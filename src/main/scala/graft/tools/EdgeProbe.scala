@@ -70,7 +70,7 @@ object EdgeProbe {
           fails += 1
           println(s"EDGE FAIL $name ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).linesIterator.take(3).mkString(" | ")}")
       } finally {
-        graft.operators.Dedup.unpersistCaches()
+        graft.exec.Scope.unpersistCaches()
         spark.sharedState.cacheManager.clearCache()
       }
     }

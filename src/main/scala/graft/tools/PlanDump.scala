@@ -56,7 +56,7 @@ object PlanDump {
       } catch { case e: Throwable =>
         println(s"[plandump] $name FAILED: ${e.getMessage}")
       } finally {
-        graft.operators.Dedup.unpersistCaches()
+        graft.exec.Scope.unpersistCaches()
         spark.sharedState.cacheManager.clearCache()
       }
     }

@@ -44,7 +44,7 @@ object RenderProbe {
       Thread.sleep(500)
       System.err.println(f"RENDER-REP $q $tag ${(System.nanoTime() - s0) / 1e9}%.2f s " +
         f"renderedChars=${renderedChars.get}%d")
-      graft.operators.Dedup.unpersistCaches()
+      graft.exec.Scope.unpersistCaches()
       spark.sharedState.cacheManager.clearCache()
     }
     for (q <- queries) { once(q, "rep0"); once(q, "rep1") }

@@ -133,7 +133,7 @@ object V3Stress {
       "; every other field verbatim")
 
     val stagesMode = sys.env.getOrElse("SPARK_GRAFT_V3_STAGES", "0") == "1"
-    graft.operators.Dedup.withCacheScope {
+    graft.exec.Scope.withCacheScope {
       // compile() is not free: DSIR's model collect, firstK centroid
       // collect, and semanticDrop's CC loop all execute at plan-build time
       val tc = System.nanoTime()

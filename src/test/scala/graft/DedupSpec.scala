@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.exec.Scope
+import graft.store.Stores
 import graft.functions.{TextOps, VectorOps}
 
 class DedupSpec extends SparkSpec {
@@ -444,20 +446,20 @@ class DedupSpec extends SparkSpec {
     assert(fs.rename(new Path(dir), state(".compact.old")))
     // a bare read would conclude "no store yet" and silently forget the
     // whole dedup history; readStore completes the swap instead
-    val healed = Dedup.readStore(spark, dir)(Seq.empty[String].toDF("fp"))
+    val healed = Stores.read(spark, dir).getOrElse(Seq.empty[String].toDF("fp"))
     assert(healed.as[String].collect().sorted.toSeq == Seq("a", "b"))
     assert(fs.exists(new Path(dir)) && !fs.exists(state(".compact.tmp")) &&
       !fs.exists(state(".compact.old")))
     // rollback branch: only the original generation survives the crash
     assert(fs.rename(new Path(dir), state(".compact.old")))
-    val rolled = Dedup.readStore(spark, dir)(Seq.empty[String].toDF("fp"))
+    val rolled = Stores.read(spark, dir).getOrElse(Seq.empty[String].toDF("fp"))
     assert(rolled.as[String].collect().sorted.toSeq == Seq("a", "b"))
     // compactStore heals a leftover mid-swap state before compacting
     assert(fs.rename(new Path(dir), state(".compact.old")))
-    val (before, after) = Dedup.compactStore(spark, dir, Seq("fp"))
+    val (before, after) = Stores.compactStore(spark, dir, Seq("fp"))
     assert(before == 2 && after == 2)
     // a genuinely-absent store still falls through to orElse
-    val none = Dedup.readStore(spark, dir + "_missing")(Seq.empty[String].toDF("fp"))
+    val none = Stores.read(spark, dir + "_missing").getOrElse(Seq.empty[String].toDF("fp"))
     assert(none.isEmpty)
   }
 
@@ -548,14 +550,14 @@ class DedupSpec extends SparkSpec {
       (20L, "x y z w x y z w q"), // repeats its own first window
       (21L, "e f g h a b c d"),   // every window already in the store
       (22L, "")).toDF("doc_id", "text")
-    val registered = Dedup.registeredCaches
-    val (rebuilt, fresh) = Dedup.withCacheScope {
+    val registered = Scope.registeredCaches
+    val (rebuilt, fresh) = Scope.withCacheScope {
       val (r, f) = Dedup.incrementalSpanDedup(delta, store, "doc_id", "text", k = 4)
       (r.orderBy("id").select("id", "n_toks", "n_kept", "text_out")
          .as[(Long, Long, Long, String)].collect().toSeq,
        f.as[String].collect().sorted.toSeq)
     }
-    assert(Dedup.registeredCaches == registered, "the shared window relation must be scoped")
+    assert(Scope.registeredCaches == registered, "the shared window relation must be scoped")
     assert(rebuilt == Seq(
       (20L, 9L, 5L, "x y z w q"),
       (21L, 8L, 0L, ""),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{CorpusStats, Dedup, Packing, QualityModel, Sampling}
+import graft.exec.Scope
 import graft.functions.{TextOps, VectorOps}
 
 /** Degenerate-input policy pins — the behaviors `tools.EdgeProbe` sweeps.
@@ -72,7 +73,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("gram-less silent-drop family: chunk, lmScore, importanceScores emit no row for evidence-free docs") {
     // chunkDocs: null/empty/whitespace docs produce zero chunks
-    val chunks = full(Dedup.withCacheScope(Packing.chunkDocs(dirtyDocs, "id", "text", 8, 8)))
+    val chunks = full(Scope.withCacheScope(Packing.chunkDocs(dirtyDocs, "id", "text", 8, 8)))
     assert(chunks.map(_.getLong(0)).toSet == Set(4L, 5L, 6L))
     // lmScore needs >= 1 bigram: only the two 6-token docs qualify
     val lm = full(CorpusStats.lmScore(dirtyDocs, "id", "text"))
@@ -130,7 +131,7 @@ class EdgeCaseSpec extends SparkSpec {
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))) == Seq((4L, 5L)),
       "only the identical well-formed twins may pair")
     val cents = Seq(0 -> Seq(1f, 0f, 0f, 0f), 1 -> Seq(0f, 1f, 0f, 0f))
-    val assigned = Dedup.withCacheScope(
+    val assigned = Scope.withCacheScope(
       full(Dedup.assignSemanticClusters(odd, "vec_id", "embedding", cents)))
     assert(assigned.size == 5, "no row may be lost or crash the assignment")
     // IVF: null/empty embeddings are dropped from index AND queries (pre-r13

@@ -266,13 +266,14 @@ class InvariantPropertySpec extends SparkSpec {
 
   test("clusters(): driver union-find and the star loop give identical membership on random graphs") {
     import graft.operators.Dedup
+    import graft.exec.Scope
     (1 to 4).foreach { round =>
       val n = 10 + rnd.nextInt(30)
       val m = 5 + rnd.nextInt(60)
       val edges = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
       val pairs = edges.toDF("id_a", "id_b")
-      def membership(cap: Long) = Dedup.withCacheScope {
+      def membership(cap: Long) = Scope.withCacheScope {
         Dedup.clusters(pairs, driverCcMaxEdges = cap)
           .as[(Long, Long)].collect().toSet
       }

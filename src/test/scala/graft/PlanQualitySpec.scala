@@ -99,7 +99,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("quality gate: an accept filter never re-evaluates the feature pipeline (r17)") {
-    // the at-scale shape: a shuffle-bearing input, so Dedup.spread inserts
+    // the at-scale shape: a shuffle-bearing input, so Scope.spread inserts
     // no barrier — exactly the case where PushDownPredicates used to inline
     // the whole UNSTAGED feature pipeline into the accept predicate
     // (SCALING.md "Retired probes": 32 lambdas / 24 splits in the Filter

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.exec.Scope
 
 /** Cluster-scoped semantic dedup (SemDeDup) — assignment argmax/tie
   * semantics, within-cluster pair scoping, the cluster-size cap, and the
@@ -380,7 +381,7 @@ class SemDedupSpec extends SparkSpec {
     (41L, Seq(-7f, 0.05f))).toDF("vec_id", "embedding")
 
   test("incremental pairs: delta-delta, delta-store both id orders, over-cap cell warned once") {
-    val (rows, warned) = dedupWarnings(Dedup.withCacheScope {
+    val (rows, warned) = dedupWarnings(Scope.withCacheScope {
       Dedup.incrementalSemanticDedupAssigned(
           Dedup.assignSemanticClusters(capDelta, "vec_id", "embedding", cents3),
           capStore, threshold = 0.95, maxClusterSize = 5)
@@ -394,7 +395,7 @@ class SemDedupSpec extends SparkSpec {
   }
 
   test("incremental drop: store wins in both id orders, delta twin keeps min, over-cap cell kept") {
-    val (kept, warned) = dedupWarnings(Dedup.withCacheScope {
+    val (kept, warned) = dedupWarnings(Scope.withCacheScope {
       Dedup.incrementalSemanticDrop(capDelta, capStore, "vec_id", "embedding",
           cents3, threshold = 0.95, maxClusterSize = 5)
         .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq

@@ -120,17 +120,45 @@ class SpecDocSpec extends SparkSpec {
       under(".claude/skills", _ => true) ++ Seq(Paths.get("README.md"))
     val toolRef = "tools[./]([A-Z]\\w*)".r
     val mainRef = "runMain (graft(?:\\.\\w+)+)".r
+    val linkRef = "\\[\\[(graft(?:\\.\\w+)+)\\]\\]".r
     val refs = files.flatMap { f =>
       val text = new String(Files.readAllBytes(f), "UTF-8")
       (toolRef.findAllMatchIn(text).map(m => s"graft.tools.${m.group(1)}") ++
         mainRef.findAllMatchIn(text).map(_.group(1))).map(_ -> f.toString)
     }
+    // fully qualified scaladoc links in the sources
+    val links = under("src", _.toString.endsWith(".scala")).flatMap { f =>
+      linkRef.findAllMatchIn(new String(Files.readAllBytes(f), "UTF-8"))
+        .map(_.group(1) -> f.toString)
+    }
     assert(refs.exists(_._1 == "graft.tools.SemTrainProbe"), s"walk found too little: $refs")
-    val dangling = refs.filterNot { case (name, _) =>
-      scala.util.Try(Class.forName(name, false, getClass.getClassLoader)).isSuccess
-    }.distinct
+    assert(links.exists(_._1 == "graft.operators.VectorIndex"), s"walk found too little: $links")
+    val loader = getClass.getClassLoader
+    def load(name: String) = scala.util.Try(Class.forName(name, false, loader)).toOption
+    // a class, an object or a nested type: `a.B.C` may be `a.B$C`, and an
+    // object compiles to a `$`-suffixed class
+    def types(name: String): Seq[Class[_]] = {
+      val parts = name.split('.')
+      (1 to math.min(3, parts.length - 1)).flatMap { nested =>
+        val outer = parts.dropRight(nested - 1).mkString(".")
+        val binary = (outer +: parts.takeRight(nested - 1)).mkString("$")
+        Seq(binary, binary + "$").flatMap(load)
+      }
+    }
+    def isPackage(name: String) = loader.getResource(name.replace('.', '/')) != null
+    // a link names a package, a type, or a member of a type: a method, a
+    // field or a nested type, as the compiled class declares it
+    def linkResolves(link: String): Boolean = types(link).nonEmpty || isPackage(link) || {
+      val (owner, member) = (link.take(link.lastIndexOf('.')), link.drop(link.lastIndexOf('.') + 1))
+      types(owner).exists { c =>
+        (c.getDeclaredMethods.map(_.getName) ++ c.getDeclaredFields.map(_.getName))
+          .exists(n => n == member || n.endsWith("$$" + member))
+      }
+    }
+    val dangling = (refs.filterNot { case (name, _) => load(name).isDefined } ++
+      links.filterNot { case (link, _) => linkResolves(link) }).distinct
     assert(dangling.isEmpty,
-      "references to classes that do not exist: " +
+      "references to classes or members that do not exist: " +
         dangling.map { case (n, f) => s"$n ($f)" }.mkString(", "))
   }
 }

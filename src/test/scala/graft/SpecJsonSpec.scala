@@ -525,13 +525,13 @@ class SpecJsonSpec extends SparkSpec {
     // compared as id sets: the ContextCleaner may reclaim earlier tests'
     // relations meanwhile, which must not read as this test's growth
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
-    val (rdds0, registered0) = (persisted, graft.operators.Dedup.registeredCaches)
+    val (rdds0, registered0) = (persisted, graft.exec.Scope.registeredCaches)
     val v3 = SpecJson.fromJson(SparkEntry.llmPipelineV3Json)
     for (_ <- 0 until 3) PipelineCompiler.withCompiledCacheScope {
       val nodes = PipelineCompiler.compileNodes(v3, spark, Map("dir" -> sf))
       assert(nodes("train").count() > 0)
     }
-    assert(graft.operators.Dedup.registeredCaches == registered0,
+    assert(graft.exec.Scope.registeredCaches == registered0,
       "a scoped compile left a relation in the cache registry")
     val grown = persisted.diff(rdds0)
     assert(grown.isEmpty, s"persistent RDDs left behind: $grown")

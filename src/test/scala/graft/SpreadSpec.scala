@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.exec.Scope
 
-/** Pins the [[graft.operators.Dedup.spread]] policy — which plans get the
+/** Pins the [[graft.exec.Scope.spread]] policy — which plans get the
   * small-input repartition+barrier and which are left alone. Both failure
   * modes this guards against were hit in round 13 and are expensive to
   * re-diagnose: probing a shuffle-bearing plan executes its map stages
@@ -26,14 +26,14 @@ class SpreadSpec extends SparkSpec {
 
   test("a narrow single-row-group parquet scan spreads to full parallelism") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val out = Dedup.spread(docs)
+    val out = Scope.spread(docs)
     assert(hasSpreadExchange(out), "raw small scan must gain the spread repartition")
     assert(partitionsOf(out) == spark.sparkContext.defaultParallelism)
   }
 
   test("spread output is row-identical to its input") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    assert(Dedup.spread(docs).orderBy("doc_id").collect()
+    assert(Scope.spread(docs).orderBy("doc_id").collect()
       sameElements docs.orderBy("doc_id").collect())
   }
 
@@ -45,7 +45,7 @@ class SpreadSpec extends SparkSpec {
     val limited = docs.limit(10)
     val setop = docs.select("doc_id").except(docs.select("doc_id").limit(1))
     for (df <- Seq(agg, joined, limited, setop))
-      assert(!hasSpreadExchange(Dedup.spread(df)),
+      assert(!hasSpreadExchange(Scope.spread(df)),
         s"spread must no-op on:\n${df.queryExecution.analyzed.nodeName}")
   }
 
@@ -55,7 +55,7 @@ class SpreadSpec extends SparkSpec {
     try {
       cached.count()
       val leaf = org.apache.spark.sql.graft.Bridge.cachedRelation(cached).get
-      assert(!hasSpreadExchange(Dedup.spread(leaf)),
+      assert(!hasSpreadExchange(Scope.spread(leaf)),
         "an InMemoryRelation leaf inherits its cached partitioning")
     } finally cached.unpersist(blocking = false)
     // foreachBatch hands micro-batches in as LogicalRDD-rooted frames with
@@ -63,7 +63,7 @@ class SpreadSpec extends SparkSpec {
     val rddBacked = spark.createDataFrame(
       spark.sparkContext.parallelize(docs.collect().toSeq, 2), docs.schema)
     assert(partitionsOf(rddBacked) == 2)
-    val out = Dedup.spread(rddBacked)
+    val out = Scope.spread(rddBacked)
     assert(hasSpreadExchange(out) &&
       partitionsOf(out) == spark.sparkContext.defaultParallelism,
       "a few-partition LogicalRDD input must spread")

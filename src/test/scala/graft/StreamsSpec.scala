@@ -460,7 +460,7 @@ class StreamsSpec extends SparkSpec {
     // replay appended byte-identical rows; keyed distinct restores exactly
     assert(corpusRows.count(_._1 == 1L) == 2, s"got $corpusRows")
     assert(corpusRows.distinct.size == 1, "window-1 twins must be identical")
-    graft.operators.Dedup.compactStore(spark, corpus, Seq("doc_id"))
+    graft.store.Stores.compactStore(spark, corpus, Seq("doc_id"))
     assert(corpusRows == Seq((1L, 17L)), s"got $corpusRows")
     // window 2: crash between the span-store and semantic-store appends —
     // the replay sees every window in the span store, the rebuild empties,
@@ -548,7 +548,7 @@ class StreamsSpec extends SparkSpec {
     assert(storeIds.sorted == Seq(1L, 2L, 11L), s"got $storeIds")
     // the documented recovery — keyed distinct via the compactStore
     // maintenance op — restores exact crash-free corpus content
-    graft.operators.Dedup.compactStore(spark, corpus, Seq("vec_id"))
+    graft.store.Stores.compactStore(spark, corpus, Seq("vec_id"))
     val recovered = spark.read.parquet(corpus).select("vec_id").as[Long].collect().toSeq
     assert(recovered.sorted == Seq(1L, 2L, 11L), s"got $recovered")
     // crash window 2: both appends complete, the offset never commits —
@@ -670,7 +670,7 @@ class StreamsSpec extends SparkSpec {
     // compared as id sets: the ContextCleaner may reclaim earlier tests'
     // relations meanwhile, which must not read as this test's growth
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
-    val (rdds0, registered0) = (persisted, graft.operators.Dedup.registeredCaches)
+    val (rdds0, registered0) = (persisted, graft.exec.Scope.registeredCaches)
     val qs = Seq(
       graft.streaming.Streams.ingestPretrainCorpus(
         pre.toDF().toDF("doc_id", "text", "embedding"), "doc_id", "text", "embedding",
@@ -696,7 +696,7 @@ class StreamsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/p/corpus").count() > 0 &&
       spark.read.parquet(s"$dir/s/corpus").count() > 0 &&
       spark.read.parquet(s"$dir/w/corpus").count() == 9, "every ingest must have run")
-    assert(graft.operators.Dedup.registeredCaches == registered0,
+    assert(graft.exec.Scope.registeredCaches == registered0,
       "a micro-batch left a relation in the dedup cache registry")
     val grown = persisted.diff(rdds0)
     assert(grown.isEmpty, s"persistent RDDs left behind: $grown")

@@ -422,6 +422,35 @@ class VectorIndexSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/cells").count() == n0)
   }
 
+  test("one append plus one fold (purge path included) runs a bounded number of jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfidx_jobs").toString + "/idx"
+    VectorIndex.buildIvfIndex(emb.filter(col("vec_id") < 200), dir, nlist = 4,
+      normalize = false)
+    // one pending takedown, so the fold runs the tombstone purge too
+    VectorIndex.deleteFromIvfIndex(spark, dir, emb.filter(col("vec_id") < 5))
+    val delta = emb.filter(col("vec_id") >= 200 && col("vec_id") < 260)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.Bridge.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val (appended, folded) = try {
+      val a = VectorIndex.appendToIvfIndex(delta, dir)
+      val f = VectorIndex.foldIvfDelta(spark, dir)
+      org.apache.spark.sql.graft.Bridge.flushListenerBus(spark)
+      (a, f)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(appended == 60 && folded == 60)
+    assert(spark.read.parquet(s"$dir/cells").count() == 255)
+    assert(!new java.io.File(s"$dir/tombstones").exists, "the fold must purge the takedown")
+    // 31 jobs, measured before the store protocols moved into one module:
+    // the tier reads, the id anti join, the routing checkpoint, the
+    // append, the tombstone purge and the fold
+    assert(jobs.get <= 31, s"${jobs.get} jobs")
+  }
+
   test("auto-nlist sizing: sqrt-N, training-cost-capped, corpus-bounded") {
     // the measured curve (SCALING.md "auto-nlist training-cost curve",
     // 1M sample, dim 64): k=1000 → 33 s, 3163 → 157 s, 10000 → 767 s;
