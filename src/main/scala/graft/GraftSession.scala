@@ -75,6 +75,17 @@ object GraftSession {
       // churn costs every executor JVM CPU that should be running tasks.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
+      // the `file:` scheme (only) through the engine's local filesystem:
+      // without Hadoop's native library the stock one forks `chmod` for
+      // every file, `.crc` and directory a commit creates and `readlink`
+      // on every streaming-checkpoint rename (224 forks, about 3 ms each,
+      // in one timed perfbench ingest round); same bits, same checksums,
+      // no process (SCALING.md "Store I/O on local disk"). Hadoop caches
+      // the `file:` FileSystem per JVM, so this holds when the session is
+      // the JVM's first user of it.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.store.LocalStoreFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.store.LocalStoreFs].getName)
       // parameterized overrides (optimization guide §2.3/§6 "measure both"):
       // scale-dependent knobs — shuffle/IO codec, advisory partition size,
       // scan split size — have no universal value, so they stay env-tunable

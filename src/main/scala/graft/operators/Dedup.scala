@@ -558,36 +558,132 @@ object Dedup {
     * doc, and without every non-minimum member of a duplicate component
     * among the remaining new docs. `flagged` is built inside the rule's
     * operator scope, so every relation it persists is released with it.
+    *
+    * A graph of at most `driverMaxEdges` pairs (the [[clusters]] gate) is
+    * decided on the driver from ONE `head` of the materialized pairs — the
+    * same rule, the same union-find by minimum id as [[clusters]]' driver
+    * path — and the losers come back as a local relation: one action
+    * where the distributed rule runs about seven. Above the gate the rule
+    * runs distributed.
     */
-  private def firstSeenWins(delta: DataFrame, idCol: String)(flagged: => DataFrame): DataFrame = {
+  private[graft] def firstSeenWins(delta: DataFrame, idCol: String,
+      driverMaxEdges: Long = DriverCcMaxEdges)(flagged: => DataFrame): DataFrame = {
     // scope every relation this persists (the pair result and the
     // clusters() membership) so batch ingest loops accumulate nothing in the
-    // session registry; the small loser id set is eagerly checkpointed so
-    // the returned frame survives the scope exit (an enclosing
-    // withCacheScope releases the checkpoint, else the ContextCleaner does
-    // once the result is unreferenced)
+    // session registry; on the distributed path the small loser id set is
+    // eagerly checkpointed so the returned frame survives the scope exit
+    // (an enclosing withCacheScope releases the checkpoint, else the
+    // ContextCleaner does once the result is unreferenced)
     val losers = operatorScope {
       val pairs = flagged
-      val vsStore = pairs.filter(col("a_new") && !col("b_new")).select(col("id_a").as("id"))
-        .union(pairs.filter(col("b_new") && !col("a_new")).select(col("id_b").as("id")))
-        .distinct()
-      // Within-delta dedup runs among STORE-SURVIVORS only. A store-dropped
-      // doc must neither represent nor link survivors: if the component min
-      // is itself a store dup, electing it would drop every member — losing
-      // content that duplicates nothing kept anywhere (sequential
-      // first-seen-wins keeps a survivor whose only near-dup was itself
-      // dropped against the store).
-      val survivorPairs = pairs.filter(col("a_new") && col("b_new"))
-        .join(vsStore.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
-        .join(vsStore.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
-      val withinDelta = clusters(survivorPairs)
-        .filter(col("id") =!= col("cluster")).select("id")
-      scopedCheckpoint(vsStore.union(withinDelta).distinct())
+      val idType = pairs.schema("id_a").dataType
+      val cap = math.min(driverMaxEdges, Int.MaxValue - 1L).toInt
+      val small =
+        if (!driverUnionFind(idType)) None
+        else Some(pairs.select("id_a", "id_b", "a_new", "b_new").head(cap + 1))
+          .filter(_.length <= cap)
+      small.map(driverLosers(pairs.sparkSession, idType, _)).getOrElse {
+        val vsStore = pairs.filter(col("a_new") && !col("b_new")).select(col("id_a").as("id"))
+          .union(pairs.filter(col("b_new") && !col("a_new")).select(col("id_b").as("id")))
+          .distinct()
+        // Within-delta dedup runs among STORE-SURVIVORS only. A store-dropped
+        // doc must neither represent nor link survivors: if the component min
+        // is itself a store dup, electing it would drop every member — losing
+        // content that duplicates nothing kept anywhere (sequential
+        // first-seen-wins keeps a survivor whose only near-dup was itself
+        // dropped against the store).
+        val survivorPairs = pairs.filter(col("a_new") && col("b_new"))
+          .join(vsStore.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
+          .join(vsStore.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
+        val withinDelta = clusters(survivorPairs, driverCcMaxEdges = driverMaxEdges)
+          .filter(col("id") =!= col("cluster")).select("id")
+        scopedCheckpoint(vsStore.union(withinDelta).distinct())
+      }
     }
     delta.join(losers, delta(idCol) === losers("id"), "left_anti")
   }
 
+  /** [[firstSeenWins]]' rule over collected `(id_a, id_b, a_new, b_new)`
+    * rows, as the distributed form evaluates it: a flag counts only when
+    * it is TRUE (a null flag passes no filter), and null or self pairs
+    * link nothing. Returns the losers as a local `id` relation.
+    */
+  private def driverLosers(spark: org.apache.spark.sql.SparkSession,
+      idType: org.apache.spark.sql.types.DataType,
+      edges: Array[org.apache.spark.sql.Row]): DataFrame = {
+    def is(r: org.apache.spark.sql.Row, i: Int, v: Boolean) = !r.isNullAt(i) && r.getBoolean(i) == v
+    val vsStore = edges.iterator.flatMap { r =>
+      if (is(r, 2, true) && is(r, 3, false)) Option(r.get(0))
+      else if (is(r, 3, true) && is(r, 2, false)) Option(r.get(1))
+      else None
+    }.toSet
+    val survivorEdges = edges.iterator.filter(r => is(r, 2, true) && is(r, 3, true))
+      .map(r => (r.get(0), r.get(1)))
+      .filter { case (a, b) => a != null && b != null && a != b && !vsStore(a) && !vsStore(b) }
+    val withinDelta = minIdComponents(survivorEdges).collect { case (n, root) if n != root => n }
+    val rows: java.util.List[org.apache.spark.sql.Row] = {
+      import scala.jdk.CollectionConverters._
+      (vsStore ++ withinDelta).toSeq.map(org.apache.spark.sql.Row(_)).asJava
+    }
+    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id", idType))))
+  }
+
   // --- Duplicate clustering (connected components) --------------------------
+
+  /** The edge-count gate of the driver union-find ([[clusters]],
+    * [[firstSeenWins]]): a graph of at most this many pairs (a few MB of
+    * scalar ids) is solved on the driver.
+    */
+  private val DriverCcMaxEdges = 100000L
+
+  /** Can the driver union-find decide a graph over ids of type `t`?
+    * Scalar ids are runtime-Comparable, which the min-id representative
+    * needs (binary and nested ids run distributed, where Catalyst supplies
+    * the order). Floating-point ids run distributed too: NaN equals
+    * itself in Spark but not on the JVM, so the union-find's root walk
+    * would never end on a NaN id.
+    */
+  private def driverUnionFind(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    t match {
+      case _: StructType | _: ArrayType | _: MapType | BinaryType | NullType |
+           FloatType | DoubleType => false
+      case _ => true
+    }
+  }
+
+  /** Union-find by minimum id over non-null `edges`: every node of the
+    * graph → the smallest id of its component, the representative
+    * [[clusters]]' star rounds converge to. Strings compare the way
+    * Catalyst's UTF8String does (unsigned UTF-8 bytes): String.compareTo
+    * orders UTF-16 code units, which puts supplementary characters
+    * elsewhere, and the representative must not depend on which side of
+    * the size gate a graph falls.
+    */
+  private def minIdComponents(edges: Iterator[(Any, Any)]): Map[Any, Any] = {
+    def lt(a: Any, b: Any) = (a, b) match {
+      case (sa: String, sb: String) =>
+        org.apache.spark.unsafe.types.UTF8String.fromString(sa)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(sb)) < 0
+      case _ => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
+    }
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    val nodes = scala.collection.mutable.LinkedHashSet.empty[Any]
+    edges.foreach { case (a, b) =>
+      nodes += a; nodes += b
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    nodes.iterator.map(n => n -> find(n)).toMap
+  }
 
   /** Connected components over a near-duplicate pair list: returns
     * `(id, cluster)` where `cluster` is the smallest id reachable from `id`
@@ -629,7 +725,7 @@ object Dedup {
     * path).
     */
   def clusters(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
-               maxIter: Int = 50, driverCcMaxEdges: Long = 100000L): DataFrame = {
+               maxIter: Int = 50, driverCcMaxEdges: Long = DriverCcMaxEdges): DataFrame = {
     // The star rounds only need a TOTAL ORDER on ids (least/greatest/min),
     // which every atomic Spark type has — so run on the NATIVE id type. The
     // former cast("long") silently nulled string/hash ids (non-ANSI cast),
@@ -674,50 +770,14 @@ object Dedup {
     // was that same pass, paid on EVERY call).
     val deduped = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-    // ids of scalar orderable types are runtime-Comparable — the driver
-    // path needs that total order for the min-id representative (binary /
-    // nested ids fall through to the star loop, whose ordering Catalyst
-    // supplies)
-    val driverOrderable = aT match {
-      case _: org.apache.spark.sql.types.StructType |
-           _: org.apache.spark.sql.types.ArrayType |
-           _: org.apache.spark.sql.types.MapType |
-           org.apache.spark.sql.types.BinaryType |
-           org.apache.spark.sql.types.NullType => false
-      case _ => true
-    }
-    if (driverOrderable) {
+    if (driverUnionFind(aT)) {
       val cap = math.min(driverCcMaxEdges, Int.MaxValue - 1L).toInt
       val edges = deduped.head(cap + 1)
       if (edges.length <= cap) {
-        // Strings must compare the way Catalyst's UTF8String does (unsigned
-        // UTF-8 bytes) — String.compareTo is UTF-16 code units, which orders
-        // supplementary characters differently, and the min-id REPRESENTATIVE
-        // must be bit-identical to the star loop's regardless of which path
-        // the edge-count gate picks.
-        def lt(a: Any, b: Any) = (a, b) match {
-          case (sa: String, sb: String) =>
-            org.apache.spark.unsafe.types.UTF8String.fromString(sa)
-              .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(sb)) < 0
-          case _ => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-        }
-        val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-        def find(x: Any): Any = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x // path compression
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        edges.foreach { row =>
-          val (ra, rb) = (find(row.get(0)), find(row.get(1)))
-          if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-        }
-        val nodes = edges.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).toSet
         val rows: java.util.List[org.apache.spark.sql.Row] = {
           import scala.jdk.CollectionConverters._
-          nodes.iterator.map(n => org.apache.spark.sql.Row(n, find(n)))
-            .toSeq.asJava
+          minIdComponents(edges.iterator.map(r => (r.get(0), r.get(1))))
+            .iterator.map { case (n, root) => org.apache.spark.sql.Row(n, root) }.toSeq.asJava
         }
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("id", aT),

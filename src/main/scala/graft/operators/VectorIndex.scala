@@ -241,7 +241,7 @@ object VectorIndex {
 
   /** The pinned coarse quantizer, driver-side (nlist × dim doubles). */
   def readCentroids(spark: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
-    spark.read.parquet(s"$dir/centroids")
+    Stores.readParquet(spark, s"$dir/centroids")
       .select("cell", "centroid").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
 
@@ -518,16 +518,18 @@ object VectorIndex {
     * (the fold/compact rule); concurrent QUERIES may hit a mid-swap cell
     * (FileNotFoundException → retry), the existing fold caveat. Returns
     * rows physically removed. `beforeRetire` is a test seam firing between
-    * the cell swaps and the tombstone-snapshot removal.
+    * the cell swaps and the tombstone-snapshot removal, `beforeSwap` one
+    * between staging the survivors and the first cell swap.
     */
   def purgeTombstones(spark: SparkSession, dir: String,
-                      beforeRetire: () => Unit = () => ()): Long = {
+                      beforeRetire: () => Unit = () => (),
+                      beforeSwap: () => Unit = () => ()): Long = {
     Stores.heal(spark, cellsPath(dir))
     val snapshot = Stores.listTierDataFiles(spark, tombstonesPath(dir))
     if (snapshot.isEmpty) return 0L
-    val victims = spark.read.parquet(snapshot.map(_.toString): _*)
+    val victims = Stores.readParquet(spark, snapshot.map(_.toString): _*)
       .select("id").distinct().localCheckpoint(true)
-    val cells = spark.read.parquet(cellsPath(dir))
+    val cells = Stores.readParquet(spark, cellsPath(dir))
     // ONE ids+cell column-pruned scan: which cells hold victims, and how
     // many rows leave (the purge count)
     val victimCells = cells.join(Joins.maybeBroadcast(victims), Seq("id"), "left_semi")
@@ -538,7 +540,8 @@ object VectorIndex {
       // survivors of ONLY the touched cells, in the same partitioned shape
       // (a cell whose every row is a victim stages nothing — its swap
       // simply retires the canonical dir)
-      Stores.swapPartitions(spark, cellsPath(dir), touched.map(c => s"cell=$c").toSeq) { out =>
+      Stores.swapPartitions(spark, cellsPath(dir), touched.map(c => s"cell=$c").toSeq,
+          beforeSwap) { out =>
         cells.filter(col("cell").isin(touched.toIndexedSeq: _*))
           .join(Joins.maybeBroadcast(victims), Seq("id"), "left_anti")
           .repartition(col("cell"))
@@ -560,7 +563,7 @@ object VectorIndex {
     */
   def readIvfCells(spark: SparkSession, dir: String): DataFrame = {
     Stores.heal(spark, cellsPath(dir))
-    val cells = minusTombstones(spark, dir, spark.read.parquet(cellsPath(dir)))
+    val cells = minusTombstones(spark, dir, Stores.readParquet(spark, cellsPath(dir)))
     readDeltaOpt(spark, dir) match {
       case None => cells
       case Some(delta) =>
@@ -583,7 +586,7 @@ object VectorIndex {
     val spark = delta.sparkSession
     Stores.heal(spark, cellsPath(dir))
     val centroids = readCentroids(spark, dir)
-    val cells = spark.read.parquet(cellsPath(dir))
+    val cells = Stores.readParquet(spark, cellsPath(dir))
     val codec = codecOf(cells) // self-describing store — append matches it
     // known ids = the VISIBLE store: a tombstoned cells copy no longer
     // counts, so a deleted id re-appends organically (lands in the delta
@@ -647,8 +650,8 @@ object VectorIndex {
     val snapshot = listDeltaDataFiles(spark, dir)
     if (snapshot.isEmpty) 0L
     else {
-      val d = spark.read.parquet(snapshot.map(_.toString): _*)
-      val cells = spark.read.parquet(cellsPath(dir))
+      val d = Stores.readParquet(spark, snapshot.map(_.toString): _*)
+      val cells = Stores.readParquet(spark, cellsPath(dir))
       val fresh = d.dropDuplicates("id")
         .join(cells.select("id"), Seq("id"), "left_anti")
         .localCheckpoint(true) // sever from both stores before mutating them
@@ -684,7 +687,7 @@ object VectorIndex {
     val snapshot = listDeltaDataFiles(spark, dir)
     val deltaSnapshot =
       if (snapshot.isEmpty) None
-      else Some(spark.read.parquet(snapshot.map(_.toString): _*))
+      else Some(Stores.readParquet(spark, snapshot.map(_.toString): _*))
     val res = Stores.rewriteStore(spark, cellsPath(dir)) { (df, out) =>
       val all = deltaSnapshot match {
         case None => df
@@ -753,7 +756,7 @@ object VectorIndex {
     // later fold of that id). One ids-only column-pruned scan covers the
     // visible count and the present-victims projection.
     val cellIds = minusTombstones(spark, dir,
-        spark.read.parquet(cellsPath(dir)).select("id"))
+        Stores.readParquet(spark, cellsPath(dir)).select("id"))
       .localCheckpoint(true)
     val cBefore = cellIds.count()
     val victims = cellIds.join(Joins.maybeBroadcast(del), Seq("id"), "left_semi")
@@ -774,7 +777,7 @@ object VectorIndex {
     Stores.heal(spark, cellsPath(dir))
     val centroids = readCentroids(spark, dir)
     val probeN = math.min(nprobe, centroids.size)
-    val raw = spark.read.parquet(cellsPath(dir))
+    val raw = Stores.readParquet(spark, cellsPath(dir))
     val codec = codecOf(raw)
     import graft.functions.VectorOps
     // a normalized index normalizes the QUERY side too (self-describing,

@@ -232,23 +232,16 @@ object IngestCompiler {
     }
   }
 
-  /** Advisory single-writer lock on an ingest checkpoint directory.
-    *
-    * Mechanics: `<checkpointDir>/graft_ingest.lock` is created
-    * CREATE-EXCLUSIVE (the filesystem arbitrates a same-instant race)
-    * holding `pid/host/started` for the error message; a daemon thread
-    * refreshes the file's mtime every `staleMs / 4` while `body` runs.
-    * A second invoker seeing a FRESH lock (mtime younger than `staleMs`)
-    * fails fast with the holder's identity. A STALE lock is a crashed
-    * holder (kill -9 skips the finally-delete): reclaim goes through an
-    * atomic rename to a caller-unique tombstone — of N racing reclaimers
-    * exactly one rename succeeds, and everyone then re-enters the
-    * create-exclusive gate, so a reclaim can never delete a lock another
-    * invoker just created. The streaming checkpoint itself stays the
-    * source of truth for data correctness (a reclaimed-but-alive zombie
-    * holder is still fenced by checkpoint file atomicity); the lock
-    * exists to fail fast and NAME the conflict instead of letting two
-    * rounds interleave offsets.
+  /** Advisory single-writer lock on an ingest checkpoint directory:
+    * `<checkpointDir>/graft_ingest.lock` held as a
+    * [[graft.store.Stores.withLease]] lease (create-exclusive, mtime
+    * heartbeat every `staleMs / 4`, stale-holder reclaim through an atomic
+    * rename). A second invoker seeing a FRESH lock fails fast with the
+    * holder's identity. The streaming checkpoint itself stays the source
+    * of truth for data correctness (a reclaimed-but-alive zombie holder
+    * is still fenced by checkpoint file atomicity); the lock exists to
+    * fail fast and NAME the conflict instead of letting two rounds
+    * interleave offsets.
     */
   private[graft] def withIngestLock[T](spark: SparkSession, checkpointDir: String,
                                        staleMs: Long)(body: => T): T = {
@@ -257,58 +250,18 @@ object IngestCompiler {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
     val lock = new Path(dir, "graft_ingest.lock")
-    val me = s"pid=${ProcessHandle.current().pid()} " +
-      s"host=${java.net.InetAddress.getLocalHost.getHostName} " +
-      s"started=${java.time.Instant.now()}"
-    def holderOf: String =
-      try {
-        val in = fs.open(lock)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      } catch { case _: Exception => "<unreadable holder>" }
-    def tryReclaimStale(): Unit = {
-      val st = try Some(fs.getFileStatus(lock))
-        catch { case _: java.io.FileNotFoundException => None }
-      st.foreach { s =>
-        val age = System.currentTimeMillis() - s.getModificationTime
-        if (age < staleMs) throw new IllegalStateException(
-          s"ingest checkpoint $checkpointDir is locked by [$holderOf] " +
-            s"(heartbeat ${age / 1000}s ago, stale after ${staleMs / 1000}s): " +
+    graft.store.Stores.withLease(fs, lock, staleMs) { (holder, age) =>
+      new IllegalStateException(age match {
+        case Some(ms) =>
+          s"ingest checkpoint $checkpointDir is locked by [$holder] " +
+            s"(heartbeat ${ms / 1000}s ago, stale after ${staleMs / 1000}s): " +
             "one RunSpec invocation per checkpoint — wait for it, or delete " +
-            s"$lock if the holder is known dead")
-        // stale: atomic-rename tombstone, unique per reclaimer — the one
-        // winner deletes it; losers find the lock gone (or recreated by a
-        // faster winner) and are arbitrated by create-exclusive below
-        val tomb = new Path(dir,
-          s"graft_ingest.lock.reclaimed.${ProcessHandle.current().pid()}")
-        if (fs.rename(lock, tomb)) fs.delete(tomb, false)
-        ()
-      }
-    }
-    tryReclaimStale()
-    val out =
-      try fs.create(lock, false)
-      catch { case _: java.io.IOException =>
-        throw new IllegalStateException(
-          s"ingest checkpoint $checkpointDir is locked by [$holderOf]: " +
+            s"$lock if the holder is known dead"
+        case None =>
+          s"ingest checkpoint $checkpointDir is locked by [$holder]: " +
             "one RunSpec invocation per checkpoint — a concurrent round just " +
-            "acquired it")
-      }
-    try out.write(me.getBytes("UTF-8")) finally out.close()
-    val hb = new Thread(() => {
-      val interval = math.max(200L, staleMs / 4)
-      try while (!Thread.interrupted()) {
-        Thread.sleep(interval)
-        // refresh mtime only; a transient FS error just skips one beat
-        try fs.setTimes(lock, System.currentTimeMillis(), -1)
-        catch { case _: Exception => () }
-      } catch { case _: InterruptedException => () }
-    }, s"graft-ingest-lock-heartbeat-${lock.hashCode()}")
-    hb.setDaemon(true)
-    hb.start()
-    try body
-    finally {
-      hb.interrupt()
-      try { fs.delete(lock, false); () } catch { case _: Exception => () }
-    }
+            "acquired it"
+      })
+    }(body)
   }
 }

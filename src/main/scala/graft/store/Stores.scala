@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Every protocol of a parquet store on disk, in one place: what counts as
   * committed data, how a store is read, how a rewrite swaps a new
@@ -54,7 +55,55 @@ object Stores {
     */
   def read(spark: SparkSession, dir: String): Option[DataFrame] = {
     heal(spark, dir)
-    if (hasCommittedData(spark, dir)) Some(spark.read.parquet(dir)) else None
+    if (hasCommittedData(spark, dir)) Some(readParquet(spark, dir)) else None
+  }
+
+  /** `spark.read.parquet(paths: _*)` without its schema job. Spark's
+    * non-merging schema inference opens ONE data file's footer, in a job
+    * of its own, and takes the Spark schema its writer stored there; this
+    * reads one data file's footer on the driver and hands that schema to
+    * `spark.read.schema`. Partition columns (the vector index's `cell=N`
+    * directories) are still discovered from the paths, with the same
+    * inferred types. A footer without a Spark schema (a file another
+    * writer made), a path holding no `.parquet` file, or a session that
+    * merges schemas reads through inference, as before.
+    */
+  private[graft] def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths.map(new Path(_))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** The Spark schema in the footer of the first data file under `paths`. */
+  private[graft] def footerSchema(spark: SparkSession, paths: Seq[Path]): Option[StructType] =
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
+    else paths.iterator.flatMap(p => firstDataFile(fsOf(spark, p), p)).nextOption().flatMap { st =>
+      import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+      val footer = org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+        .readFooter(org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
+          spark.sparkContext.hadoopConfiguration), SKIP_ROW_GROUPS)
+      Option(footer.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)).flatMap { json =>
+        scala.util.Try(DataType.fromJson(json)).toOption.collect { case s: StructType => s }
+      }
+    }
+
+  // where Spark's parquet writer stores the row schema (ParquetReadSupport.SPARK_METADATA_KEY)
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** `p` itself when it is a file, else the first `.parquet` file under
+    * it, descending through partition directories; None when there is
+    * none (or `p` does not exist — the inference read then reports it).
+    */
+  private def firstDataFile(fs: FileSystem, p: Path): Option[FileStatus] = {
+    val st = try Some(fs.getFileStatus(p)) catch { case _: java.io.FileNotFoundException => None }
+    st.flatMap { s =>
+      if (s.isFile) Some(s)
+      else {
+        val (files, dirs) = fs.listStatus(p).filter(isDataEntry).partition(_.isFile)
+        files.headOption
+          .orElse(dirs.iterator.flatMap(d => firstDataFile(fs, d.getPath)).nextOption())
+      }
+    }
   }
 
   /** Finish or roll back whatever swap a crash interrupted in `dir` — a
@@ -97,13 +146,13 @@ object Stores {
     heal(spark, storeDir)
     val dir = new Path(storeDir)
     val fs = fsOf(spark, dir)
-    val before = spark.read.parquet(storeDir)
+    val before = readParquet(spark, storeDir)
     val rows0 = before.count()
     val (tmp, old) = generations(storeDir)
     if (fs.exists(tmp)) fs.delete(tmp, true)
     if (fs.exists(old)) fs.delete(old, true)
     rewrite(before, tmp.toString)
-    val rows1 = spark.read.parquet(tmp.toString).count()
+    val rows1 = readParquet(spark, tmp.toString).count()
     // swap: two renames, then drop the old generation. A crash BETWEEN the
     // renames leaves the canonical path empty (data at .compact.old /
     // .compact.tmp) — readers go through [[read]], which heals the swap
@@ -153,39 +202,66 @@ object Stores {
     * `dir/.purge.old` and the staged one into its place. A partition that
     * `stage` leaves unwritten is retired. The caller decides what the new
     * content is; [[heal]] finishes or rolls back a swap cut short.
+    *
+    * The whole swap holds the lease `dir/.purge.lease` ([[withLease]]):
+    * a [[heal]] — every reader of the store runs one — leaves a store
+    * under a live lease alone. Without it, a reader healing between
+    * `stage` and the first rename took the staged survivors for a crashed
+    * swap's leftovers and deleted them, and the swap then retired every
+    * touched partition. A second swap of the same store fails fast while
+    * the lease is live; a crashed swap's lease goes stale after
+    * [[SwapLeaseStaleMs]], and the next heal or swap recovers the store.
+    * `beforeSwap` is a test seam firing between `stage` and the renames.
     */
-  def swapPartitions(spark: SparkSession, dir: String, parts: Seq[String])(
-      stage: String => Unit): Unit = {
+  def swapPartitions(spark: SparkSession, dir: String, parts: Seq[String],
+                     beforeSwap: () => Unit = () => ())(stage: String => Unit): Unit = {
     val (tmpRoot, oldRoot) = (new Path(dir, ".purge.tmp"), new Path(dir, ".purge.old"))
     val fs = fsOf(spark, tmpRoot)
-    if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
-    if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
-    stage(tmpRoot.toString)
-    fs.mkdirs(oldRoot)
-    parts.foreach { name =>
-      val canonical = new Path(dir, name)
-      if (fs.exists(canonical) && !fs.rename(canonical, new Path(oldRoot, name)))
-        throw new java.io.IOException(s"swapPartitions: retire of $canonical failed")
-      val staged = new Path(tmpRoot, name)
-      if (fs.exists(staged) && !fs.rename(staged, canonical))
-        throw new java.io.IOException(s"swapPartitions: swap of $canonical failed")
+    withLease(fs, new Path(dir, ".purge.lease"), SwapLeaseStaleMs) { (holder, _) =>
+      new IllegalStateException(s"swapPartitions: $dir is being rewritten by [$holder]; " +
+        "run one maintenance pass per store at a time")
+    } {
+      healPartitions(fs, dir) // a crashed swap's leftovers, under our lease
+      stage(tmpRoot.toString)
+      beforeSwap()
+      fs.mkdirs(oldRoot)
+      parts.foreach { name =>
+        val canonical = new Path(dir, name)
+        if (fs.exists(canonical) && !fs.rename(canonical, new Path(oldRoot, name)))
+          throw new java.io.IOException(s"swapPartitions: retire of $canonical failed")
+        val staged = new Path(tmpRoot, name)
+        if (fs.exists(staged) && !fs.rename(staged, canonical))
+          throw new java.io.IOException(s"swapPartitions: swap of $canonical failed")
+      }
+      fs.delete(tmpRoot, true)
+      fs.delete(oldRoot, true)
     }
-    fs.delete(tmpRoot, true)
-    fs.delete(oldRoot, true)
   }
 
-  /** Heal a [[swapPartitions]] interrupted mid-swap. For each partition
-    * left in `.purge.old`: a present canonical directory means that
-    * partition's swap finished (drop the old copy); an absent canonical
-    * with a staged twin means the crash hit between the two renames
-    * (finish the swap); an absent canonical with NO staged twin is either a
-    * legitimately retired partition or the same crash window — ROLL BACK
-    * (restore the old copy), so the caller's retry redoes the rewrite.
-    * Then the staging root goes.
+  /** How long a crashed [[swapPartitions]]' lease keeps heals away: the
+    * live swap heartbeats it every quarter of this.
+    */
+  private[graft] val SwapLeaseStaleMs = 60000L
+
+  /** Heal a [[swapPartitions]] interrupted mid-swap, unless a live swap
+    * holds the store's lease ([[healPartitions]]).
     */
   private def recoverPartitions(spark: SparkSession, dir: String): Unit = {
+    val lease = new Path(dir, ".purge.lease")
+    val fs = fsOf(spark, lease)
+    if (leaseAge(fs, lease).forall(_ >= SwapLeaseStaleMs)) healPartitions(fs, dir)
+  }
+
+  /** For each partition left in `.purge.old`: a present canonical
+    * directory means that partition's swap finished (drop the old copy);
+    * an absent canonical with a staged twin means the crash hit between
+    * the two renames (finish the swap); an absent canonical with NO staged
+    * twin is either a legitimately retired partition or the same crash
+    * window — ROLL BACK (restore the old copy), so the caller's retry
+    * redoes the rewrite. Then the staging root goes.
+    */
+  private def healPartitions(fs: FileSystem, dir: String): Unit = {
     val (tmpRoot, oldRoot) = (new Path(dir, ".purge.tmp"), new Path(dir, ".purge.old"))
-    val fs = fsOf(spark, oldRoot)
     if (fs.exists(oldRoot)) {
       fs.listStatus(oldRoot).filter(_.isDirectory).foreach { st =>
         val name = st.getPath.getName
@@ -194,15 +270,74 @@ object Stores {
         if (fs.exists(canonical)) () // this partition's swap completed
         else if (fs.exists(tmp)) {
           if (!fs.rename(tmp, canonical)) throw new java.io.IOException(
-            s"recoverPartitions: rename $tmp -> $canonical failed")
+            s"healPartitions: rename $tmp -> $canonical failed")
         } else {
           if (!fs.rename(st.getPath, canonical)) throw new java.io.IOException(
-            s"recoverPartitions: rollback of $canonical failed")
+            s"healPartitions: rollback of $canonical failed")
         }
       }
       fs.delete(oldRoot, true)
     }
     if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
+  }
+
+  // ---- advisory lease --------------------------------------------------
+
+  /** Milliseconds since the lease file `lock` was last heartbeat, or None
+    * when there is no lease.
+    */
+  private def leaseAge(fs: FileSystem, lock: Path): Option[Long] =
+    try Some(System.currentTimeMillis() - fs.getFileStatus(lock).getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** Run `body` holding the advisory lease file `lock`.
+    *
+    * The lease is created CREATE-EXCLUSIVE (the filesystem arbitrates a
+    * same-instant race) holding `pid/host/started`, and a daemon thread
+    * refreshes its mtime every `staleMs / 4` while `body` runs; it is
+    * deleted after. A live lease (mtime younger than `staleMs`) makes the
+    * taker fail with `busy(holder, Some(age))`, and losing the create race
+    * with `busy(holder, None)`. A STALE lease is a crashed holder (kill -9
+    * skips the delete): reclaim goes through an atomic rename to a
+    * taker-unique tombstone — of N racing reclaimers exactly one rename
+    * succeeds, and everyone then re-enters the create-exclusive gate, so a
+    * reclaim can never delete a lease another taker just created.
+    */
+  private[graft] def withLease[T](fs: FileSystem, lock: Path, staleMs: Long)(
+      busy: (String, Option[Long]) => Exception)(body: => T): T = {
+    def holder: String =
+      try {
+        val in = fs.open(lock)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      } catch { case _: Exception => "<unreadable holder>" }
+    leaseAge(fs, lock).foreach { age =>
+      if (age < staleMs) throw busy(holder, Some(age))
+      val tomb = lock.suffix(s".reclaimed.${ProcessHandle.current().pid()}")
+      if (fs.rename(lock, tomb)) fs.delete(tomb, false)
+    }
+    val out =
+      try fs.create(lock, false)
+      catch { case _: java.io.IOException => throw busy(holder, None) }
+    val me = s"pid=${ProcessHandle.current().pid()} " +
+      s"host=${java.net.InetAddress.getLocalHost.getHostName} " +
+      s"started=${java.time.Instant.now()}"
+    try out.write(me.getBytes("UTF-8")) finally out.close()
+    val hb = new Thread(() => {
+      val interval = math.max(200L, staleMs / 4)
+      try while (!Thread.interrupted()) {
+        Thread.sleep(interval)
+        // refresh mtime only; a transient FS error just skips one beat
+        try fs.setTimes(lock, System.currentTimeMillis(), -1)
+        catch { case _: Exception => () }
+      } catch { case _: InterruptedException => () }
+    }, s"graft-lease-heartbeat-${lock.hashCode()}")
+    hb.setDaemon(true)
+    hb.start()
+    try body
+    finally {
+      hb.interrupt()
+      try { fs.delete(lock, false); () } catch { case _: Exception => () }
+    }
   }
 
   // ---- append-only tier snapshot ---------------------------------------

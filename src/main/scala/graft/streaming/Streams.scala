@@ -349,7 +349,7 @@ object Streams {
                                trigger: Option[org.apache.spark.sql.streaming.Trigger] = None
                               ): org.apache.spark.sql.streaming.StreamingQuery =
     microBatches(stream, checkpointDir, trigger) { batch =>
-      val weights = batch.sparkSession.read.parquet(weightsDir)
+      val weights = Stores.readParquet(batch.sparkSession, weightsDir)
       batch.join(
           graft.operators.Sampling.importanceScores(batch, idCol, textCol, weights, hexLen)
             .filter(col("dsir_logw") >= minLogw),
@@ -529,7 +529,7 @@ object Streams {
         case Some(wDir) =>
           qualified.join(
             graft.operators.Sampling.importanceScores(qualified, idCol, textCol,
-                spark.read.parquet(wDir))
+                Stores.readParquet(spark, wDir))
               .filter(col("dsir_logw") >= minLogw),
             Seq(idCol))
       }

@@ -349,6 +349,56 @@ class DedupSpec extends SparkSpec {
     assert(cl.length == 200 && cl.forall(_._2 == 0L))
   }
 
+  test("first-seen-wins: the driver loser path equals the distributed path") {
+    import org.apache.spark.sql.types._
+    // `fromIdx` names node i; nodes 0 until nNew are the delta's, the rest
+    // are store docs. Both paths see the same flagged pairs and the same
+    // delta; the gate at 0 forces the distributed rule (and the star
+    // rounds inside clusters)
+    def survivors[T](idType: DataType, fromIdx: Int => T, nNew: Int,
+                     pairs: Seq[(Int, Int)]): (Set[Any], Set[Any]) = {
+      val flagged = spark.createDataFrame(
+        spark.sparkContext.parallelize(pairs.map { case (a, b) =>
+          org.apache.spark.sql.Row(fromIdx(a), fromIdx(b), a < nNew, b < nNew) }, 3),
+        StructType(Seq(StructField("id_a", idType), StructField("id_b", idType),
+          StructField("a_new", BooleanType), StructField("b_new", BooleanType))))
+      val delta = spark.createDataFrame(
+        spark.sparkContext.parallelize((0 until nNew).map(i =>
+          org.apache.spark.sql.Row(fromIdx(i), s"doc $i")), 2),
+        StructType(Seq(StructField("doc_id", idType), StructField("text", StringType))))
+      def run(gate: Long) = Scope.withCacheScope(
+        Dedup.firstSeenWins(delta, "doc_id", gate)(flagged)
+          .select("doc_id").collect().map(_.get(0)).toSet[Any])
+      (run(100000L), run(0L))
+    }
+    // a chain 0-1-2-3 whose minimum 0 is store-paired (it loses to the
+    // store and no longer links 1..3, so 1 represents them), a self pair,
+    // a store-store-free triangle, and a new doc paired only with a store doc
+    val fixed = Seq((0, 1), (1, 2), (2, 3), (0, 20), (5, 5), (6, 7), (7, 8), (6, 8),
+      (9, 21), (10, 9))
+    val (driverL, distL) = survivors(LongType, (i: Int) => i.toLong, 20, fixed)
+    assert(driverL == distL)
+    assert(driverL == Set[Any](1L, 4L, 5L, 6L, 10L) ++ (11L until 20L).toSet,
+      s"got $driverL")
+    val rnd = new scala.util.Random(20260419)
+    (0 until 3).foreach { _ =>
+      val nNew = 24
+      val pairs = Seq.fill(30)((rnd.nextInt(32), rnd.nextInt(32)))
+        .filter { case (a, b) => a < nNew || b < nNew } // no store-store pairs
+      val (d, s) = survivors(LongType, (i: Int) => i.toLong, nNew, pairs)
+      assert(d == s, s"pairs $pairs")
+    }
+    // String ids: U+FFFD sorts BELOW U+1F600 in UTF-8 bytes (Catalyst's
+    // order) but above its surrogates in UTF-16 (String.compareTo), so a
+    // component holding both must keep the U+FFFD doc on both paths
+    val (fffd, grin) = ("\uFFFD", "\uD83D\uDE00")
+    val names = IndexedSeq(fffd, grin, "b", grin + "a", "ab", "s1", "s2")
+    val strPairs = Seq((1, 0), (3, 1), (2, 4), (4, 5), (3, 3), (2, 6))
+    val (driverS, distS) = survivors(StringType, names, 5, strPairs)
+    assert(driverS == distS)
+    assert(driverS == Set[Any](fffd), s"got $driverS")
+  }
+
   test("dropNearDupsByPairs keeps each cluster's min id and all non-members") {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val kept = Dedup.dropNearDupsByPairs(docs, "doc_id", pairs)

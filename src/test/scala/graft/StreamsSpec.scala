@@ -647,8 +647,10 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
     // the measured count: re-scoring `fresh` per reader, re-deriving the
     // pair flags by id joins or windowing the spans once per append each
-    // push it over (61 jobs with all three)
-    assert(jobs.get <= 38, s"${jobs.get} jobs")
+    // push it over (61 jobs with all three); so do a schema-inference job
+    // per store read and the distributed first-seen-wins rule on a pair
+    // graph this small (38 jobs with both)
+    assert(jobs.get <= 29, s"${jobs.get} jobs")
     val rows = spark.read.parquet(s"$dir/corpus")
       .select("doc_id", "text").as[(Long, String)].collect().toMap
     assert(rows == Map(1L -> passText, 11L -> "a spotted rug by the fire late last night"),
