@@ -45,19 +45,6 @@ package graft
   */
 object RunSpec {
 
-  /** The column a post-round `--report` reads as document text, per ingest
-    * kind — the span tier's corpus carries the REBUILT text under
-    * `text_out`; the vector-borne kinds have no text to report on.
-    */
-  private def textColOf(s: plans.IngestSpec): Option[String] = s match {
-    case k: plans.QualityIngestSpec    => Some(k.textCol)
-    case k: plans.ImportanceIngestSpec => Some(k.textCol)
-    case k: plans.MinhashIngestSpec    => Some(k.textCol)
-    case _: plans.SpanIngestSpec       => Some("text_out")
-    case k: plans.PretrainIngestSpec   => Some(k.textCol)
-    case _: plans.SemanticIngestSpec | _: plans.VectorIndexIngestSpec => None
-  }
-
   /** Parsed CLI configuration — produced by [[parseArgs]], pure and
     * unit-testable (main owns the printing and exit codes).
     */
@@ -157,7 +144,7 @@ object RunSpec {
           "(a batch pipeline can add a 'report' node instead)")
         sys.exit(2)
       }
-      if (report.isDefined && parsed.exists(textColOf(_).isEmpty)) {
+      if (report.isDefined && parsed.exists(_.plan.corpusTextCol.isEmpty)) {
         System.err.println("--report needs a text-bearing ingest kind " +
           "(semanticDedup / vectorIndex corpora carry vectors, not text)")
         sys.exit(2)
@@ -194,7 +181,7 @@ object RunSpec {
           // run — the rounds already committed; a scheduler wrapper
           // should see the ingest's success, not exit 1 after a day of
           // successful hourly rounds
-          for (g <- report if n > 0; tc <- textColOf(ingest))
+          for (g <- report if n > 0; tc <- ingest.plan.corpusTextCol)
             try graft.operators.CorpusStats.corpusReport(
                 spark.read.parquet(sink),
                 plans.PipelineCompiler.substitute(tc, params),

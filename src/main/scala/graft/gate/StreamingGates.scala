@@ -9,6 +9,7 @@ import graft.SparkEntry.qualityGateWeights
 import graft.operators._
 import graft.plans._
 import graft.gate.Gate._
+import graft.streaming.{Dsir, IngestPlan, Quality, Semantic, Span, Streams}
 
 /** Gated queries that run through Structured Streaming (S): the
   * streaming transforms and every ingest kind.
@@ -138,7 +139,7 @@ private[graft] object StreamingGates {
          ORDER BY v.user_id, view_id, buy_id"""),
 
     /** Driver gate for the streaming quality ingest
-      * ([[graft.streaming.Streams.ingestQualityFiltered]]): two
+      * ([[graft.streaming.Quality]] stage): two
       * deterministic micro-batches (even ids, then odd) through the pinned
       * classifier; the corpus must equal the batch-mode accept set exactly —
       * the verdict is a stateless per-row expression, so batch boundaries
@@ -152,9 +153,8 @@ private[graft] object StreamingGates {
           .as[(Long, String)].collect().sortBy(_._1)
         val work = java.nio.file.Files.createTempDirectory("quality_ingest").toString
         runTwoBatchStream(s, rows)(_._1) { in =>
-          graft.streaming.Streams.ingestQualityFiltered(
-            in.toDF("doc_id", "text"), "text", qualityGateWeights,
-            s"$work/corpus", s"$work/ckpt")
+          Streams.ingest(in.toDF("doc_id", "text"), IngestPlan("", "text", "",
+            Seq(Quality(qualityGateWeights)), Some(s"$work/corpus"), s"$work/ckpt"))
         }
         s.read.parquet(s"$work/corpus")
           .select(col("doc_id"), col("quality_score_1e6"))
@@ -166,7 +166,7 @@ private[graft] object StreamingGates {
           WHERE quality_score_1e6 > 0 ORDER BY doc_id"""),
 
     /** Driver gate for the streaming vector-index maintenance
-      * ([[graft.streaming.Streams.ingestVectorIndex]]): seed the index from
+      * ([[graft.streaming.VectorIndex]] stage): seed the index from
       * PINNED centroids (the first 8 embedding rows, data-derived so the
       * oracle recomputes them from the table — k-means training is not
       * bit-deterministic, argmin routing is), stream two deterministic
@@ -189,8 +189,8 @@ private[graft] object StreamingGates {
         val rows = emb.filter(col("vec_id") >= 20 && col("vec_id") < 100)
           .as[(Long, Seq[Float])].collect().sortBy(_._1)
         runTwoBatchStream(s, rows)(_._1) { in =>
-          graft.streaming.Streams.ingestVectorIndex(
-            in.toDF("vec_id", "embedding"), s"$work/idx", s"$work/ckpt")
+          Streams.ingest(in.toDF("vec_id", "embedding"), IngestPlan("vec_id", "", "embedding",
+            Seq(graft.streaming.VectorIndex(s"$work/idx")), None, s"$work/ckpt"))
         }
         // the canonical full view: partitioned cells + the un-folded LSM delta
         graft.operators.VectorIndex.readIvfCells(s, s"$work/idx")
@@ -214,8 +214,9 @@ private[graft] object StreamingGates {
          SELECT vec_id, cid AS cell FROM r WHERE rn = 1 ORDER BY vec_id"""),
 
     /** Driver gate for the COMPOSED streaming ingest
-      * ([[graft.streaming.Streams.ingestPretrainCorpus]] — the streaming
-      * form of the flagship-v3 tiers): quality gate → DSIR threshold →
+      * ([[graft.plans.PretrainIngestSpec]]'s stage list run by
+      * [[graft.streaming.Streams.ingest]] — the streaming form of the
+      * flagship-v3 tiers): quality gate → DSIR threshold →
       * cross-batch semantic store → cross-batch span store, run over TWO
       * deterministic micro-batches (batch 0 = even doc ids, batch 1 = odd)
       * with planted semantic-twin cliques straddling the batch boundary in
@@ -235,12 +236,11 @@ private[graft] object StreamingGates {
         val (fixture, cents) = pretrainFixture(s, dir, work)
         val rows = fixture.as[(Long, String, String, Seq[Float])].collect().sortBy(_._1)
         runTwoBatchStream(s, rows)(_._1) { in =>
-          graft.streaming.Streams.ingestPretrainCorpus(
-            in.toDF("doc_id", "text", "lang", "embedding"),
-            "doc_id", "text", "embedding", qualityGateWeights, cents,
-            semThreshold = 0.9, spanK = 16,
-            s"$work/corpus", s"$work/sem", s"$work/span", s"$work/ckpt",
-            dsirWeightsDir = Some(s"$work/weights"), minLogw = -30.0)
+          Streams.ingest(in.toDF("doc_id", "text", "lang", "embedding"),
+            IngestPlan("doc_id", "text", "embedding", Seq(Quality(qualityGateWeights),
+                Dsir(s"$work/weights", -30.0, hexLen = 4), Semantic(s"$work/sem", cents, 0.9),
+                Span(s"$work/span", 16, joinBack = true)),
+              Some(s"$work/corpus"), s"$work/ckpt"))
         }
         s.read.parquet(s"$work/corpus")
           .select(col("doc_id"), col("n_kept"), md5(col("text")).as("text_md5"))
@@ -284,7 +284,7 @@ private[graft] object StreamingGates {
       pretrainIngestSql),
 
     /** Driver gate for the standalone IMPORTANCE ingest kind
-      * ([[graft.streaming.Streams.ingestImportanceFiltered]] through its
+      * ([[graft.streaming.Dsir]] stage through its
       * [[graft.plans.ImportanceIngestSpec]] JSON): DSIR rate-threshold
       * filtering is batch-boundary-invariant by construction, so the
       * two-round corpus must equal the batch-mode `dsir_logw >= -30.0`
@@ -327,7 +327,7 @@ private[graft] object StreamingGates {
           WHERE logw >= -30.0 ORDER BY doc_id"""),
 
     /** Driver gate for the standalone MINHASH-dedup ingest kind
-      * ([[graft.streaming.Streams.ingestDedup]] through its
+      * ([[graft.streaming.Minhash]] stage through its
       * [[graft.plans.MinhashIngestSpec]] JSON): two rounds with planted
       * parity-straddling exact twins, replayed in DuckDB as the exact
       * char-5-gram Jaccard two-stage evolution — stage A elects min-id per
@@ -401,7 +401,7 @@ private[graft] object StreamingGates {
          ORDER BY doc_id"""),
 
     /** Driver gate for the standalone SPAN-dedup ingest kind
-      * ([[graft.streaming.Streams.ingestSpanDedup]] through its
+      * ([[graft.streaming.Span]] stage through its
       * [[graft.plans.SpanIngestSpec]] JSON): the two-round window-store
       * evolution replays as ONE global ranking — a window survives iff it
       * is rank 1 per fingerprint ordered by (batch, id, start), the same
@@ -459,7 +459,7 @@ private[graft] object StreamingGates {
           FROM rb ORDER BY doc_id"""),
 
     /** Driver gate for the standalone SEMANTIC-dedup ingest kind
-      * ([[graft.streaming.Streams.ingestSemanticDedup]] through its
+      * ([[graft.streaming.Semantic]] stage through its
       * [[graft.plans.SemanticIngestSpec]] JSON): power-of-two-scaled twins
       * share their original's cosine BITWISE (scaling by 2^k is exact in
       * float arithmetic and commutes with the sum's rounding), so every

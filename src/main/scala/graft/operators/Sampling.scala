@@ -186,8 +186,7 @@ object Sampling {
   /** Offline operating-point picker for rate-style DSIR selection: the
     * `dsir_logw` threshold that keeps ≈ `keepRate` of the gram-bearing
     * documents — the value to hand
-    * [[graft.streaming.Streams.ingestImportanceFiltered]] /
-    * [[graft.streaming.Streams.ingestPretrainCorpus]] as `minLogw`
+    * the [[graft.streaming.Dsir]] stage of a streaming ingest as `minLogw`
     * ("pick `minLogw` offline from the batch score distribution", made
     * API). One pass: `approx_percentile` (t-digest sketch, map-side
     * combined, no global sort of the score column) at `accuracy`; the

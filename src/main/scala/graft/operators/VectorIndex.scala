@@ -636,7 +636,7 @@ object VectorIndex {
     * retries the batch, ad-hoc callers retry the read). Schedule folds
     * accordingly or wrap retrieval in a retry at 100 TB fold walls.
     * Returns rows folded. `beforeDelete` is a test seam (the
-    * `ingestVectorIndex(beforeCommit)` pattern) firing between the fold's
+    * `Streams.ingest(afterAppend)` pattern) firing between the fold's
     * cells append and the snapshot-file removal — the concurrency window
     * under test.
     */

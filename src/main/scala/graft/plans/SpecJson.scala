@@ -244,7 +244,7 @@ object SpecJson {
     * so all four stay as written. Rebuilt through the constructors, not
     * re-validated: a Scala-built spec compiles exactly as before.
     */
-  private[plans] def substitute[T](spec: T, params: Map[String, String]): T = {
+  private[graft] def substitute[T](spec: T, params: Map[String, String]): T = {
     def go(v: Any): Any = v match {
       case s: String => PipelineCompiler.substitute(s, params)
       case _: RefSpec => v
@@ -264,9 +264,10 @@ object SpecJson {
   /** `{nodes, links}` export for a streaming-ingest spec — the same
     * consumer shape as [[dag]] (the reference exports its DAG for every
     * job type, writers included: `jobs/hi-order/job-pipeline.js:108-151`).
-    * Nodes: the file-drop source, the ingest operator, and each sink the
-    * round writes (corpus/stores/index); state (the checkpoint) is not a
-    * data edge and is omitted.
+    * Nodes: the file-drop source, the ingest operator, each model a stage
+    * reads from disk, and each sink the round writes (the corpus, then each
+    * stage's store in stage order); state (the checkpoint) is not a data
+    * edge and is omitted.
     */
   def ingestDag(spec: IngestSpec): String = {
     val root = M.createObjectNode()
@@ -283,31 +284,16 @@ object SpecJson {
     node(kind, s"ingest:$kind")
     link(spec.source.path, kind)
     def sink(path: String, tpe: String): Unit = { node(path, tpe); link(kind, path) }
-    spec match {
-      case s: QualityIngestSpec     => sink(s.corpusDir, "sink:corpus")
-      case s: ImportanceIngestSpec  =>
-        node(s.weightsDir, "model:dsirWeights"); link(s.weightsDir, kind)
-        sink(s.corpusDir, "sink:corpus")
-      case s: MinhashIngestSpec     =>
-        sink(s.corpusDir, "sink:corpus"); sink(s.storeDir, "store:minhashSigs")
-      case s: SpanIngestSpec        =>
-        sink(s.corpusDir, "sink:corpus"); sink(s.storeDir, "store:spanFps")
-      case s: SemanticIngestSpec    =>
-        sink(s.corpusDir, "sink:corpus"); sink(s.storeDir, "store:assignedVectors")
-      case s: VectorIndexIngestSpec => sink(s.indexDir, "store:ivfIndex")
-      case s: PretrainIngestSpec    =>
-        s.dsirWeightsDir.foreach { w => node(w, "model:dsirWeights"); link(w, kind) }
-        sink(s.corpusDir, "sink:corpus")
-        sink(s.semStoreDir, "store:assignedVectors")
-        sink(s.spanStoreDir, "store:spanFps")
-    }
+    val plan = spec.plan
+    plan.stages.collect { case d: graft.streaming.Dsir => d.weightsDir }
+      .foreach { w => node(w, "model:dsirWeights"); link(w, kind) }
+    plan.corpusDir.foreach(sink(_, "sink:corpus"))
+    val stores = plan.stages.flatMap(_.store)
+    stores.foreach(s => sink(s.dir, s"store:${s.kind}"))
     // `out` is a NODE ID (the batch dag() contract): the sink node a
-    // consumer should highlight — the index DIRECTORY for vectorIndex
-    // (primarySink's `<indexDir>/cells` is a read path, not a graph node)
-    root.put("out", spec match {
-      case s: VectorIndexIngestSpec => s.indexDir
-      case _ => IngestCompiler.primarySink(spec)
-    })
+    // consumer should highlight — the corpus, else the last store (the
+    // index DIRECTORY, not primarySink's `<indexDir>/cells` read path)
+    root.put("out", plan.corpusDir.getOrElse(stores.last.dir))
     M.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 

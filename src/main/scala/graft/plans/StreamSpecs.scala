@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.streaming.{Dsir, IngestPlan, Minhash, Quality, Semantic, Span, VectorIndex}
 
 /** Persisted STREAMING-ingest specs — the streaming half of the
   * reference's persisted-job model (`/root/reference/jobs/job.js:21-39`:
@@ -12,8 +13,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * long-running ingest is a JSON artifact too: source + pinned models +
   * store locations, no Scala required.
   *
-  * Each spec mirrors one `Streams.ingest*` entry point parameter for
-  * parameter; pinned model assets (quality weights, semantic centroids)
+  * Each spec is one fixed stage list of the ingest runner
+  * ([[IngestSpec.plan]], run by [[graft.streaming.Streams.ingest]]);
+  * pinned model assets (quality weights, semantic centroids)
   * are INLINE — the spec file carries the model exactly as the reference
   * persisted `processor` config inside the job document — while large
   * trained models (the DSIR gram table) stay parquet paths.
@@ -25,8 +27,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * later resumes from its checkpoint and processes only newly-arrived
   * files — each CLI invocation is one incremental ingest round, and a
   * crash mid-round heals exactly like any other restart of the
-  * underlying ingest (the per-tier crash-window contracts in
-  * [[graft.streaming.Streams]] scaladoc).
+  * underlying ingest (the per-stage crash-window contracts in
+  * [[graft.streaming.Stage]] scaladoc).
   */
 case class StreamSourceSpec(format: String, path: String,
                             options: Map[String, String] = Map.empty)
@@ -34,37 +36,51 @@ case class StreamSourceSpec(format: String, path: String,
 sealed trait IngestSpec {
   def source: StreamSourceSpec
   def checkpointDir: String
+  /** The ingest as the runner's stage list. */
+  def plan: IngestPlan
 }
 
-/** [[graft.streaming.Streams.ingestQualityFiltered]] as a spec. */
+/** [[graft.streaming.Quality]] into a corpus. */
 case class QualityIngestSpec(source: StreamSourceSpec, textCol: String,
                              weights: Seq[Double], corpusDir: String,
-                             checkpointDir: String) extends IngestSpec
+                             checkpointDir: String) extends IngestSpec {
+  def plan: IngestPlan =
+    IngestPlan("", textCol, "", Seq(Quality(weights)), Some(corpusDir), checkpointDir)
+}
 
-/** [[graft.streaming.Streams.ingestImportanceFiltered]] as a spec. */
+/** [[graft.streaming.Dsir]] into a corpus. */
 case class ImportanceIngestSpec(source: StreamSourceSpec, idCol: String,
                                 textCol: String, weightsDir: String,
                                 minLogw: Double = Double.NegativeInfinity,
                                 corpusDir: String,
                                 checkpointDir: String,
-                                hexLen: Int = 4) extends IngestSpec
+                                hexLen: Int = 4) extends IngestSpec {
+  def plan: IngestPlan = IngestPlan(idCol, textCol, "", Seq(Dsir(weightsDir, minLogw, hexLen)),
+    Some(corpusDir), checkpointDir)
+}
 
-/** [[graft.streaming.Streams.ingestDedup]] (cross-batch MinHash/LSH) as a spec. */
+/** [[graft.streaming.Minhash]] (cross-batch MinHash/LSH) into a corpus. */
 case class MinhashIngestSpec(source: StreamSourceSpec, idCol: String,
                              textCol: String, threshold: Double = 0.8,
                              corpusDir: String, storeDir: String,
                              checkpointDir: String,
-                             compactEvery: Int = 0) extends IngestSpec
+                             compactEvery: Int = 0) extends IngestSpec {
+  def plan: IngestPlan = IngestPlan(idCol, textCol, "", Seq(Minhash(storeDir, threshold)),
+    Some(corpusDir), checkpointDir, compactEvery)
+}
 
-/** [[graft.streaming.Streams.ingestSpanDedup]] as a spec. */
+/** [[graft.streaming.Span]] whose corpus is the rebuild relation. */
 case class SpanIngestSpec(source: StreamSourceSpec, idCol: String,
                           textCol: String, k: Int = 16,
                           corpusDir: String, storeDir: String,
                           checkpointDir: String,
-                          compactEvery: Int = 0) extends IngestSpec
+                          compactEvery: Int = 0) extends IngestSpec {
+  def plan: IngestPlan = IngestPlan(idCol, textCol, "",
+    Seq(Span(storeDir, k, joinBack = false)), Some(corpusDir), checkpointDir, compactEvery)
+}
 
-/** [[graft.streaming.Streams.ingestSemanticDedup]] as a spec; `centroids`
-  * is the pinned model, inline.
+/** [[graft.streaming.Semantic]] into a corpus; `centroids` is the pinned
+  * model, inline.
   */
 case class SemanticIngestSpec(source: StreamSourceSpec, idCol: String,
                               vecCol: String,
@@ -72,19 +88,28 @@ case class SemanticIngestSpec(source: StreamSourceSpec, idCol: String,
                               threshold: Double = 0.95,
                               corpusDir: String, storeDir: String,
                               checkpointDir: String,
-                              compactEvery: Int = 0) extends IngestSpec
+                              compactEvery: Int = 0) extends IngestSpec {
+  def plan: IngestPlan = IngestPlan(idCol, "", vecCol,
+    Seq(Semantic(storeDir, centroids, threshold)), Some(corpusDir), checkpointDir, compactEvery)
+}
 
-/** [[graft.streaming.Streams.ingestVectorIndex]] as a spec (the index's
-  * own centroids are already persisted inside `indexDir`).
+/** [[graft.streaming.VectorIndex]] alone, no corpus (the index's own
+  * centroids are already persisted inside `indexDir`).
   */
 case class VectorIndexIngestSpec(source: StreamSourceSpec, idCol: String,
                                  vecCol: String, indexDir: String,
                                  checkpointDir: String,
-                                 compactEvery: Int = 0) extends IngestSpec
+                                 compactEvery: Int = 0) extends IngestSpec {
+  def plan: IngestPlan = IngestPlan(idCol, "", vecCol, Seq(VectorIndex(indexDir)), None,
+    checkpointDir, compactEvery)
+}
 
-/** [[graft.streaming.Streams.ingestPretrainCorpus]] — the composed
-  * flagship ingest — as a spec. `minLogw = -Infinity` (the no-DSIR-gate
-  * default) is encoded by OMITTING the field in JSON.
+/** The composed flagship ingest — the streaming form of the flagship-v3
+  * tiers, in the batch pipeline's order: [[graft.streaming.Quality]] →
+  * optional [[graft.streaming.Dsir]] → [[graft.streaming.Semantic]] →
+  * [[graft.streaming.Span]] with the rebuilt text joined back.
+  * `minLogw = -Infinity` (the no-DSIR-gate default) is encoded by
+  * OMITTING the field in JSON.
   */
 case class PretrainIngestSpec(source: StreamSourceSpec, idCol: String,
                               textCol: String, vecCol: String,
@@ -96,33 +121,27 @@ case class PretrainIngestSpec(source: StreamSourceSpec, idCol: String,
                               dsirWeightsDir: Option[String] = None,
                               minLogw: Double = Double.NegativeInfinity,
                               compactEvery: Int = 0,
-                              maxDocChars: Int = 0) extends IngestSpec
+                              maxDocChars: Int = 0) extends IngestSpec {
+  def plan: IngestPlan = IngestPlan(idCol, textCol, vecCol,
+    Seq(Quality(qualityWeights)) ++ dsirWeightsDir.map(Dsir(_, minLogw, hexLen = 4)) ++
+      Seq(Semantic(semStoreDir, centroids, semThreshold), Span(spanStoreDir, spanK, joinBack = true)),
+    Some(corpusDir), checkpointDir, compactEvery, maxDocChars)
+}
 
-/** Compiles an [[IngestSpec]] to a running [[StreamingQuery]] over the
-  * matching [[graft.streaming.Streams]] entry point, and runs the
+/** Compiles an [[IngestSpec]] to a running [[StreamingQuery]] of its
+  * plan ([[graft.streaming.Streams.ingest]]), and runs the
   * drain-and-exit form the CLI uses. `{%var%}` placeholders resolve with
   * the SAME walk as the batch compiler ([[SpecJson.substitute]]), so one
   * parameterized spec serves every environment.
   */
 object IngestCompiler {
 
-  /** The spec with `{%var%}` placeholders resolved in every string field
-    * (paths, column names, source options) — [[SpecJson.substitute]].
-    */
-  def substituted(spec: IngestSpec, params: Map[String, String]): IngestSpec =
-    SpecJson.substitute(spec, params)
-
   /** The spec's primary output location — what a caller reads after the
     * ingest drains (stores are secondary state).
     */
-  def primarySink(spec: IngestSpec): String = spec match {
-    case s: QualityIngestSpec     => s.corpusDir
-    case s: ImportanceIngestSpec  => s.corpusDir
-    case s: MinhashIngestSpec     => s.corpusDir
-    case s: SpanIngestSpec        => s.corpusDir
-    case s: SemanticIngestSpec    => s.corpusDir
-    case s: VectorIndexIngestSpec => s"${s.indexDir}/cells"
-    case s: PretrainIngestSpec    => s.corpusDir
+  def primarySink(spec: IngestSpec): String = {
+    val p = spec.plan
+    p.corpusDir.getOrElse(p.stages.collectFirst { case v: VectorIndex => s"${v.indexDir}/cells" }.get)
   }
 
   /** `readStream` over the spec's source directory. File sources need an
@@ -174,39 +193,12 @@ object IngestCompiler {
   }
 
   /** Start the ingest described by `spec` (placeholders must already be
-    * resolved — see [[substituted]]).
+    * resolved — see [[SpecJson.substitute]]).
     */
   def start(spark: SparkSession, spec: IngestSpec,
-            trigger: Option[Trigger] = None): StreamingQuery = {
-    import graft.streaming.Streams
-    val in = sourceStream(spark, spec.source, spec.checkpointDir)
-    spec match {
-      case s: QualityIngestSpec =>
-        Streams.ingestQualityFiltered(in, s.textCol, s.weights, s.corpusDir,
-          s.checkpointDir, trigger)
-      case s: ImportanceIngestSpec =>
-        Streams.ingestImportanceFiltered(in, s.idCol, s.textCol, s.weightsDir,
-          s.minLogw, s.corpusDir, s.checkpointDir, s.hexLen, trigger)
-      case s: MinhashIngestSpec =>
-        Streams.ingestDedup(in, s.idCol, s.textCol, s.threshold, s.corpusDir,
-          s.storeDir, s.checkpointDir, s.compactEvery, trigger)
-      case s: SpanIngestSpec =>
-        Streams.ingestSpanDedup(in, s.idCol, s.textCol, s.k, s.corpusDir,
-          s.storeDir, s.checkpointDir, s.compactEvery, trigger = trigger)
-      case s: SemanticIngestSpec =>
-        Streams.ingestSemanticDedup(in, s.idCol, s.vecCol, s.centroids,
-          s.threshold, s.corpusDir, s.storeDir, s.checkpointDir, s.compactEvery,
-          trigger = trigger)
-      case s: VectorIndexIngestSpec =>
-        Streams.ingestVectorIndex(in, s.indexDir, s.checkpointDir, s.idCol,
-          s.vecCol, s.compactEvery, trigger = trigger)
-      case s: PretrainIngestSpec =>
-        Streams.ingestPretrainCorpus(in, s.idCol, s.textCol, s.vecCol,
-          s.qualityWeights, s.centroids, s.semThreshold, s.spanK, s.corpusDir,
-          s.semStoreDir, s.spanStoreDir, s.checkpointDir, s.dsirWeightsDir,
-          s.minLogw, s.compactEvery, s.maxDocChars, trigger = trigger)
-    }
-  }
+            trigger: Option[Trigger] = None): StreamingQuery =
+    graft.streaming.Streams.ingest(sourceStream(spark, spec.source, spec.checkpointDir),
+      spec.plan, trigger)
 
   /** One incremental ingest round: resolve placeholders, start with
     * `Trigger.AvailableNow`, block until the source is drained. The
@@ -225,7 +217,7 @@ object IngestCompiler {
   def runAvailable(spark: SparkSession, spec: IngestSpec,
                    params: Map[String, String] = Map.empty,
                    lockStaleMs: Long = 600000L): Unit = {
-    val resolved = substituted(spec, params)
+    val resolved = SpecJson.substitute(spec, params)
     withIngestLock(spark, resolved.checkpointDir, lockStaleMs) {
       val q = start(spark, resolved, Some(Trigger.AvailableNow()))
       try q.awaitTermination() finally if (q.isActive) q.stop()

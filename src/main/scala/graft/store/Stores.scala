@@ -122,7 +122,7 @@ object Stores {
 
   /** Keyed-distinct compaction of a store directory. The streaming ingests
     * append the corpus FIRST and their dedup store second (see
-    * [[graft.streaming.Streams.ingestSpanDedup]]): a crash in between makes
+    * [[graft.streaming.IngestPlan.sinks]]): a crash in between makes
     * the checkpoint replay append the same rows AGAIN, so after an unclean
     * restart a store carries duplicate keys — harmless to correctness
     * (readers `dropDuplicates`), but the store grows and every later batch
@@ -390,8 +390,8 @@ object Stores {
   // ---- scheduled maintenance -------------------------------------------
 
   /** Every-N-batches store maintenance at the fully-applied point of a
-    * micro-batch (see [[graft.streaming.Streams.ingestPretrainCorpus]]'s
-    * `compactEvery`): each `(dir, maintain)` runs `maintain(spark, dir)`
+    * micro-batch (see [[graft.streaming.IngestPlan.maintenance]]): each
+    * `(dir, maintain)` runs `maintain(spark, dir)`
     * when the store exists after [[heal]]. An absent store (never built,
     * or every batch so far empty) has nothing to maintain, and reading it
     * would throw and kill the streaming query.
@@ -400,10 +400,4 @@ object Stores {
       stores: Seq[(String, (SparkSession, String) => Unit)]): Unit =
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
       stores.foreach { case (dir, maintain) => if (heal(spark, dir)) maintain(spark, dir) }
-
-  /** The keyed-distinct rewrite ([[compactStore]]) as a [[maybeCompact]]
-    * maintenance op.
-    */
-  private[graft] def distinctOn(keys: String*): (SparkSession, String) => Unit =
-    (spark, dir) => { compactStore(spark, dir, keys); () }
 }

@@ -1,9 +1,10 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.streaming.{IngestPlan, Quality, Semantic, Span, Streams}
 
 /** Store-growth ladder for the composed streaming ingest
-  * (graft.streaming.Streams.ingestPretrainCorpus): per-batch wall time as
+  * ([[graft.plans.PretrainIngestSpec]]'s stage list): per-batch wall time as
   * the semantic/span stores accumulate. The 100 TB claim under test is
   * that every per-batch cost is DELTA-bound — the semantic tier prunes
   * the store to the delta's cells, the span tier semi-joins fp-only —
@@ -62,11 +63,10 @@ object IngestLadder {
     // every-N-batches store compaction (VERDICT r12 next #8): bounds the
     // sinks' file counts as the ingest runs; 0 disables
     val compactEvery = sys.env.getOrElse("SPARK_GRAFT_INGEST_COMPACT_EVERY", "4").toInt
-    val q = graft.streaming.Streams.ingestPretrainCorpus(
-      in.toDF().toDF("doc_id", "text", "embedding"), "doc_id", "text", "embedding",
-      qw, cents, semThreshold = 0.95, spanK = 16,
-      s"$work/corpus", s"$work/sem", s"$work/span", s"$work/ckpt",
-      compactEvery = compactEvery)
+    val q = Streams.ingest(in.toDF().toDF("doc_id", "text", "embedding"),
+      IngestPlan("doc_id", "text", "embedding", Seq(Quality(qw), Semantic(s"$work/sem", cents, 0.95),
+          Span(s"$work/span", 16, joinBack = true)),
+        Some(s"$work/corpus"), s"$work/ckpt", compactEvery))
     def files(dir: String): Int =
       Option(new java.io.File(dir).listFiles()).map(_.count(_.getName.endsWith(".parquet")))
         .getOrElse(0)

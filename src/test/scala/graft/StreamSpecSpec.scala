@@ -141,7 +141,7 @@ class StreamSpecSpec extends SparkSpec {
     val s = PretrainIngestSpec(src, "id", "t", "{%vc%}", Nil, Nil, 0.9, 16,
       "{%root%}/c", "{%root%}/sem", "{%root%}/span", "{%root%}/k",
       dsirWeightsDir = Some("{%root%}/w"))
-    val r = IngestCompiler.substituted(s, Map("root" -> "/data/run7", "vc" -> "emb"))
+    val r = SpecJson.substitute(s, Map("root" -> "/data/run7", "vc" -> "emb"))
       .asInstanceOf[PretrainIngestSpec]
     assert(r.source.path == "/data/run7/drop")
     assert(r.source.options("opt") == "/data/run7/v")
@@ -153,7 +153,7 @@ class StreamSpecSpec extends SparkSpec {
   }
 
   test("batch {%var%} substitution reaches every string field: source options, joinType") {
-    // the batch compiler substitutes with the same walk as substituted():
+    // the batch compiler substitutes with the same walk as the ingest specs:
     // source options and join types are strings like any other
     val root = java.nio.file.Files.createTempDirectory("batch_sub").toString
     def csv(name: String, lines: String*): Unit =
@@ -247,7 +247,7 @@ class StreamSpecSpec extends SparkSpec {
     val spec = QualityIngestSpec(
       StreamSourceSpec("parquet", s"$root/drop", Map("maxFilesPerTrigger" -> "1")),
       "text", SparkEntry.qualityGateWeights, s"$root/corpus", s"$root/ckpt")
-    val q = IngestCompiler.start(spark, IngestCompiler.substituted(spec, Map.empty),
+    val q = IngestCompiler.start(spark, SpecJson.substitute(spec, Map.empty),
       Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     try q.awaitTermination() finally if (q.isActive) q.stop()
     val nonEmpty = q.recentProgress.count(_.numInputRows > 0)
@@ -277,6 +277,71 @@ class StreamSpecSpec extends SparkSpec {
       "pretrain" -> "{%root%}/corpus", "pretrain" -> "{%root%}/sem",
       "pretrain" -> "{%root%}/span"), links.toString)
     assert(m.get("out").asText == "{%root%}/corpus")
+    // the six other kinds: each one's node types, links and `out`
+    def exported(spec: IngestSpec) = {
+      val d = new com.fasterxml.jackson.databind.ObjectMapper().readTree(SpecJson.ingestDag(spec))
+      (d.get("nodes").elements().asScala.map(_.get("type").asText).toSet,
+        d.get("links").elements().asScala
+          .map(l => l.get("source").asText -> l.get("target").asText).toSet,
+        d.get("out").asText)
+    }
+    val drop = "{%root%}/drop"
+    val kinds = Seq(
+      QualityIngestSpec(src, "t", Seq(1.0), "/c", "/k") ->
+        (Set("source:parquet", "ingest:quality", "sink:corpus"),
+          Set(drop -> "quality", "quality" -> "/c"), "/c"),
+      ImportanceIngestSpec(src, "id", "t", "/w", -3.0, "/c", "/k") ->
+        (Set("source:parquet", "ingest:importance", "model:dsirWeights", "sink:corpus"),
+          Set(drop -> "importance", "/w" -> "importance", "importance" -> "/c"), "/c"),
+      MinhashIngestSpec(src, "id", "t", 0.7, "/c", "/s", "/k") ->
+        (Set("source:parquet", "ingest:minhashDedup", "sink:corpus", "store:minhashSigs"),
+          Set(drop -> "minhashDedup", "minhashDedup" -> "/c", "minhashDedup" -> "/s"), "/c"),
+      SpanIngestSpec(src, "id", "t", 8, "/c", "/s", "/k") ->
+        (Set("source:parquet", "ingest:spanDedup", "sink:corpus", "store:spanFps"),
+          Set(drop -> "spanDedup", "spanDedup" -> "/c", "spanDedup" -> "/s"), "/c"),
+      SemanticIngestSpec(src, "id", "v", cents, 0.9, "/c", "/s", "/k") ->
+        (Set("source:parquet", "ingest:semanticDedup", "sink:corpus", "store:assignedVectors"),
+          Set(drop -> "semanticDedup", "semanticDedup" -> "/c", "semanticDedup" -> "/s"), "/c"),
+      VectorIndexIngestSpec(src, "id", "v", "/idx", "/k") ->
+        (Set("source:parquet", "ingest:vectorIndex", "store:ivfIndex"),
+          Set(drop -> "vectorIndex", "vectorIndex" -> "/idx"), "/idx"))
+    kinds.foreach { case (spec, want) => assert(exported(spec) == want, spec.toString) }
+  }
+
+  test("each kind's plan derives its sink order, maintenance and primary sink") {
+    import graft.streaming.{DistinctOn, FoldDelta}
+    // every field that picks a column or a directory differs from the
+    // store keys ("id", "fp"), so a swapped key cannot pass
+    val kinds = Seq(
+      QualityIngestSpec(src, "t", Seq(1.0), "/c", "/k") ->
+        (Seq("/c"), Nil, "/c", Some("t")),
+      ImportanceIngestSpec(src, "doc", "t", "/w", -3.0, "/c", "/k") ->
+        (Seq("/c"), Nil, "/c", Some("t")),
+      MinhashIngestSpec(src, "doc", "t", 0.7, "/c", "/s", "/k", compactEvery = 2) ->
+        (Seq("/c", "/s"), Seq("/c" -> DistinctOn("doc"), "/s" -> DistinctOn("id")), "/c", Some("t")),
+      // the rebuild corpus recovers by max-n_kept, not keyed distinct:
+      // only the fp store is maintained
+      SpanIngestSpec(src, "doc", "t", 8, "/c", "/s", "/k", compactEvery = 2) ->
+        (Seq("/c", "/s"), Seq("/s" -> DistinctOn("fp")), "/c", Some("text_out")),
+      SemanticIngestSpec(src, "doc", "v", cents, 0.9, "/c", "/s", "/k", compactEvery = 2) ->
+        (Seq("/c", "/s"), Seq("/c" -> DistinctOn("doc"), "/s" -> DistinctOn("id")), "/c", None),
+      VectorIndexIngestSpec(src, "doc", "v", "/idx", "/k", compactEvery = 2) ->
+        (Seq("/idx"), Seq("/idx/cells" -> FoldDelta("/idx")), "/idx/cells", None),
+      // the semantic store is appended LAST, so its crash replay is a no-op
+      PretrainIngestSpec(src, "doc", "t", "v", Seq(1.0), cents, 0.9, 16, "/c", "/sem",
+          "/span", "/k", dsirWeightsDir = Some("/w"), compactEvery = 2) ->
+        (Seq("/c", "/span", "/sem"),
+          Seq("/c" -> DistinctOn("doc"), "/span" -> DistinctOn("fp"), "/sem" -> DistinctOn("id")),
+          "/c", Some("t")))
+    kinds.foreach { case (spec, (sinks, maintenance, primary, textCol)) =>
+      val p = spec.plan
+      assert(p.sinks == sinks, spec.toString)
+      assert(p.maintenance == maintenance, spec.toString)
+      assert(IngestCompiler.primarySink(spec) == primary, spec.toString)
+      assert(p.corpusTextCol == textCol, spec.toString)
+    }
+    // no compaction configured, nothing maintained
+    assert(MinhashIngestSpec(src, "doc", "t", 0.7, "/c", "/s", "/k").plan.maintenance.isEmpty)
   }
 
   test("a concurrent second invocation on one checkpoint fails fast naming the holder") {

@@ -1,10 +1,21 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.Streams
+import graft.streaming.{Dsir, IngestPlan, Minhash, Quality, Semantic, Span, Streams}
 
 class StreamsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The pretrain kind's stage list ([[graft.plans.PretrainIngestSpec]]'s
+    * plan) under the gate's quality weights, with its sinks under `dir`.
+    */
+  private def pretrainPlan(dir: String, cents: Seq[(Int, Seq[Float])],
+                           dsir: Option[Dsir] = None, compactEvery: Int = 0,
+                           maxDocChars: Int = 0): IngestPlan =
+    IngestPlan("doc_id", "text", "embedding",
+      Seq(Quality(SparkEntry.qualityGateWeights)) ++ dsir ++
+        Seq(Semantic(s"$dir/sem", cents, 0.95), Span(s"$dir/span", 4, joinBack = true)),
+      Some(s"$dir/corpus"), s"$dir/ckpt", compactEvery, maxDocChars)
 
   test("streaming tumbling agg (complete mode) matches the batch result") {
     val events = Tables(spark, sf, "events")
@@ -73,8 +84,8 @@ class StreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ingest_dedup").toString
     val (corpus, store, ckpt) = (s"$dir/corpus", s"$dir/store", s"$dir/ckpt")
     val in = MemoryStream[(Long, String)]
-    val q = Streams.ingestDedup(in.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", threshold = 0.7, corpus, store, ckpt)
+    val q = Streams.ingest(in.toDF().toDF("doc_id", "text"),
+      IngestPlan("doc_id", "text", "", Seq(Minhash(store, 0.7)), Some(corpus), ckpt))
     try {
       in.addData((1L, "the quick brown fox jumps over the lazy dog again and again today"),
                  (2L, "completely different content describing catalyst optimizer internals"))
@@ -119,8 +130,8 @@ class StreamsSpec extends SparkSpec {
     val minLogw = (batchScores(1L).min(batchScores(3L)) +
       batchScores(2L).max(batchScores(4L))) / 2
     val in = MemoryStream[(Long, String)]
-    val q = Streams.ingestImportanceFiltered(in.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", wDir, minLogw, corpus, ckpt)
+    val q = Streams.ingest(in.toDF().toDF("doc_id", "text"),
+      IngestPlan("doc_id", "text", "", Seq(Dsir(wDir, minLogw, hexLen = 4)), Some(corpus), ckpt))
     try {
       in.addData(docs.take(2): _*); q.processAllAvailable()
       in.addData(docs.drop(2): _*); q.processAllAvailable()
@@ -138,9 +149,8 @@ class StreamsSpec extends SparkSpec {
     val (corpus, store, ckpt) = (s"$dir/corpus", s"$dir/store", s"$dir/ckpt")
     val cents: Seq[(Int, Seq[Float])] = Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f)))
     val in = MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.Streams.ingestSemanticDedup(
-      in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      cents, threshold = 0.95, corpus, store, ckpt)
+    val q = Streams.ingest(in.toDF().toDF("vec_id", "embedding"),
+      IngestPlan("vec_id", "", "embedding", Seq(Semantic(store, cents, 0.95)), Some(corpus), ckpt))
     try {
       in.addData((1L, Seq(10f, 0f)), (2L, Seq(0f, 5f)))
       q.processAllAvailable()
@@ -162,8 +172,8 @@ class StreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ingest_spans").toString
     val (corpus, store, ckpt) = (s"$dir/corpus", s"$dir/store", s"$dir/ckpt")
     val in = MemoryStream[(Long, String)]
-    val q = Streams.ingestSpanDedup(in.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", k = 4, corpus, store, ckpt)
+    val q = Streams.ingest(in.toDF().toDF("doc_id", "text"),
+      IngestPlan("doc_id", "text", "", Seq(Span(store, 4, joinBack = false)), Some(corpus), ckpt))
     try {
       in.addData((1L, "sign up for our newsletter"
         .split(" ").padTo(4, "x").take(4).mkString(" ") + " real content one two"))
@@ -185,13 +195,14 @@ class StreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ingest_crash").toString
     val (corpus, store, ckpt) = (s"$dir/corpus", s"$dir/store", s"$dir/ckpt")
     val in = MemoryStream[(Long, String)]
+    val plan = IngestPlan("doc_id", "text", "", Seq(Span(store, 4, joinBack = false)),
+      Some(corpus), ckpt)
     // query 1 crashes in the documented window: AFTER the corpus append,
     // BEFORE the fp-store append — but only when armed (batch 2)
     val crash = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val q1 = Streams.ingestSpanDedup(in.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", k = 4, corpus, store, ckpt,
-      afterCorpusAppend = () =>
-        if (crash.get) throw new RuntimeException("injected crash between sink appends"))
+    val q1 = Streams.ingest(in.toDF().toDF("doc_id", "text"), plan,
+      afterAppend = d =>
+        if (d == corpus && crash.get) throw new RuntimeException("injected crash between sink appends"))
     try {
       in.addData((1L, "sign up for our real content one two"))
       q1.processAllAvailable()
@@ -210,8 +221,7 @@ class StreamsSpec extends SparkSpec {
     // (foreachBatch is at-least-once), re-dedups against the fp-less store
     // and appends the same rebuilt rows again
     crash.set(false)
-    val q2 = Streams.ingestSpanDedup(in.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", k = 4, corpus, store, ckpt)
+    val q2 = Streams.ingest(in.toDF().toDF("doc_id", "text"), plan)
     try q2.processAllAvailable() finally q2.stop()
     val raw = spark.read.parquet(corpus)
       .select("id", "text_out").as[(Long, String)].collect().toSeq
@@ -221,10 +231,9 @@ class StreamsSpec extends SparkSpec {
     // checkpoint commits the offset — the replay sees the batch's OWN fps
     // and appends an EMPTIED rebuild next to the true row
     val crash2 = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val q3 = Streams.ingestSpanDedup(in.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", k = 4, corpus, store, ckpt,
-      beforeCommit = () =>
-        if (crash2.get) throw new RuntimeException("injected crash before commit"))
+    val q3 = Streams.ingest(in.toDF().toDF("doc_id", "text"), plan,
+      afterAppend = d =>
+        if (d == store && crash2.get) throw new RuntimeException("injected crash before commit"))
     try {
       in.addData((4L, "brand new content for batch three xyz"))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -232,8 +241,7 @@ class StreamsSpec extends SparkSpec {
       }
     } finally q3.stop()
     crash2.set(false)
-    val q4 = Streams.ingestSpanDedup(in.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", k = 4, corpus, store, ckpt)
+    val q4 = Streams.ingest(in.toDF().toDF("doc_id", "text"), plan)
     try q4.processAllAvailable() finally q4.stop()
     // the fp store SELF-HEALS on replay (fresh fps are anti-joined against
     // the store, so the replay re-appends none)
@@ -292,8 +300,8 @@ class StreamsSpec extends SparkSpec {
     // the fixture must exercise both branches, or the test proves nothing
     assert(batchVerdicts.values.toSet == Set(0L, 1L), s"degenerate fixture: $batchVerdicts")
     val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.Streams.ingestQualityFiltered(
-      in.toDF().toDF("doc_id", "text"), "text", w, corpus, ckpt)
+    val q = Streams.ingest(in.toDF().toDF("doc_id", "text"),
+      IngestPlan("", "text", "", Seq(Quality(w)), Some(corpus), ckpt))
     try {
       in.addData(docs.take(2): _*); q.processAllAvailable()
       in.addData(docs.drop(2): _*); q.processAllAvailable()
@@ -305,12 +313,56 @@ class StreamsSpec extends SparkSpec {
     assert(cols.contains("quality_score_1e6") && cols.contains("quality_accept"))
   }
 
+  test("a stage list no ingest kind offers, [Quality, Minhash], equals its batch composition") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.operators.{Dedup, QualityModel}
+    implicit val sc = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("ingest_compose").toString
+    val (corpus, store) = (s"$dir/corpus", s"$dir/store")
+    val w = SparkEntry.qualityGateWeights
+    val passText = "the cat sat on the mat and the dog slept in the warm sun for hours today"
+    val rugText = "the cat sat on a spotted rug by the fire late last night"
+    val batches = Seq(
+      Seq(1L -> passText, 2L -> "zzz zzz zzz zzz zzz zzz zzz zzz zzz zzz zzz zzz",
+        3L -> "a reasonable sentence about the weather and the plans for the weekend trip"),
+      // a cross-batch twin of doc 1, an in-batch twin pair, a quality reject
+      Seq(10L -> passText, 11L -> rugText, 12L -> rugText,
+        13L -> "yyy yyy yyy yyy yyy yyy yyy yyy yyy yyy yyy yyy"))
+    val in = MemoryStream[(Long, String)]
+    val q = Streams.ingest(in.toDF().toDF("doc_id", "text"),
+      IngestPlan("doc_id", "text", "", Seq(Quality(w), Minhash(store, 0.7)), Some(corpus),
+        s"$dir/ckpt"))
+    try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() } finally q.stop()
+    // the batch composition: quality accept, then each batch deduped
+    // against the signatures of the earlier batches' survivors
+    val expected = graft.exec.Scope.withCacheScope {
+      val (kept, _) = batches.foldLeft((Seq.empty[org.apache.spark.sql.Row], Option.empty[
+          org.apache.spark.sql.DataFrame])) { case ((acc, prior), b) =>
+        val accepted = QualityModel.score(b.toDF("doc_id", "text"), "text", w)
+          .filter(col("quality_accept") === 1)
+        val storeSigs = prior.getOrElse(Dedup.minhashSignatures(accepted.limit(0), "doc_id", "text"))
+        val k = Dedup.incrementalDedup(accepted, storeSigs, "doc_id", "text", threshold = 0.7)
+          .localCheckpoint()
+        val sigs = Dedup.minhashSignatures(k, "doc_id", "text")
+        (acc ++ k.collect(), Some(prior.fold(sigs)(_.unionByName(sigs))))
+      }
+      kept.toSet
+    }
+    // the fixture exercises both stages: quality drops 2 and 13, the
+    // minhash store drops 10, the in-batch pair keeps 11
+    assert(expected.map(_.getAs[Long]("doc_id")) == Set(1L, 3L, 11L), s"got $expected")
+    val out = spark.read.parquet(corpus)
+    assert(out.columns.toSeq == Seq("doc_id", "text", "quality_score_1e6", "quality_accept"),
+      out.columns.toSeq.toString)
+    assert(out.collect().toSet == expected)
+    assert(spark.read.parquet(store).select("id").as[Long].collect().toSet == Set(1L, 3L, 11L))
+  }
+
   test("ingestPretrainCorpus: quality gate, semantic store, and span store compose in one ingest") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("ingest_v3").toString
-    val (corpus, semStore, spanStore, ckpt) =
-      (s"$dir/corpus", s"$dir/sem", s"$dir/span", s"$dir/ckpt")
+    val (corpus, semStore, spanStore) = (s"$dir/corpus", s"$dir/sem", s"$dir/span")
     val cents: Seq[(Int, Seq[Float])] = Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f)))
     val w = SparkEntry.qualityGateWeights
     val passText = "the cat sat on the mat and the dog slept in the warm sun for hours today"
@@ -341,10 +393,8 @@ class StreamsSpec extends SparkSpec {
     assert(scores(12L) < keepMin, s"degenerate DSIR fixture: $scores")
     val minLogw = (scores(12L) + keepMin) / 2
     val in = MemoryStream[(Long, String, Seq[Float])]
-    val q = graft.streaming.Streams.ingestPretrainCorpus(
-      in.toDF().toDF("doc_id", "text", "embedding"), "doc_id", "text", "embedding",
-      w, cents, semThreshold = 0.95, spanK = 4, corpus, semStore, spanStore, ckpt,
-      dsirWeightsDir = Some(wDir), minLogw = minLogw)
+    val q = Streams.ingest(in.toDF().toDF("doc_id", "text", "embedding"),
+      pretrainPlan(dir, cents, dsir = Some(Dsir(wDir, minLogw, hexLen = 4))))
     try {
       in.addData(
         (1L, passText, Seq(10f, 0f)),                                // keeps everything
@@ -381,21 +431,17 @@ class StreamsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("ingest_compact").toString
-    val (corpus, semStore, spanStore, ckpt) =
-      (s"$dir/corpus", s"$dir/sem", s"$dir/span", s"$dir/ckpt")
+    val (corpus, semStore, spanStore) = (s"$dir/corpus", s"$dir/sem", s"$dir/span")
     val cents: Seq[(Int, Seq[Float])] = Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f)))
-    val w = SparkEntry.qualityGateWeights
     val in = MemoryStream[(Long, String, Seq[Float])]
-    def start(afterCorpusAppend: () => Unit = () => ()) =
-      graft.streaming.Streams.ingestPretrainCorpus(
-        in.toDF().toDF("doc_id", "text", "embedding"), "doc_id", "text", "embedding",
-        w, cents, semThreshold = 0.95, spanK = 4, corpus, semStore, spanStore, ckpt,
-        compactEvery = 1, afterCorpusAppend = afterCorpusAppend)
+    def start(afterAppend: String => Unit = _ => ()) =
+      Streams.ingest(in.toDF().toDF("doc_id", "text", "embedding"),
+        pretrainPlan(dir, cents, compactEvery = 1), afterAppend = afterAppend)
     // window-1 crash: the corpus append lands, the batch dies before the
     // span append — the compaction hook must NOT run on the failed attempt
     val crash = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val q1 = start(afterCorpusAppend =
-      () => if (crash.get) throw new RuntimeException("crash before span append"))
+    val q1 = start(afterAppend =
+      d => if (d == corpus && crash.get) throw new RuntimeException("crash before span append"))
     try {
       in.addData((1L, "the cat sat on the mat and the dog slept in the warm sun for hours today", Seq(10f, 0f)))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -429,25 +475,18 @@ class StreamsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("ingest_v3_crash").toString
-    val (corpus, semStore, spanStore, ckpt) =
-      (s"$dir/corpus", s"$dir/sem", s"$dir/span", s"$dir/ckpt")
+    val (corpus, semStore, spanStore) = (s"$dir/corpus", s"$dir/sem", s"$dir/span")
     val cents: Seq[(Int, Seq[Float])] = Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f)))
-    val w = SparkEntry.qualityGateWeights
     lazy val in = MemoryStream[(Long, String, Seq[Float])]
-    def start(afterCorpusAppend: () => Unit = () => (),
-              afterSpanAppend: () => Unit = () => (),
-              beforeCommit: () => Unit = () => ()) =
-      graft.streaming.Streams.ingestPretrainCorpus(
-        in.toDF().toDF("doc_id", "text", "embedding"), "doc_id", "text", "embedding",
-        w, cents, semThreshold = 0.95, spanK = 4, corpus, semStore, spanStore, ckpt,
-        afterCorpusAppend = afterCorpusAppend, afterSpanAppend = afterSpanAppend,
-        beforeCommit = beforeCommit)
+    def start(afterAppend: String => Unit = _ => ()) =
+      Streams.ingest(in.toDF().toDF("doc_id", "text", "embedding"), pretrainPlan(dir, cents),
+        afterAppend = afterAppend)
     def corpusRows = spark.read.parquet(corpus)
       .select("doc_id", "n_kept").as[(Long, Long)].collect().toSeq
     // window 1: crash between the corpus append and the span-store append
     val crash1 = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val q1 = start(afterCorpusAppend =
-      () => if (crash1.get) throw new RuntimeException("crash before span append"))
+    val q1 = start(afterAppend =
+      d => if (d == corpus && crash1.get) throw new RuntimeException("crash before span append"))
     try {
       in.addData((1L, "the cat sat on the mat and the dog slept in the warm sun for hours today", Seq(10f, 0f)))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -467,8 +506,8 @@ class StreamsSpec extends SparkSpec {
     // and the n_kept > 0 corpus filter (batch v3's 'nonempty' semantics)
     // drops it: the replay appends NOTHING, the corpus stays exactly right
     val crash2 = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val q3 = start(afterSpanAppend =
-      () => if (crash2.get) throw new RuntimeException("crash before sem append"))
+    val q3 = start(afterAppend =
+      d => if (d == spanStore && crash2.get) throw new RuntimeException("crash before sem append"))
     try {
       in.addData((2L, "the fresh words for the catalyst and the optimizer in the engine here today now", Seq(0f, 5f)))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -488,8 +527,8 @@ class StreamsSpec extends SparkSpec {
     // semantic store's id anti-join makes the replay a no-op
     val nBefore = spark.read.parquet(corpus).count()
     val crash3 = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val q5 = start(beforeCommit =
-      () => if (crash3.get) throw new RuntimeException("crash before commit"))
+    val q5 = start(afterAppend =
+      d => if (d == semStore && crash3.get) throw new RuntimeException("crash before commit"))
     try {
       in.addData((3L, "a third novel document with its own words and nothing shared at all", Seq(-4f, 1f)))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -512,17 +551,15 @@ class StreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ingest_sem_crash").toString
     val (corpus, store, ckpt) = (s"$dir/corpus", s"$dir/store", s"$dir/ckpt")
     val cents: Seq[(Int, Seq[Float])] = Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f)))
-    def start(afterCorpusAppend: () => Unit = () => (),
-              beforeCommit: () => Unit = () => ()) =
-      graft.streaming.Streams.ingestSemanticDedup(
-        in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        cents, threshold = 0.95, corpus, store, ckpt,
-        afterCorpusAppend = afterCorpusAppend, beforeCommit = beforeCommit)
+    def start(afterAppend: String => Unit = _ => ()) =
+      Streams.ingest(in.toDF().toDF("vec_id", "embedding"),
+        IngestPlan("vec_id", "", "embedding", Seq(Semantic(store, cents, 0.95)), Some(corpus), ckpt),
+        afterAppend = afterAppend)
     lazy val in = MemoryStream[(Long, Seq[Float])]
     // crash window 1: AFTER the corpus append, BEFORE the store append
     val crash = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val q1 = start(afterCorpusAppend =
-      () => if (crash.get) throw new RuntimeException("injected crash between sink appends"))
+    val q1 = start(afterAppend =
+      d => if (d == corpus && crash.get) throw new RuntimeException("injected crash between sink appends"))
     try {
       in.addData((1L, Seq(10f, 0f)), (2L, Seq(0f, 5f)))
       q1.processAllAvailable()
@@ -555,8 +592,8 @@ class StreamsSpec extends SparkSpec {
     // the replay sees the batch's own vectors in the store, every vector
     // is its own exact twin, the store wins, and NOTHING re-appends
     val crash2 = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val q3 = start(beforeCommit =
-      () => if (crash2.get) throw new RuntimeException("injected crash before commit"))
+    val q3 = start(afterAppend =
+      d => if (d == store && crash2.get) throw new RuntimeException("injected crash before commit"))
     try {
       in.addData((20L, Seq(-3f, 4f)))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -595,11 +632,8 @@ class StreamsSpec extends SparkSpec {
       .select("quality_accept").as[Long].head()
     assert(clampedVerdict == 1L, "fixture: clamped hostile text must pass quality")
     val in = MemoryStream[(Long, String, Seq[Float])]
-    val q = graft.streaming.Streams.ingestPretrainCorpus(
-      in.toDF().toDF("doc_id", "text", "embedding"), "doc_id", "text", "embedding",
-      SparkEntry.qualityGateWeights, cents, semThreshold = 0.95, spanK = 4,
-      s"$dir/corpus", s"$dir/sem", s"$dir/span", s"$dir/ckpt",
-      maxDocChars = cap)
+    val q = Streams.ingest(in.toDF().toDF("doc_id", "text", "embedding"),
+      pretrainPlan(dir, cents, maxDocChars = cap))
     try {
       in.addData((1L, passText, Seq(10f, 0f)), (2L, hostile, Seq(0f, 5f)))
       q.processAllAvailable()
@@ -617,10 +651,7 @@ class StreamsSpec extends SparkSpec {
     val cents: Seq[(Int, Seq[Float])] = Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f)))
     val passText = "the cat sat on the mat and the dog slept in the warm sun for hours today"
     val in = MemoryStream[(Long, String, Seq[Float])]
-    val q = graft.streaming.Streams.ingestPretrainCorpus(
-      in.toDF().toDF("doc_id", "text", "embedding"), "doc_id", "text", "embedding",
-      SparkEntry.qualityGateWeights, cents, semThreshold = 0.95, spanK = 4,
-      s"$dir/corpus", s"$dir/sem", s"$dir/span", s"$dir/ckpt")
+    val q = Streams.ingest(in.toDF().toDF("doc_id", "text", "embedding"), pretrainPlan(dir, cents))
     // every job the second micro-batch launches
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -674,15 +705,11 @@ class StreamsSpec extends SparkSpec {
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
     val (rdds0, registered0) = (persisted, graft.exec.Scope.registeredCaches)
     val qs = Seq(
-      graft.streaming.Streams.ingestPretrainCorpus(
-        pre.toDF().toDF("doc_id", "text", "embedding"), "doc_id", "text", "embedding",
-        SparkEntry.qualityGateWeights, cents, semThreshold = 0.95, spanK = 4,
-        s"$dir/p/corpus", s"$dir/p/sem", s"$dir/p/span", s"$dir/p/ckpt"),
-      graft.streaming.Streams.ingestSemanticDedup(
-        sem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        cents, threshold = 0.95, s"$dir/s/corpus", s"$dir/s/store", s"$dir/s/ckpt"),
-      Streams.ingestSpanDedup(span.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", k = 4, s"$dir/w/corpus", s"$dir/w/store", s"$dir/w/ckpt"))
+      Streams.ingest(pre.toDF().toDF("doc_id", "text", "embedding"), pretrainPlan(s"$dir/p", cents)),
+      Streams.ingest(sem.toDF().toDF("vec_id", "embedding"), IngestPlan("vec_id", "", "embedding",
+        Seq(Semantic(s"$dir/s/store", cents, 0.95)), Some(s"$dir/s/corpus"), s"$dir/s/ckpt")),
+      Streams.ingest(span.toDF().toDF("doc_id", "text"), IngestPlan("doc_id", "text", "",
+        Seq(Span(s"$dir/w/store", 4, joinBack = false)), Some(s"$dir/w/corpus"), s"$dir/w/ckpt")))
     try {
       for (b <- 0 until 3) {
         // each batch repeats earlier windows and directions (store hits)

@@ -570,10 +570,10 @@ class VectorIndexSpec extends SparkSpec {
     // window: crash AFTER the append, BEFORE the commit — batch 1 replays
     var crashed = false
     val in = MemoryStream[(Long, Seq[Float])]
-    def start() = graft.streaming.Streams.ingestVectorIndex(
-      in.toDF().toDF("vec_id", "embedding"), dir, s"$root/ckpt",
-      compactEvery = 2,
-      beforeCommit = () => if (!crashed) { crashed = true; sys.error("injected crash") })
+    def start() = graft.streaming.Streams.ingest(in.toDF().toDF("vec_id", "embedding"),
+      graft.streaming.IngestPlan("vec_id", "", "embedding", Seq(graft.streaming.VectorIndex(dir)),
+        None, s"$root/ckpt", compactEvery = 2),
+      afterAppend = _ => if (!crashed) { crashed = true; sys.error("injected crash") })
     val q1 = start()
     in.addData(rows.take(30).toIndexedSeq: _*)
     intercept[Exception] { q1.processAllAvailable() }
