@@ -144,7 +144,7 @@ private[graft] object VectorGates {
         val (emb, planted) = semdedupFixture(s, dir)
         val assigned = Dedup.assignSemanticClusters(emb.unionByName(planted),
           "vec_id", "embedding", semanticCentroidsKmeans)
-        val pairs = Dedup.semanticDedupPairsAssigned(assigned, threshold = 0.9)
+        val pairs = Dedup.semanticPairs(assigned, Dedup.emptyOf(assigned), threshold = 0.9)
         val deg = pairs.select(col("id_a").as("id"), col("cos_sim"))
           .unionByName(pairs.select(col("id_b").as("id"), col("cos_sim")))
           .groupBy("id")

@@ -103,31 +103,16 @@ object Dedup {
     * document-level fingerprints can't touch.
     *
     * Returns `(id, n_toks, n_kept, text_out)` — token counts before/after
-    * and the surviving token stream re-joined with single spaces.
-    *
-    * Scale shape: the fingerprint-wide shuffle carries ONLY `(fp, id,
-    * start)` triples. The first-occurrence choice is a
-    * `groupBy(fp).agg(min(...))` (map-side partial absorbs mega-repeated
-    * boilerplate fingerprints — the skew case — instead of funnelling them
-    * through one window task), losers join back fp-keyed (AQE handles the
-    * residual skew), and the per-doc drop set is a small `collect_set`.
-    * The rebuild attaches drop sets with a join that broadcasts while the
-    * drop relation fits (PlanQualitySpec locks that no token array rides a
-    * shuffle in that regime); on a boilerplate-saturated corpus it degrades
-    * to ONE id-keyed corpus shuffle — the floor for any rebuild that must
-    * pair documents with their deletions.
+    * and the surviving token stream re-joined with single spaces. This is
+    * [[incrementalSpanDedup]]'s kernel over an empty fingerprint store.
     */
   def dropRepeatedSpans(df: DataFrame, idCol: String, textCol: String,
-                        k: Int = 16): DataFrame = {
-    val base = spanBase(df, idCol, textCol)
-    val occ = spanOcc(base, k)
-    val first = occ.groupBy("fp")
-      .agg(min(struct(col("id"), col("start"))).as("keep"))
-    val drops = occ.join(first, "fp")
-      .filter(struct(col("id"), col("start")) =!= col("keep"))
-      .groupBy("id").agg(collect_set(col("start")).as("drop_starts"))
-    spanRebuild(base, drops, k)
-  }
+                        k: Int = 16): DataFrame =
+    spanRebuild(df, idCol, textCol, spanWindows(df, noFps(df), idCol, textCol, k), k)
+
+  /** An empty window-fingerprint store. */
+  private def noFps(df: DataFrame): DataFrame =
+    df.sparkSession.emptyDataset(org.apache.spark.sql.Encoders.STRING).toDF("fp")
 
   /** `(id, toks)` projection shared by the span tier. */
   private def spanBase(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -147,9 +132,50 @@ object Dedup {
       .filter(col("__n") > 0) // empty docs contribute no window
       .select("id", "start", "fp")
 
-  /** Rebuild each document from its surviving windows in order. */
-  private def spanRebuild(base: DataFrame, drops: DataFrame, k: Int): DataFrame =
-    base.join(drops, Seq("id"), "left")
+  /** The span tier's one kernel: the window relation `(id, start, fp,
+    * is_first)` of `delta` against the fingerprint store `storeFps`.
+    * `is_first` marks the within-delta first occurrence (smallest `(id,
+    * start)`) of a content the store lacks; a window survives iff it is
+    * first.
+    *
+    * Scale shape: the fingerprint-wide shuffle carries ONLY `(fp, id,
+    * start)` triples, and ONE fp-keyed aggregation over the delta's windows
+    * AND the store's fps yields both the first occurrence and store
+    * membership: map-side partial aggregation absorbs mega-repeated
+    * boilerplate fingerprints (the skew case) instead of funnelling them
+    * through one window task, and only the delta's fresh fps join back
+    * (AQE handles the residual skew). Over an empty store the union branch
+    * is optimized away, leaving the plain first-occurrence aggregation.
+    */
+  private def spanWindows(delta: DataFrame, storeFps: DataFrame, idCol: String,
+                          textCol: String, k: Int): DataFrame = {
+    val occ = spanOcc(spanBase(delta, idCol, textCol), k)
+    // a store fp enters the aggregation as a window with a null start,
+    // which sorts before every delta window's (starts are never null): the
+    // min is a delta window exactly when the store lacks the content
+    val fresh = occ.unionByName(storeFps.select(
+        lit(null).cast(occ.schema("id").dataType).as("id"), lit(null).cast("int").as("start"),
+        col("fp")))
+      .groupBy("fp").agg(min(struct(col("id"), col("start"))).as("keep"))
+      .filter(col("keep.start").isNotNull)
+    occ.join(fresh, Seq("fp"), "left")
+      .select(col("id"), col("start"), col("fp"),
+        coalesce(struct(col("id"), col("start")) === col("keep"), lit(false)).as("is_first"))
+  }
+
+  /** Rebuild each document of `delta` from its surviving windows in order.
+    * The per-doc drop set is a small `collect_set`, attached with a join
+    * that broadcasts while the drop relation fits (PlanQualitySpec locks
+    * that no token array rides a shuffle in that regime); on a
+    * boilerplate-saturated corpus it degrades to ONE id-keyed corpus
+    * shuffle — the floor for any rebuild that must pair documents with
+    * their deletions.
+    */
+  private def spanRebuild(delta: DataFrame, idCol: String, textCol: String,
+                          windows: DataFrame, k: Int): DataFrame = {
+    val drops = windows.filter(!col("is_first"))
+      .groupBy("id").agg(collect_set(col("start")).as("drop_starts"))
+    spanBase(delta, idCol, textCol).join(drops, Seq("id"), "left")
       .withColumn("drop_starts", coalesce(col("drop_starts"), typedLit(Array.empty[Int])))
       .select(col("id"),
         size(col("toks")).cast("long").as("n_toks"),
@@ -164,6 +190,19 @@ object Dedup {
       .select(col("id"), col("n_toks"),
         size(col("__kept")).cast("long").as("n_kept"),
         concat_ws(" ", col("__kept")).as("text_out"))
+  }
+
+  /** `rows` with `textCol` replaced by the rebuilt text of a span rebuild
+    * relation `(id, …, n_kept, text_out)` keyed on `idCol`, and `n_kept`
+    * appended: the join-back of the batch `spanDedup` node and of the
+    * `Span(joinBack = true)` ingest stage.
+    */
+  def withRebuiltText(rows: DataFrame, rebuilt: DataFrame, idCol: String,
+                      textCol: String): DataFrame =
+    rows.join(rebuilt.select(col("id").as("__sid"), col("text_out"), col("n_kept")),
+        rows(idCol) === col("__sid"))
+      .withColumn(textCol, col("text_out"))
+      .drop("__sid", "text_out")
 
   /** Distinct window-content fingerprints of a corpus — the persisted store
     * [[incrementalSpanDedup]] dedups deltas against (16 B/window; build once
@@ -184,40 +223,18 @@ object Dedup {
     * corpus — the store is fp-only (16 B/window), the span analogue of the
     * minhash signature store.
     *
-    * Both outputs derive from ONE window relation `(id, start, fp,
-    * is_first, in_store)`, persisted and registered in the session cache
-    * registry, so an ingest that writes `rebuilt` and then `newFps` runs
-    * the occurrence/first-occurrence/store pass once. Callers release it
-    * with [[graft.exec.Scope.withCacheScope]] (materialize both outputs
-    * inside the scope).
+    * Both outputs read the one window relation, so it is persisted and
+    * registered in the session cache registry: an ingest that writes
+    * `rebuilt` and then `newFps` runs the occurrence/first-occurrence/store
+    * pass once. Callers release it with [[graft.exec.Scope.withCacheScope]]
+    * (materialize both outputs inside the scope).
     * Delta ids must be unique, as for every incremental tier.
     */
   def incrementalSpanDedup(delta: DataFrame, storeFps: DataFrame, idCol: String,
                            textCol: String, k: Int = 16): (DataFrame, DataFrame) = {
-    val base = spanBase(delta, idCol, textCol)
-    val occ = spanOcc(base, k)
-    // one fp-keyed aggregation over the delta's windows AND the store's
-    // fps yields both the first occurrence and store membership (partial
-    // aggregation absorbs boilerplate skew, as in dropRepeatedSpans); only
-    // the delta's fps join back
-    val idType = occ.schema("id").dataType
-    val byFp = occ.select(col("fp"), col("id"), col("start"), lit(false).as("__st"))
-      .unionByName(storeFps.select(col("fp"), lit(null).cast(idType).as("id"),
-        lit(null).cast("int").as("start"), lit(true).as("__st")))
-      .groupBy("fp")
-      .agg(min(when(!col("__st"), struct(col("id"), col("start")))).as("keep"),
-        max(col("__st")).as("in_store"))
-      .filter(col("keep").isNotNull)
-    val flags = cached(occ.join(byFp, "fp")
-      .select(col("id"), col("start"), col("fp"),
-        (struct(col("id"), col("start")) === col("keep")).as("is_first"),
-        col("in_store")))
-    // a window drops if the store knows it or it loses the within-delta
-    // first-occurrence rule; the store gains each fresh fp's first window
-    val drops = flags.filter(!col("is_first") || col("in_store"))
-      .groupBy("id").agg(collect_set(col("start")).as("drop_starts"))
-    val newFps = flags.filter(col("is_first") && !col("in_store")).select("fp")
-    (spanRebuild(base, drops, k), newFps)
+    val windows = cached(spanWindows(delta, storeFps, idCol, textCol, k))
+    (spanRebuild(delta, idCol, textCol, windows, k),
+      windows.filter(col("is_first")).select("fp"))
   }
 
   // --- Tier 2: MinHash + LSH ------------------------------------------------
@@ -274,29 +291,6 @@ object Dedup {
         struct(lit(b).as("band"), xxhash64(slice(col("sig"), b * rows + 1, rows)).as("key"))): _*)).as("bb"))
       .select(col("id"), col("bb.band"), col("bb.key"))
     bucketPairs(banded, maxBucketSize, obs)
-  }
-
-  /** Candidate near-duplicate pairs by banded LSH over minhash signatures.
-    * bands×rows = numHashes; a pair is a candidate iff some band matches.
-    * Returns (id_a, id_b, jaccard_est ∈ [0,1]) with id_a < id_b, where
-    * jaccard_est is the fraction of matching minhashes — the unbiased
-    * Jaccard estimator. See [[bandedPairs]] for the 100 TB-safe plan shape;
-    * the two signatures are joined back only per deduped pair.
-    */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        shingleLen: Int = 5, numHashes: Int = 128,
-                        bands: Int = 16, maxBucketSize: Int = 1000): DataFrame = {
-    // the signature relation feeds three plan branches (banding + both pair
-    // sides); persist so the kernel runs once per row, not once per branch
-    val sig = cached(signatures(df, idCol, textCol, shingleLen, numHashes))
-    val pairs = bandedPairs(sig, numHashes, bands, maxBucketSize)
-    val sigA = sig.select(col("id").as("id_a"), col("sig").as("sig_a"))
-    val sigB = sig.select(col("id").as("id_b"), col("sig").as("sig_b"))
-    pairs.join(sigA, "id_a").join(sigB, "id_b")
-      .withColumn("jaccard_est",
-        aggregate(zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
-                  lit(0), (acc, x) => acc + x).cast("double") / numHashes)
-      .select("id_a", "id_b", "jaccard_est")
   }
 
   /** Tier 2 end-to-end: candidates whose *exact* shingle-set Jaccard clears
@@ -461,31 +455,22 @@ object Dedup {
     */
   def unpersistCaches(): Unit = graft.exec.Scope.unpersistCaches()
 
-  /** Near-dup pairs touching at least one NEW document, for a delta batch
-    * banded together with the persisted signature store: `(id_a, id_b,
-    * a_new, b_new, jaccard_est)` with id_a < id_b. Store–store pairs are
-    * dropped (the store is assumed already deduped); the verdict is the
-    * signature Jaccard estimator, since the store carries no text (at
-    * numHashes=128 the estimator's std error near a 0.7 threshold is ≈0.04
-    * — callers needing exact verification can join the surviving new ids
-    * back to text and reuse [[ngramJaccard]]).
+  /** Near-dup pairs touching at least one NEW document, for a delta batch's
+    * PRE-COMPUTED signatures `(id, sig)` ([[minhashSignatures]]) banded
+    * together with the persisted signature store: `(id_a, id_b, a_new,
+    * b_new, jaccard_est)` with id_a < id_b. Store–store pairs are dropped
+    * (the store is assumed already deduped); the verdict is the signature
+    * Jaccard estimator, since the store carries no text (at numHashes=128
+    * the estimator's std error near a 0.7 threshold is ≈0.04 — callers
+    * needing exact verification can join the surviving new ids back to text
+    * and reuse [[ngramJaccard]]). The streaming ingest computes the delta's
+    * signatures once and reuses them for the store append instead of
+    * re-shingling the survivors.
     *
-    * `storeSigs` must use the same shingleLen/numHashes as the store was
-    * built with; ids across store and delta are assumed distinct. At full
-    * scale the store's `(band, key, id)` triples can additionally be
-    * precomputed and persisted so each batch pays only the delta's banding.
-    */
-  def incrementalDedupPairs(delta: DataFrame, storeSigs: DataFrame, idCol: String,
-                            textCol: String, threshold: Double, shingleLen: Int = 5,
-                            numHashes: Int = 128, bands: Int = 16,
-                            maxBucketSize: Int = 1000): DataFrame =
-    incrementalDedupPairsSigs(signatures(delta, idCol, textCol, shingleLen, numHashes),
-      storeSigs, threshold, numHashes, bands, maxBucketSize)
-
-  /** [[incrementalDedupPairs]] over PRE-COMPUTED delta signatures `(id,
-    * sig)` — for callers that need the delta's signature relation
-    * themselves (the streaming ingest computes it once and reuses it for
-    * the store append instead of re-shingling the survivors).
+    * `storeSigs` must use the same shingleLen/numHashes as `deltaSigs`; ids
+    * across store and delta are assumed distinct. At full scale the
+    * store's `(band, key, id)` triples can additionally be precomputed and
+    * persisted so each batch pays only the delta's banding.
     */
   def incrementalDedupPairsSigs(deltaSigs: DataFrame, storeSigs: DataFrame,
                                 threshold: Double, numHashes: Int = 128,
@@ -519,7 +504,7 @@ object Dedup {
         .filter(col("jaccard_est") >= threshold)
         .select("id_a", "id_b", "a_new", "b_new", "jaccard_est")
     }
-    logDroppedBuckets("incrementalDedupPairs", obs)
+    logDroppedBuckets("incrementalDedupPairsSigs", obs)
     result
   }
 
@@ -552,22 +537,40 @@ object Dedup {
     firstSeenWins(delta, idCol)(incrementalDedupPairsSigs(deltaSigs, storeSigs,
       threshold, numHashes, bands, maxBucketSize))
 
-  /** The first-seen-wins loser rule of the incremental dedups, over a
-    * pair relation `(id_a, id_b, a_new, b_new, …)` flagging which side of
-    * each pair is new: `delta` without every new doc paired with a STORE
-    * doc, and without every non-minimum member of a duplicate component
-    * among the remaining new docs. `flagged` is built inside the rule's
-    * operator scope, so every relation it persists is released with it.
+  /** Which member of a within-delta duplicate component [[firstSeenWins]]
+    * keeps.
+    */
+  sealed trait Representative
+
+  /** The minimum id: the document seen first (the incremental ingests). */
+  case object FirstSeen extends Representative
+
+  /** The member farthest from its centroid: lowest `centroid_sim` in
+    * `assigned` (an `(id, centroid_sim, …)` relation covering the delta),
+    * ties → smallest id — SemDeDup's diversity-preserving keep rule (the
+    * batch semantic dedup).
+    */
+  final case class Farthest(assigned: DataFrame) extends Representative
+
+  /** The first-seen-wins loser rule of the dedups, over a pair relation
+    * `(id_a, id_b, a_new, b_new, …)` flagging which side of each pair is
+    * new: `delta` without every new doc paired with a STORE doc, and
+    * without every member of a duplicate component among the remaining new
+    * docs except the one `keep` elects. `flagged` is built inside the
+    * rule's operator scope, so every relation it persists is released with
+    * it.
     *
     * A graph of at most `driverMaxEdges` pairs (the [[clusters]] gate) is
     * decided on the driver from ONE `head` of the materialized pairs — the
     * same rule, the same union-find by minimum id as [[clusters]]' driver
-    * path — and the losers come back as a local relation: one action
-    * where the distributed rule runs about seven. Above the gate the rule
-    * runs distributed.
+    * path. Under [[FirstSeen]] the losers come back as a local relation:
+    * one action where the distributed rule runs about seven; under
+    * [[Farthest]] the components are ranked against its `assigned` and the
+    * loser set is checkpointed. Above the gate the rule runs distributed.
     */
   private[graft] def firstSeenWins(delta: DataFrame, idCol: String,
-      driverMaxEdges: Long = DriverCcMaxEdges)(flagged: => DataFrame): DataFrame = {
+      driverMaxEdges: Long = DriverCcMaxEdges, keep: Representative = FirstSeen)(
+      flagged: => DataFrame): DataFrame = {
     // scope every relation this persists (the pair result and the
     // clusters() membership) so batch ingest loops accumulate nothing in the
     // session registry; on the distributed path the small loser id set is
@@ -582,7 +585,7 @@ object Dedup {
         if (!driverUnionFind(idType)) None
         else Some(pairs.select("id_a", "id_b", "a_new", "b_new").head(cap + 1))
           .filter(_.length <= cap)
-      small.map(driverLosers(pairs.sparkSession, idType, _)).getOrElse {
+      small.map(driverLosers(pairs.sparkSession, idType, _, keep)).getOrElse {
         val vsStore = pairs.filter(col("a_new") && !col("b_new")).select(col("id_a").as("id"))
           .union(pairs.filter(col("b_new") && !col("a_new")).select(col("id_b").as("id")))
           .distinct()
@@ -595,22 +598,38 @@ object Dedup {
         val survivorPairs = pairs.filter(col("a_new") && col("b_new"))
           .join(vsStore.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
           .join(vsStore.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
-        val withinDelta = clusters(survivorPairs, driverCcMaxEdges = driverMaxEdges)
-          .filter(col("id") =!= col("cluster")).select("id")
+        val withinDelta = nonRepresentatives(
+          clusters(survivorPairs, driverCcMaxEdges = driverMaxEdges), keep)
         scopedCheckpoint(vsStore.union(withinDelta).distinct())
       }
     }
     delta.join(losers, delta(idCol) === losers("id"), "left_anti")
   }
 
+  /** The members of each component of `memb` `(id, cluster)` — `cluster`
+    * being the component's minimum id — that `keep` does not elect.
+    */
+  private def nonRepresentatives(memb: DataFrame, keep: Representative): DataFrame =
+    keep match {
+      case FirstSeen => memb.filter(col("id") =!= col("cluster")).select("id")
+      case Farthest(assigned) =>
+        val ranked = memb.withColumnRenamed("cluster", "grp")
+          .join(assigned.select("id", "centroid_sim"), Seq("id"))
+        val elected = ranked.groupBy("grp")
+          .agg(min_by(col("id"), struct(col("centroid_sim"), col("id"))).as("keep_id"))
+        ranked.join(elected, Seq("grp")).filter(col("id") =!= col("keep_id")).select("id")
+    }
+
   /** [[firstSeenWins]]' rule over collected `(id_a, id_b, a_new, b_new)`
     * rows, as the distributed form evaluates it: a flag counts only when
     * it is TRUE (a null flag passes no filter), and null or self pairs
-    * link nothing. Returns the losers as a local `id` relation.
+    * link nothing. Returns the losers as an `id` relation.
     */
   private def driverLosers(spark: org.apache.spark.sql.SparkSession,
       idType: org.apache.spark.sql.types.DataType,
-      edges: Array[org.apache.spark.sql.Row]): DataFrame = {
+      edges: Array[org.apache.spark.sql.Row], keep: Representative): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    import scala.jdk.CollectionConverters._
     def is(r: org.apache.spark.sql.Row, i: Int, v: Boolean) = !r.isNullAt(i) && r.getBoolean(i) == v
     val vsStore = edges.iterator.flatMap { r =>
       if (is(r, 2, true) && is(r, 3, false)) Option(r.get(0))
@@ -620,13 +639,19 @@ object Dedup {
     val survivorEdges = edges.iterator.filter(r => is(r, 2, true) && is(r, 3, true))
       .map(r => (r.get(0), r.get(1)))
       .filter { case (a, b) => a != null && b != null && a != b && !vsStore(a) && !vsStore(b) }
-    val withinDelta = minIdComponents(survivorEdges).collect { case (n, root) if n != root => n }
-    val rows: java.util.List[org.apache.spark.sql.Row] = {
-      import scala.jdk.CollectionConverters._
-      (vsStore ++ withinDelta).toSeq.map(org.apache.spark.sql.Row(_)).asJava
+    val components = minIdComponents(survivorEdges)
+    def local(rows: Iterable[org.apache.spark.sql.Row], cols: String*) =
+      spark.createDataFrame(rows.toSeq.asJava, StructType(cols.map(StructField(_, idType))))
+    keep match {
+      case FirstSeen =>
+        val withinDelta = components.collect { case (n, root) if n != root => n }
+        local((vsStore ++ withinDelta).map(org.apache.spark.sql.Row(_)), "id")
+      case Farthest(_) =>
+        val memb = local(components.map { case (n, root) => org.apache.spark.sql.Row(n, root) },
+          "id", "cluster")
+        scopedCheckpoint(local(vsStore.map(org.apache.spark.sql.Row(_)), "id")
+          .union(nonRepresentatives(memb, keep)))
     }
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType))))
   }
 
   // --- Duplicate clustering (connected components) --------------------------
@@ -980,10 +1005,9 @@ object Dedup {
     round(when(union === 0, 0.0).otherwise(inter / union), 4)
   }
 
-  /** Pairwise n-gram Jaccard over a *bounded candidate set* (e.g. the output
-    * of [[minhashCandidates]], or a blocked subset). Exposed standalone for
-    * small-N exact audits; at scale always feed LSH candidates instead of
-    * the cross join.
+  /** Pairwise n-gram Jaccard over a *bounded candidate set* (e.g. LSH
+    * candidates, or a blocked subset). Exposed standalone for small-N exact
+    * audits; at scale always feed LSH candidates instead of the cross join.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int,
                         threshold: Double): DataFrame = {
@@ -1055,7 +1079,7 @@ object Dedup {
   def embeddingDupPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                         threshold: Double, bands: Int = 6, bits: Int = 10): DataFrame = {
     import graft.functions.{SignLshBuckets, VectorOps}
-    // ids-only through the bucket aggregation (see minhashCandidates);
+    // ids-only through the bucket aggregation (see bucketPairs);
     // vectors are joined back per deduped pair, not shuffled per bucket row
     val banded = df.select(col(idCol).as("id"),
       posexplode(SignLshBuckets.signLsh(col(vecCol), dim, bands, bits))
@@ -1127,7 +1151,7 @@ object Dedup {
     * [[graft.functions.VectorOps.ivfTopK]] pattern: model broadcast,
     * `transform` is the same narrow pass) and feed the resulting
     * `(id, vec, cluster, centroid_sim)` relation to
-    * [[semanticDedupPairsAssigned]]. Returns `(id, vec, cluster, centroid_sim)`;
+    * [[semanticPairs]]. Returns `(id, vec, cluster, centroid_sim)`;
     * `centroid_sim` — the cosine to the OWN cluster's centroid — is what
     * the SemDeDup keep-rule ranks on. A zero-norm vector has null cosine to
     * every centroid: it lands deterministically in the lowest-id cluster
@@ -1172,78 +1196,14 @@ object Dedup {
   }
 
   /** SemDeDup pairs: exact cosine ≥ `threshold`, computed ONLY within a
-    * coarse cluster. The corpus shuffles once on the cluster key (vectors
-    * ride that one exchange — the tier's defining cost, bounded by cluster
-    * size, exactly as in the paper); cluster cardinalities come from a
-    * key-only aggregation and clusters larger than `maxClusterSize` (a
-    * degenerate centroid set) are EXCLUDED from the quadratic expansion,
-    * counted and logged like every banded tier's bucket cap. Returns
+    * coarse cluster — [[semanticPairs]] over an empty store. Returns
     * `(id_a, id_b, cluster, cos_sim)` with `id_a < id_b`.
     */
   def semanticDedupPairs(df: DataFrame, idCol: String, vecCol: String,
                          centroids: Seq[(Int, Seq[Float])], threshold: Double,
-                         maxClusterSize: Int = 10000): DataFrame =
-    operatorResult {
-      val assigned = cached(assignSemanticClusters(spread(df), idCol, vecCol, centroids))
-      semanticPairsOfAssigned(assigned, threshold, maxClusterSize, "semanticDedupPairs")
-    }
-
-  /** Pair kernel over a PRE-ASSIGNED `(id, vec, cluster, …)` relation — the
-    * entry point when assignment came from elsewhere (an ML k-means model's
-    * `transform` at very large k, or a persisted assigned store re-read from
-    * parquet). Identical semantics to [[semanticDedupPairs]] from the
-    * assignment on.
-    */
-  def semanticDedupPairsAssigned(assigned: DataFrame, threshold: Double,
-                                 maxClusterSize: Int = 10000): DataFrame =
-    operatorResult {
-      semanticPairsOfAssigned(cached(assigned.select("id", "vec", "cluster")),
-        threshold, maxClusterSize, "semanticDedupPairsAssigned")
-    }
-
-  /** Shared pair kernel over an assigned (id, vec, cluster, centroid_sim)
-    * relation; the k-row size relation is [[graft.exec.Scope.cached]] in the caller's
-    * operator scope.
-    */
-  private def semanticPairsOfAssigned(assigned: DataFrame, threshold: Double,
-      maxClusterSize: Int, op: String): DataFrame = {
-    import graft.functions.VectorMath
-    val sizes = cached(assigned.groupBy("cluster").agg(count(lit(1)).as("__n")))
-    // cap accounting on the k-row relation — one tiny action (this is also
-    // the materialization barrier that fills the assignment cache before the
-    // self-join below scans it twice), mirroring the minhash over-group stats
-    val stats = sizes.agg(
-      sum(when(col("__n") > maxClusterSize, 1).otherwise(0)).as("over"),
-      sum(when(col("__n") > maxClusterSize, col("__n")).otherwise(0L)).as("over_rows")
-    ).head()
-    def statAt(i: Int) = if (stats.isNullAt(i)) 0L else stats.getLong(i)
-    if (statAt(0) > 0)
-      log.warn(s"$op: ${statAt(0)} cluster(s) covering ${statAt(1)} vectors exceed " +
-        s"maxClusterSize=$maxClusterSize — excluded from the within-cluster pair " +
-        "expansion; train more centroids (smaller cells) or raise maxClusterSize")
-    val ok = sizes.filter(col("__n").between(2, maxClusterSize)).select("cluster")
-    // k-row build side → broadcast semi join: the corpus is pruned without
-    // an extra shuffle, then self-joins on the cluster key alone
-    val bounded = assigned.join(broadcast(ok), Seq("cluster"), "left_semi")
-    // Hoisted-norm pair kernel (r17): each side's projection carries its
-    // row's Σx², so the per-PAIR kernel does ONE array pass (the dot)
-    // instead of three — bit-identical values (CosineSimNormed scaladoc).
-    // Measured 1.6× on the 400k/266-cell stress corpus (SCALING.md
-    // "Retired probes", 7.6 → 4.8 s). An angle-window prefilter on
-    // |acos(sim_a)−acos(sim_b)| (lossless by the angular triangle inequality) was A/B-measured on
-    // top of this kernel and REJECTED: with the dot this cheap, the window
-    // cost more than the 15–33% of pairs it pruned at the declared 0.9 /
-    // 0.95 operating points (6.0 vs 4.8 s at 0.9; 5.7 vs 6.0 s at 0.95).
-    def side(idAs: String, vecAs: String, normAs: String) =
-      bounded.select(col("cluster"), col("id").as(idAs), col("vec").as(vecAs),
-        VectorMath.normSqCol(col("vec")).as(normAs))
-    val l = side("id_a", "__va", "__na")
-    val r = side("id_b", "__vb", "__nb")
-    l.join(r, Seq("cluster"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos_sim", VectorMath.cosineSimNormed(
-        col("__va"), col("__vb"), col("__na"), col("__nb")))
-      .filter(col("cos_sim") >= threshold)
+                         maxClusterSize: Int = 10000): DataFrame = {
+    val assigned = assignSemanticClusters(spread(df), idCol, vecCol, centroids)
+    semanticPairs(assigned, emptyOf(assigned), threshold, maxClusterSize)
       .select("id_a", "id_b", "cluster", "cos_sim")
   }
 
@@ -1251,42 +1211,44 @@ object Dedup {
     * assigned store (the `(id, vec, cluster, centroid_sim)` relation
     * [[assignSemanticClusters]] produces — persist it once per corpus, with
     * the centroid model pinned) without re-pairing the store against
-    * itself. The store is pruned to the delta's clusters first (the
-    * delta's distinct cluster ids, at most k, come back to the driver with
-    * the cluster sizes and filter the store as a literal set), so
-    * a batch that lands in 3 of 10⁵ cells scans 3 cells' worth of store
-    * vectors, not the corpus. Pairs are delta×(delta ∪ prunedStore) within
-    * a cluster; store×store pairs never form because the left join side is
-    * delta-only. Returns `(id_a, id_b, cluster, cos_sim)`, `id_a < id_b`.
+    * itself ([[semanticPairs]]). Returns `(id_a, id_b, cluster, cos_sim)`,
+    * `id_a < id_b`.
     */
   def incrementalSemanticDedup(delta: DataFrame, store: DataFrame,
       idCol: String, vecCol: String, centroids: Seq[(Int, Seq[Float])],
       threshold: Double, maxClusterSize: Int = 10000): DataFrame =
-    incrementalSemanticDedupAssigned(
-      assignSemanticClusters(spread(delta), idCol, vecCol, centroids),
-      store, threshold, maxClusterSize)
+    semanticPairs(assignSemanticClusters(spread(delta), idCol, vecCol, centroids),
+      store, threshold, maxClusterSize).select("id_a", "id_b", "cluster", "cos_sim")
 
-  /** [[incrementalSemanticDedup]] over a PRE-ASSIGNED delta (the
-    * `(id, vec, cluster, …)` relation [[assignSemanticClusters]] produces)
-    * — the entry point when the caller needs the delta's assignment for
-    * itself too (the streaming ingest assigns ONCE and reuses the relation
-    * for both the pair kernel and the semantic-store append, instead of
-    * recomputing the centroid cosines per consumer).
+  /** The semantic tier's one pair kernel, over a PRE-ASSIGNED delta (the
+    * `(id, vec, cluster, …)` relation [[assignSemanticClusters]] produces,
+    * or an ML k-means model's `transform` at very large k) and an assigned
+    * store: `(id_a, id_b, cluster, cos_sim, a_new, b_new)` with `id_a <
+    * id_b`, every pair with exact cosine ≥ `threshold` WITHIN a cluster
+    * that touches the delta. The batch tier is this kernel over an empty
+    * store ([[emptyOf]]).
+    *
+    * The delta shuffles once on the cluster key (vectors ride that one
+    * exchange — the tier's defining cost, bounded by cluster size, exactly
+    * as in the paper). The COMBINED per-cluster population of the delta's
+    * clusters comes back in one small action (at most one row per delta
+    * cluster); clusters larger than `maxClusterSize` (a degenerate
+    * centroid set) are EXCLUDED from the quadratic expansion and logged
+    * like every banded tier's bucket cap, and the store is pruned to the
+    * delta's in-cap clusters by a literal set filter — no broadcast, and
+    * parquet can skip row groups on it — so a batch that lands in 3 of 10⁵
+    * cells scans 3 cells' worth of store vectors. Pairs are delta×(delta ∪
+    * prunedStore) within a cluster: store×store pairs never form because
+    * the left side is delta-only, and each delta–delta pair forms once
+    * (left id < right id). Over an empty store ([[emptyOf]]) this is the
+    * batch tier's self-join over one reused exchange, side order and
+    * `cos_sim` bits included. The kernel knows which side of each pair is
+    * new, so it emits the flags itself. Delta ids must be disjoint from
+    * store ids. The result is materialized and registered, like every
+    * [[graft.exec.Scope.operatorResult]].
     */
-  def incrementalSemanticDedupAssigned(assignedDelta: DataFrame, store: DataFrame,
-      threshold: Double, maxClusterSize: Int = 10000): DataFrame =
-    incrementalSemanticPairsFlagged(assignedDelta, store, threshold, maxClusterSize)
-      .select("id_a", "id_b", "cluster", "cos_sim")
-
-  /** The incremental pair kernel, `(id_a, id_b, cluster, cos_sim, a_new,
-    * b_new)` with `id_a < id_b`: the kernel knows which side of each pair
-    * comes from the delta (the left side is delta-only, the right side is
-    * delta plus the pruned store), so it emits the new-side flags itself
-    * instead of re-deriving them by joining the delta's ids back in. The
-    * result is materialized and registered, like every [[graft.exec.Scope.operatorResult]].
-    */
-  private def incrementalSemanticPairsFlagged(assignedDelta: DataFrame, store: DataFrame,
-      threshold: Double, maxClusterSize: Int): DataFrame =
+  def semanticPairs(assignedDelta: DataFrame, store: DataFrame, threshold: Double,
+                    maxClusterSize: Int = 10000): DataFrame =
     operatorResult {
       import graft.functions.VectorMath
       // same no-double-persist rule as incrementalDedupPairsSigs: the
@@ -1295,11 +1257,7 @@ object Dedup {
       val d =
         if (assignedDelta.storageLevel != org.apache.spark.storage.StorageLevel.NONE) projected
         else cached(projected)
-      // the COMBINED per-cluster population of the delta's clusters, in one
-      // small action: at most one row per delta cluster reaches the driver,
-      // and both the cap warning and the pair kernel's cluster filters read
-      // it (delta ids are disjoint from store ids by contract, so each
-      // vector is counted once)
+      // delta ids are disjoint from store ids, so each vector is counted once
       val sizes = d.select(col("cluster"), lit(1L).as("__d"))
         .unionByName(store.select(col("cluster"), lit(0L).as("__d")))
         .groupBy("cluster").agg(sum("__d").as("__nd"), count(lit(1)).as("__n"))
@@ -1307,16 +1265,21 @@ object Dedup {
         .collect().map(r => r.get(0) -> r.getLong(1))
       val over = sizes.filter(_._2 > maxClusterSize)
       if (over.nonEmpty)
-        log.warn(s"incrementalSemanticDedup: ${over.length} cluster(s) covering " +
+        log.warn(s"semanticPairs: ${over.length} cluster(s) covering " +
           s"${over.map(_._2).sum} vectors exceed maxClusterSize=$maxClusterSize — excluded " +
           "from pair expansion; train more centroids or raise maxClusterSize")
-      // the store is pruned to the delta's in-cap clusters by a literal
-      // set filter: no cluster-key broadcast, and parquet can skip row
-      // groups on it
       val ok = col("cluster").isin(
         sizes.collect { case (c, n) if n <= maxClusterSize => c }.toIndexedSeq: _*)
-      // hoisted-norm pair kernel, as in semanticPairsOfAssigned (r17):
-      // Σx² rides each side's projection so the pair pass is dot-only
+      // Hoisted-norm pair kernel (r17): each side's projection carries its
+      // row's Σx², so the per-PAIR kernel does ONE array pass (the dot)
+      // instead of three — bit-identical values (CosineSimNormed scaladoc).
+      // Measured 1.6× on the 400k/266-cell stress corpus (SCALING.md
+      // "Retired probes", 7.6 → 4.8 s). An angle-window prefilter on
+      // |acos(sim_a)−acos(sim_b)| (lossless by the angular triangle
+      // inequality) was A/B-measured on top of this kernel and REJECTED:
+      // with the dot this cheap, the window cost more than the 15–33% of
+      // pairs it pruned at the declared 0.9 / 0.95 operating points (6.0
+      // vs 4.8 s at 0.9; 5.7 vs 6.0 s at 0.95).
       val l = d.filter(ok)
         .select(col("cluster"), col("id").as("lid"), col("vec").as("__vl"),
           VectorMath.normSqCol(col("vec")).as("__nl"))
@@ -1325,11 +1288,10 @@ object Dedup {
         .filter(ok)
         .select(col("cluster"), col("id").as("rid"), col("vec").as("__vr"),
           VectorMath.normSqCol(col("vec")).as("__nr"), col("__rnew"))
-      // delta-delta pairs arise in both orders; least/greatest + distinct
-      // canonicalizes (the relation at this point is output-sized). The
-      // left id is always new; the right id is new iff it came from d.
+      // each delta–delta pair forms once (left id < right id); the left id
+      // is always new, the right id iff it came from d
       l.join(r, Seq("cluster"))
-        .filter(col("lid") =!= col("rid"))
+        .filter(when(col("__rnew"), col("lid") < col("rid")).otherwise(col("lid") =!= col("rid")))
         .withColumn("cos_sim", VectorMath.cosineSimNormed(
           col("__vl"), col("__vr"), col("__nl"), col("__nr")))
         .filter(col("cos_sim") >= threshold)
@@ -1337,62 +1299,54 @@ object Dedup {
           greatest(col("lid"), col("rid")).as("id_b"), col("cluster"), col("cos_sim"),
           (col("lid") < col("rid") || col("__rnew")).as("a_new"),
           (col("lid") > col("rid") || col("__rnew")).as("b_new"))
-        .distinct()
     }
 
-  /** Incremental semantic drop: the batch-ingest form — delta rows that
-    * semantically duplicate the STORE are dropped (first-seen wins, the
-    * same convention as [[incrementalDedup]]); duplicate components among
-    * the remaining (store-surviving) delta docs keep their minimum id.
-    * Returns the surviving delta rows, all columns intact; ids-only through
-    * the clustering.
+  /** An empty relation of `df`'s schema, as a local relation: the optimizer
+    * prunes it from a union before it plans the join above, so a kernel
+    * handed it as its store plans exactly the batch shape (`limit(0)`
+    * gives the same rows, but its store flags survive into the join).
     */
-  def incrementalSemanticDrop(delta: DataFrame, store: DataFrame,
-      idCol: String, vecCol: String, centroids: Seq[(Int, Seq[Float])],
-      threshold: Double, maxClusterSize: Int = 10000): DataFrame =
-    incrementalSemanticDropAssigned(delta,
-      assignSemanticClusters(spread(delta), idCol, vecCol, centroids),
-      store, idCol, threshold, maxClusterSize)
+  def emptyOf(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), df.schema)
 
-  /** [[incrementalSemanticDrop]] over a PRE-ASSIGNED delta — see
-    * [[incrementalSemanticDedupAssigned]] for when to prefer it.
-    * `assignedDelta` must be the assignment of exactly `delta`'s rows. The
-    * pair relation is computed ONCE, with its new-side flags, and every
-    * loser rule reads that one cache; `delta` itself is read only by the
-    * final anti join.
+  /** Semantic drop over a PRE-ASSIGNED delta: the [[semanticPairs]] of
+    * `assignedDelta` (the assignment of exactly `delta`'s rows) against
+    * `store`, under the [[firstSeenWins]] loser rule — delta rows that
+    * semantically duplicate the STORE are dropped, and each duplicate
+    * component among the remaining delta docs keeps the member `keep`
+    * elects. Returns the surviving delta rows, all columns intact; ids-only
+    * through the clustering. The pair relation is computed ONCE, with its
+    * new-side flags, and every loser rule reads that one cache; `delta`
+    * itself is read only by the final anti join.
     */
   def incrementalSemanticDropAssigned(delta: DataFrame, assignedDelta: DataFrame,
-      store: DataFrame, idCol: String,
-      threshold: Double, maxClusterSize: Int = 10000): DataFrame =
-    firstSeenWins(delta, idCol)(incrementalSemanticPairsFlagged(assignedDelta, store,
-      threshold, maxClusterSize))
+      store: DataFrame, idCol: String, threshold: Double, maxClusterSize: Int,
+      keep: Representative): DataFrame =
+    firstSeenWins(delta, idCol, keep = keep)(
+      semanticPairs(assignedDelta, store, threshold, maxClusterSize))
 
   /** SemDeDup end-to-end drop: pairs → connected components → per component
     * keep the member FARTHEST from its centroid (lowest `centroid_sim`,
     * ties → smallest id; the paper's diversity-preserving keep-rule) and
-    * anti-join the rest out of `df`. Ids-only through the clustering; full
-    * rows never leave the final anti-join.
+    * anti-join the rest out of `df` — [[incrementalSemanticDropAssigned]]
+    * over an empty store under [[Farthest]]. Ids-only through the
+    * clustering; full rows never leave the final anti-join.
     */
   def semanticDrop(df: DataFrame, idCol: String, vecCol: String,
                    centroids: Seq[(Int, Seq[Float])], threshold: Double,
                    maxClusterSize: Int = 10000): DataFrame = {
-    // this consumer is EAGER (losers ends in a localCheckpoint), so the
+    // this consumer is EAGER (the loser set is checkpointed), so the
     // centroid broadcast's executor copies are released as soon as the
     // result materializes instead of lingering until the ContextCleaner
     // notices the dropped plan (unbounded in a service compiling many
     // semantic-dedup specs — ADVICE r15)
     val (assignedRaw, bc) =
       assignSemanticClustersHandle(spread(df), idCol, vecCol, centroids)
-    val losers = try operatorScope {
+    try operatorScope {
       val assigned = cached(assignedRaw)
-      val prs = semanticPairsOfAssigned(assigned, threshold, maxClusterSize, "semanticDrop")
-      val memb = clusters(prs).withColumnRenamed("cluster", "grp")
-      val ranked = memb.join(assigned.select("id", "centroid_sim"), Seq("id"))
-      val keep = ranked.groupBy("grp")
-        .agg(min_by(col("id"), struct(col("centroid_sim"), col("id"))).as("keep_id"))
-      scopedCheckpoint(ranked.join(keep, Seq("grp")).filter(col("id") =!= col("keep_id"))
-        .select("id"))
+      incrementalSemanticDropAssigned(df, assigned, emptyOf(assigned), idCol, threshold,
+        maxClusterSize, Farthest(assigned))
     } finally bc.unpersist(blocking = false)
-    df.join(losers, df(idCol) === losers("id"), "left_anti")
   }
 }

@@ -176,6 +176,12 @@ object QualityModel {
     * linear score, `floor(linear × 10^6 + 0.5)` — the engine-portable
     * integer form) and `acceptCol` (`scoreCol > 0`, i.e. probability
     * > 0.5). Expression-only: no shuffle, no UDF.
+    *
+    * The linear model has no floor on alphabetic tokens: under the gate
+    * weights (`SparkEntry.qualityGateWeights`) a text of symbol runs only,
+    * such as "!!!! #### $$$$ …", scores above zero and is accepted
+    * (QualityModelSpec pins it). Pair the score with a rule filter when
+    * such text must go.
     */
   def score(df: DataFrame, textCol: String, weights: Seq[Double],
             scoreCol: String = "quality_score_1e6",

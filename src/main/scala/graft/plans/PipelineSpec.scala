@@ -514,11 +514,8 @@ object PipelineCompiler {
       }
       case op @ SpanDedupNodeSpec(in, idc, tc, k) =>
         val df = inputOf(op, in)
-        val rebuilt = graft.operators.Dedup.dropRepeatedSpans(df, idc, tc, k)
-          .select(col("id").as("__span_id"), col("text_out"))
-        df.join(rebuilt, df(idc) === rebuilt("__span_id"))
-          .withColumn(tc, col("text_out"))
-          .drop("__span_id", "text_out")
+        graft.operators.Dedup.withRebuiltText(df,
+          graft.operators.Dedup.dropRepeatedSpans(df, idc, tc, k), idc, tc).drop("n_kept")
       case op @ SemanticDedupNodeSpec(in, id, vec, k, thr, maxCs, centMode, mdir) =>
         val df = inputOf(op, in)
         val centsPath = if (mdir.isEmpty) "" else s"${mdir.stripSuffix("/")}/centroids"

@@ -131,7 +131,8 @@ case class Dsir(weightsDir: String, minLogw: Double, hexLen: Int) extends Stage 
   * against the store of ASSIGNED vectors `(id, vec, cluster,
   * centroid_sim)` at `storeDir`, under pinned `centroids` (train offline,
   * e.g. [[graft.operators.Dedup.trainSemanticCentroids]]): keeps vectors
-  * that duplicate neither an earlier batch nor an earlier row of this one,
+  * that duplicate neither an earlier batch nor an earlier row of this one
+  * (the first-seen representative, [[graft.operators.Dedup.FirstSeen]]),
   * and appends their assigned form, so a later batch pairs only against
   * the cells it lands in.
   *
@@ -161,7 +162,7 @@ case class Semantic(storeDir: String, centroids: Seq[(Int, Seq[Float])],
     // checkpointed, not persisted: with its lineage cut, no later append's
     // refreshByPath can evict a plan that still reads this store
     val kept = Scope.scopedCheckpoint(Dedup.incrementalSemanticDropAssigned(
-      fresh, assigned, store, p.idCol, threshold))
+      fresh, assigned, store, p.idCol, threshold, maxClusterSize = 10000, Dedup.FirstSeen))
     (kept, appendSurvivors(assigned, kept, p.idCol, storeDir))
   }
 }
@@ -198,12 +199,8 @@ case class Span(storeDir: String, k: Int, joinBack: Boolean) extends Stage {
     val (rebuilt, newFps) = Dedup.incrementalSpanDedup(rows, store, p.idCol, p.textCol, k)
     val kept =
       if (!joinBack) rebuilt
-      else rows
-        .join(rebuilt.select(col("id").as("__sid"), col("text_out"), col("n_kept")),
-          rows(p.idCol) === col("__sid"))
-        .filter(col("n_kept") > 0)
-        .withColumn(p.textCol, col("text_out"))
-        .drop("__sid", "text_out", p.vecCol)
+      else Dedup.withRebuiltText(rows, rebuilt, p.idCol, p.textCol)
+        .filter(col("n_kept") > 0).drop(p.vecCol)
     (kept, () => newFps.write.mode("append").parquet(storeDir))
   }
 }

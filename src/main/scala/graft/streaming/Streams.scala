@@ -8,8 +8,11 @@ import graft.store.Stores
 
 /** Streaming capability extension (SURVEY §2.7). The reference is
   * bounded-stream only; these transforms are written once and run on either
-  * a batch DataFrame or a `readStream` DataFrame — the batch run doubles as
-  * the exactness oracle for the streaming run.
+  * a batch DataFrame or a `readStream` DataFrame. For the span and
+  * semantic dedup tiers the batch operator IS the incremental kernel over
+  * an empty store, so a one-batch ingest and the batch run share one body;
+  * the minhash tier differs in its verdict (the batch run verifies exact
+  * shingle Jaccard, the ingest the signature estimator).
   */
 object Streams {
 

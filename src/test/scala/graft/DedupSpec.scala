@@ -100,9 +100,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash estimate tracks exact jaccard") {
-    val cands = Dedup.minhashCandidates(docs, "doc_id", "text")
+    val cands = Dedup.incrementalDedupPairsSigs(Dedup.minhashSignatures(docs, "doc_id", "text"),
+        Dedup.minhashSignatures(docs.limit(0), "doc_id", "text"), threshold = 0.0)
       .filter(col("id_a") === 1 && col("id_b") === 3).head()
-    val est = cands.getDouble(2)
+    val est = cands.getAs[Double]("jaccard_est")
     val exact = docs.filter(col("doc_id").isin(1, 3))
       .agg(collect_list(TextOps.charShingles(col("text"), 5)).as("s"))
       .select(Dedup.ngramJaccard(element_at(col("s"), 1), element_at(col("s"), 2)))
@@ -431,7 +432,8 @@ class DedupSpec extends SparkSpec {
     assert(kept == Set(11L, 12L), s"got $kept")
     // the pair relation marks sides correctly: 10-vs-store is (old,new),
     // 12/13 is (new,new)
-    val pairs = Dedup.incrementalDedupPairs(delta, store, "doc_id", "text", threshold = 0.7)
+    val pairs = Dedup.incrementalDedupPairsSigs(Dedup.minhashSignatures(delta, "doc_id", "text"),
+        store, threshold = 0.7)
       .select("id_a", "id_b", "a_new", "b_new")
       .as[(Long, Long, Boolean, Boolean)].collect().toSet
     assert(pairs.contains((1L, 10L, false, true)))
@@ -471,7 +473,8 @@ class DedupSpec extends SparkSpec {
       (11L, txt(bWords))  // near-dup of 10 ONLY; sub-threshold vs the store
     ).toDF("doc_id", "text")
     // fixture sanity: exactly the chain pairs, no (1,11) shortcut
-    val pairs = Dedup.incrementalDedupPairs(delta, store, "doc_id", "text",
+    val pairs = Dedup.incrementalDedupPairsSigs(
+        Dedup.minhashSignatures(delta, "doc_id", "text", numHashes = 256), store,
         threshold = 0.81, numHashes = 256, bands = 32)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 10L), (10L, 11L)), s"fixture drifted: $pairs")

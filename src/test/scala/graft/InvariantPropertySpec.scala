@@ -157,6 +157,25 @@ class InvariantPropertySpec extends SparkSpec {
       }
       assert(windows.distinct.length == windows.length,
         s"duplicate k-window survived in untouched docs (k=$k)")
+      // split invariance: the same corpus cut by id into 2–4 batches, each
+      // deduped against the fingerprints appended so far, rebuilds every
+      // document exactly as the empty-store run above (own generator, so
+      // the later properties draw the same parameters as before)
+      val splitRnd = new scala.util.Random(k * 100 + nDocs)
+      val cuts = splitRnd.shuffle((1 to nDocs).toVector).take(1 + splitRnd.nextInt(3)).sorted
+      var store = spark.emptyDataset[String].toDF("fp")
+      val split = (0 +: cuts).zip(cuts :+ (nDocs + 1)).flatMap { case (lo, hi) =>
+        graft.exec.Scope.withCacheScope {
+          val (rebuilt, newFps) = graft.operators.Dedup.incrementalSpanDedup(
+            corpus.filter(col("doc_id") >= lo && col("doc_id") < hi), store, "doc_id", "text", k)
+          val rows = rebuilt.select("id", "n_toks", "n_kept", "text_out")
+            .as[(Long, Long, Long, String)].collect()
+          store = store.union(newFps.as[String].collect().toSeq.toDF("fp"))
+          rows
+        }
+      }
+      assert(split.sortBy(_._1).toSeq == out.toSeq,
+        s"k=$k cuts=$cuts: the split run drifted from the batch run")
     }
   }
 

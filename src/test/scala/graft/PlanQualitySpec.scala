@@ -519,15 +519,14 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"assignment must not shuffle:\n$p")
   }
 
-  test("semantic pairs: vectors shuffle only on the cluster key; size prune broadcasts") {
+  test("semantic pairs: vectors shuffle only on the cluster key; size prune is a literal filter") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val cents = graft.operators.Dedup.firstKCentroids(emb, "vec_id", "embedding", 4)
     val aqe = "spark.sql.adaptive.enabled"
     val abt = "spark.sql.autoBroadcastJoinThreshold"
     val (prevAqe, prevAbt) = (spark.conf.get(aqe), spark.conf.get(abt))
     // threshold off = the at-scale planning regime: a corpus too big to
-    // broadcast must self-join via the cluster-key shuffle, while the
-    // explicit broadcast() hint on the k-row size prune still wins
+    // broadcast must self-join via the cluster-key shuffle
     val plan = try {
       spark.conf.set(aqe, "false")
       spark.conf.set(abt, "-1")
@@ -544,9 +543,11 @@ class PlanQualitySpec extends SparkSpec {
     val s = (plan +: inner).mkString("\n")
     assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoop"),
       s"within-cluster expansion must stay an equi-join:\n$s")
-    // the k-row cluster-size prune must reach the corpus as a broadcast semi
-    assert(s.contains("BroadcastHashJoin") && s.contains("LeftSemi"),
-      s"cluster-size prune should broadcast:\n$s")
+    // the k-row cluster-size prune must reach the corpus as a literal set
+    // filter on the cluster key: no join, so neither a broadcast nor a
+    // shuffle carries the corpus for it
+    assert("""Filter \(?cluster#\d+ (IN|INSET) """.r.findFirstIn(s).nonEmpty && !s.contains("LeftSemi"),
+      s"cluster-size prune should be a literal filter:\n$s")
     // every vector-bearing exchange of the pair stage is hash-partitioned on
     // the cluster key (the assignment input below it is a cache leaf, plan-
     // asserted narrow in the previous test)

@@ -63,6 +63,17 @@ class QualityModelSpec extends SparkSpec {
     assert(scored == Map(1L -> 0L, 2L -> 0L), s"got $scored")
   }
 
+  test("symbol-only text with no alphabetic token is accepted under gate weights") {
+    // the linear model has no floor on alphabetic tokens: ten 4-char
+    // symbol runs score like a short clean document. Pinned as the
+    // behaviour of the current weights, which q_s_quality_ingest and
+    // q_s_pretrain_ingest pin outputs under.
+    val df = Seq((1L, "!!!! #### $$$$ %%%% ^^^^ &&&& **** (((( )))) @@@@")).toDF("doc_id", "text")
+    val scored = QualityModel.score(df, "text", SparkEntry.qualityGateWeights)
+      .select("quality_score_1e6", "quality_accept").as[(Long, Long)].head()
+    assert(scored == ((3109471L, 1L)), s"got $scored")
+  }
+
   test("scoring is expression-only: zero exchanges beyond the small-input spread, zero UDFs") {
     // an input already split across the cluster (the 100 TB case) makes the
     // spread a no-op — the scoring pipeline itself must add NO exchange

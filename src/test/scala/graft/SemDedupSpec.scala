@@ -91,7 +91,7 @@ class SemDedupSpec extends SparkSpec {
 
   test("pre-assigned entry point equals the end-to-end operator") {
     val assigned = Dedup.assignSemanticClusters(vecs, "vec_id", "embedding", cents)
-    val viaAssigned = Dedup.semanticDedupPairsAssigned(assigned, threshold = 0.95)
+    val viaAssigned = Dedup.semanticPairs(assigned, Dedup.emptyOf(assigned), threshold = 0.95)
       .select("id_a", "id_b", "cluster").as[(Long, Long, Int)].collect().toSet
     val endToEnd = Dedup.semanticDedupPairs(vecs, "vec_id", "embedding", cents, 0.95)
       .select("id_a", "id_b", "cluster").as[(Long, Long, Int)].collect().toSet
@@ -111,7 +111,7 @@ class SemDedupSpec extends SparkSpec {
     // and the end-to-end operator equals the pre-assigned form on the
     // organic fixture at a threshold with near-boundary pairs
     val assigned = Dedup.assignSemanticClusters(vecs, "vec_id", "embedding", cents)
-    val plain = Dedup.semanticDedupPairsAssigned(assigned, threshold = 0.98)
+    val plain = Dedup.semanticPairs(assigned, Dedup.emptyOf(assigned), threshold = 0.98)
       .select("id_a", "id_b", "cluster", "cos_sim")
       .as[(Long, Long, Int, Double)].collect().toSet
     val prefiltered = Dedup.semanticDedupPairs(vecs, "vec_id", "embedding", cents, 0.98)
@@ -170,8 +170,9 @@ class SemDedupSpec extends SparkSpec {
       (30L, Seq(5f, 5.1f)),  // novel direction, twin below
       (31L, Seq(10f, 10.2f)) // in-delta twin of 30 → component keeps 30
     ).toDF("vec_id", "embedding")
-    val kept = Dedup.incrementalSemanticDrop(delta, store, "vec_id", "embedding",
-        cents, threshold = 0.95)
+    val kept = Dedup.incrementalSemanticDropAssigned(delta,
+        Dedup.assignSemanticClusters(delta, "vec_id", "embedding", cents), store, "vec_id",
+        threshold = 0.95, maxClusterSize = 10000, Dedup.FirstSeen)
       .select("vec_id").as[Long].collect().toSet
     assert(kept == Set(30L))
   }
@@ -183,14 +184,51 @@ class SemDedupSpec extends SparkSpec {
       (10L, Seq(0.9563f, 0.2924f)), // 17° from store → store dup, dropped
       (11L, Seq(0.8290f, 0.5592f))  // 34° from store (cos ≈ .83 — novel), 17° from 10
     ).toDF("vec_id", "embedding")
-    val kept = Dedup.incrementalSemanticDrop(delta, store, "vec_id", "embedding",
-        cents, threshold = 0.95)
+    val kept = Dedup.incrementalSemanticDropAssigned(delta,
+        Dedup.assignSemanticClusters(delta, "vec_id", "embedding", cents), store, "vec_id",
+        threshold = 0.95, maxClusterSize = 10000, Dedup.FirstSeen)
       .select("vec_id").as[Long].collect().toSet
     // sequential first-seen-wins: 10 duplicates the store; 11 duplicates
     // only the DROPPED 10, so dropping it too would lose its content from
     // the corpus entirely — the within-delta component must elect its
     // representative among store-SURVIVORS
     assert(kept == Set(11L))
+  }
+
+  // a cluster-0 store vector and its delta twin, plus a cluster-1 delta
+  // component whose minimum id (30, csim 1.0) is NOT its member farthest
+  // from the centroid (31, csim ≈ .9806; 32 sits between at ≈ .9950)
+  private val repStore = Seq((1L, Seq(10f, 0f))).toDF("vec_id", "embedding")
+  private val repDelta = Seq(
+    (10L, Seq(40f, 0f)),  // twin of store 1
+    (30L, Seq(0f, 5f)),
+    (31L, Seq(1f, 5f)),
+    (32L, Seq(0.5f, 5f))).toDF("vec_id", "embedding")
+
+  test("representative rule Farthest against a store: store dup loses, component keeps its farthest") {
+    val store = Dedup.assignSemanticClusters(repStore, "vec_id", "embedding", cents)
+    val assigned = Dedup.assignSemanticClusters(repDelta, "vec_id", "embedding", cents)
+    val kept = Dedup.incrementalSemanticDropAssigned(repDelta, assigned, store, "vec_id",
+        threshold = 0.95, maxClusterSize = 10000, Dedup.Farthest(assigned))
+      .select("vec_id").as[Long].collect().toSet
+    assert(kept == Set(31L), s"got $kept")
+    // the distributed rule (edge gate 0) elects the same representative
+    val distributed = Dedup.firstSeenWins(repDelta, "vec_id", 0L, Dedup.Farthest(assigned))(
+        Dedup.semanticPairs(assigned, store, threshold = 0.95))
+      .select("vec_id").as[Long].collect().toSet
+    assert(distributed == Set(31L), s"got $distributed")
+  }
+
+  test("representative rule FirstSeen over an empty store keeps each component's minimum id") {
+    val assigned = Dedup.assignSemanticClusters(repDelta, "vec_id", "embedding", cents)
+    val kept = Dedup.incrementalSemanticDropAssigned(repDelta, assigned, Dedup.emptyOf(assigned),
+        "vec_id", threshold = 0.95, maxClusterSize = 10000, Dedup.FirstSeen)
+      .select("vec_id").as[Long].collect().toSet
+    assert(kept == Set(10L, 30L), s"got $kept")
+    // the batch operator (Farthest) keeps the other member of the same component
+    val batch = Dedup.semanticDrop(repDelta, "vec_id", "embedding", cents, threshold = 0.95)
+      .select("vec_id").as[Long].collect().toSet
+    assert(batch == Set(10L, 31L), s"got $batch")
   }
 
   test("zero-norm vectors assign deterministically, never pair, never drop") {
@@ -290,7 +328,7 @@ class SemDedupSpec extends SparkSpec {
 
   test("trained-centroid path: planted-pair recall floors on the ORGANIC fixture; model is seed-deterministic") {
     // the production path — trainSemanticCentroids → assignSemanticClusters
-    // → semanticDedupPairsAssigned — pinned on organic embeddings the way
+    // → semanticPairs — pinned on organic embeddings the way
     // DedupSpec pins the ANN recall floors: ×2-scaled exact twins (cosine
     // 1.0 — MUST all pair: identical directions get bit-identical cosines
     // to every centroid, hence the same argmax cell) and 3v+v_next blends
@@ -313,7 +351,7 @@ class SemDedupSpec extends SparkSpec {
     val c2 = Dedup.trainSemanticCentroids(corpus, "vec_id", "embedding", k = 4)
     assert(c1 == c2, "k-means centroids must replay identically under the pinned seed")
     val assigned = Dedup.assignSemanticClusters(corpus, "vec_id", "embedding", c1)
-    val pairs = Dedup.semanticDedupPairsAssigned(assigned, threshold = 0.9)
+    val pairs = Dedup.semanticPairs(assigned, Dedup.emptyOf(assigned), threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val twinRecall = (0 until 16).count(i =>
       pairs.contains((i.toLong, i + 100000L))).toDouble / 16
@@ -382,7 +420,7 @@ class SemDedupSpec extends SparkSpec {
 
   test("incremental pairs: delta-delta, delta-store both id orders, over-cap cell warned once") {
     val (rows, warned) = dedupWarnings(Scope.withCacheScope {
-      Dedup.incrementalSemanticDedupAssigned(
+      Dedup.semanticPairs(
           Dedup.assignSemanticClusters(capDelta, "vec_id", "embedding", cents3),
           capStore, threshold = 0.95, maxClusterSize = 5)
         .select(col("id_a"), col("id_b"), col("cluster"), round(col("cos_sim"), 4))
@@ -396,8 +434,9 @@ class SemDedupSpec extends SparkSpec {
 
   test("incremental drop: store wins in both id orders, delta twin keeps min, over-cap cell kept") {
     val (kept, warned) = dedupWarnings(Scope.withCacheScope {
-      Dedup.incrementalSemanticDrop(capDelta, capStore, "vec_id", "embedding",
-          cents3, threshold = 0.95, maxClusterSize = 5)
+      Dedup.incrementalSemanticDropAssigned(capDelta,
+          Dedup.assignSemanticClusters(capDelta, "vec_id", "embedding", cents3), capStore,
+          "vec_id", threshold = 0.95, maxClusterSize = 5, Dedup.FirstSeen)
         .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
     })
     assert(kept == Seq((30L, Seq(5f, 5.1f)), (40L, Seq(-7f, 0f)), (41L, Seq(-7f, 0.05f))),
