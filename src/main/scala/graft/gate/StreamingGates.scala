@@ -332,11 +332,13 @@ private[graft] object StreamingGates {
       * parity-straddling exact twins, replayed in DuckDB as the exact
       * char-5-gram Jaccard two-stage evolution — stage A elects min-id per
       * within-even component, stage B drops odds matching a STORED (kept
-      * even) doc then elects among the odd survivors. Exact-J replay of
-      * the minhash estimator is valid at threshold 0.5 because the fixture
-      * has no pair with exact J in (0.15, 0.98) (tools/IngestGateProbe:
-      * organic near-dups all sit >= 0.98, twins at 1.0) — the 128-hash
-      * estimator cannot flip a verdict across that gap.
+      * even) doc then elects among the odd survivors. The stage verifies
+      * pairs within a batch by exact shingle Jaccard and scores only
+      * batch–store pairs by the 128-hash signature estimator; the exact-J
+      * replay of those is valid at threshold 0.5 because the fixture has
+      * no pair with exact J in (0.15, 0.98) (tools/IngestGateProbe:
+      * organic near-dups all sit >= 0.98, twins at 1.0) — the estimator
+      * cannot flip a verdict across that gap.
       */
     GatedQuery("q_s_minhash_ingest",
       (s, dir) => {
@@ -353,8 +355,8 @@ private[graft] object StreamingGates {
           .select(col("doc_id"), col("lang")).orderBy("doc_id")
       },
       // standalone minhash ingest: exact char-5-gram Jaccard replay of the
-      // two-round store evolution (estimator-safe: no fixture pair has exact
-      // J in (0.15, 0.98)). Stage A: within-even CC, keep min id; store =
+      // two-round store evolution (safe for the estimator that scores the
+      // batch–store pairs: no fixture pair has exact J in (0.15, 0.98)). Stage A: within-even CC, keep min id; store =
       // kept evens. Stage B: drop odds pairing with a STORED doc, then CC
       // among the odd survivors (the store-survivor election rule).
       """WITH RECURSIVE

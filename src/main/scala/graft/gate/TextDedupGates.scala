@@ -265,11 +265,13 @@ private[graft] object TextDedupGates {
       // Exact replay of the incremental-dedup verdict: a delta doc (doc_id>=250)
       // is dropped iff some store doc (doc_id<250) has exact char-5-gram
       // Jaccard >= 0.5, or it loses a within-delta duplicate cluster
-      // (keep-min-id; clusters via recursive CTE). The operator decides on the
-      // 128-hash signature ESTIMATOR, but on these fixtures no pair has exact
-      // Jaccard in (0.31, 0.92) — the nearest pairs sit at ≤0.309 and ≥0.9286 —
-      // so the estimator (std err ~0.04) cannot flip a 0.5-threshold decision
-      // and the estimator and exact verdicts provably agree.
+      // (keep-min-id; clusters via recursive CTE). The operator verifies
+      // within-delta pairs by exact Jaccard, as this replay does, and decides
+      // delta–store pairs on the 128-hash signature ESTIMATOR; on these
+      // fixtures no pair has exact Jaccard in (0.31, 0.92) — the nearest pairs
+      // sit at ≤0.309 and ≥0.9286 — so the estimator (std err ~0.04) cannot
+      // flip a 0.5-threshold decision and the estimator and exact verdicts
+      // provably agree.
       """WITH RECURSIVE g AS (
            SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(text) - 3, 1)),
                   i -> substr(text, i, 5))) AS sh

@@ -73,8 +73,8 @@ object Dedup {
   /** Tier 1: exact dedup on a canonical text fingerprint; keeps the row with
     * the smallest `orderCol` per duplicate group (deterministic keep-first,
     * cf. SURVEY §7.4.2).
-    */
-  /** Null-text policy: a null text tokenizes to null, and the fingerprint's
+    *
+    * Null-text policy: a null text tokenizes to null, and the fingerprint's
     * `concat_ws` folds a null token array and an empty one to the same
     * canonical "" — so null-text documents (failed upstream extraction) land
     * in the SAME group as empty/whitespace-only documents and dedup away
@@ -245,24 +245,12 @@ object Dedup {
     */
   private def signatures(df: DataFrame, idCol: String, textCol: String,
                          shingleLen: Int, numHashes: Int): DataFrame =
-    spread(df).select(
+    df.select(
       col(idCol).as("id"),
       graft.functions.MinHashSig.minhashSig(
         graft.functions.ShingleHashes.shingleHashes(col(textCol), shingleLen),
         numHashes).as("sig"))
 
-  /** Banded-LSH candidate `(id_a, id_b)` pairs from a signature relation,
-    * id_a < id_b, deduped across bands.
-    *
-    * Plan shape at scale (the 100 TB-safe layout):
-    *  1. only (band, bandHash, id) triples — never the signature arrays —
-    *     go through the wide bucket aggregation, so shuffle volume is
-    *     O(rows × bands × 16 bytes);
-    *  2. buckets larger than `maxBucketSize` are *dropped* (a bucket that
-    *     big means boilerplate/degenerate content whose pair set is
-    *     quadratic; standard practice is to skip, not explode);
-    *  3. candidate pairs are generated inside each bucket and deduped.
-    */
   /** Shared LSH candidate generation: an `(id, band, key)` relation →
     * capped, deduped `(id_a, id_b)` pairs. Used by every banded tier
     * (minhash, simhash, sign-LSH) so the degenerate-bucket cap and the
@@ -282,6 +270,18 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
+  /** Banded-LSH candidate `(id_a, id_b)` pairs from a signature relation,
+    * id_a < id_b, deduped across bands.
+    *
+    * Plan shape at scale (the 100 TB-safe layout):
+    *  1. only (band, bandHash, id) triples — never the signature arrays —
+    *     go through the wide bucket aggregation, so shuffle volume is
+    *     O(rows × bands × 16 bytes);
+    *  2. buckets larger than `maxBucketSize` are *dropped* (a bucket that
+    *     big means boilerplate/degenerate content whose pair set is
+    *     quadratic; standard practice is to skip, not explode);
+    *  3. candidate pairs are generated inside each bucket and deduped.
+    */
   private def bandedPairs(sig: DataFrame, numHashes: Int, bands: Int,
                           maxBucketSize: Int,
                           obs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
@@ -293,93 +293,112 @@ object Dedup {
     bucketPairs(banded, maxBucketSize, obs)
   }
 
-  /** Tier 2 end-to-end: candidates whose *exact* shingle-set Jaccard clears
-    * `threshold` (LSH proposes, exact verifies — no false positives).
-    * Candidates go straight to the exact verify: the signature join-back +
-    * estimate pre-filter would add two joins to the hot path only to *drop*
-    * pairs the (noisy) estimator underrates — verification cost is already
-    * bounded by the candidate count via the semi-join below.
+  /** The minhash tier's one kernel: the near-dup pairs of a `delta` batch
+    * against a persisted signature store `(id, sig)` ([[minhashSignatures]]
+    * under the same shingleLen/numHashes). Store ids are disjoint from the
+    * delta's, except a replayed batch's own survivors: a document's pair
+    * with its stored copy is dropped. Returns `(pairs, deltaSigs)`:
+    *  - `pairs` is `(id_a, id_b, a_new, b_new, jaccard)` with id_a < id_b:
+    *    every pair touching a NEW document whose Jaccard clears `threshold`.
+    *    Store–store candidates are dropped (the store is assumed deduped).
+    *    It is materialized and registered like every
+    *    [[graft.exec.Scope.operatorResult]].
+    *  - `deltaSigs` is the delta's `(id, sig)`, persisted in the CALLER's
+    *    scope, so appending the survivors' rows to the store re-shingles
+    *    nothing.
+    * The batch tier is this kernel over an empty store ([[emptyOf]]).
     *
-    * Exact-duplicate canonicalization: documents with identical DISTINCT
-    * shingle sets have identical signatures, band keys and Jaccard against
-    * every other document — fully interchangeable to this tier — so the
-    * corpus is first collapsed to one REPRESENTATIVE per distinct shingle
-    * set (a 96-bit hash pair over the sorted hash array; min-id member).
-    * Banding and the
-    * shingle-array verify join run on representatives only; verified pairs
-    * expand back through the `(id, fp)` member map afterwards. On
-    * boilerplate-heavy corpora this removes the dominant verify cost: the
-    * ~KB shingle arrays ride the pair join once per DISTINCT pair, not
-    * once per duplicate pair. ONE fp aggregation derives everything the
-    * canonical tier needs — rep id (`min`), rep signature (`first`: every
-    * member's signature is identical by construction, and the partial agg
-    * collapses duplicates map-side) and the group SIZE — so the rep relation
-    * costs a single fp-keyed shuffle; it is cached, but it is strictly
-    * smaller than the already-cached per-doc `(id, fp, sig)` relation, so
-    * the memory shape is unchanged in kind at any corpus size. The price
-    * over the uncanonicalized plan is one extra narrow shingle pass
-    * (fingerprinting) and that fp-keyed shuffle; both scan-like, measured
-    * in SCALING.md. Within-group pairs (identical shingle sets) are emitted
-    * directly with the rep's self-Jaccard (the verdict the un-canonicalized
-    * verify produced for them).
+    * Four steps:
+    *  1. Exact-duplicate collapse: documents with identical DISTINCT
+    *     shingle sets have identical signatures, band keys and Jaccard
+    *     against every other document, so the delta is collapsed to one
+    *     REPRESENTATIVE per distinct shingle set (a 96-bit hash pair over
+    *     the sorted hash array; min-id member). ONE fp aggregation derives
+    *     the rep id (`min`), the rep signature (`first`: identical across
+    *     members by construction) and the group SIZE — a single fp-keyed
+    *     shuffle whose partial agg collapses duplicates map-side.
+    *  2. The representatives are banded together with the store
+    *     signatures ([[bandedPairs]]).
+    *  3. Delta–delta candidates carry text on both sides and are verified
+    *     by their EXACT shingle-set Jaccard (LSH proposes, exact verifies —
+    *     no false positives). Only reps that appear in a candidate pair are
+    *     re-shingled, so the ~KB shingle arrays ride the verify join once
+    *     per DISTINCT pair, not once per duplicate pair. Delta–store
+    *     candidates are scored by the signature estimator, since the store
+    *     has no text (at numHashes=128 its std error near a 0.7 threshold
+    *     is ≈0.04).
+    *  4. Verified rep pairs expand back through the `(id, fp)` member map,
+    *     and each duplicate group adds its within-group pairs with the
+    *     rep's self-Jaccard (the verdict an uncollapsed verify gives them).
+    *     Groups larger than `maxBucketSize` (mega-replicated boilerplate)
+    *     are EXCLUDED from the expansion — one verified pair of two
+    *     100k-member groups would otherwise emit 10^10 rows — mirroring the
+    *     banding tier's oversized-bucket drop, and logged the same way.
+    *     When the delta has NO duplicate fingerprints the member map is the
+    *     identity and the expansion never runs (the organic fast path).
     *
-    * Degenerate-group cap: exact-dup groups larger than `maxBucketSize`
-    * (mega-replicated boilerplate) are EXCLUDED from pair expansion — both
-    * the within-group path and the cross-group member expansion, which
-    * would otherwise emit |A|×|B| rows for one verified rep pair (two
-    * 100k-member groups → 10^10 pairs). This mirrors the banding tier's
-    * oversized-bucket drop; excluded groups are counted and logged the same
-    * way. When the corpus has NO duplicate fingerprints the member map is
-    * the identity, so the verified rep pairs are returned directly and the
-    * expansion stages never run (the organic-corpus fast path).
+    * A null text has a null signature and pairs with nothing; every empty
+    * text shingles to `[0]`, so empty documents are exact twins.
     */
-  def minhashDedupPairs(df: DataFrame, idCol: String, textCol: String,
-                        threshold: Double, shingleLen: Int = 5,
-                        numHashes: Int = 128, bands: Int = 16,
-                        maxBucketSize: Int = 1000): DataFrame = {
+  def minhashPairs(delta: DataFrame, storeSigs: DataFrame, idCol: String,
+                   textCol: String, threshold: Double, shingleLen: Int = 5,
+                   numHashes: Int = 128, bands: Int = 16,
+                   maxBucketSize: Int = 1000): (DataFrame, DataFrame) = {
+    def shOf(c: Column) = graft.functions.ShingleHashes.shingleHashes(c, shingleLen)
+    // ONE shingle pass computes, per doc, the canonical fingerprint (a
+    // 96-bit (xxhash64, murmur3) pair over the sorted distinct shingle
+    // hashes — order-free, hashed natively on the long array; an
+    // md5-of-joined-strings formulation measured ~2.5x slower) and the
+    // minhash signature. The shingle ARRAY itself is projected away
+    // before the persist: the cache holds only (id, 12 B fp, 1 KB sig)
+    // — ~1 GB per 1e6 docs, spilling columnar blocks, never the
+    // object-heavy arrays that make array caches OOM-prone
+    // __has_sh (is the distinct shingle set non-empty?) rides the same
+    // pass: the rep's self-Jaccard is exactly 1.0 iff the set is non-empty
+    // (array_intersect == array_union == the distinct set), 0.0 otherwise
+    // — so the within-group verdict needs this one bit, not a re-shingle.
+    // Registered with the caller's scope: deltaSigs reads it after the pairs
+    val keyed = cached(spread(delta).select(col(idCol).as("id"), {
+        val sh = shOf(col(textCol))
+        struct(xxhash64(sort_array(sh)).as("h1"), hash(sort_array(sh)).as("h2")).as("__fp")
+      }, graft.functions.MinHashSig.minhashSig(shOf(col(textCol)), numHashes).as("sig"),
+      (size(shOf(col(textCol))) > 0).as("__has_sh")))
     val obs = org.apache.spark.sql.Observation()
-    val result = operatorResult {
-      def shOf(c: Column) = graft.functions.ShingleHashes.shingleHashes(c, shingleLen)
-      // ONE shingle pass computes, per doc, the canonical fingerprint (a
-      // 96-bit (xxhash64, murmur3) pair over the sorted distinct shingle
-      // hashes — order-free, hashed natively on the long array; an
-      // md5-of-joined-strings formulation measured ~2.5x slower) and the
-      // minhash signature. The shingle ARRAY itself is projected away
-      // before the persist: the cache holds only (id, 12 B fp, 1 KB sig)
-      // — ~1 GB per 1e6 docs, spilling columnar blocks, never the
-      // object-heavy arrays that make array caches OOM-prone
-      // __has_sh (is the distinct shingle set non-empty?) rides the same
-      // pass: the rep's self-Jaccard is exactly 1.0 iff the set is non-empty
-      // (array_intersect == array_union == the distinct set), 0.0 otherwise
-      // — so the within-group verdict needs this one bit, not a re-shingle
-      val keyed = cached(spread(df).select(col(idCol).as("id"), {
-          val sh = shOf(col(textCol))
-          struct(xxhash64(sort_array(sh)).as("h1"), hash(sort_array(sh)).as("h2")).as("__fp")
-        }, graft.functions.MinHashSig.minhashSig(shOf(col(textCol)), numHashes).as("sig"),
-        (size(shOf(col(textCol))) > 0).as("__has_sh")))
-      // rep id + rep sig + self-jaccard bit + group size in ONE fp-keyed
-      // aggregation (sig/has_sh are identical across members, so `first` is
-      // deterministic and the partial agg collapses duplicates map-side)
+    val pairs = operatorResult {
       val repAgg = cached(keyed.groupBy("__fp").agg(
         min(col("id")).as("id"), first(col("sig")).as("sig"),
         first(col("__has_sh")).as("__has_sh"), count(lit(1)).as("grp_n")))
-      val cands = cached(
-        bandedPairs(repAgg.select("id", "sig"), numHashes, bands, maxBucketSize, Some(obs)))
+      // a delta id already in the store (a replay after the store append)
+      // pairs with its own copy: that self pair is no verdict
+      val cands = cached(bandedPairs(
+        repAgg.select("id", "sig").unionByName(storeSigs.select("id", "sig")),
+        numHashes, bands, maxBucketSize, Some(obs)).filter(col("id_a") =!= col("id_b")))
       // exact verify on the hashed shingle sets (identical to string-shingle
       // Jaccard up to 31-bit hash collisions), shingled ONLY for reps that
       // appear in a candidate pair — candIds is pair-sized, so the joins
-      // broadcast and the corpus is never repartitioned for the re-shingle.
+      // broadcast and the delta is never repartitioned for the re-shingle.
       // fp and group size ride along so the expansion below needs no further
       // rep-metadata joins.
       val candIds = cands.select(explode(array(col("id_a"), col("id_b"))).as("id"))
-      val shMeta = cached(df.select(col(idCol).as("id"), col(textCol).as("__text"))
+      val shMeta = cached(delta.select(col(idCol).as("id"), col(textCol).as("__text"))
         .join(candIds, Seq("id"), "left_semi") // semi: no distinct shuffle needed
         .select(col("id"), shOf(col("__text")).as("sh"))
         .join(repAgg.select("id", "__fp", "grp_n"), "id"))
-      def side(s: String) = shMeta.select(col("id").as(s"id_$s"), col("sh").as(s"sh_$s"),
-        col("__fp").as(s"fp_$s"), col("grp_n").as(s"n_$s"))
+      // one side relation for both verdicts: a delta rep carries its
+      // shingles, fp and group size, a store doc only its signature; a
+      // rep's signature is re-derived from its shingles for delta–store
+      // pairs only, so no delta-side signature rides the verify joins
+      val sides = shMeta.unionByName(storeSigs.select("id", "sig"), allowMissingColumns = true)
+      def side(s: String) = sides.select(col("id").as(s"id_$s"), col("sh").as(s"sh_$s"),
+        col("__fp").as(s"fp_$s"), col("grp_n").as(s"n_$s"), col("sig").as(s"sig_$s"))
+      def sig(s: String) = coalesce(col(s"sig_$s"),
+        graft.functions.MinHashSig.minhashSig(col(s"sh_$s"), numHashes))
       val verified = cands.join(side("a"), "id_a").join(side("b"), "id_b")
-        .withColumn("jaccard", ngramJaccard(col("sh_a"), col("sh_b")))
+        .withColumn("a_new", col("fp_a").isNotNull).withColumn("b_new", col("fp_b").isNotNull)
+        .filter(col("a_new") || col("b_new"))
+        .withColumn("jaccard", when(col("a_new") && col("b_new"), ngramJaccard(col("sh_a"), col("sh_b")))
+          .otherwise(aggregate(zip_with(sig("a"), sig("b"), (x, y) => when(x === y, 1).otherwise(0)),
+            lit(0), (acc, x) => acc + x).cast("double") / numHashes))
         .filter(col("jaccard") >= threshold)
       // dup pressure + cap accounting: one tiny action on the cached agg
       // (this is also the materialization barrier the scoped caches need)
@@ -391,11 +410,11 @@ object Dedup {
       def statAt(i: Int) = if (stats.isNullAt(i)) 0L else stats.getLong(i)
       val (dupGroups, overGroups, overMembers) = (statAt(0), statAt(1), statAt(2))
       if (overGroups > 0)
-        log.warn(s"minhashDedupPairs: $overGroups exact-duplicate group(s) covering " +
+        log.warn(s"minhashPairs: $overGroups exact-duplicate group(s) covering " +
           s"$overMembers documents exceed maxBucketSize=$maxBucketSize — excluded from " +
           "pair expansion (within-group and cross-group); raise maxBucketSize to trade " +
           "cost for recall")
-      if (dupGroups == 0L) verified.select("id_a", "id_b", "jaccard") // member map is the identity
+      if (dupGroups == 0L) verified.select("id_a", "id_b", "a_new", "b_new", "jaccard")
       else {
         val members = keyed.select("id", "__fp")
         // fp-level pair relation: verified cross-group pairs (capped: a pair
@@ -409,24 +428,46 @@ object Dedup {
             when(col("__has_sh"), 1.0).otherwise(0.0).as("jaccard"))
           .filter(col("jaccard") >= threshold)
         val fpPairs = verified
-          .filter(col("n_a") <= maxBucketSize && col("n_b") <= maxBucketSize)
+          .filter(col("a_new") && col("b_new") && col("n_a") <= maxBucketSize && col("n_b") <= maxBucketSize)
           .select(col("fp_a"), col("fp_b"), col("jaccard"))
           .unionByName(dupFps)
         // ONE expansion through the member map serves both shapes; the
         // pair side broadcasts, the member map is only ever scanned, never
         // shuffled. Self-pairs (fp_a == fp_b) generate each unordered
         // member pair twice — the ma < mb guard keeps exactly one.
-        fpPairs
+        val deltaPairs = fpPairs
           .join(members.select(col("__fp").as("fp_a"), col("id").as("ma")), "fp_a")
           .join(members.select(col("__fp").as("fp_b"), col("id").as("mb")), "fp_b")
           .filter(col("fp_a") =!= col("fp_b") || col("ma") < col("mb"))
-          .select(least(col("ma"), col("mb")).as("id_a"),
-                  greatest(col("ma"), col("mb")).as("id_b"), col("jaccard"))
+          .select(least(col("ma"), col("mb")).as("id_a"), greatest(col("ma"), col("mb")).as("id_b"),
+            lit(true).as("a_new"), lit(true).as("b_new"), col("jaccard"))
+        // a delta–store pair holds for every member of the new side's
+        // group; over an empty store the optimizer prunes this branch
+        val storePairs = verified
+          .filter(col("a_new") =!= col("b_new") && coalesce(col("n_a"), col("n_b")) <= maxBucketSize)
+          .select(coalesce(col("fp_a"), col("fp_b")).as("__fp"),
+            when(col("a_new"), col("id_b")).otherwise(col("id_a")).as("o"), col("jaccard"))
+          .join(members, "__fp")
+          .select(least(col("id"), col("o")).as("id_a"), greatest(col("id"), col("o")).as("id_b"),
+            (col("id") < col("o")).as("a_new"), (col("id") > col("o")).as("b_new"), col("jaccard"))
+        deltaPairs.unionByName(storePairs)
       }
     }
-    logDroppedBuckets("minhashDedupPairs", obs)
-    result
+    logDroppedBuckets("minhashPairs", obs)
+    (pairs, keyed.select("id", "sig"))
   }
+
+  /** Tier 2 end-to-end: the near-dup pairs whose *exact* shingle-set
+    * Jaccard clears `threshold` — [[minhashPairs]] over an empty store,
+    * projected to `(id_a, id_b, jaccard)` with id_a < id_b.
+    */
+  def minhashDedupPairs(df: DataFrame, idCol: String, textCol: String,
+                        threshold: Double, shingleLen: Int = 5,
+                        numHashes: Int = 128, bands: Int = 16,
+                        maxBucketSize: Int = 1000): DataFrame =
+    operatorResult(minhashPairs(df, emptyOf(signatures(df, idCol, textCol, shingleLen, numHashes)),
+      idCol, textCol, threshold, shingleLen, numHashes, bands, maxBucketSize)._1
+      .select("id_a", "id_b", "jaccard"))
 
   // --- Incremental dedup (delta batch vs. persisted signature store) --------
 
@@ -439,7 +480,7 @@ object Dedup {
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         shingleLen: Int = 5, numHashes: Int = 128): DataFrame =
-    signatures(df, idCol, textCol, shingleLen, numHashes)
+    signatures(spread(df), idCol, textCol, shingleLen, numHashes)
 
   /** [[graft.store.Stores.compactStore]], kept under this name because the
     * benchmark (`perfbench/scala/graft/bench/Workloads.scala`) calls it;
@@ -455,87 +496,20 @@ object Dedup {
     */
   def unpersistCaches(): Unit = graft.exec.Scope.unpersistCaches()
 
-  /** Near-dup pairs touching at least one NEW document, for a delta batch's
-    * PRE-COMPUTED signatures `(id, sig)` ([[minhashSignatures]]) banded
-    * together with the persisted signature store: `(id_a, id_b, a_new,
-    * b_new, jaccard_est)` with id_a < id_b. Store–store pairs are dropped
-    * (the store is assumed already deduped); the verdict is the signature
-    * Jaccard estimator, since the store carries no text (at numHashes=128
-    * the estimator's std error near a 0.7 threshold is ≈0.04 — callers
-    * needing exact verification can join the surviving new ids back to text
-    * and reuse [[ngramJaccard]]). The streaming ingest computes the delta's
-    * signatures once and reuses them for the store append instead of
-    * re-shingling the survivors.
-    *
-    * `storeSigs` must use the same shingleLen/numHashes as `deltaSigs`; ids
-    * across store and delta are assumed distinct. At full scale the
-    * store's `(band, key, id)` triples can additionally be precomputed and
-    * persisted so each batch pays only the delta's banding.
-    */
-  def incrementalDedupPairsSigs(deltaSigs: DataFrame, storeSigs: DataFrame,
-                                threshold: Double, numHashes: Int = 128,
-                                bands: Int = 16,
-                                maxBucketSize: Int = 1000): DataFrame = {
-    val obs = org.apache.spark.sql.Observation()
-    val result = operatorResult {
-      // don't re-persist a relation the caller already persists (the
-      // streaming ingests hand in their cached per-batch signatures) —
-      // the projection's scan goes through the caller's cache; a second
-      // persist would hold every batch's signature data twice
-      val projected = deltaSigs.select(col("id"), col("sig"))
-      val newSigs =
-        if (deltaSigs.storageLevel != org.apache.spark.storage.StorageLevel.NONE) projected
-        else cached(projected)
-      val all = cached(newSigs.unionByName(storeSigs.select(col("id"), col("sig"))))
-      val pairs = bandedPairs(all, numHashes, bands, maxBucketSize, Some(obs))
-      val flags = newSigs.select(col("id"), lit(true).as("is_new"))
-      val sigA = all.select(col("id").as("id_a"), col("sig").as("sig_a"))
-      val sigB = all.select(col("id").as("id_b"), col("sig").as("sig_b"))
-      pairs
-        .join(flags.select(col("id").as("id_a"), col("is_new").as("a_new")), Seq("id_a"), "left")
-        .join(flags.select(col("id").as("id_b"), col("is_new").as("b_new")), Seq("id_b"), "left")
-        .withColumn("a_new", coalesce(col("a_new"), lit(false)))
-        .withColumn("b_new", coalesce(col("b_new"), lit(false)))
-        .filter(col("a_new") || col("b_new"))
-        .join(sigA, "id_a").join(sigB, "id_b")
-        .withColumn("jaccard_est",
-          aggregate(zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
-                    lit(0), (acc, x) => acc + x).cast("double") / numHashes)
-        .filter(col("jaccard_est") >= threshold)
-        .select("id_a", "id_b", "a_new", "b_new", "jaccard_est")
-    }
-    logDroppedBuckets("incrementalDedupPairsSigs", obs)
-    result
-  }
-
   /** Incremental near-dedup of an ingest batch against the existing corpus:
-    * a new document is dropped iff (a) its estimated Jaccard to any STORE
-    * document clears `threshold`, or (b) among the delta docs that survive
-    * (a), it sits in a duplicate cluster and is not that cluster's minimum
-    * id (the same keep-first policy as [[dropNearDups]]). Returns the
-    * surviving delta rows — append
-    * them to the corpus and their [[minhashSignatures]] to the store to
-    * complete the ingest.
+    * [[minhashPairs]] under the [[firstSeenWins]] loser rule. A new document
+    * is dropped iff (a) its estimated Jaccard to any STORE document clears
+    * `threshold`, or (b) among the delta docs that survive (a), it sits in a
+    * duplicate cluster (exact Jaccard) and is not that cluster's minimum
+    * id. Returns the surviving delta rows — append them to the corpus and
+    * their [[minhashSignatures]] to the store to complete the ingest.
     */
   def incrementalDedup(delta: DataFrame, storeSigs: DataFrame, idCol: String,
                        textCol: String, threshold: Double, shingleLen: Int = 5,
                        numHashes: Int = 128, bands: Int = 16,
                        maxBucketSize: Int = 1000): DataFrame =
-    incrementalDedupSigs(delta,
-      signatures(delta, idCol, textCol, shingleLen, numHashes),
-      storeSigs, idCol, threshold, numHashes, bands, maxBucketSize)
-
-  /** [[incrementalDedup]] over PRE-COMPUTED delta signatures — see
-    * [[incrementalDedupPairsSigs]] for when to prefer it. `deltaSigs` must
-    * be the `(id, sig)` signatures of exactly `delta`'s rows under the
-    * store's shingleLen/numHashes.
-    */
-  def incrementalDedupSigs(delta: DataFrame, deltaSigs: DataFrame,
-                           storeSigs: DataFrame, idCol: String,
-                           threshold: Double, numHashes: Int = 128,
-                           bands: Int = 16, maxBucketSize: Int = 1000): DataFrame =
-    firstSeenWins(delta, idCol)(incrementalDedupPairsSigs(deltaSigs, storeSigs,
-      threshold, numHashes, bands, maxBucketSize))
+    firstSeenWins(delta, idCol)(minhashPairs(delta, storeSigs, idCol, textCol, threshold,
+      shingleLen, numHashes, bands, maxBucketSize)._1)
 
   /** Which member of a within-delta duplicate component [[firstSeenWins]]
     * keeps.
@@ -841,40 +815,28 @@ object Dedup {
     membership
   }
 
-  /** Remove near-duplicates given an explicit pair list: every member of a
-    * duplicate cluster except its canonical (minimum-id) representative is
-    * dropped from `df`. The anti-join keys on ids only — full rows never
-    * ride through the clustering shuffles.
-    *
-    * Cache hygiene: the [[clusters]] membership relation is scoped to THIS
-    * call — the loser id set (one id per dropped row, ids only) is eagerly
-    * `localCheckpoint`ed inside the scope, so batch callers looping this
-    * per corpus accumulate nothing in the session cache registry. The
-    * checkpoint blocks themselves are released when an enclosing
-    * [[graft.exec.Scope.withCacheScope]] exits, or else reclaimed by
-    * Spark's ContextCleaner once the returned frame is unreferenced.
+  /** Remove near-duplicates given an explicit pair list `(id_a, id_b)`:
+    * every member of a duplicate cluster except its canonical (minimum-id)
+    * representative is dropped from `df` — [[firstSeenWins]] with every
+    * pair flagged new. The anti-join keys on ids only — full rows never
+    * ride through the clustering shuffles, and every relation the rule
+    * persists is scoped to this call.
     */
-  def dropNearDupsByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val losers = operatorScope {
-      scopedCheckpoint(clusters(pairs).filter(col("id") =!= col("cluster")).select("id"))
-    }
-    df.join(losers, df(idCol) === losers("id"), "left_anti")
-  }
+  def dropNearDupsByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    firstSeenWins(df, idCol)(
+      pairs.select(col("id_a"), col("id_b"), lit(true).as("a_new"), lit(true).as("b_new")))
 
-  /** Tier-2 end-to-end corpus dedup: MinHash/LSH pairs → connected
-    * components → keep the minimum-id document per cluster. Scopes every
-    * relation it persists (the pair result and the clusters membership) to
+  /** Tier-2 end-to-end corpus dedup: [[incrementalDedup]] over an empty
+    * store — MinHash/LSH pairs → connected components → keep the
+    * minimum-id document per cluster. Scopes every relation it persists to
     * this call — safe to loop over corpora without
     * [[graft.exec.Scope.unpersistCaches]].
     */
   def dropNearDups(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, shingleLen: Int = 5, numHashes: Int = 128,
                    bands: Int = 16, maxBucketSize: Int = 1000): DataFrame =
-    operatorScope {
-      dropNearDupsByPairs(df, idCol,
-        minhashDedupPairs(df, idCol, textCol, threshold, shingleLen, numHashes,
-          bands, maxBucketSize))
-    }
+    incrementalDedup(df, emptyOf(signatures(df, idCol, textCol, shingleLen, numHashes)),
+      idCol, textCol, threshold, shingleLen, numHashes, bands, maxBucketSize)
 
   // --- Tier 3: SimHash ------------------------------------------------------
 
@@ -1251,8 +1213,8 @@ object Dedup {
                     maxClusterSize: Int = 10000): DataFrame =
     operatorResult {
       import graft.functions.VectorMath
-      // same no-double-persist rule as incrementalDedupPairsSigs: the
-      // ingests hand in an already-persisted assignment (vectors included)
+      // don't re-persist what the caller already persists: the ingests
+      // hand in an already-persisted assignment (vectors included)
       val projected = assignedDelta.select("id", "vec", "cluster")
       val d =
         if (assignedDelta.storageLevel != org.apache.spark.storage.StorageLevel.NONE) projected

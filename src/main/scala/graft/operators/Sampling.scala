@@ -132,33 +132,6 @@ object Sampling {
       .drop("__n")
   }
 
-  /** DSIR importance resampling (Xie et al. 2023, arXiv:2302.03169):
-    * select `k` documents from `df` WITHOUT replacement with probability
-    * ∝ exp(importance weight), where a document's log-weight is the sum of
-    * `weights.logw` over its hashed-gram OCCURRENCES
-    * ([[graft.functions.TextOps.hashedGrams]]; build `weights` with
-    * [[graft.operators.CorpusStats.importanceWeights]] from a target and a
-    * background corpus). Without-replacement sampling uses the
-    * Gumbel-top-k / Efraimidis–Spirakis equivalence — rank by
-    * `logw + Gumbel(0,1)` and keep the top k — DERANDOMIZED: the Gumbel
-    * variate is `-ln(-ln(u))` of the document's [[hashBucket]] md5 uniform,
-    * so the draw replays identically on any engine and any cluster size,
-    * like every other sampler here. Returns the selected rows plus their
-    * `dsir_logw`, ordered arbitrarily.
-    *
-    * Scale shape: one narrow gram pass over `df`; the weights join
-    * BROADCASTS (≤ 16^hexLen rows by construction); the per-doc sum is a
-    * map-side-combined agg whose shuffle carries only `(id, double)`;
-    * selection is `TakeOrderedAndProject` (per-partition k-heaps, no
-    * global sort); the full-width payload never shuffles — selected ids
-    * (k rows) broadcast back against `df`. Documents with no grams
-    * (empty/whitespace text) have weight −∞ in spirit and are never
-    * selected.
-    *
-    * `k` must be driver-modest (the selected id set broadcasts); for
-    * rate-style selection at corpus scale, threshold on `dsir_logw`
-    * yourself instead of top-k.
-    */
   /** Per-document DSIR log importance weight: `(<idCol>, dsir_logw)`, one
     * row per document with ≥ 1 gram. The building block under
     * [[importanceResample]] — use it directly for rate-style selection at
@@ -207,6 +180,33 @@ object Sampling {
     if (row.isNullAt(0)) Double.NegativeInfinity else row.getDouble(0)
   }
 
+  /** DSIR importance resampling (Xie et al. 2023, arXiv:2302.03169):
+    * select `k` documents from `df` WITHOUT replacement with probability
+    * ∝ exp(importance weight), where a document's log-weight is the sum of
+    * `weights.logw` over its hashed-gram OCCURRENCES
+    * ([[graft.functions.TextOps.hashedGrams]]; build `weights` with
+    * [[graft.operators.CorpusStats.importanceWeights]] from a target and a
+    * background corpus). Without-replacement sampling uses the
+    * Gumbel-top-k / Efraimidis–Spirakis equivalence — rank by
+    * `logw + Gumbel(0,1)` and keep the top k — DERANDOMIZED: the Gumbel
+    * variate is `-ln(-ln(u))` of the document's [[hashBucket]] md5 uniform,
+    * so the draw replays identically on any engine and any cluster size,
+    * like every other sampler here. Returns the selected rows plus their
+    * `dsir_logw`, ordered arbitrarily.
+    *
+    * Scale shape: one narrow gram pass over `df`; the weights join
+    * BROADCASTS (≤ 16^hexLen rows by construction); the per-doc sum is a
+    * map-side-combined agg whose shuffle carries only `(id, double)`;
+    * selection is `TakeOrderedAndProject` (per-partition k-heaps, no
+    * global sort); the full-width payload never shuffles — selected ids
+    * (k rows) broadcast back against `df`. Documents with no grams
+    * (empty/whitespace text) have weight −∞ in spirit and are never
+    * selected.
+    *
+    * `k` must be driver-modest (the selected id set broadcasts); for
+    * rate-style selection at corpus scale, threshold on `dsir_logw`
+    * yourself instead of top-k.
+    */
   def importanceResample(df: DataFrame, idCol: String, textCol: String,
                          weights: DataFrame, k: Int, hexLen: Int = 4,
                          salt: String = "dsir"): DataFrame = {

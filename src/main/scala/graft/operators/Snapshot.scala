@@ -13,15 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Snapshot {
 
-  /** Classify `next` vs `prev` by `keyCols`: rows keyed only in `next` are
-    * `insert`, only in `prev` are `delete`, in both with any `compareCols`
-    * difference are `update` — unchanged rows are dropped (CDC emits
-    * changes, not the world). Output: keyCols + compareCols (next's values;
-    * prev's for deletes) + `op`.
-    *
-    * Null-safe: compare uses `<=>` so NULL→value and value→NULL transitions
-    * count as updates, matching SQL `IS DISTINCT FROM`.
-    */
   /** Build a slowly-changing-dimension TYPE-2 history from an append log of
     * observed row states `(keyCols, tsCol, valueCols)`: consecutive
     * observations of a key with unchanged values collapse into one validity
@@ -50,6 +41,15 @@ object Snapshot {
       .drop("__first", tsCol)
   }
 
+  /** Classify `next` vs `prev` by `keyCols`: rows keyed only in `next` are
+    * `insert`, only in `prev` are `delete`, in both with any `compareCols`
+    * difference are `update` — unchanged rows are dropped (CDC emits
+    * changes, not the world). Output: keyCols + compareCols (next's values;
+    * prev's for deletes) + `op`.
+    *
+    * Null-safe: compare uses `<=>` so NULL→value and value→NULL transitions
+    * count as updates, matching SQL `IS DISTINCT FROM`.
+    */
   def diff(prev: DataFrame, next: DataFrame, keyCols: Seq[String],
            compareCols: Seq[String]): DataFrame = {
     val p = prev.select((keyCols ++ compareCols).map(col): _*)

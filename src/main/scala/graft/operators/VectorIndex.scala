@@ -93,15 +93,6 @@ object VectorIndex {
       bc: org.apache.spark.broadcast.Broadcast[(Array[Int], Array[Array[Double]])]) =
     element_at(graft.functions.VectorMath.nearestCellsBcastCol(vec, bc, 1), 1)
 
-  /** Train the coarse quantizer and materialize the index. The corpus
-    * crosses exactly one exchange (repartition by cell → one file per
-    * cell). A skewed cell (boilerplate embeddings collapsing to one
-    * region) would otherwise become one giant file = one read task per
-    * query: set the SESSION conf `spark.sql.files.maxRecordsPerFile`
-    * before building — it applies to this write, to appends, and to the
-    * compaction/purge rewrites alike, splitting hot cells into
-    * parallel-readable files without touching the pruning layout.
-    */
   /** Payload columns per codec. `float` stores the raw vector; `int8`
     * stores ONLY the quantized codes + precomputed norm
     * ([[graft.functions.VectorOps.quantizeInt8]]) — the 4×-smaller
@@ -152,7 +143,16 @@ object VectorIndex {
       .filter(col(vecAs).isNotNull)
   }
 
-  /** `nlist <= 0` (the DEFAULT) derives ⌈√N⌉ from the well-formed corpus
+  /** Train the coarse quantizer and materialize the index. The corpus
+    * crosses exactly one exchange (repartition by cell → one file per
+    * cell). A skewed cell (boilerplate embeddings collapsing to one
+    * region) would otherwise become one giant file = one read task per
+    * query: set the SESSION conf `spark.sql.files.maxRecordsPerFile`
+    * before building — it applies to this write, to appends, and to the
+    * compaction/purge rewrites alike, splitting hot cells into
+    * parallel-readable files without touching the pruning layout.
+    *
+    * `nlist <= 0` (the DEFAULT) derives ⌈√N⌉ from the well-formed corpus
     * count — the standard IVF sizing and the measured 1M operating point
     * (SCALING.md: nlist=√N, normalized → recall@20 0.854 at nprobe=8; the
     * old fixed default of 16 cells gave 0.582 on the same corpus).
@@ -272,7 +272,7 @@ object VectorIndex {
     * use [[buildIvfIndexHierarchical]].
     *
     * Determinism: level 2 is bit-deterministic given the level-1 model
-    * (hash-ordered points, seeded spread init, fixed iteration count
+    * (hash-ordered points, spread init, fixed iteration count
     * bound); level 1 carries spark.ml k-means' usual run-to-run caveat.
     * Returned cell ids are dense 0..K-1 in (coarse region, sub-center)
     * order; K ≤ `nlist` (leaf budgets are apportioned to regions by
@@ -344,7 +344,7 @@ object VectorIndex {
             if (b <= 0) Iterator.empty
             else {
               val pts = it.toArray.sortBy(_._2).map(_._3.toArray)
-              localKMeans(pts, b, maxIter, seed ^ (region.toLong * 0x9E3779B97F4A7C15L))
+              localKMeans(pts, b, maxIter)
                 .iterator.zipWithIndex
                 .map { case (c, i) => (region, i, c.toSeq) }
             }
@@ -374,12 +374,10 @@ object VectorIndex {
     * hash-ordered array), fixed-point iteration capped at `maxIter`,
     * sequential summation. Empty clusters retain their previous center
     * during iteration and are DROPPED from the result (never emit a leaf
-    * no point voted for). `seed` reserved for future randomized init —
-    * the spread init is seed-free but the signature keeps call sites
-    * stable.
+    * no point voted for).
     */
   private[graft] def localKMeans(points: Array[Array[Double]], k: Int,
-                                 maxIter: Int, seed: Long): Array[Array[Double]] = {
+                                 maxIter: Int): Array[Array[Double]] = {
     if (points.isEmpty) return Array.empty
     if (points.length <= k) return points.map(_.clone())
     val dim = points(0).length

@@ -206,10 +206,12 @@ case class Span(storeDir: String, k: Int, joinBack: Boolean) extends Stage {
 }
 
 /** Cross-batch near-dedup ([[graft.operators.Dedup.incrementalDedup]])
-  * against the persisted minhash signature store at `storeDir`: the
-  * batch's signatures are computed once, for the pair kernel and for the
-  * append of the survivors' signatures. A crash before this stage's append
-  * replays the batch against a store missing its signatures: keyed
+  * against the persisted minhash signature store at `storeDir`: the pair
+  * kernel ([[graft.operators.Dedup.minhashPairs]]) verifies pairs within
+  * the batch by exact shingle Jaccard and pairs against the store by the
+  * signature estimator, and returns the batch's signatures, computed once,
+  * for the append of the survivors' rows. A crash before this stage's
+  * append replays the batch against a store missing its signatures: keyed
   * distinct recovers the sinks.
   */
 case class Minhash(storeDir: String, threshold: Double) extends Stage {
@@ -219,9 +221,8 @@ case class Minhash(storeDir: String, threshold: Double) extends Stage {
   private[streaming] def run(rows: DataFrame, p: IngestPlan): (DataFrame, () => Unit) = {
     val store = Stores.read(rows.sparkSession, storeDir).getOrElse(
       Dedup.minhashSignatures(rows.limit(0), p.idCol, p.textCol))
-    val sigs = Scope.cached(Dedup.minhashSignatures(rows, p.idCol, p.textCol))
-    val kept = Scope.scopedCheckpoint(Dedup.incrementalDedupSigs(rows, sigs, store,
-      p.idCol, threshold))
+    val (pairs, sigs) = Dedup.minhashPairs(rows, store, p.idCol, p.textCol, threshold)
+    val kept = Scope.scopedCheckpoint(Dedup.firstSeenWins(rows, p.idCol)(pairs))
     (kept, appendSurvivors(sigs, kept, p.idCol, storeDir))
   }
 }

@@ -100,10 +100,12 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash estimate tracks exact jaccard") {
-    val cands = Dedup.incrementalDedupPairsSigs(Dedup.minhashSignatures(docs, "doc_id", "text"),
-        Dedup.minhashSignatures(docs.limit(0), "doc_id", "text"), threshold = 0.0)
+    // the estimator scores delta–store pairs: doc 1 is stored, doc 3 arrives
+    val cands = Dedup.minhashPairs(docs.filter(col("doc_id") === 3),
+        Dedup.minhashSignatures(docs.filter(col("doc_id") === 1), "doc_id", "text"),
+        "doc_id", "text", threshold = 0.0)._1
       .filter(col("id_a") === 1 && col("id_b") === 3).head()
-    val est = cands.getAs[Double]("jaccard_est")
+    val est = cands.getAs[Double]("jaccard")
     val exact = docs.filter(col("doc_id").isin(1, 3))
       .agg(collect_list(TextOps.charShingles(col("text"), 5)).as("s"))
       .select(Dedup.ngramJaccard(element_at(col("s"), 1), element_at(col("s"), 2)))
@@ -432,13 +434,42 @@ class DedupSpec extends SparkSpec {
     assert(kept == Set(11L, 12L), s"got $kept")
     // the pair relation marks sides correctly: 10-vs-store is (old,new),
     // 12/13 is (new,new)
-    val pairs = Dedup.incrementalDedupPairsSigs(Dedup.minhashSignatures(delta, "doc_id", "text"),
-        store, threshold = 0.7)
+    val pairs = Dedup.minhashPairs(delta, store, "doc_id", "text", threshold = 0.7)._1
       .select("id_a", "id_b", "a_new", "b_new")
       .as[(Long, Long, Boolean, Boolean)].collect().toSet
     assert(pairs.contains((1L, 10L, false, true)))
     assert(pairs.contains((12L, 13L, true, true)))
     assert(!pairs.exists(p => !p._3 && !p._4), "store-store pairs must be dropped")
+  }
+
+  test("incrementalDedup: a replay against a store already holding its survivors' signatures keeps them") {
+    // the Minhash stage's crash window after its signature append: the
+    // replayed batch meets its own survivors in the store and must elect
+    // the same survivors, or the corpus append it re-runs loses them
+    val corpus = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again today"),
+      (2L, "completely different content describing catalyst optimizer rule internals")
+    ).toDF("doc_id", "text")
+    val store = Dedup.minhashSignatures(corpus, "doc_id", "text")
+    val delta = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog again and again today"),
+      (11L, "a genuinely novel document with fresh unseen vocabulary entirely"),
+      (12L, "twin text shared by exactly two new documents in this same batch"),
+      (13L, "twin text shared by exactly two new documents in this same batch"),
+      (14L, "a genuinely novel document with fresh unseen vocabulary entirely!")
+    ).toDF("doc_id", "text")
+    // with and without an exact twin group (the kernel's expansion path
+    // and its fast path)
+    Seq(delta, delta.filter(col("doc_id") =!= 13)).foreach { batch =>
+      def kept(s: org.apache.spark.sql.DataFrame) =
+        Dedup.incrementalDedup(batch, s, "doc_id", "text", threshold = 0.7)
+          .select("doc_id").as[Long].collect().toSet
+      val first = kept(store)
+      assert(first == Set(11L, 12L), s"got $first")
+      val replayed = kept(store.unionByName(Dedup.minhashSignatures(
+        batch.filter(col("doc_id").isin(first.toSeq: _*)), "doc_id", "text")))
+      assert(replayed == first, s"replay kept $replayed")
+    }
   }
 
   test("incrementalDedup with an empty store reduces to within-batch keep-first") {
@@ -473,9 +504,8 @@ class DedupSpec extends SparkSpec {
       (11L, txt(bWords))  // near-dup of 10 ONLY; sub-threshold vs the store
     ).toDF("doc_id", "text")
     // fixture sanity: exactly the chain pairs, no (1,11) shortcut
-    val pairs = Dedup.incrementalDedupPairsSigs(
-        Dedup.minhashSignatures(delta, "doc_id", "text", numHashes = 256), store,
-        threshold = 0.81, numHashes = 256, bands = 32)
+    val pairs = Dedup.minhashPairs(delta, store, "doc_id", "text",
+        threshold = 0.81, numHashes = 256, bands = 32)._1
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 10L), (10L, 11L)), s"fixture drifted: $pairs")
     val kept = Dedup.incrementalDedup(delta, store, "doc_id", "text",

@@ -192,4 +192,42 @@ class EdgeCaseSpec extends SparkSpec {
     assert(CorpusStats.corpusReport(
       emptyDocs.withColumn("g", lit("all")), "text", "g").count() == 0)
   }
+
+  test("near-dup tier: null text never pairs, empty texts are twins (dedup near node and Minhash stage)") {
+    import graft.plans._
+    import graft.streaming.{IngestPlan, Minhash, Streams}
+    val dir = java.nio.file.Files.createTempDirectory("near_null").toString
+    val normal = "a normal little document with words"
+    val batch1 = Seq(Row(1L, null), Row(2L, null), Row(3L, ""), Row(4L, ""),
+      Row(5L, "x"), Row(6L, normal), Row(7L, normal))
+    docs(batch1).write.parquet(s"$dir/docs")
+    // a null text has a null signature and pairs with nothing, not even
+    // another null; every empty text shingles to [0], so the empties are
+    // exact twins and the minimum id survives
+    val node = PipelineCompiler.compile(PipelineSpec(Seq(
+      "docs" -> SourceSpec("parquet", s"$dir/docs"),
+      "near" -> DedupNodeSpec(RefSpec("docs"), "id", "text", "near", 0.5)), "near"), spark)
+    try assert(full(node).map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 5L, 6L))
+    finally PipelineCompiler.unpersistCompiledCaches()
+    val sigs = full(Dedup.minhashSignatures(docs(batch1), "id", "text"))
+      .map(r => r.getLong(0) -> r.get(1)).toMap
+    assert(sigs(1L) == null && sigs(2L) == null && sigs(3L) == sigs(4L))
+    // the stage: the same verdicts within a batch, and against the store a
+    // null text again pairs with nothing while an empty text meets its twin
+    val (corpus, store, ckpt) = (s"$dir/corpus", s"$dir/store", s"$dir/ckpt")
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sc = spark.sqlContext
+    val in = MemoryStream[(Long, String)]
+    val q = Streams.ingest(in.toDF().toDF("id", "text"),
+      IngestPlan("id", "text", "", Seq(Minhash(store, 0.5)), Some(corpus), ckpt))
+    try {
+      in.addData(batch1.map(r => (r.getLong(0), r.getString(1))): _*)
+      q.processAllAvailable()
+      in.addData((8L, null), (9L, ""), (10L, normal), (11L, "another little text"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val kept = spark.read.parquet(corpus).select("id").as[Long].collect().toSet
+    assert(kept == Set(1L, 2L, 3L, 5L, 6L, 8L, 11L), s"got $kept")
+    assert(spark.read.parquet(store).select("id").as[Long].collect().toSet == kept)
+  }
 }

@@ -179,6 +179,52 @@ class InvariantPropertySpec extends SparkSpec {
     }
   }
 
+  test("minhash: the batch dedup is the incremental kernel over an empty store, on random corpora") {
+    // random corpora with planted exact twins, near dups at graded edit
+    // distances and one exact group larger than maxBucketSize: at each
+    // threshold dropNearDups keeps exactly the ids incrementalDedup keeps
+    // against an empty store the optimizer cannot see is empty, and the
+    // batch pairs are that kernel's pairs, every one flagged new (own
+    // generator, so the later properties draw as before)
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.operators.Dedup
+    val prop = new scala.util.Random(20261021)
+    val cap = 8
+    (1 to 2).foreach { round =>
+      def words(n: Int) = Vector.fill(n)(s"w${prop.nextInt(400)}")
+      val bases = Vector.fill(10)(words(20 + prop.nextInt(20)))
+      val nears = Vector.fill(5) {
+        val b = bases(prop.nextInt(bases.size))
+        (1 to 1 + prop.nextInt(8)).foldLeft(b)((w, _) => w.updated(prop.nextInt(w.size), s"x${prop.nextInt(400)}"))
+      }
+      val twins = Vector.fill(3)(bases(prop.nextInt(bases.size)))
+      val big = Vector.fill(cap + 2)(words(30))
+      val texts = (bases ++ nears ++ twins).map(_.mkString(" ")) ++
+        Vector.fill(cap + 2)(big.head.mkString(" "))
+      val ids = prop.shuffle(texts.indices.map(_.toLong).toVector)
+      val df = ids.zip(texts).toDF("doc_id", "text")
+      val bigIds = ids.takeRight(cap + 2).toSet
+      val noStore = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+        StructField("id", LongType), StructField("sig", ArrayType(LongType)))))
+      Seq(0.5, 0.7, 0.8).foreach { t =>
+        def kept(out: org.apache.spark.sql.DataFrame) = out.select("doc_id").as[Long].collect().toSet
+        val batch = kept(Dedup.dropNearDups(df, "doc_id", "text", t, maxBucketSize = cap))
+        val incr = kept(Dedup.incrementalDedup(df, noStore, "doc_id", "text", t, maxBucketSize = cap))
+        assert(batch == incr, s"round $round t=$t: batch-only ${batch -- incr}, incremental-only ${incr -- batch}")
+        assert(bigIds.subsetOf(batch), s"round $round t=$t: the over-cap group lost members")
+        assert(batch.size <= texts.size - twins.size, s"round $round t=$t: a planted twin survived")
+        val pairs = Dedup.minhashDedupPairs(df, "doc_id", "text", t, maxBucketSize = cap)
+          .as[(Long, Long, Double)].collect().toSet
+        val kernel = Dedup.minhashPairs(df, noStore, "doc_id", "text", t, maxBucketSize = cap)._1
+          .as[(Long, Long, Boolean, Boolean, Double)].collect().toSet
+        assert(kernel.forall(p => p._3 && p._4), s"round $round t=$t: a batch pair flagged old")
+        assert(pairs == kernel.map(p => (p._1, p._2, p._5)), s"round $round t=$t: pairs drifted")
+      }
+    }
+    graft.exec.Scope.unpersistCaches()
+  }
+
   test("DSIR weights and selection match the brute force on random corpora") {
     import graft.operators.{CorpusStats, Sampling}
     val vocab = Vector("red", "green", "blue", "cyan", "teal", "lime", "onyx", "gold")

@@ -161,4 +161,22 @@ class SpecDocSpec extends SparkSpec {
       "references to classes or members that do not exist: " +
         dangling.map { case (n, f) => s"$n ($f)" }.mkString(", "))
   }
+  test("no scaladoc block in src/main is stacked directly on another") {
+    // Scaladoc attaches only the LAST of two stacked doc blocks to the
+    // definition below them, so the first drops out of the API docs, and
+    // -Xlint:doc-detached does not report it
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+    assert(sources.size > 50, s"walk found too little: ${sources.size} files")
+    val stacked = sources.flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.toIndexedSeq
+      lines.indices.dropRight(1).collect {
+        case i if lines(i).trim.endsWith("*/") && lines(i + 1).trim.startsWith("/**") =>
+          s"$f:${i + 2}"
+      }
+    }
+    assert(stacked.isEmpty, "doc blocks stacked on another doc block: " + stacked.mkString(", "))
+  }
 }

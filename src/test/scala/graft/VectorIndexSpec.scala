@@ -96,19 +96,19 @@ class VectorIndexSpec extends SparkSpec {
   test("localKMeans: deterministic, k-bounded, and degenerate-safe") {
     val rnd = new scala.util.Random(7)
     val pts = Array.fill(500)(Array.fill(8)(rnd.nextGaussian()))
-    val a = VectorIndex.localKMeans(pts, 16, 10, 42L)
-    val b = VectorIndex.localKMeans(pts.map(_.clone()), 16, 10, 42L)
+    val a = VectorIndex.localKMeans(pts, 16, 10)
+    val b = VectorIndex.localKMeans(pts.map(_.clone()), 16, 10)
     assert(a.length > 0 && a.length <= 16)
     assert(a.forall(_.length == 8))
     // bit-deterministic on identical input (sequential summation, spread init)
     assert(a.corresponds(b)((x, y) => x.sameElements(y)))
     // fewer points than k: every point is its own center
-    val tiny = VectorIndex.localKMeans(pts.take(3), 16, 10, 42L)
+    val tiny = VectorIndex.localKMeans(pts.take(3), 16, 10)
     assert(tiny.length == 3)
-    assert(VectorIndex.localKMeans(Array.empty, 4, 10, 42L).isEmpty)
+    assert(VectorIndex.localKMeans(Array.empty, 4, 10).isEmpty)
     // all-identical points collapse to one voted-for center, never k dupes
     val same = Array.fill(100)(Array(1.0, 2.0, 3.0))
-    val collapsed = VectorIndex.localKMeans(same, 8, 10, 42L)
+    val collapsed = VectorIndex.localKMeans(same, 8, 10)
     assert(collapsed.forall(_.sameElements(Array(1.0, 2.0, 3.0))))
   }
 
